@@ -291,8 +291,8 @@ def word_shingles(text_col: str, k: int = 3):
 # the per-shingle string hashes (one cheap native pass); the int-tail
 # mix below reproduces org.apache.spark.sql.catalyst.expressions.XXH64
 # .hashInt (public Apache code, the standard XXH64 4-byte tail) as ~10
-# vectorized uint64 ops per seed — replacing the interpreted zip_with
-# fold that dominated the expression path's cost.
+# vectorized uint64 ops per seed, in place of an interpreted zip_with
+# fold per shingle (the reference formulation, tests/oracles.py).
 
 _XXH_P1 = 0x9E3779B185EBCA87
 _XXH_P2 = 0xC2B2AE3D27D4EB4F
@@ -670,11 +670,11 @@ def _minhash_text_udf(num_hashes: int, k: int):
     import numpy as np
     from pyspark.sql.functions import arrow_udf
 
-    # NULL text: the expression path folds over the single NULL shingle
-    # word_shingles emits (array_join(null) -> [null]), and
+    # NULL text: the expression formulation folds over the single NULL
+    # shingle word_shingles emits (array_join(null) -> [null]), and
     # xxhash64(null, i) leaves the seed untouched before the int mix —
     # so every null doc gets THIS constant signature (they collide into
-    # one bucket), not a null signature. Pinned by the equality test.
+    # one bucket), not a null signature. Pinned by the oracle test.
     null_sig = np.array(
         [
             int(
@@ -704,42 +704,25 @@ def _minhash_text_udf(num_hashes: int, k: int):
     return sig
 
 
-def minhash_signature(
-    text_col: str, num_hashes: int = 16, shingle_k: int = 3, impl: str = "arrow"
-):
+def minhash_signature(text_col: str, num_hashes: int = 16, shingle_k: int = 3):
     """Column: MinHash signature (array<bigint>) of a text column.
 
     sig[i] = min over shingles of xxhash64(shingle, i) — the standard
     k independent-permutation approximation.
 
-    impl='arrow' (default): the JVM contributes only lower() (locale
-    semantics stay JVM-side); tokenization, shingle assembly, XXH64,
-    the ``num_hashes`` seed mixes, and the segment-min fold all run
-    vectorized in numpy per Arrow batch (_minhash_text_kernel) —
-    bit-identical to the expression path (equality pinned across
-    null/empty/short/unicode texts) and several-fold faster: the
-    interpreted per-shingle HOF work (shingle build + zip_with fold)
-    was the dominant cost (round-2 directive #2). The trivial UDF
-    input also sidesteps a Spark 4.1 extraction bug with
-    nested-lambda-bearing Python-UDF inputs ("Cannot generate code
-    for expression").
-
-    impl='expr': pure Catalyst — all minima fold in ONE aggregate pass
-    with an array accumulator. The previous per-permutation formulation
-    not only walked the shingle array ``num_hashes`` times — it REBUILT
-    it (word split + slice + join) each time, since interpreted HOFs
-    get no common-subexpression elimination: measured 115s -> 6.8s
-    (17x) at 160k docs, local[16].
+    The JVM contributes only lower() (locale semantics stay JVM-side);
+    tokenization, shingle assembly, XXH64, the ``num_hashes`` seed
+    mixes, and the segment-min fold all run vectorized in numpy per
+    Arrow batch (_minhash_text_kernel) — bit-identical to the pure
+    Catalyst formulation over word_shingles (equality pinned across
+    null/empty/short/unicode texts against tests/oracles.py) and
+    several-fold faster: the interpreted per-shingle HOF work (shingle
+    build + zip_with fold) was the dominant cost (round-2 directive
+    #2). The trivial UDF input also sidesteps a Spark 4.1 extraction
+    bug with nested-lambda-bearing Python-UDF inputs ("Cannot generate
+    code for expression").
     """
-    if impl == "arrow":
-        return _minhash_text_udf(num_hashes, shingle_k)(F.lower(F.col(text_col)))
-    sh = word_shingles(text_col, shingle_k)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        sh,
-        F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes),
-        lambda acc, s: F.zip_with(acc, idx, lambda m, i: F.least(m, F.xxhash64(s, i))),
-    )
+    return _minhash_text_udf(num_hashes, shingle_k)(F.lower(F.col(text_col)))
 
 
 def _lsh_band_buckets(
@@ -749,11 +732,10 @@ def _lsh_band_buckets(
     num_hashes: int,
     bands: int,
     shingle_k: int,
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """(_id, band, bucket) rows: one 8-byte bucket hash per band."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signature(text_col, num_hashes, shingle_k, impl=signature_impl)
+    sig = minhash_signature(text_col, num_hashes, shingle_k)
 
     def band_bucket(b: int):
         # one-row bands (the default, bands == num_hashes) skip the
@@ -810,7 +792,6 @@ def minhash_lsh_duplicates(
     bands: int = 4,
     shingle_k: int = 3,
     max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding.
 
@@ -827,7 +808,7 @@ def minhash_lsh_duplicates(
     should surface its count when max_bucket_size matters).
     """
     with_bands = _lsh_band_buckets(
-        df, id_col, text_col, num_hashes, bands, shingle_k, signature_impl
+        df, id_col, text_col, num_hashes, bands, shingle_k
     )
     return _pairs_from_banded(with_bands, max_bucket_size)
 
@@ -913,15 +894,12 @@ def lsh_oversize_buckets(
     bands: int = 4,
     shingle_k: int = 3,
     max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """Audit companion to minhash_lsh_duplicates' bucket cap: the
     (band, bucket, n_docs) rows that exceeded max_bucket_size and were
     therefore excluded from candidate generation."""
     return (
-        _lsh_band_buckets(
-            df, id_col, text_col, num_hashes, bands, shingle_k, signature_impl
-        )
+        _lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k)
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > max_bucket_size)
@@ -964,45 +942,19 @@ def _simhash_fold_udf():
     return fold
 
 
-def simhash(text_col: str, bits: int = 64, impl: str = "arrow"):
+def simhash(text_col: str):
     """Column: 64-bit SimHash of a text column as bigint.
 
-    Per-row only (no shuffle). impl='arrow' (default, bits=64 only):
-    the JVM emits one xxhash64 per token; a numpy kernel unpacks bit
-    matrices, majority-votes per row segment, and repacks — identical
-    output to the expression path (equality pinned) without the
-    interpreted 64-wide vote-array lambdas (round-2 directive #2).
-
-    impl='expr' (and any bits != 64): token hashes via xxhash64,
-    bit-majority folded in ONE aggregate() pass with a ``bits``-wide
-    vote-array accumulator, then bit-packed in the aggregate's finish
-    lambda. (The previous formulation ran ``bits`` separate interpreted
-    aggregate() passes over the token hashes — same op count but
-    ``bits``x the array traversals and lambda dispatch; HOF lambdas
-    measured 20x slower than native exprs, see rules.py. Single-pass
-    measured 3.1x faster at 160k docs, local[16].)
+    Per-row only (no shuffle): the JVM emits one xxhash64 per token; a
+    numpy kernel unpacks bit matrices, majority-votes per row segment,
+    and repacks — identical output to the interpreted bit-vote
+    aggregate() formulation (equality pinned against tests/oracles.py)
+    without its 64-wide vote-array lambdas (round-2 directive #2).
     """
-    if impl == "arrow" and bits == 64:
-        token_hashes = F.transform(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: F.xxhash64(t)
-        )
-        return _simhash_fold_udf()(token_hashes)
-    quoted = "`" + text_col.replace("`", "``") + "`"
-    return F.expr(
-        f"""
-        aggregate(
-          transform(split(lower({quoted}), '\\\\s+'), t -> xxhash64(t)),
-          array_repeat(0L, {bits}),
-          (acc, h) -> zip_with(
-              acc, sequence(0, {bits - 1}),
-              (a, b) -> a + if((shiftright(h, b) & 1L) = 1L, 1L, -1L)),
-          acc -> aggregate(
-              zip_with(acc, sequence(0, {bits - 1}),
-                       (v, b) -> if(v > 0L, shiftleft(1L, b), 0L)),
-              0L, (x, y) -> x | y)
-        )
-        """
+    token_hashes = F.transform(
+        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: F.xxhash64(t)
     )
+    return _simhash_fold_udf()(token_hashes)
 
 
 def simhash_neardup_pairs(
@@ -1012,7 +964,6 @@ def simhash_neardup_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """SimHash near-duplicates via Hamming banding.
 
@@ -1028,9 +979,7 @@ def simhash_neardup_pairs(
     """
     width = 64 // bands
     mask = (1 << width) - 1
-    sh = df.select(
-        F.col(id_col).alias("_id"), simhash(text_col, impl=signature_impl).alias("_sh")
-    )
+    sh = df.select(F.col(id_col).alias("_id"), simhash(text_col).alias("_sh"))
     # same explode_outer + null-filter pattern as _lsh_band_buckets
     # (see comment there): keeps the Python-UDF simhash out of
     # optimizer-inferred filters
@@ -1451,7 +1400,6 @@ def neardup_dedup(
     bands: int = 16,
     shingle_k: int = 3,
     max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-    signature_impl: str = "arrow",
     broadcast_limit: int = config.BROADCAST_ROW_LIMIT,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """The composed training-data dedup pipeline in one call:
@@ -1494,10 +1442,7 @@ def neardup_dedup(
     # bucket collects an EMPTY list, never a quadratic id list —
     # the spill-safe cap semantics are unchanged.
     counted = _counted_banded(
-        _lsh_band_buckets(
-            df, id_col, text_col, num_hashes, bands, shingle_k,
-            signature_impl,
-        )
+        _lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k)
     )
     buckets = (
         counted.filter(F.col("_n") >= 2)
@@ -1574,7 +1519,6 @@ def incremental_neardup(
     bands: int = 16,
     shingle_k: int = 3,
     max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-    signature_impl: str = "arrow",
     broadcast_limit: int = config.BROADCAST_ROW_LIMIT,
     skip_drop_list: bool = False,
 ) -> IncrementalNeardupResult:
@@ -1632,8 +1576,7 @@ def incremental_neardup(
     _refuse_crashed_compaction(state_dir)
     params = {
         "num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k,
-        "jaccard_threshold": jaccard_threshold,
-        "signature_impl": signature_impl, "id_col": id_col,
+        "jaccard_threshold": jaccard_threshold, "id_col": id_col,
         "text_col": text_col,
     }
     mpath = _os.path.join(state_dir, "neardup_manifest.json")
@@ -1641,6 +1584,9 @@ def incremental_neardup(
         _json.load(open(mpath)) if _os.path.exists(mpath)
         else {"files": [], "increment": -1, "params": params}
     )
+    # older manifests pin a "signature_impl" choice; every value of it
+    # signed bit-identically, so it must not refuse the merge
+    manifest["params"].pop("signature_impl", None)
     if manifest["params"] != params:
         raise ValueError(
             "LSH parameters changed between increments "
@@ -1708,7 +1654,7 @@ def incremental_neardup(
         )
     )
     banded_delta = _lsh_band_buckets(
-        delta, id_col, text_col, num_hashes, bands, shingle_k, signature_impl
+        delta, id_col, text_col, num_hashes, bands, shingle_k
     ).persist()
     try:
         # combined bucket sizes from the ADDITIVE counts store — the

@@ -272,10 +272,10 @@ def build_partial_profile(
     ride a Catalyst hash aggregate, but a per-partition quantile grid
     is the same mergeable-sketch shape with JVM-only machinery. The
     merged value is a documented approximation (rank error ≲ grid step
-    within each partition) vs the default column-pruned
-    percentile_approx pass; opt in via
-    profile_partitioned(quantile_impl='fused') /
-    run_validation(quantile_impl='fused')."""
+    within each partition) vs the column-pruned percentile_approx pass
+    profile_partitioned and run_validation run. The incremental path
+    (incremental.validate_incremental) uses it: its persisted partials
+    must merge across increments without re-reading old data."""
     cols = columns or df.columns
     schema = {f.name: f.dataType for f in df.schema.fields}
     plan = PartialProfilePlan(
@@ -592,23 +592,15 @@ def profile_partitioned(
     detect_formats: bool = False,
     distinct_nested: bool = False,
     with_quantiles: bool = True,
-    quantile_impl: str = "approx",
 ) -> ProfileResult:
     """Standalone fused-scan profile: one pass grouped by
     ``spark_partition_id()`` + the merge aggregations (+ the pruned
     quantile pass when numeric columns exist). Same metric names and
     reference semantics as profile(); distinct counts use the HLL
-    sketch family instead of approx_count_distinct. run_validation goes
-    further and shares the partial scan with the row rules.
-
-    quantile_impl: 'approx' (default) = one extra column-pruned
-    percentile_approx pass; 'fused' = q1/median/q3 ride the fused scan
-    as per-partition quantile grids (ONE total input pass for numeric
-    tables; documented approximation, see build_partial_profile)."""
-    plan = build_partial_profile(
-        df, columns, detect_formats, distinct_nested,
-        fused_quantiles=(with_quantiles and quantile_impl == "fused"),
-    )
+    sketch family instead of approx_count_distinct. run_validation
+    shares the partial scan with the row rules when it has any, and
+    calls this otherwise."""
+    plan = build_partial_profile(df, columns, detect_formats, distinct_nested)
     part = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(*plan.exprs)
@@ -616,12 +608,22 @@ def profile_partitioned(
     )
     try:
         result = finalize_partial_profile(part, plan)
-        if with_quantiles and plan.quantile_cols:
-            for c, qs in profile_quantiles(df, plan.quantile_cols).items():
-                result.stats.setdefault(c, {}).update(qs)
-            result.suggestions = _suggest(result)
+        if with_quantiles:
+            _merge_quantiles(result, profile_quantiles(df, plan.quantile_cols))
     finally:
         part.unpersist()
+    return result
+
+
+def _merge_quantiles(
+    result: ProfileResult, quantiles: dict[str, dict[str, Any]]
+) -> ProfileResult:
+    """Fold a profile_quantiles() pass into a finalized profile (the
+    suggestions read the stats, so they are re-derived)."""
+    if quantiles:
+        for c, qs in quantiles.items():
+            result.stats.setdefault(c, {}).update(qs)
+        result.suggestions = _suggest(result)
     return result
 
 

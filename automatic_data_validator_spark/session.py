@@ -13,17 +13,54 @@ builder and inherit everything from spark-submit.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
-def _mem_mb(size: str) -> int:
-    """JVM memory string ('48g', '4096m', plain bytes) -> whole MB."""
-    s = size.strip().lower()
-    mult = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
-    if s and s[-1] in mult:
-        return max(int(float(s[:-1]) * mult[s[-1]]), 1)
-    return max(int(s) // (1024 * 1024), 1)
+_MEM_UNITS = {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _mem_mb(size: str) -> "int | None":
+    """JVM memory string -> whole MiB, parsed the way Spark's
+    ``JavaUtils.byteStringAs(s, MiB)`` reads ``spark.driver.memory``:
+    an integer with an optional unit (``k``/``m``/``g``/``t``/``p``,
+    each optionally followed by ``b``, or a bare ``b``); a bare number
+    means MiB. Returns None for anything Spark would reject (or a size
+    under 1 MiB), so callers can fall back instead of raising."""
+    m = re.fullmatch(r"(\d+)(?:([kmgtp])b?|(b))?", size.strip().lower())
+    if not m:
+        return None
+    unit = m.group(2) or m.group(3) or "m"
+    mb = (int(m.group(1)) << _MEM_UNITS[unit]) >> 20
+    return mb if mb >= 1 else None
+
+
+def _phys_mb() -> "int | None":
+    """Physical RAM of this host in MiB (None where sysconf lacks it)."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def _default_driver_mem(phys_mb: "int | None") -> str:
+    """min(48g, ~60% of physical RAM): the 48g dedicated-host default
+    would pre-size a heap larger than a small host can map."""
+    if phys_mb is None:
+        return "48g"
+    return f"{min(48 * 1024, phys_mb * 6 // 10)}m"
+
+
+def _driver_java_options(driver_mem: str, phys_mb: "int | None") -> str:
+    """ParallelGC plus a pre-sized heap (-Xms = -Xmx, young gen = 1/3,
+    at least 1m). The pre-size is left out when the size cannot be
+    parsed or exceeds physical RAM: the JVM would die at start."""
+    opts = "-XX:+UseParallelGC"
+    heap = _mem_mb(driver_mem)
+    if heap is None or (phys_mb is not None and heap > phys_mb):
+        return opts
+    return f"{opts} -Xms{heap}m -Xmn{max(heap // 3, 1)}m"
 
 
 def get_spark(
@@ -42,7 +79,8 @@ def get_spark(
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 32)
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    phys_mb = _phys_mb()
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(phys_mb)
     builder = SparkSession.builder
     # Respect an externally-provided master. PYSPARK_SUBMIT_ARGS alone
     # is NOT a reliable signal: spark-submit launches the python driver
@@ -113,8 +151,7 @@ def get_spark(
         # memory, so a smaller $SPARK_DRIVER_MEM scales it down.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+UseParallelGC "
-            f"-Xms{_mem_mb(driver_mem)}m -Xmn{_mem_mb(driver_mem) // 3}m",
+            _driver_java_options(driver_mem, phys_mb),
         )
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
     )

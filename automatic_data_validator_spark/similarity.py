@@ -71,37 +71,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec_col: str, n_planes: int = 16, dim: int = 64, seed: int = 42):
-    """Random-hyperplane LSH signature as a bigint bit-pack.
-
-    Plane weights are deterministic (numpy RandomState(seed)) and
-    embedded as LITERAL arrays in the plan — identical on every
-    executor, no broadcast variable, and crucially no per-row weight
-    regeneration (the previous formulation re-derived every weight
-    from xxhash64 inside nested HOF lambdas: O(planes x dim)
-    interpreted work per row; now only the dot products remain).
-    ``dim`` must match the embedding length: mismatched rows get a
-    NULL signature (they drop out of bucket equi-joins) instead of the
-    silent all-zero signature a null-padded zip_with would produce —
-    an all-zero sig would collapse every row into ONE bucket and make
-    the LSH join quadratic.
-    """
-    planes = _plane_matrix(n_planes, dim, seed)  # single weight source
-    v = F.col(vec_col)
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        w_lit = F.array(*[F.lit(float(x)) for x in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(v, w_lit, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
-        )
-    return F.when(F.size(v) == dim, sig)
-
-
 def _plane_matrix(n_planes: int, dim: int, seed: int):
     import numpy as np
 
@@ -112,14 +81,21 @@ def _plane_matrix(n_planes: int, dim: int, seed: int):
 def hyperplane_signatures_batch(
     vec_col: str, n_planes: int, dim: int, seeds: "list[int]"
 ):
-    """All LSH tables' signatures in ONE Arrow-batched matmul.
+    """All LSH tables' random-hyperplane signatures in ONE
+    Arrow-batched matmul.
 
-    Returns array<bigint> (one packed signature per table). Per batch:
-    (rows x dim) @ (dim x tables*planes) in BLAS, then a bitpack — vs
-    the expression path's n_tables x n_planes interpreted aggregate()
-    calls per row. Same plane weights as hyperplane_signature (seeded
-    numpy), so buckets agree except for projections within float-sum
-    reordering of 0 (measure-zero for real data)."""
+    Returns array<bigint> (one bit-packed signature per table; bit p
+    set iff the projection on plane p is > 0). Per batch: (rows x dim)
+    @ (dim x tables*planes) in BLAS, then a bitpack — vs the
+    n_tables x n_planes interpreted aggregate() calls per row of the
+    Catalyst formulation (kept as the reference oracle in
+    tests/oracles.py). Plane weights are deterministic (numpy
+    RandomState per table seed), so every executor computes the same
+    planes with no broadcast variable. ``dim`` must match the
+    embedding length: mismatched or NULL rows get a NULL signature
+    (they drop out of bucket equi-joins) instead of an all-zero one
+    that would collapse every row into ONE bucket and make the LSH
+    join quadratic."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -134,10 +110,8 @@ def hyperplane_signatures_batch(
         out = np.empty(len(s), dtype=object)
         out[:] = None  # null embeddings -> null signature, not a crash
         notna = s.notna().to_numpy()
-        # wrong-dimension embeddings -> NULL signature, matching the
-        # expression path's contract (hyperplane_signature): the row
-        # drops out of bucket equi-joins instead of failing the job
-        # (round-2 ADVICE: the two impls must share failure semantics)
+        # wrong-dimension embeddings -> NULL signature: the row drops
+        # out of bucket equi-joins instead of failing the job
         lens = np.fromiter(
             (len(v) if ok else -1 for v, ok in zip(s, notna)),
             dtype=np.int64,
@@ -338,16 +312,14 @@ def lsh_topk(
     n_tables: int = 4,
     seed: int = 42,
     dim: int | None = None,
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: candidates = vectors sharing any of
     ``n_tables`` hyperplane-signature buckets with the query, then
     exact cosine rank within candidates. The bucket join is an
     equi-join on (table, signature) — shuffle on 8-byte keys only.
-    ``dim`` is inferred from the (small) query side when omitted.
-    signature_impl: 'arrow' (default) computes all tables' signatures
-    in one BLAS matmul per Arrow batch; 'expr' keeps the pure-Catalyst
-    expression path (no Python workers, same weights)."""
+    ``dim`` is inferred from the (small) query side when omitted. All
+    tables' signatures come from one BLAS matmul per Arrow batch
+    (hyperplane_signatures_batch)."""
     if dim is None:
         row = queries.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         if row is None:
@@ -361,32 +333,13 @@ def lsh_topk(
     def with_sigs(df, idc):
         # norm hoisted next to the vector BEFORE the signature explode:
         # one norm pass per row, copied (not recomputed) per table row
-        if signature_impl == "arrow":
-            sigs = hyperplane_signatures_batch(vec_col, n_planes, dim, seeds)
-            return df.select(
-                F.col(idc).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                _norm(F.col(vec_col)).alias("_n"),
-                F.posexplode(sigs).alias("tbl", "sig"),
-            )
+        sigs = hyperplane_signatures_batch(vec_col, n_planes, dim, seeds)
         return df.select(
             F.col(idc).alias("_id"),
             F.col(vec_col).alias("_v"),
             _norm(F.col(vec_col)).alias("_n"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            hyperplane_signature(
-                                vec_col, n_planes, dim=dim, seed=seed + t
-                            ).alias("sig"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("b"),
-        ).select("_id", "_v", "_n", "b.tbl", "b.sig")
+            F.posexplode(sigs).alias("tbl", "sig"),
+        )
 
     vs = with_sigs(vectors, id_col)
     qs = (

@@ -310,9 +310,9 @@ def neardup_stream(
     re-derived from the pair STORE by increment id, so ``{output_dir}/
     pairs`` converges to the same rows the first attempt would have
     written. ``neardup_params`` pass through (num_hashes, bands,
-    shingle_k, max_bucket_size, signature_impl, broadcast_limit); LSH
-    parameters are pinned in the state manifest, so changing them
-    mid-stream raises rather than silently mixing signature spaces.
+    shingle_k, max_bucket_size, broadcast_limit); LSH parameters are
+    pinned in the state manifest, so changing them mid-stream raises
+    rather than silently mixing signature spaces.
     """
     from .dedup import incremental_neardup
 

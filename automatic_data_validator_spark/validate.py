@@ -27,9 +27,10 @@ from pyspark.sql import functions as F
 
 from . import dedup, refcheck, rules as R
 from .profile import (
+    _merge_quantiles,
     build_partial_profile,
     finalize_partial_profile,
-    profile as _profile,
+    profile_partitioned,
     profile_quantiles,
 )
 from .state import Checkpointer, lineage_from_verdicts
@@ -65,8 +66,6 @@ def run_validation(
     with_profile: bool = True,
     check_uniqueness: bool = True,
     verdict_spill_threshold: int = 100_000,
-    fused_profile: bool = True,
-    quantile_impl: str = "approx",
     drift_baseline: "dict | str | None" = None,
     drift_columns: "list[str] | None" = None,
     drift_ks_threshold: float = 0.1,
@@ -204,39 +203,21 @@ def run_validation(
     # algebraic partials ride in the row-rules per-partition aggregate,
     # so the separate full profile pass disappears — only quantiles (for
     # numeric columns; the flagship documents shape has none) need one
-    # extra column-pruned pass. Falls back to the classic separate pass
-    # when resuming a checkpoint whose row_rules phase already completed
-    # (its verdicts carry no partials).
+    # extra column-pruned pass. With no row-rules scan to ride (no row
+    # rules, or resuming a checkpoint whose row_rules phase completed
+    # and whose verdicts carry no partials) the SAME partial plan runs
+    # as its own scan (profile_partitioned).
     fused_state: dict[str, Any] = {}
     use_fused = bool(
-        fused_profile
-        and with_profile
+        with_profile
         and row_rules
         and not (ckpt and ckpt.is_done("profile"))
         and not (ckpt and ckpt.is_done("row_rules"))
     )
-
-    # quantile_impl='fused' rides q1/median/q3 in the shared scan as
-    # per-partition grids — numeric tables then need NO extra quantile
-    # pass (documented approximation, profile.build_partial_profile).
-    # The opt-in needs the fused scan to ride on: surface the fallback
-    # instead of silently running the separate pass the caller opted
-    # out of (round-4 review finding).
-    if quantile_impl == "fused" and with_profile and not use_fused:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "run_validation: quantile_impl='fused' needs the fused "
-            "rules+profile scan (non-empty rule_set, fused_profile=True, "
-            "no completed row_rules/profile checkpoint) — falling back "
-            "to the separate column-pruned quantile pass"
-        )
+    # date-format probing is for string business columns, not ids —
+    # skip (8 try_to_timestamp exprs/string col)
     fused_plan = (
-        build_partial_profile(
-            documents,
-            detect_formats=False,
-            fused_quantiles=(quantile_impl == "fused" and with_profile),
-        )
+        build_partial_profile(documents, detect_formats=False)
         if use_fused
         else None
     )
@@ -473,9 +454,22 @@ def run_validation(
 
         tasks.append(("drift", drift_check))
 
+    def profile_task():
+        """Pool task: the run's ProfileResult."""
+        if not use_fused:
+            return profile_partitioned(documents, detect_formats=False)
+        # partials ride the (possibly still running) row_rules scan;
+        # only the column-pruned quantile pass reads the input again,
+        # and it starts immediately
+        quantiles = profile_quantiles(documents, fused_plan.quantile_cols)
+        rr_future.result()
+        return _merge_quantiles(
+            finalize_partial_profile(fused_state["per_part"], fused_plan),
+            quantiles,
+        )
+
     metrics = None
-    metrics_future = None
-    quantile_future = None
+    profile_future = None
     # try/finally: the fused per-partition frame is persisted inside a
     # pool task — a phase exception must still release it, or the cache
     # entry leaks for the session's lifetime (round-3 ADVICE)
@@ -486,26 +480,9 @@ def run_validation(
                 if ckpt and ckpt.is_done("profile"):
                     # resume: read the checkpointed metrics back instead
                     # of re-running the full profile scan
-                    metrics_future = None
                     metrics = ckpt.read(spark, "profile", "metrics")
-                elif use_fused:
-                    # partials ride the (possibly still running)
-                    # row_rules scan; only the column-pruned quantile
-                    # pass reads the input again, and it can start
-                    # immediately
-                    if fused_plan.quantile_cols:
-                        quantile_future = pool.submit(
-                            profile_quantiles,
-                            documents,
-                            fused_plan.quantile_cols,
-                        )
                 else:
-                    # date-format probing is for string business
-                    # columns, not ids — skip (8 try_to_timestamp
-                    # exprs/string col)
-                    metrics_future = pool.submit(
-                        lambda: _profile(documents, detect_formats=False)
-                    )
+                    profile_future = pool.submit(profile_task)
             phase_futures = [
                 (name, pool.submit(run_phase, name, fn)) for name, fn in tasks
             ]
@@ -513,19 +490,8 @@ def run_validation(
                 rr_future.result()
             for _name, fut in phase_futures:
                 fut.result()
-            if fused_state and with_profile and metrics is None:
-                prof = finalize_partial_profile(
-                    fused_state["per_part"], fused_plan
-                )
-                if quantile_future is not None:
-                    from .profile import _suggest
-
-                    for c, qs in quantile_future.result().items():
-                        prof.stats.setdefault(c, {}).update(qs)
-                    prof.suggestions = _suggest(prof)
-                metrics = prof.metrics_df(spark)
-            elif metrics_future is not None:
-                metrics = metrics_future.result().metrics_df(spark)
+            if profile_future is not None:
+                metrics = profile_future.result().metrics_df(spark)
             if metrics is not None and ckpt and not ckpt.is_done("profile"):
                 ckpt.write("profile", "metrics", metrics)
                 ckpt.mark_done("profile")

@@ -6,6 +6,12 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
+from oracles import (
+    hyperplane_signature_expr,
+    minhash_signature_expr,
+    simhash_expr,
+)
+
 from automatic_data_validator_spark import dedup as D
 from automatic_data_validator_spark import similarity as S
 
@@ -323,10 +329,12 @@ def test_minhash_single_pass_matches_per_permutation(spark):
         assert r["a"] == r["b"], (r["id"], r["a"], r["b"])
 
 
-def test_lsh_signature_impls_agree(spark):
-    """BLAS-batch and Catalyst-expression signature paths share the
-    same plane weights: bucket assignments (and thus candidates) must
-    agree on real-valued data."""
+def test_hyperplane_kernel_equals_expr_oracle(spark):
+    """The BLAS-batch signature kernel uses the same plane weights as
+    the Catalyst expression oracle: bucket assignments must agree on
+    real-valued data, and lsh_topk must return the top-k (cosine desc,
+    id asc) of exactly the vectors sharing an oracle bucket with the
+    query."""
     rng = np.random.RandomState(5)
     vecs = rng.normal(size=(120, 24)).astype(np.float32)
     df = spark.createDataFrame(
@@ -341,26 +349,40 @@ def test_lsh_signature_impls_agree(spark):
     exprs = df.select(
         "vec_id",
         *[
-            S.hyperplane_signature("embedding", 10, dim=24, seed=sd).alias(f"s{i}")
+            hyperplane_signature_expr("embedding", 10, dim=24, seed=sd).alias(f"s{i}")
             for i, sd in enumerate(seeds)
         ],
     ).collect()
     got_expr = {r["vec_id"]: [r["s0"], r["s1"], r["s2"]] for r in exprs}
     assert got_arrow == got_expr
-    # and the full topk flows agree on both impls
+    # the full topk flow vs candidates bucketed by the oracle
     q = spark.createDataFrame(
         pd.DataFrame({"query_id": [3], "embedding": [vecs[3].tolist()]})
     )
-    a = {r["neighbor_id"] for r in
-         S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4, signature_impl="arrow").collect()}
-    b = {r["neighbor_id"] for r in
-         S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4, signature_impl="expr").collect()}
-    assert a == b
+    got = {r["neighbor_id"] for r in
+           S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4).collect()}
+    tables = [42, 43, 44, 45]
+    osig = {
+        r["vec_id"]: [r[f"s{t}"] for t in range(len(tables))]
+        for r in df.select(
+            "vec_id",
+            *[
+                hyperplane_signature_expr("embedding", 8, dim=24, seed=sd).alias(f"s{t}")
+                for t, sd in enumerate(tables)
+            ],
+        ).collect()
+    }
+    cand = [i for i, sg in osig.items() if any(a == b for a, b in zip(sg, osig[3]))]
+    v64 = vecs.astype(np.float64)
+    unit = v64 / np.linalg.norm(v64, axis=1, keepdims=True)
+    ranked = sorted(cand, key=lambda i: (-float(unit[i] @ unit[3]), i))
+    assert got == set(ranked[:8])
 
 
 def test_lsh_arrow_signatures_tolerate_null_embeddings(spark):
-    """Null embeddings yield null signatures (dropped from buckets),
-    never a worker crash; all-null batches also survive."""
+    """Null and wrong-dimension embeddings yield null signatures
+    (dropped from buckets), never a worker crash; all-null batches
+    also survive."""
     pdf = pd.DataFrame({"vec_id": [0, 1, 2],
                         "embedding": [[1.0] * 8, None, [0.5] * 8]}).astype(object)
     df = spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
@@ -376,13 +398,31 @@ def test_lsh_arrow_signatures_tolerate_null_embeddings(spark):
         S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s")
     ).collect()
     assert got[0]["s"] is None
-    # expression path: wrong-dim vector -> NULL signature, not all-zero
+    # wrong-dim vector -> NULL signature, not the all-zero one that
+    # would collapse every such row into one bucket — alone in a
+    # batch, mixed with valid rows, and in agreement with the oracle
     wrong = spark.createDataFrame(
         pd.DataFrame({"vec_id": [3], "embedding": [[1.0] * 5]}),
         "vec_id long, embedding array<double>",
     )
-    sig = wrong.select(S.hyperplane_signature("embedding", 6, dim=8).alias("s")).collect()
-    assert sig[0]["s"] is None
+    sig = wrong.select(
+        S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s"),
+        hyperplane_signature_expr("embedding", 6, dim=8).alias("e"),
+    ).collect()
+    assert sig[0]["s"] is None and sig[0]["e"] is None
+    mixed = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [0, 1, 2, 3],
+                      "embedding": [[0.5] * 8, [1.0] * 5, [1.0] * 9, [-0.25] * 8]}),
+        "vec_id long, embedding array<double>",
+    )
+    rows = {r["vec_id"]: (r["s"], r["e"]) for r in mixed.select(
+        "vec_id",
+        S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s"),
+        hyperplane_signature_expr("embedding", 6, dim=8).alias("e"),
+    ).collect()}
+    assert rows[1] == (None, None) and rows[2] == (None, None)
+    for i in (0, 3):
+        assert rows[i][0] == [rows[i][1]], (i, rows[i])
 
 
 def test_simhash_quoted_column_name(spark):
@@ -391,13 +431,11 @@ def test_simhash_quoted_column_name(spark):
     assert isinstance(r[0]["s"], int)
 
 
-def test_minhash_arrow_impl_equals_expr(spark):
+def test_minhash_kernel_equals_expr_oracle(spark):
     """The Arrow/numpy minhash fold must be BIT-IDENTICAL to the pure
-    Catalyst expression path (round-3 directive #2) — including null,
+    Catalyst expression oracle (round-3 directive #2) — including null,
     empty, single-word, short-of-k, unicode, and whitespace-heavy
     texts."""
-    import pandas as pd
-
     texts = [
         None, "", " ", "one", "one two", "one two three",
         "the quick brown fox jumps over the lazy dog",
@@ -410,19 +448,17 @@ def test_minhash_arrow_impl_equals_expr(spark):
     )
     rows = df.select(
         "id",
-        D.minhash_signature("text", num_hashes=16, impl="arrow").alias("a"),
-        D.minhash_signature("text", num_hashes=16, impl="expr").alias("e"),
-        D.minhash_signature("text", num_hashes=24, shingle_k=2, impl="arrow").alias("a2"),
-        D.minhash_signature("text", num_hashes=24, shingle_k=2, impl="expr").alias("e2"),
+        D.minhash_signature("text", num_hashes=16).alias("a"),
+        minhash_signature_expr("text", num_hashes=16).alias("e"),
+        D.minhash_signature("text", num_hashes=24, shingle_k=2).alias("a2"),
+        minhash_signature_expr("text", num_hashes=24, shingle_k=2).alias("e2"),
     ).collect()
     for r in rows:
         assert r["a"] == r["e"], (r["id"], r["a"], r["e"])
         assert r["a2"] == r["e2"], (r["id"], r["a2"], r["e2"])
 
 
-def test_simhash_arrow_impl_equals_expr(spark):
-    import pandas as pd
-
+def test_simhash_kernel_equals_expr_oracle(spark):
     texts = [
         None, "", "x", "the quick brown fox", "MiXeD CaSe   whitespace\ttabs",
         "lorem ipsum dolor sit amet " * 20, "Ünïcode tëxt",
@@ -432,37 +468,11 @@ def test_simhash_arrow_impl_equals_expr(spark):
     )
     rows = df.select(
         "id",
-        D.simhash("text", impl="arrow").alias("a"),
-        D.simhash("text", impl="expr").alias("e"),
+        D.simhash("text").alias("a"),
+        simhash_expr("text").alias("e"),
     ).collect()
     for r in rows:
         assert r["a"] == r["e"], (r["id"], r["a"], r["e"])
-
-
-def test_lsh_duplicates_same_pairs_both_impls(spark):
-    import pandas as pd
-
-    base = [
-        "the quick brown fox jumps over the lazy dog today",
-        "the quick brown fox jumps over the lazy cat today",
-        "completely different text about spark execution engines",
-        "another unrelated document mentioning parquet and arrow",
-    ]
-    texts = [t + f" v{i % 3}" for i, t in enumerate(base * 12)]
-    df = spark.createDataFrame(pd.DataFrame({"id": range(len(texts)), "text": texts}))
-    a = {
-        (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_duplicates(
-            df, "id", "text", num_hashes=16, bands=4, signature_impl="arrow"
-        ).collect()
-    }
-    e = {
-        (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_duplicates(
-            df, "id", "text", num_hashes=16, bands=4, signature_impl="expr"
-        ).collect()
-    }
-    assert a == e and a
 
 
 def test_arrow_signatures_survive_hof_heavy_session(spark, docs):
@@ -888,6 +898,42 @@ def test_incremental_neardup_equals_oneshot(spark, tmp_path):
             spark, corpus, state, "doc_id", "text", jaccard_threshold=0.5
         ).pairs
     ) == pairset(full_pairs)
+
+
+def test_incremental_neardup_accepts_state_pinning_signature_impl(spark, tmp_path):
+    """State dirs written while the signature kernel was selectable
+    carry ``"signature_impl"`` in their manifest params. Every kernel
+    signed bit-identically, so the next increment must accept such a
+    state (not raise "parameters changed") and still pair a new doc
+    with a stored one; the rewritten manifest drops the key."""
+    import json
+    import os
+
+    corpus = str(tmp_path / "docs")
+    state = str(tmp_path / "nd_state")
+    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+
+    def append(rows):
+        spark.createDataFrame(
+            pd.DataFrame(rows, columns=["doc_id", "text"])
+        ).coalesce(1).write.mode("append").parquet(corpus)
+
+    append([(0, body + " x0"), (1, "unrelated words about parquet files")])
+    D.incremental_neardup(spark, corpus, state, "doc_id", "text")
+    mpath = os.path.join(state, "neardup_manifest.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    assert "signature_impl" not in manifest["params"]
+    manifest["params"]["signature_impl"] = "arrow"
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+
+    append([(2, body + " x1")])
+    r = D.incremental_neardup(spark, corpus, state, "doc_id", "text")
+    assert r.increment == 1 and r.n_delta_files == 1
+    assert [(x["id_a"], x["id_b"]) for x in r.new_pairs.collect()] == [(0, 2)]
+    with open(mpath) as fh:
+        assert "signature_impl" not in json.load(fh)["params"]
 
 
 def test_incremental_neardup_random_batches(spark, tmp_path):

@@ -5,8 +5,7 @@ aggregate; globals are reconstructed from per-partition partials
 (Pébay-merged central moments, HLL sketch unions, exact sum/min/max
 merges). These tests pin (a) statistic equivalence vs the classic
 single-agg profile, (b) edge-case moment semantics, and (c) the actual
-IO saving: a fused end-to-end run reads strictly fewer input bytes than
-the classic one, and stays under the 4-scan budget."""
+IO saving: a fused end-to-end run stays under the 4-scan budget."""
 
 from __future__ import annotations
 
@@ -16,6 +15,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from automatic_data_validator_spark.profile import (
+    build_partial_profile,
+    finalize_partial_profile,
     profile,
     profile_partitioned,
 )
@@ -119,21 +120,40 @@ def test_moment_merge_edge_partitions(spark):
     assert ff.stats["x"]["mean"] == 7.0
 
 
+def _metric_map(rows):
+    return {(c, m): v for c, m, v in rows}
+
+
 def test_run_validation_fused_metrics_match_classic(spark, docs, catalog):
     fused = run_validation(spark, docs, catalog=catalog, with_profile=True)
-    classic = run_validation(
-        spark, docs, catalog=catalog, with_profile=True, fused_profile=False
-    )
-    fm = {(r["column"], r["metric"]): r["value"] for r in fused.metrics.collect()}
-    cm = {(r["column"], r["metric"]): r["value"] for r in classic.metrics.collect()}
+    fm = _metric_map(map(tuple, fused.metrics.collect()))
+    cm = _metric_map(profile(docs, detect_formats=False).metrics_rows())
     assert set(fm) == set(cm)
     for k, v in cm.items():
         rtol = 0.2 if k[1] == "distinct_count" else 1e-6
         assert _close(fm[k], v, rtol=rtol), (k, v, fm[k])
-    # verdicts identical regardless of profile mode
-    assert sorted(map(tuple, fused.verdicts.collect())) == sorted(
-        map(tuple, classic.verdicts.collect())
-    )
+
+
+def test_profile_without_row_rules_scan_matches_fused(spark, docs, tmp_path):
+    """With no row-rules scan for the partials to ride — no row rules,
+    or a resume whose row_rules phase is checkpointed but profile is
+    not — run_validation profiles through profile_partitioned: the same
+    partial plan and finalize, so the metrics equal the fused run's."""
+    fused = _metric_map(map(tuple, run_validation(
+        spark, docs, check_uniqueness=False, with_profile=True
+    ).metrics.collect()))
+    ck = str(tmp_path / "ck")
+    run_validation(spark, docs, checkpoint_dir=ck, check_uniqueness=False,
+                   with_profile=False)
+    resumed = run_validation(spark, docs, checkpoint_dir=ck,
+                             check_uniqueness=False, with_profile=True)
+    no_rules = run_validation(spark, docs, rule_set=[], check_uniqueness=False,
+                              with_profile=True)
+    for res in (resumed, no_rules):
+        got = _metric_map(map(tuple, res.metrics.collect()))
+        assert set(got) == set(fused)
+        for k, v in fused.items():
+            assert _close(got[k], v, rtol=1e-9), (k, v, got[k])
 
 
 from automatic_data_validator_spark.introspect import (
@@ -161,32 +181,19 @@ def test_fused_run_cuts_input_scans(spark, parquet_docs):
     directive #1): a full validation run — materializing every output,
     as bench does — reads the input table 4 times (fused rules+profile
     scan, row-rules violation scan, single-scan uniqueness,
-    referential), measured at 4.03 passes (vs 5.03 classic-profile,
-    vs ~6 in round 2 before the uniqueness redesign), and the fused
-    profile must save a full pass vs the classic run on the same
-    input."""
+    referential), measured at 4.03 passes (vs 5.03 with a separate
+    profile pass, vs ~6 in round 2 before the uniqueness redesign)."""
     n_docs = 30_000
-    docs_path = str(parquet_docs / "docs")
-
-    def run_once(fused: bool) -> int:
-        spark.catalog.clearCache()  # identical plans would cache-hit
-        docs = spark.read.parquet(docs_path)
-        catalog = spark.read.parquet(str(parquet_docs / "cat"))
-        r0 = _input_records(spark)
-        res = run_validation(
-            spark, docs, catalog=catalog, with_profile=True, fused_profile=fused
-        )
-        # materialize everything a production run writes
-        res.violations.count()
-        res.verdicts.count()
-        res.metrics.count()
-        return _input_records(spark) - r0
-
-    classic = run_once(False)
-    fused = run_once(True)
-    # the fused run saves the profiler's full pass (>= ~0.9 scans;
-    # cache-read slack for the small persisted violation frames)
-    assert fused <= classic - 0.9 * n_docs, (fused, classic)
+    spark.catalog.clearCache()  # identical plans would cache-hit
+    docs = spark.read.parquet(str(parquet_docs / "docs"))
+    catalog = spark.read.parquet(str(parquet_docs / "cat"))
+    r0 = _input_records(spark)
+    res = run_validation(spark, docs, catalog=catalog, with_profile=True)
+    # materialize everything a production run writes
+    res.violations.count()
+    res.verdicts.count()
+    res.metrics.count()
+    fused = _input_records(spark) - r0
     # absolute budget — scans, not bytes: the catalog (500 rows) and
     # cached small frames contribute the fractional slack over 4.0
     assert fused <= 4.4 * n_docs, (fused / n_docs,)
@@ -212,7 +219,7 @@ def test_fused_leaves_no_cache_entries(spark, docs, catalog):
 def test_fused_run_with_numeric_columns_adds_quantile_pass(spark):
     """Generic tables with numeric columns go through the fused scan
     PLUS the column-pruned quantile pass; metrics must still match the
-    classic profile."""
+    classic single-agg profile."""
     import pyspark.sql.functions as F2
 
     from automatic_data_validator_spark import rules as R
@@ -231,11 +238,8 @@ def test_fused_run_with_numeric_columns_adds_quantile_pass(spark):
     ]
     fused = run_validation(spark, df, rule_set=rules, key_column="key",
                            check_uniqueness=False, with_profile=True)
-    classic = run_validation(spark, df, rule_set=rules, key_column="key",
-                             check_uniqueness=False, with_profile=True,
-                             fused_profile=False)
-    fm = {(r["column"], r["metric"]): r["value"] for r in fused.metrics.collect()}
-    cm = {(r["column"], r["metric"]): r["value"] for r in classic.metrics.collect()}
+    fm = _metric_map(map(tuple, fused.metrics.collect()))
+    cm = _metric_map(profile(df, detect_formats=False).metrics_rows())
     assert set(fm) == set(cm)
     # quantiles present and matching (the pruned extra pass ran)
     for c in ("val", "cat"):
@@ -268,14 +272,29 @@ def test_fused_profile_in_spill_mode_matches_default(spark, docs, catalog):
     )
 
 
+def _fused_quantile_profile(df):
+    """Grid quantiles riding the partial scan — the path
+    incremental.validate_incremental ships."""
+    plan = build_partial_profile(df, detect_formats=False, fused_quantiles=True)
+    part = (
+        df.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(*plan.exprs)
+        .persist()
+    )
+    try:
+        return finalize_partial_profile(part, plan)
+    finally:
+        part.unpersist()
+
+
 def test_fused_quantiles_match_approx_within_tolerance(spark):
-    """quantile_impl='fused' (round-3 VERDICT directive #10): grid-
-    merged q1/median/q3 must track the default percentile_approx pass
-    within the documented grid-step tolerance, and every non-quantile
-    metric must be identical to the default fused path."""
+    """Fused quantile grids (round-3 VERDICT directive #10): grid-
+    merged q1/median/q3 must track the percentile_approx pass within
+    the documented grid-step tolerance, and every non-quantile metric
+    must be identical to profile_partitioned's."""
     df = _mixed_frame(spark)
     approx = profile_partitioned(df, detect_formats=False)
-    fused = profile_partitioned(df, detect_formats=False, quantile_impl="fused")
+    fused = _fused_quantile_profile(df)
     for c, st in approx.stats.items():
         for m, v in st.items():
             got = fused.stats.get(c, {}).get(m, "MISSING")
@@ -298,9 +317,9 @@ def test_fused_quantiles_match_approx_within_tolerance(spark):
 
 
 def test_fused_quantiles_single_input_pass(spark, tmp_path_factory):
-    """The point of the opt-in: a numeric table profiles in ONE input
-    pass under quantile_impl='fused' (vs two with the default separate
-    quantile pass)."""
+    """The point of the grids: a numeric table profiles in ONE input
+    pass with fused quantiles (vs two with profile_partitioned's
+    separate quantile pass)."""
     base = tmp_path_factory.mktemp("fusedq")
     n = 30_000
     spark.range(0, n, 1, 8).select(
@@ -308,37 +327,12 @@ def test_fused_quantiles_single_input_pass(spark, tmp_path_factory):
         (F.col("id") % 101).cast("double").alias("b"),
     ).write.parquet(str(base / "t"))
 
-    def passes(quantile_impl: str) -> float:
+    def passes(run) -> float:
         spark.catalog.clearCache()
         df = spark.read.parquet(str(base / "t"))
         r0 = _input_records(spark)
-        profile_partitioned(df, detect_formats=False, quantile_impl=quantile_impl)
+        run(df)
         return (_input_records(spark) - r0) / n
 
-    assert passes("approx") >= 1.8
-    assert passes("fused") <= 1.2
-
-
-def test_run_validation_fused_quantile_impl(spark):
-    """run_validation(quantile_impl='fused') on a numeric table: same
-    metric keys as the default, quantiles within tolerance, and no
-    separate quantile job needed."""
-    df = spark.range(0, 10_000, 1, 6).select(
-        F.concat(F.lit("k"), F.col("id")).alias("doc_id"),
-        (F.col("id") % 97).cast("double").alias("val"),
-    )
-    from automatic_data_validator_spark import rules as R
-
-    rs = [R.Rule("nn_doc", "not_null", column="doc_id")]  # enables fusion
-    default = run_validation(
-        spark, df, rule_set=rs, check_uniqueness=False, with_profile=True
-    )
-    fused = run_validation(
-        spark, df, rule_set=rs, check_uniqueness=False, with_profile=True,
-        quantile_impl="fused",
-    )
-    dm = {(r["column"], r["metric"]): r["value"] for r in default.metrics.collect()}
-    fm = {(r["column"], r["metric"]): r["value"] for r in fused.metrics.collect()}
-    assert set(dm) == set(fm)
-    for m in ("q1", "median", "q3"):
-        assert abs(fm[("val", m)] - dm[("val", m)]) <= 5.0, (m, dm[("val", m)], fm[("val", m)])
+    assert passes(lambda df: profile_partitioned(df, detect_formats=False)) >= 1.8
+    assert passes(_fused_quantile_profile) <= 1.2

@@ -164,11 +164,12 @@ _texty = st.builds(
 def test_minhash_arrow_bit_equals_expr_fuzz(spark_sess, texts):
     """The numpy kernel (byte tokenization + vectorized XXH64 with
     stripe/long/int/byte tails + seed mixes) must be BIT-IDENTICAL to
-    the Catalyst expression path on adversarial inputs: whitespace-run
+    the Catalyst expression oracle on adversarial inputs: whitespace-run
     edges, leading/trailing separators, multi-byte UTF-8, empty and
     null texts, and >32-byte shingles that exercise the 32-byte stripe
     loop."""
     import pandas as pd
+    from oracles import minhash_signature_expr
 
     from automatic_data_validator_spark import dedup as D
 
@@ -177,8 +178,8 @@ def test_minhash_arrow_bit_equals_expr_fuzz(spark_sess, texts):
     )
     rows = df.select(
         "id",
-        D.minhash_signature("text", num_hashes=8, impl="arrow").alias("a"),
-        D.minhash_signature("text", num_hashes=8, impl="expr").alias("e"),
+        D.minhash_signature("text", num_hashes=8).alias("a"),
+        minhash_signature_expr("text", num_hashes=8).alias("e"),
     ).collect()
     for r in rows:
         assert r["a"] == r["e"], (texts[r["id"]], r["a"], r["e"])

@@ -236,11 +236,10 @@ def test_profile_phase_resumes_from_checkpoint(spark, docs, tmp_path):
     assert sorted(map(tuple, r2.metrics.collect())) == m1
 
 
-def test_spill_mode_with_fused_quantiles(spark):
-    """The two scale paths compose: distributed verdicts (spill mode)
-    + fused quantile grids. Metrics must carry quantiles equal to the
-    default path's within the grid tolerance, and verdicts must be
-    identical."""
+def test_spill_mode_with_numeric_quantiles(spark):
+    """Distributed verdicts (spill mode) compose with the pruned
+    quantile pass a numeric column needs: metrics must carry quantiles
+    equal to the default path's, and verdicts must be identical."""
     import pyspark.sql.functions as F2
 
     from automatic_data_validator_spark import rules as R
@@ -255,7 +254,7 @@ def test_spill_mode_with_fused_quantiles(spark):
     )
     spilled = run_validation(
         spark, df, rule_set=rs, check_uniqueness=False, with_profile=True,
-        verdict_spill_threshold=1, quantile_impl="fused",
+        verdict_spill_threshold=1,
     )
     bm = {(r["column"], r["metric"]): r["value"] for r in base.metrics.collect()}
     sm = {(r["column"], r["metric"]): r["value"] for r in spilled.metrics.collect()}
