@@ -132,6 +132,12 @@ def test_run_validation_fused_metrics_match_classic(spark, docs, catalog):
     for k, v in cm.items():
         rtol = 0.2 if k[1] == "distinct_count" else 1e-6
         assert _close(fm[k], v, rtol=rtol), (k, v, fm[k])
+    # the profile partials riding the row-rules scan must not change its
+    # verdicts: compare against the plain row-rules scan
+    plain = run_validation(spark, docs, catalog=catalog, with_profile=False)
+    assert sorted(map(tuple, fused.verdicts.collect())) == sorted(
+        map(tuple, plain.verdicts.collect())
+    )
 
 
 def test_profile_without_row_rules_scan_matches_fused(spark, docs, tmp_path):
@@ -336,3 +342,23 @@ def test_fused_quantiles_single_input_pass(spark, tmp_path_factory):
 
     assert passes(lambda df: profile_partitioned(df, detect_formats=False)) >= 1.8
     assert passes(_fused_quantile_profile) <= 1.2
+
+
+def test_profile_without_row_rules_scan_input_passes(spark, tmp_path):
+    """With no row-rules scan to ride, run_validation profiles a numeric
+    table through profile_partitioned: one grouped partial scan plus the
+    column-pruned quantile pass, so two input passes and no more."""
+    n = 30_000
+    spark.range(0, n, 1, 8).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        (F.col("id") % 101).cast("double").alias("val"),
+    ).write.parquet(str(tmp_path / "t"))
+    spark.catalog.clearCache()
+    df = spark.read.parquet(str(tmp_path / "t"))
+    r0 = _input_records(spark)
+    res = run_validation(spark, df, rule_set=[], key_column="key",
+                         check_uniqueness=False, with_profile=True)
+    res.metrics.count()
+    passes = (_input_records(spark) - r0) / n
+    assert passes <= 2.2, passes
+    assert ("val", "median") in _metric_map(map(tuple, res.metrics.collect()))
