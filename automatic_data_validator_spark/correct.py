@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from . import config
 from .profile import ProfileResult, profile
+from .session import local_frame
 
 
 @dataclass
@@ -341,4 +342,4 @@ def summary_report(
             _T.StructField("after", _T.DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

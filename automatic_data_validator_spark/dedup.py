@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .session import local_frame
 
 
 def _salt(key_col: str, buckets: int):
@@ -81,9 +82,11 @@ def uniqueness_check(
     whose key-total exceeds 1 re-expand to one violation row per
     original occurrence. The former design's second full-table
     attribution join (broadcast-vs-SMJ guarded) is gone, halving the
-    fact-table IO; nothing but the (small) violation set is persisted,
-    so no cache entry outlives the call (round-2 VERDICT wrong-list
-    #1). Shuffle volume is unchanged vs the salted two-phase agg: both
+    fact-table IO; nothing but the (small) violation set is persisted
+    (round-2 VERDICT wrong-list #1). That cache entry is the returned
+    ``violations`` frame and lives until the caller unpersists it;
+    ``run_validation`` does not, so it outlives a run (ROADMAP open
+    item). Shuffle volume is unchanged vs the salted two-phase agg: both
     carry one row per distinct (key, partition); the window adds a
     sort of those aggregated rows, which is the price of the saved
     100-TB scan.
@@ -180,7 +183,7 @@ def uniqueness_check(
         rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
     from .rules import VERDICT_SCHEMA
 
-    verdicts = spark.createDataFrame(rows, VERDICT_SCHEMA)
+    verdicts = local_frame(spark, rows, VERDICT_SCHEMA)
     return verdicts, violations
 
 
@@ -1237,8 +1240,8 @@ def connected_dup_groups(
     """
     labels = _driver_labels(pairs, driver_edge_limit)
     if labels is not None:
-        return pairs.sparkSession.createDataFrame(
-            sorted(labels.items()), _label_schema(pairs)
+        return local_frame(
+            pairs.sparkSession, sorted(labels.items()), _label_schema(pairs)
         ).persist()
 
     edges = (
@@ -1351,7 +1354,9 @@ def dedup_keep_representatives(
     left-anti join against the (small, broadcastable) drop list; ids
     outside any pair are untouched.
 
-    The drop list is localCheckpoint'ed (it is small by the pipeline's
+    On the driver path (pair graph under CC_DRIVER_EDGE_LIMIT) the
+    drop list is a local relation built from the union-find labels.
+    Otherwise it is localCheckpoint'ed (it is small by the pipeline's
     own contract) so the connected-components cache can be RELEASED
     here instead of leaking for the session (round-4 review finding) —
     previously the persisted comps frame had no handle for callers to
@@ -1367,10 +1372,12 @@ def dedup_keep_representatives(
         # jobs at post-verify pair sizes). Identical rows: the
         # distributed path's filter(doc_id != component) over the same
         # fixpoint labels.
+        # a local relation: its rows already live in the JVM plan, so
+        # there is nothing to checkpoint
         drop_rows = sorted((x, r) for x, r in labels.items() if x != r)
-        drop_list = df.sparkSession.createDataFrame(
-            drop_rows, _label_schema(pairs)
-        ).localCheckpoint(eager=True)
+        drop_list = local_frame(
+            df.sparkSession, drop_rows, _label_schema(pairs)
+        )
         n_drop = len(drop_rows)
     else:
         comps = connected_dup_groups(pairs)
@@ -1415,10 +1422,10 @@ def neardup_dedup(
     banded frame as the candidates. Cost model (round-4 review): the
     Python-UDF signature chain runs EXACTLY ONCE — the (_id, band,
     bucket) frame is persisted across the candidate count, the verify
-    join, and the audit, then released; the drop list is
-    localCheckpoint'ed inside dedup_keep_representatives so no
-    connected-components cache outlives the call. The verified pair
-    set is likewise localCheckpoint'ed (small by the pipeline's own
+    join, and the audit, then released; the drop list is a local
+    relation or localCheckpoint'ed inside dedup_keep_representatives,
+    so no connected-components cache outlives the call. The verified
+    pair set is likewise localCheckpoint'ed (small by the pipeline's own
     contract — candidates are bucket-capped and the pair list is
     count-gated), so NOTHING returned holds a session-lifetime cache:
     no caller unpersist obligation (round-4 review finding — the
@@ -1630,9 +1637,7 @@ def incremental_neardup(
                 corpus.limit(0), pairs.select("id_a", "id_b"), id_col
             )[1]
         )
-        empty_over = spark.createDataFrame(
-            [], "band int, bucket long, n_docs long"
-        )
+        empty_over = local_frame(spark, [], "band int, bucket long, n_docs long")
         return IncrementalNeardupResult(
             pairs.limit(0).select("id_a", "id_b", "jaccard"),
             pairs, drop_list, empty_over,
@@ -1674,8 +1679,8 @@ def incremental_neardup(
                 F.sum("n").alias("n_old")
             )
         else:
-            old_counts = spark.createDataFrame(
-                [], "band int, bucket long, n_old long"
+            old_counts = local_frame(
+                spark, [], "band int, bucket long, n_old long"
             )
         combined = (
             delta_counts.join(old_counts, ["band", "bucket"], "left")

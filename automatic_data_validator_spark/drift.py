@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import local_frame
+
 
 # --- t-digest ---------------------------------------------------------------
 
@@ -400,8 +402,9 @@ def save_grouped_baseline(
         for g, cols in sketches.items()
         for c, d in cols.items()
     ]
-    spark.createDataFrame(
-        rows, "snapshot_id string, group string, column string, sketch string"
+    local_frame(
+        spark, rows,
+        "snapshot_id string, group string, column string, sketch string",
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
@@ -665,8 +668,8 @@ def save_baseline(
     a later run loads + merges-free compares without rescanning the
     baseline data."""
     rows = [(snapshot_id, c, d.serialize()) for c, d in sketches.items()]
-    spark.createDataFrame(
-        rows, "snapshot_id string, column string, sketch string"
+    local_frame(
+        spark, rows, "snapshot_id string, column string, sketch string"
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from . import refcheck
 from . import rules as R
 from .profile import build_partial_profile, finalize_partial_profile
+from .session import local_frame
 from .state import LINEAGE_SCHEMA, lineage_from_verdicts
 
 _MANIFEST = "manifest.json"
@@ -251,7 +252,7 @@ def _read_store(
             list(schema.fields)
             + [T.StructField("increment", T.IntegerType(), True)]
         )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def validate_incremental(
@@ -418,7 +419,7 @@ def validate_incremental(
                 per_part, [rid for rid, _ in preds]
             )
             rr_rows = [tuple(r) for r in rr_v.collect()]
-            rr_v = spark.createDataFrame(rr_rows, R.VERDICT_SCHEMA)
+            rr_v = local_frame(spark, rr_rows, R.VERDICT_SCHEMA)
             rr_viol = R.violation_rows(delta, preds, key_column).withColumn(
                 "detail", F.lit(f"inc={inc}")
             )
@@ -1101,8 +1102,8 @@ def _incremental_drift(
             # would leave a file-less store that the history read below
             # cannot infer a schema from, wedging the state
             _write_inc(
-                spark.createDataFrame(
-                    rows, "group string, column string, sketch string"
+                local_frame(
+                    spark, rows, "group string, column string, sketch string"
                 ),
                 os.path.join(state_dir, "sketches_grouped"), inc,
             )
@@ -1124,8 +1125,8 @@ def _incremental_drift(
             report, grouped=True, inc=inc
         )
         return (
-            spark.createDataFrame(v_rows, R.VERDICT_SCHEMA),
-            spark.createDataFrame(viol_rows, R.VIOLATION_SCHEMA),
+            local_frame(spark, v_rows, R.VERDICT_SCHEMA),
+            local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
         )
 
     if os.path.exists(os.path.join(state_dir, "sketches_grouped")):
@@ -1151,7 +1152,8 @@ def _incremental_drift(
         )
     sk = DR.sketch_columns(target, cols)
     _write_inc(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(c, d.serialize()) for c, d in sk.items()],
             "column string, sketch string",
         ),
@@ -1170,8 +1172,8 @@ def _incremental_drift(
     )
     v_rows, viol_rows = DR.drift_report_rows(report, inc=inc)
     return (
-        spark.createDataFrame(v_rows, R.VERDICT_SCHEMA),
-        spark.createDataFrame(viol_rows, R.VIOLATION_SCHEMA),
+        local_frame(spark, v_rows, R.VERDICT_SCHEMA),
+        local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
     )
 
 
@@ -1259,9 +1261,7 @@ def _incremental_uniqueness(
         old_tot = hits.groupBy("doc_id").agg(F.sum("cnt").alias("old_cnt"))
     else:
         hits = None
-        old_tot = spark.createDataFrame(
-            [], "doc_id string, old_cnt long"
-        )
+        old_tot = local_frame(spark, [], "doc_id string, old_cnt long")
     tot = (
         delta_tot.join(old_tot, "doc_id", "left")
         .withColumn("old_cnt", F.coalesce(F.col("old_cnt"), F.lit(0)))
@@ -1334,7 +1334,7 @@ def _incremental_uniqueness(
     ]
     if n_promoted:
         rows.append((-1, rule_id, 0, int(n_promoted), False))
-    verdicts = spark.createDataFrame(rows, R.VERDICT_SCHEMA)
+    verdicts = local_frame(spark, rows, R.VERDICT_SCHEMA)
     # delta_loc stays persisted: the caller writes it to the key index
     # (reading the cached blocks, not rescanning the delta) and then
     # unpersists it

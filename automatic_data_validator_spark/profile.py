@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import config
+from .session import local_frame
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -177,7 +178,7 @@ class ProfileResult:
                 T.StructField("value", T.DoubleType(), True),
             ]
         )
-        return spark.createDataFrame(self.metrics_rows(), schema)
+        return local_frame(spark, self.metrics_rows(), schema)
 
 
 def profile(

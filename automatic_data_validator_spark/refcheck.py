@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .session import local_frame
 
 
 def media_refs_expr(spans_col: str = "spans"):
@@ -136,5 +137,5 @@ def referential_check(
     # totals map must fail loudly, not vanish from the verdicts
     for pid in sorted(set(viol_by_pid) - set(partition_totals)):
         rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
-    verdicts = df.sparkSession.createDataFrame(rows, VERDICT_SCHEMA)
+    verdicts = local_frame(df.sparkSession, rows, VERDICT_SCHEMA)
     return verdicts, violations

@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 _MEM_UNITS = {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
@@ -161,6 +161,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame over driver-held rows (tuples in ``schema`` field
+    order), built as an Arrow table so it plans as a JVM
+    ``LocalRelation`` (an Arrow RDD above
+    ``spark.sql.execution.arrow.localRelationThreshold``).
+    ``createDataFrame(<list>)`` instead plans as ``Scan ExistingRDD``
+    over a pickled Python RDD, so every action on it starts Python
+    workers. The Arrow cast still rejects a None in a non-nullable
+    field. ``schema`` is a StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row must have {width} fields")
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

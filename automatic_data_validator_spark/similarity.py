@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -232,8 +234,8 @@ def ivf_write(assigned: DataFrame, centroids: list[list[float]], path: str) -> N
     assigned.write.mode("overwrite").partitionBy("_list").parquet(f"{path}/vectors")
     # sidecar via a 1-row dataframe so it lands on any hadoop-compatible fs
     spark = assigned.sparkSession
-    spark.createDataFrame(
-        [(json.dumps(centroids),)], "centroids_json string"
+    local_frame(
+        spark, [(json.dumps(centroids),)], "centroids_json string"
     ).coalesce(1).write.mode("overwrite").json(f"{path}/centroids")
 
 
@@ -277,8 +279,9 @@ def ivf_topk(
         for lst in order:
             probe_rows.append((r["query_id"], int(lst), [float(x) for x in qv], qnorm))
     spark = assigned.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, _list int, _qv array<double>, _qn double"
+    probes = local_frame(
+        spark, probe_rows,
+        "query_id long, _list int, _qv array<double>, _qn double",
     )
     # data-side norm hoisted to one per-row pass before the probe join
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -405,7 +408,7 @@ def brute_force_topk_arrow(
     dim = next((len(r[1]) for r in q_rows if r[1] is not None), None)
     q_rows = [r for r in q_rows if r[1] is not None and len(r[1]) == dim]
     if not q_rows:
-        return vectors.sparkSession.createDataFrame([], schema)
+        return local_frame(vectors.sparkSession, [], schema)
     q_ids = [r[0] for r in q_rows]
     qm = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
     qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import local_frame
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("phase", T.StringType(), False),
@@ -190,7 +192,7 @@ def lineage_from_verdicts(
          rule_version, now, duration_s, v[1], int(v[2]), int(v[3]))
         for v in verdicts
     ]
-    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    return local_frame(spark, rows, LINEAGE_SCHEMA)
 
 
 @dataclass
@@ -407,7 +409,7 @@ def run_summary(
             tot_viol == 0,
         )
     )
-    return spark.createDataFrame(rows, RUN_SUMMARY_SCHEMA)
+    return local_frame(spark, rows, RUN_SUMMARY_SCHEMA)
 
 
 def export_summary(summary: DataFrame, path: str, fmt: str = "json") -> str:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import rules as R
+from .session import local_frame
 
 
 def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
@@ -232,8 +233,8 @@ def drift_stream(
             if not rows:
                 return
             _write_batch_partition(
-                spark.createDataFrame(
-                    rows,
+                local_frame(
+                    spark, rows,
                     "group string, column string, ks double, psi double, "
                     "drifted boolean, reason string, n_current long",
                 ),
@@ -259,8 +260,8 @@ def drift_stream(
             for r in report
         ]
         _write_batch_partition(
-            spark.createDataFrame(
-                rows,
+            local_frame(
+                spark, rows,
                 "column string, ks double, psi double, drifted boolean, "
                 "reason string, n_current long",
             ),

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .session import local_frame
 
 
 # --- basic stats (reference text_processor.py:80-94) -----------------------
@@ -724,4 +725,4 @@ def text_change_report(
             T.StructField("change", T.DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -33,6 +33,7 @@ from .profile import (
     profile_partitioned,
     profile_quantiles,
 )
+from .session import local_frame
 from .state import Checkpointer, lineage_from_verdicts
 
 DEFAULT_RULES: list[R.Rule] = [
@@ -142,10 +143,12 @@ def run_validation(
         """Run or resume one phase; returns the phase's verdicts.
 
         Default mode: verdicts are tiny (one row per partition x rule),
-        collected ONCE and re-materialized as a local DataFrame so
-        later consumers never re-trigger the full input scan. Spill
-        mode: verdicts stay distributed (persisted or checkpointed),
-        and lineage gets per-rule aggregate rows (partition_id null).
+        collected ONCE and rebuilt as a JVM LocalRelation
+        (``session.local_frame``), so later consumers never re-trigger
+        the full input scan and no action on them starts a Python
+        worker. Spill mode: verdicts stay distributed (persisted or
+        checkpointed), and lineage gets per-rule aggregate rows
+        (partition_id null).
         Violation rows stay lazy unless checkpointing is on (then they
         are written+read-back, i.e. materialized exactly once).
         """
@@ -157,7 +160,7 @@ def run_validation(
             violations = ckpt.read(spark, name, "violations")
             if not spill:
                 v_rows = [tuple(r) for r in vdf.collect()]
-                vdf = spark.createDataFrame(v_rows, R.VERDICT_SCHEMA)
+                vdf = local_frame(spark, v_rows, R.VERDICT_SCHEMA)
         else:
             import time as _time
 
@@ -165,7 +168,7 @@ def run_validation(
             vdf, violations = fn()
             if not spill:
                 v_rows = [tuple(r) for r in vdf.collect()]
-                vdf = spark.createDataFrame(v_rows, R.VERDICT_SCHEMA)
+                vdf = local_frame(spark, v_rows, R.VERDICT_SCHEMA)
             else:
                 vdf = vdf.persist()
             duration_s = round(_time.perf_counter() - t0, 3)
@@ -418,8 +421,8 @@ def run_validation(
                     report, grouped=True
                 )
                 return (
-                    spark.createDataFrame(v_rows, R.VERDICT_SCHEMA),
-                    spark.createDataFrame(viol_rows, R.VIOLATION_SCHEMA),
+                    local_frame(spark, v_rows, R.VERDICT_SCHEMA),
+                    local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
                 )
             cols = drift_columns or sorted(
                 set(baseline) & set(target.columns)
@@ -448,8 +451,8 @@ def run_validation(
             )
             v_rows, viol_rows = DR.drift_report_rows(report)
             return (
-                spark.createDataFrame(v_rows, R.VERDICT_SCHEMA),
-                spark.createDataFrame(viol_rows, R.VIOLATION_SCHEMA),
+                local_frame(spark, v_rows, R.VERDICT_SCHEMA),
+                local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
             )
 
         tasks.append(("drift", drift_check))
@@ -505,10 +508,10 @@ def run_validation(
         from .state import LINEAGE_SCHEMA
 
         return ValidationResult(
-            spark.createDataFrame([], R.VERDICT_SCHEMA),
-            spark.createDataFrame([], R.VIOLATION_SCHEMA),
+            local_frame(spark, [], R.VERDICT_SCHEMA),
+            local_frame(spark, [], R.VIOLATION_SCHEMA),
             metrics,
-            spark.createDataFrame([], LINEAGE_SCHEMA),
+            local_frame(spark, [], LINEAGE_SCHEMA),
         )
     verdicts = verdict_dfs[0]
     for x in verdict_dfs[1:]:
@@ -519,7 +522,14 @@ def run_validation(
     lineage = lineage_parts[0]
     for l in lineage_parts[1:]:
         lineage = lineage.unionByName(l)
-    return ValidationResult(verdicts, violations, metrics, lineage)
+    # driver-held rows (lineage and metrics always, verdicts outside
+    # spill mode): one partition each, so a write makes one file
+    # instead of one per local-relation slice of every unioned phase
+    if not spill:
+        verdicts = verdicts.coalesce(1)
+    if metrics is not None:
+        metrics = metrics.coalesce(1)
+    return ValidationResult(verdicts, violations, metrics, lineage.coalesce(1))
 
 
 def canonical_violations(violations: DataFrame) -> DataFrame:
