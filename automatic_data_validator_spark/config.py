@@ -95,6 +95,12 @@ LSH_MAX_BUCKET_SIZE = 2_000
 # 1M edges ≈ tens of MB of driver rows — the same order the drop-list
 # broadcast already admits. 0 disables the fallback.
 CC_DRIVER_EDGE_LIMIT = 1_000_000
+# run_validation returns its violation rows as ONE partition (one
+# output file) when their exact count, known from its phases' own
+# counts, is at most this. ~1M rows of (doc_id, rule_id,
+# partition_id, detail) is tens of MB of parquet — about one file's
+# worth; above it the phases' own partitioning is kept.
+VIOLATIONS_ONE_FILE_ROWS = 1_000_000
 # accuracy for percentile_approx (1/eps); 10k => ~0.01% rank error.
 PERCENTILE_ACCURACY = 10_000
 # Checkpoint-registry retention (reference session_manager.py caps live

@@ -66,6 +66,8 @@ def uniqueness_check(
     key: str = "doc_id",
     rule_id: str = "unique_doc_id",
     partition_totals: "dict[int, int] | DataFrame | Any | None" = None,
+    *,
+    distributed: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Verdicts + violation rows for key uniqueness, attributed to the
     *input* partitions holding the duplicate rows — in ONE scan of the
@@ -108,8 +110,15 @@ def uniqueness_check(
     verdicts are then built by a full outer join on the cluster and
     never collected — required when the input has more partitions than
     the driver should hold rows (~8M partitions at 10^12 docs / 128MB
-    splits). Returns (verdicts, violations) in rules VERDICT/VIOLATION
-    schema.
+    splits). A callable is resolved only after this check's own scan
+    has materialized the persisted violation set, so a concurrent
+    row-rules scan overlaps it: the materializing action is the
+    per-partition violation-count collect the local verdicts need, so
+    nothing runs on the cluster after the totals arrive.
+    ``distributed=True`` (implied by a DataFrame) marks a callable that
+    resolves to a DataFrame: the pin is then a ``count()`` and no
+    per-partition rows reach the driver. Returns (verdicts, violations)
+    in rules VERDICT/VIOLATION schema.
     """
     from pyspark.sql import Window
 
@@ -139,24 +148,30 @@ def uniqueness_check(
         .persist()
     )
     # Totals from a concurrently-running row-rules phase may arrive as
-    # a BLOCKING CALLABLE (returning a dict in default mode or a
-    # (partition_id, row_count) DataFrame in spill mode): materialize
-    # THIS phase's own (expensive) scan first, then resolve — so the
-    # two phases' scans overlap instead of serializing (round 3).
-    if callable(partition_totals):
+    # a BLOCKING CALLABLE: materialize THIS phase's own (expensive)
+    # scan first, then resolve — so the two phases' scans overlap
+    # instead of serializing (round 3).
+    distributed = distributed or isinstance(partition_totals, DataFrame)
+    if not distributed:
+        # the local verdicts need these counts anyway; collecting them
+        # is what materializes (pins) the persisted set
+        viol_by_pid = {
+            r["partition_id"]: r["cnt"]
+            for r in violations.groupBy("partition_id")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+    elif callable(partition_totals):
         violations.count()  # pins the persisted violation set
+    if callable(partition_totals):
         partition_totals = partition_totals()
-    if isinstance(partition_totals, DataFrame):
+    if distributed or isinstance(partition_totals, DataFrame):
         from .rules import distributed_verdicts
 
         return (
             distributed_verdicts(partition_totals, violations, rule_id),
             violations,
         )
-    viol_by_pid = {
-        r["partition_id"]: r["cnt"]
-        for r in violations.groupBy("partition_id").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
     if partition_totals is None:
         # standalone mode: no row-rules scan to reuse — one extra
         # key-column-pruned pass for the totals

@@ -178,6 +178,20 @@ _SKETCH_SCHEMA = T.StructType(
 )
 
 
+def _level1_partitions(level1: DataFrame) -> float:
+    """Partition count of a level-1 sketch plan, read without running a
+    job: a plan with no exchange or subquery (scan -> project ->
+    mapInPandas, the shape drift inputs have) builds its RDD lazily.
+    Otherwise the count is unknown before execution — AQE may resize
+    a shuffle at run time, and planning a broadcast or subquery runs
+    its job — so report infinity and keep level 2."""
+    plan = level1._jdf.queryExecution().executedPlan()
+    text = plan.toString()
+    if any(n in text for n in ("AdaptiveSparkPlan", "Exchange", "Subquery")):
+        return math.inf
+    return plan.execute().getNumPartitions()
+
+
 def _sketch_partials(
     df: DataFrame,
     columns: list[str],
@@ -195,7 +209,15 @@ def _sketch_partials(
     instead of one per partition per column — at the module's own
     8M-partition scale citation the former collect() was 8M × columns
     JSON rows. The combine shuffle moves only the already-aggregated
-    partial rows (O(partitions × compression) bytes)."""
+    partial rows (O(partitions × compression) bytes).
+
+    Level 2 runs only when it can merge anything: with at most k
+    level-1 partitions every bucket holds ONE digest, and merging one
+    compressed digest is an identity (``_compress`` is idempotent), so
+    the plan ends at level 1 and the driver merges those rows in
+    partition-id order — the same digests bit for bit, without the
+    shuffle and the second Python crossing. See _level1_partitions for
+    when the count is known."""
 
     def build(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         partials: dict[str, TDigest] = {c: TDigest(compression=compression) for c in columns}
@@ -218,10 +240,11 @@ def _sketch_partials(
         )
         return pd.DataFrame({"column": [key[0]], "sketch": [d.serialize()]})
 
+    level1 = df.select(*columns).mapInPandas(build, _SKETCH_SCHEMA)
+    if _level1_partitions(level1) <= combine_buckets:
+        return level1
     return (
-        df.select(*columns)
-        .mapInPandas(build, _SKETCH_SCHEMA)
-        .withColumn(
+        level1.withColumn(
             "_b", F.pmod(F.spark_partition_id(), F.lit(int(combine_buckets)))
         )
         .groupBy("column", "_b")
@@ -243,7 +266,10 @@ def sketch_columns(
     merged: dict[str, list[TDigest]] = {c: [] for c in columns}
     for r in rows:
         merged[r["column"]].append(TDigest.deserialize(r["sketch"]))
-    return {c: TDigest.merge_all(ds, compression) for c, ds in merged.items() if ds}
+    # every requested column gets a digest: a zero-partition input
+    # yields no partial rows, and its columns must still sketch as
+    # empty (drift_report then says empty_sketch) rather than vanish
+    return {c: TDigest.merge_all(ds, compression) for c, ds in merged.items()}
 
 
 def sketch_by_group(
@@ -302,10 +328,11 @@ def _grouped_sketch_partials(
     carries digests, not raw values — O(partitions × groups ×
     compression) bytes, independent of row count — unlike
     sketch_by_group, whose applyInPandas shuffles every (group, value)
-    pair. A group present in a partition always emits a row for every
-    column, even when all its values are null (weight-0 digest):
-    'group present, values vanished' must stay distinguishable from
-    'group missing'."""
+    pair. Level 2 is skipped when it would be an identity, exactly as
+    in _sketch_partials. A group present in a partition always emits a
+    row for every column, even when all its values are null (weight-0
+    digest): 'group present, values vanished' must stay
+    distinguishable from 'group missing'."""
 
     def build(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         partials: dict[tuple[str, str], TDigest] = {}
@@ -347,15 +374,16 @@ def _grouped_sketch_partials(
             {"group": [key[0]], "column": [key[1]], "sketch": [d.serialize()]}
         )
 
+    level1 = df.select(
+        F.coalesce(F.col(group_col).cast("string"), F.lit("null")).alias(
+            group_col
+        ),
+        *columns,
+    ).mapInPandas(build, _GROUPED_SKETCH_SCHEMA)
+    if _level1_partitions(level1) <= combine_buckets:
+        return level1
     return (
-        df.select(
-            F.coalesce(F.col(group_col).cast("string"), F.lit("null")).alias(
-                group_col
-            ),
-            *columns,
-        )
-        .mapInPandas(build, _GROUPED_SKETCH_SCHEMA)
-        .withColumn(
+        level1.withColumn(
             "_b", F.pmod(F.spark_partition_id(), F.lit(int(combine_buckets)))
         )
         .groupBy("group", "column", "_b")

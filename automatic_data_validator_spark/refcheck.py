@@ -65,6 +65,8 @@ def referential_check(
     catalog_rows: int | None = None,
     broadcast_limit: int = config.BROADCAST_ROW_LIMIT,
     partition_totals: "dict[int, int] | DataFrame | Any | None" = None,
+    *,
+    distributed: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Return (verdicts, violations) in rules VERDICT/VIOLATION schema.
 
@@ -74,7 +76,31 @@ def referential_check(
     verdict counts aggregate from it; partition_totals reuses row
     counts from the row-rules pass when available (same scan
     partitioning => same spark_partition_id assignment).
+    ``distributed`` as in dedup.uniqueness_check.
     """
+    verdicts, violations, _rows = referential_check_counted(
+        df, catalog, spans_col, rule_id, catalog_rows, broadcast_limit,
+        partition_totals, distributed=distributed,
+    )
+    return verdicts, violations
+
+
+def referential_check_counted(
+    df: DataFrame,
+    catalog: DataFrame,
+    spans_col: str = "spans",
+    rule_id: str = "referential_media_ref",
+    catalog_rows: int | None = None,
+    broadcast_limit: int = config.BROADCAST_ROW_LIMIT,
+    partition_totals: "dict[int, int] | DataFrame | Any | None" = None,
+    *,
+    distributed: bool = False,
+) -> "tuple[DataFrame, DataFrame, int | None]":
+    """referential_check plus the exact violation ROW count (verdicts
+    count distinct (partition, doc) pairs, rows count (doc, ref)
+    pairs). The local verdict path reads it off the same collect that
+    materializes the dangling set, so it costs no job; the distributed
+    path never collects per-partition rows and returns None."""
     refs = distinct_refs(df, spans_col)
     cat = catalog.select("media_ref").distinct()
     if catalog_rows is None:
@@ -95,11 +121,25 @@ def referential_check(
     )
     # callable totals (the concurrent row-rules phase) resolve only
     # AFTER this phase's own scan/join materializes, so the two scans
-    # overlap in both verdict modes (round 3)
-    if callable(partition_totals):
+    # overlap in both verdict modes (round 3); the local path's
+    # materializing action is its per-partition count collect, so no
+    # job runs after the totals arrive
+    distributed = distributed or isinstance(partition_totals, DataFrame)
+    if not distributed:
+        per_pid = (
+            dangling.groupBy("partition_id", "doc_id")
+            .agg(F.count(F.lit(1)).alias("refs"))
+            .groupBy("partition_id")
+            .agg(F.count(F.lit(1)).alias("docs"), F.sum("refs").alias("refs"))
+            .collect()
+        )
+        viol_by_pid = {r["partition_id"]: r["docs"] for r in per_pid}
+        n_rows = sum(int(r["refs"]) for r in per_pid)
+    elif callable(partition_totals):
         dangling.count()  # pins the persisted dangling set
+    if callable(partition_totals):
         partition_totals = partition_totals()
-    if isinstance(partition_totals, DataFrame):
+    if distributed or isinstance(partition_totals, DataFrame):
         from .rules import distributed_verdicts
 
         return (
@@ -107,15 +147,8 @@ def referential_check(
                 partition_totals, violations, rule_id, distinct_doc=True
             ),
             violations,
+            None,
         )
-    viol_by_pid = {
-        r["partition_id"]: r["cnt"]
-        for r in dangling.select("partition_id", "doc_id")
-        .distinct()
-        .groupBy("partition_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
     if partition_totals is None:
         partition_totals = {
             r["partition_id"]: r["cnt"]
@@ -138,4 +171,4 @@ def referential_check(
     for pid in sorted(set(viol_by_pid) - set(partition_totals)):
         rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
     verdicts = local_frame(df.sparkSession, rows, VERDICT_SCHEMA)
-    return verdicts, violations
+    return verdicts, violations, n_rows

@@ -25,7 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import dedup, refcheck, rules as R
+from . import config, dedup, refcheck, rules as R
 from .profile import (
     _merge_quantiles,
     build_partial_profile,
@@ -137,6 +137,9 @@ def run_validation(
     verdict_dfs: list[DataFrame] = []
     violation_parts: list[DataFrame] = []
     lineage_parts: list[DataFrame] = []
+    # exact violation ROW count per phase (default mode): the verdict
+    # sum, except where a phase's verdicts count something else
+    violation_rows: dict[str, int | None] = {}
     _acc_lock = threading.Lock()
 
     def run_phase(name: str, fn) -> DataFrame:
@@ -192,6 +195,8 @@ def run_validation(
         else:
             l_rows = v_rows
         with _acc_lock:
+            if v_rows is not None:
+                violation_rows.setdefault(name, sum(r[3] for r in v_rows))
             violation_parts.append(violations)
             verdict_dfs.append(vdf)
             lineage_parts.append(
@@ -318,6 +323,7 @@ def run_validation(
                     lambda ur=ur: dedup.uniqueness_check(
                         documents, ur.column or key_column, ur.rule_id,
                         partition_totals=partition_totals,
+                        distributed=spill,
                     ),
                 )
             )
@@ -338,19 +344,25 @@ def run_validation(
             else []
         ):
             spans_col = rr_rule.column or "spans"
-            tasks.append(
-                (
-                    f"referential_{rr_rule.rule_id}"
-                    if ref_rules else "referential",
-                    lambda rr_rule=rr_rule, spans_col=spans_col: (
-                        refcheck.referential_check(
-                            documents, catalog, spans_col=spans_col,
-                            rule_id=rr_rule.rule_id,
-                            partition_totals=partition_totals,
-                        )
-                    ),
-                )
+            phase = (
+                f"referential_{rr_rule.rule_id}" if ref_rules else "referential"
             )
+
+            def referential_phase(rr_rule=rr_rule, spans_col=spans_col,
+                                  phase=phase):
+                # verdicts count distinct (partition, doc) pairs; the
+                # row count comes from the check's own pin
+                vdf, viol, violation_rows[phase] = (
+                    refcheck.referential_check_counted(
+                        documents, catalog, spans_col=spans_col,
+                        rule_id=rr_rule.rule_id,
+                        partition_totals=partition_totals,
+                        distributed=spill,
+                    )
+                )
+                return vdf, viol
+
+            tasks.append((phase, referential_phase))
 
     # distribution-drift phase (north_rule's fourth check family): one
     # sketch pass (t-digest partials, two-level merge) compared vs the
@@ -465,7 +477,9 @@ def run_validation(
         # only the column-pruned quantile pass reads the input again,
         # and it starts immediately
         quantiles = profile_quantiles(documents, fused_plan.quantile_cols)
-        rr_future.result()
+        # the totals are published once the fused per-partition frame
+        # is collected — no need to wait for the violation-row pin
+        totals_future.result()
         return _merge_quantiles(
             finalize_partial_profile(fused_state["per_part"], fused_plan),
             quantiles,
@@ -519,6 +533,19 @@ def run_validation(
     violations = violation_parts[0]
     for x in violation_parts[1:]:
         violations = violations.unionByName(x)
+    # small violation sets leave as one partition (one output file)
+    # instead of one per shuffle partition of the uniqueness window.
+    # Only in default mode without checkpointing, where every part is
+    # already materialized (pinned cache, local checkpoint or local
+    # relation) and every phase's row count is exact; the union's
+    # Catalyst estimate is useless here (a localCheckpoint estimates
+    # as Long.MaxValue).
+    if (
+        not spill
+        and ckpt is None
+        and sum(violation_rows.values()) <= config.VIOLATIONS_ONE_FILE_ROWS
+    ):
+        violations = violations.coalesce(1)
     lineage = lineage_parts[0]
     for l in lineage_parts[1:]:
         lineage = lineage.unionByName(l)

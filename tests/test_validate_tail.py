@@ -1,0 +1,204 @@
+"""The tail of run_validation: what runs after the row-rules totals
+arrive, how the violation rows leave, and the drift merge levels.
+
+- uniqueness/referential pin their caches with the per-partition
+  collect their verdicts need, so no job runs after the totals;
+- violations leave as one partition when their exact row count is at
+  most ``config.VIOLATIONS_ONE_FILE_ROWS`` (default mode only);
+- the drift sketch skips its level-2 combine when it would be an
+  identity, and still sketches every column of a zero-partition input.
+"""
+
+from __future__ import annotations
+
+import os
+
+import numpy as np
+import pyspark.sql.functions as F
+
+from automatic_data_validator_spark import config
+from automatic_data_validator_spark import drift as DR
+from automatic_data_validator_spark import rules as R
+from automatic_data_validator_spark.dedup import uniqueness_check
+from automatic_data_validator_spark.refcheck import referential_check
+from automatic_data_validator_spark.session import local_frame
+from automatic_data_validator_spark.validate import (
+    canonical_violations,
+    run_validation,
+)
+
+
+def _last_job_id(spark) -> int:
+    """Highest job id the status tracker knows, after draining the
+    asynchronous listener bus so finished jobs are all registered."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _partition_totals(df) -> dict[int, int]:
+    return {
+        r["pid"]: r["n"]
+        for r in df.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+
+
+def test_checks_run_no_job_after_totals(spark, docs, catalog):
+    """Standalone uniqueness and referential checks with a callable
+    totals: the callable records the last job id when it is resolved,
+    and no job may start after it — the per-partition collect is the
+    action that materializes the cache, before the totals."""
+    totals = _partition_totals(docs)
+    expected = {
+        "unique": sorted(map(tuple, uniqueness_check(
+            docs, partition_totals=totals)[0].collect())),
+        "ref": sorted(map(tuple, referential_check(
+            docs, catalog, partition_totals=totals)[0].collect())),
+    }
+    seen: dict[str, int] = {}
+
+    def totals_fn():
+        seen["at_totals"] = _last_job_id(spark)
+        return totals
+
+    for name, check in (
+        ("unique", lambda: uniqueness_check(docs, partition_totals=totals_fn)),
+        ("ref", lambda: referential_check(
+            docs, catalog, partition_totals=totals_fn)),
+    ):
+        seen.clear()
+        verdicts, _viol = check()
+        assert "at_totals" in seen, name
+        assert _last_job_id(spark) == seen["at_totals"], name
+        assert sorted(map(tuple, verdicts.collect())) == expected[name]
+
+
+def _violation_files(res, path) -> int:
+    res.violations.write.parquet(path)
+    return sum(n.endswith(".parquet") for n in os.listdir(path))
+
+
+def test_violations_one_partition_gate_both_sides(
+    spark, docs, catalog, tmp_path, monkeypatch
+):
+    """Default mode: at most VIOLATIONS_ONE_FILE_ROWS violation rows
+    leave as one partition (one parquet file); one row over the limit
+    keeps the phases' own partitioning. Spill and checkpoint mode keep
+    their partitioning. The canonical rows are the same in every case."""
+    res = run_validation(spark, docs, catalog=catalog, with_profile=False)
+    rows = canonical_violations(res.violations).collect()
+    n = len(rows)
+    assert n > 0
+    assert res.violations.rdd.getNumPartitions() == 1
+    assert _violation_files(res, str(tmp_path / "small")) == 1
+
+    # the limit is inclusive: exactly n rows still coalesce
+    monkeypatch.setattr(config, "VIOLATIONS_ONE_FILE_ROWS", n)
+    res = run_validation(spark, docs, catalog=catalog, with_profile=False)
+    assert res.violations.rdd.getNumPartitions() == 1
+
+    monkeypatch.setattr(config, "VIOLATIONS_ONE_FILE_ROWS", n - 1)
+    res = run_validation(spark, docs, catalog=catalog, with_profile=False)
+    assert res.violations.rdd.getNumPartitions() > 1
+    assert canonical_violations(res.violations).collect() == rows
+    monkeypatch.undo()
+
+    spilled = run_validation(spark, docs, catalog=catalog, with_profile=False,
+                             verdict_spill_threshold=1)
+    ckpt = run_validation(spark, docs, catalog=catalog, with_profile=False,
+                          checkpoint_dir=str(tmp_path / "ckpt"),
+                          snapshot_id="gate")
+    for other in (spilled, ckpt):
+        assert other.violations.rdd.getNumPartitions() > 1
+        assert canonical_violations(other.violations).collect() == rows
+
+
+def test_drift_phase_reports_zero_partition_input(spark):
+    """An empty local relation has zero partitions, so the sketch pass
+    emits no partial rows. Its columns must still sketch as empty and
+    the drift phase must report them drifted (empty_sketch), exactly
+    as the same empty data with partitions does."""
+    docs = local_frame(spark, [], "doc_id string, x double")
+    assert docs.rdd.getNumPartitions() == 0
+    baseline = {"x": DR.TDigest.from_values(np.arange(100, dtype=float))}
+    res = run_validation(
+        spark, docs, rule_set=[R.Rule("nn", "not_null", column="doc_id")],
+        check_uniqueness=False, with_profile=False, drift_baseline=baseline,
+    )
+    v = [r for r in res.verdicts.collect() if r["rule_id"] == "drift_x"]
+    assert len(v) == 1 and v[0]["pass"] is False
+    (viol,) = [r for r in res.violations.collect() if r["rule_id"] == "drift_x"]
+    assert "reason=empty_sketch" in viol["detail"]
+    assert DR.sketch_columns(docs, ["x"])["x"].total_weight == 0
+
+
+def _signal_frame(spark, partitions: int):
+    """Exchange-free input (Range scan) with a continuous column and an
+    integer-valued one (ties across partitions)."""
+    return spark.range(0, 20_000, 1, partitions).select(
+        (F.col("id") % 5).cast("string").alias("g"),
+        (F.sin(F.col("id")) * 100).alias("a"),
+        (F.col("id") % 37).cast("double").alias("b"),
+    )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _same_digest(x: DR.TDigest, y: DR.TDigest) -> bool:
+    return (
+        np.array_equal(x.means, y.means)
+        and np.array_equal(x.weights, y.weights)
+        and (x.min_val, x.max_val) == (y.min_val, y.max_val)
+    )
+
+
+def test_sketch_skips_identity_level_two(spark):
+    """With at most combine_buckets level-1 partitions, the plan ends at
+    the level-1 mapInPandas, and sketch_columns equals, bit for bit, a
+    driver merge of the per-partition digests in partition order."""
+    df = _signal_frame(spark, 8)
+    plan = _plan(DR._sketch_partials(df, ["a", "b"]))
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
+    sk = DR.sketch_columns(df, ["a", "b"])
+    pdf = df.select(F.spark_partition_id().alias("pid"), "a", "b").toPandas()
+    for c in ("a", "b"):
+        ref = DR.TDigest.merge_all(
+            DR.TDigest.from_values(part[c].to_numpy())
+            for _pid, part in sorted(pdf.groupby("pid"), key=lambda t: t[0])
+        )
+        assert _same_digest(sk[c], ref), c
+
+
+def test_grouped_sketch_skips_identity_level_two(spark):
+    df = _signal_frame(spark, 8)
+    plan = _plan(DR._grouped_sketch_partials(df, "g", ["a", "b"]))
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
+    sk = DR.sketch_columns_by_group(df, "g", ["a", "b"])
+    pdf = df.select(F.spark_partition_id().alias("pid"), "g", "a", "b").toPandas()
+    parts = sorted(pdf.groupby("pid"), key=lambda t: t[0])
+    assert sorted(sk) == sorted(pdf["g"].unique())
+    for g in sk:
+        for c in ("a", "b"):
+            ref = DR.TDigest.merge_all(
+                DR.TDigest.from_values(part.loc[part["g"] == g, c].to_numpy())
+                for _pid, part in parts
+                if (part["g"] == g).any()
+            )
+            assert _same_digest(sk[g][c], ref), (g, c)
+
+
+def test_sketch_keeps_level_two_above_buckets(spark):
+    """The other side of the gate: more level-1 partitions than
+    combine_buckets still runs the cluster-side combine."""
+    df = _signal_frame(spark, 16)
+    for part in (
+        DR._sketch_partials(df, ["a"], combine_buckets=4),
+        DR._grouped_sketch_partials(df, "g", ["a"], combine_buckets=4),
+    ):
+        plan = _plan(part)
+        assert "Exchange" in plan and "FlatMapGroupsInPandas" in plan
+    assert DR._sketch_partials(df, ["a"], combine_buckets=4).count() <= 4
