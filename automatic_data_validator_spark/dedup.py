@@ -751,11 +751,19 @@ def _lsh_band_buckets(
     bands: int,
     shingle_k: int,
 ) -> DataFrame:
-    """(_id, band, bucket) rows: one 8-byte bucket hash per band."""
+    """(_id, band, bucket) rows: one 8-byte bucket hash per band.
+
+    Raises ValueError unless 1 <= bands <= num_hashes: with more bands
+    than hashes every band would be empty and hash to the same bucket,
+    pairing every document."""
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"bands must be in [1, num_hashes={num_hashes}], got {bands}"
+        )
     rows_per_band = num_hashes // bands
     sig = minhash_signature(text_col, num_hashes, shingle_k)
 
-    def band_bucket(b: int):
+    def band_bucket(b: int) -> str:
         # one-row bands (the default, bands == num_hashes) skip the
         # slice/transform/array_join HOF chain: interpreted HOF lambdas
         # run outside codegen and cost ~20x a native collection expr,
@@ -764,25 +772,22 @@ def _lsh_band_buckets(
         # array is that element), so bucket values are unchanged and
         # the pinned q32 goldens still hold
         if rows_per_band == 1:
-            return F.xxhash64(F.element_at("_sig", b + 1).cast("string"))
-        return F.xxhash64(
-            F.array_join(
-                F.transform(
-                    F.slice("_sig", b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            )
+            return f"xxhash64(cast(element_at(_sig, {b + 1}) as string))"
+        return (
+            "xxhash64(array_join(transform(slice(_sig, "
+            f"{b * rows_per_band + 1}, {rows_per_band}), "
+            "x -> cast(x as string)), ','))"
         )
 
-    bucket_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_bucket(b).alias("bucket"),
-            )
+    # ONE SQL expression for all bands: building the same tree through
+    # the Column API costs ~1.2k py4j calls (0.2+ s of driver time)
+    bucket_arr = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, 'bucket', {band_bucket(b)})"
             for b in range(bands)
-        ]
+        )
+        + ")"
     )
     # two-step (bucket structs in a Project, then explode a BARE column
     # ref) and explode_OUTER + explicit null filter: a plain explode
@@ -837,11 +842,11 @@ def _counted_banded(with_bands: DataFrame) -> DataFrame:
     window's shuffle is the ONE exchange the whole candidate/audit
     derivation needs: pair expansion groups by the same key (exchange
     reuse), and the oversize audit is a filter over the same rows.
-    neardup_dedup persists THIS frame (post-shuffle) rather than the
-    pre-shuffle banded frame, so the signature pass AND the bucket
-    shuffle both run exactly once across candidates + audit — the
-    former shape re-shuffled the cached banded rows once per consumer
-    (measured ~1s of the dedup e2e for the audit alone)."""
+    neardup_dedup aggregates THIS frame (post-shuffle) into one row
+    per non-singleton bucket and localCheckpoints that aggregate, so
+    the signature pass AND the bucket shuffle both run exactly once
+    across candidates + audit, and AQE may coalesce the shuffle's
+    partitions (it never does under a cached plan)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket")
@@ -1108,8 +1113,8 @@ def ngram_jaccard(
     corpus but shingles only candidate rows.
     """
     # materialize the candidate plan EXACTLY ONCE before anything else
-    # (it is referenced 4x below: count, both cand_ids branches, the
-    # pair join) — candidate plans are typically LSH expansions over a
+    # (it is referenced 4x below: count, the candidate-id side, both
+    # pair joins) — candidate plans are typically LSH expansions over a
     # Python-UDF signature chain, and above the broadcast gate the old
     # shape re-executed that plan per reference. The checkpoint is a
     # 3-narrow-column frame, orders of magnitude smaller than the
@@ -1123,13 +1128,13 @@ def ngram_jaccard(
         if small
         else candidate_pairs.hint("merge")
     )
-    cand_ids = (
-        candidate_pairs.select(F.col("id_a").alias("__cand_id"))
-        .unionByName(candidate_pairs.select(F.col("id_b").alias("__cand_id")))
-        .distinct()
+    cand_ids = candidate_pairs.select(
+        F.explode(F.array("id_a", "id_b")).alias("__cand_id")
     )
-    if small:
-        cand_ids = F.broadcast(cand_ids)
+    # a left-semi join ignores duplicate build keys, so the broadcast
+    # side needs no distinct (that would cost a shuffle); above the
+    # gate the distinct halves the shuffled join side
+    cand_ids = F.broadcast(cand_ids) if small else cand_ids.distinct()
     sh = df.join(
         cand_ids, F.col(id_col) == F.col("__cand_id"), "leftsemi"
     ).select(
@@ -1434,38 +1439,44 @@ def neardup_dedup(
 
     Returns ``(kept_df, drop_list, verified_pairs, oversize_buckets)``
     — the last is the visible bucket-cap audit, derived from the SAME
-    banded frame as the candidates. Cost model (round-4 review): the
-    Python-UDF signature chain runs EXACTLY ONCE — the (_id, band,
-    bucket) frame is persisted across the candidate count, the verify
-    join, and the audit, then released; the drop list is a local
+    banded frame as the candidates. Cost model: the Python-UDF
+    signature chain and the (band, bucket) shuffle run EXACTLY ONCE —
+    the non-singleton bucket aggregate is localCheckpoint'ed (one job,
+    AQE-coalesced partitions), and the candidate pairs and the audit
+    are filters over those blocks; the audit is returned lazy and
+    costs no job until its consumer reads it. The drop list is a local
     relation or localCheckpoint'ed inside dedup_keep_representatives,
     so no connected-components cache outlives the call. The verified
     pair set is likewise localCheckpoint'ed (small by the pipeline's own
     contract — candidates are bucket-capped and the pair list is
     count-gated), so NOTHING returned holds a session-lifetime cache:
-    no caller unpersist obligation (round-4 review finding — the
-    previous "caller must release my cache" contract would leak in
-    the first notebook that used it). Candidate generation is
+    checkpoint blocks are released by the context cleaner on GC, and
+    there is no caller unpersist obligation. Candidate generation is
     bucketed (never all-pairs), the pair list is count-gated before
     broadcast, and the corpus is touched by exactly one anti-join —
     the shapes that hold at 10^12 docs. Default ``bands == num_hashes``
     (one hash row per band) keeps recall at ~1 for pairs at or above
     jaccard 0.5: the miss probability is (1-j)^bands.
     """
-    # ONE materialization point for everything bucket-derived (r6):
-    # the signature pass, the (band, bucket) window shuffle, and one
-    # bucket-list aggregation produce a single small checkpointed
-    # frame (non-singleton buckets only) from which BOTH the candidate
-    # pairs and the oversize audit are cheap filters. The former shape
-    # persisted the full 16x|corpus|-row counted frame and re-scanned
-    # it per consumer (cache write + a second full cache pass,
-    # measured ~1s of the 160k-doc e2e). The collect_list is
+    # ONE materialization point for everything bucket-derived: the
+    # signature pass, the (band, bucket) window shuffle, and one
+    # bucket-list aggregation produce a single small frame
+    # (non-singleton buckets only) from which BOTH the candidate pairs
+    # and the oversize audit are cheap filters. The collect_list is
     # null-guarded by the window count, so a degenerate over-cap
-    # bucket collects an EMPTY list, never a quadratic id list —
-    # the spill-safe cap semantics are unchanged.
+    # bucket collects an EMPTY list, never a quadratic id list — the
+    # spill-safe cap semantics are unchanged.
     counted = _counted_banded(
         _lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k)
     )
+    # localCheckpoint, not persist: AQE never re-partitions a cached
+    # plan (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    # is off by default), so a persisted aggregate kept every
+    # spark.sql.shuffle.partitions partition through the window,
+    # aggregate and pair-expansion stages. The checkpoint runs the
+    # aggregate as an ordinary AQE query (coalesced partitions), and
+    # its blocks are released by the context cleaner on GC — nothing
+    # for a caller to unpersist.
     buckets = (
         counted.filter(F.col("_n") >= 2)
         .groupBy("band", "bucket")
@@ -1478,36 +1489,23 @@ def neardup_dedup(
             # the window count is constant within a bucket
             F.max("_n").alias("_n"),
         )
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    try:
-        cand = _expand_bucket_lists(
-            buckets.filter(F.col("_n") <= max_bucket_size)
+    cand = _expand_bucket_lists(buckets.filter(F.col("_n") <= max_bucket_size))
+    verified = (
+        ngram_jaccard(
+            df, id_col, text_col, cand, shingle_k=shingle_k,
+            broadcast_limit=broadcast_limit,
         )
-        verified = (
-            ngram_jaccard(
-                df, id_col, text_col, cand, shingle_k=shingle_k,
-                broadcast_limit=broadcast_limit,
-            )
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            # checkpointed so nothing returned replays the signature
-            # chain (no caller unpersist obligation; blocks on GC).
-            # Materializing this is also what materializes the buckets
-            # cache (the single signature pass).
-            .localCheckpoint(eager=True)
-        )
-        oversize = (
-            buckets.filter(F.col("_n") > max_bucket_size)
-            .select(
-                "band", "bucket", F.col("_n").cast("long").alias("n_docs")
-            )
-            # materialized while the buckets cache is warm: the lazy
-            # filter would replay the whole signature chain after the
-            # unpersist below
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        buckets.unpersist()
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        # checkpointed so nothing returned replays the verify join
+        .localCheckpoint(eager=True)
+    )
+    # a lazy filter over the checkpoint: no job of its own, and
+    # whatever consumes it reads the checkpointed blocks
+    oversize = buckets.filter(F.col("_n") > max_bucket_size).select(
+        "band", "bucket", F.col("_n").cast("long").alias("n_docs")
+    )
     kept, drop_list = dedup_keep_representatives(
         df, verified.select("id_a", "id_b"), id_col
     )

@@ -11,6 +11,29 @@ one place.
 from __future__ import annotations
 
 
+def _drain(sc) -> None:
+    """Best-effort wait for the ASYNC listener bus that feeds the
+    status store: under host load, stage metrics can lag the action's
+    return by seconds (observed as a scan-budget test false-failing
+    only during a concurrent full-suite run)."""
+    try:
+        sc.listenerBus().waitUntilEmpty(10000)
+    except Exception:
+        pass
+
+
+def _stage_field(spark, field: str) -> "dict[int, int]":
+    """{stageId: StageData.<field>()} for every stage in the store."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    empty = spark._jvm.java.util.Collections.emptyList()
+    args = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
+    stages = store.stageList(empty, *args)
+    return {
+        stages.apply(i).stageId(): getattr(stages.apply(i), field)()
+        for i in range(stages.size())
+    }
+
+
 def input_records(spark) -> int:
     """Cumulative records read from input sources across all COMPLETED
     stages (AppStatusStore). Take a snapshot before a job and diff
@@ -18,28 +41,10 @@ def input_records(spark) -> int:
     stages are counted, so call after an action has returned."""
     import time
 
-    sc = spark.sparkContext._jsc.sc()
-    try:
-        # the status store is fed by an ASYNC listener bus: under host
-        # load, stage metrics can lag the action's return by seconds,
-        # silently under-counting a snapshot (observed as a scan-budget
-        # test false-failing only during a concurrent full-suite run).
-        # Drain the bus before reading; best-effort — the counter is
-        # still meaningful without it, just eventually consistent.
-        sc.listenerBus().waitUntilEmpty(10000)
-    except Exception:
-        pass
+    _drain(spark.sparkContext._jsc.sc())
 
     def _read() -> int:
-        store = sc.statusStore()
-        empty = spark._jvm.java.util.Collections.emptyList()
-        args = [
-            getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
-        ]
-        stages = store.stageList(empty, *args)
-        return sum(
-            stages.apply(i).inputRecords() for i in range(stages.size())
-        )
+        return sum(_stage_field(spark, "inputRecords").values())
 
     # waitUntilEmpty can time out silently (it returns a bool this
     # ignores), and a stage completing between a caller's before/after
@@ -56,49 +61,40 @@ def input_records(spark) -> int:
     return prev
 
 
-def _stage_rows(spark) -> "dict[int, int]":
-    """{stageId: inputRecords} for all completed stages in the store."""
+def _scoped_stages(spark, action, field: str) -> "dict[int, int]":
+    """Run ``action()`` and return {stageId: StageData.<field>()} for
+    the stages IT submitted — scoped by stage id, so a straggler stage
+    from earlier work completing mid-measurement (or a store eviction)
+    cannot pollute the figure the way a global before/after diff can.
+    Re-reads until two consecutive readings agree."""
+    import time
+
     sc = spark.sparkContext._jsc.sc()
-    store = sc.statusStore()
-    empty = spark._jvm.java.util.Collections.emptyList()
-    args = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-    stages = store.stageList(empty, *args)
-    return {
-        stages.apply(i).stageId(): stages.apply(i).inputRecords()
-        for i in range(stages.size())
-    }
+    _drain(sc)
+    mark = max(_stage_field(spark, "stageId"), default=-1)
+    action()
+    _drain(sc)
+    prev = None
+    for _ in range(20):
+        cur = {k: v for k, v in _stage_field(spark, field).items() if k > mark}
+        if cur == prev:
+            break
+        prev = cur
+        time.sleep(0.1)
+    return prev
 
 
 def scan_records(spark, action) -> int:
     """Run ``action()`` and return the input records read by the
-    stages IT submitted — scoped by stage id, so a straggler stage
-    from earlier work completing mid-measurement (or a store eviction)
-    cannot pollute the figure the way a global-sum before/after diff
-    can. Use this for scan-budget assertions in long shared sessions;
-    ``input_records`` diffs remain fine for one-shot scripts."""
-    import time
+    stages IT submitted (see _scoped_stages). Use this for scan-budget
+    assertions in long shared sessions; ``input_records`` diffs remain
+    fine for one-shot scripts. A genuine zero-record scan comes back
+    as 0."""
+    return sum(_scoped_stages(spark, action, "inputRecords").values())
 
-    sc = spark.sparkContext._jsc.sc()
-    try:
-        sc.listenerBus().waitUntilEmpty(10000)
-    except Exception:
-        pass
-    before = _stage_rows(spark)
-    max_before = max(before, default=-1)
-    action()
-    try:
-        sc.listenerBus().waitUntilEmpty(10000)
-    except Exception:
-        pass
-    prev = None
-    for _ in range(20):
-        cur = _stage_rows(spark)
-        new = sum(v for k, v in cur.items() if k > max_before)
-        if new == prev:
-            break
-        prev = new
-        time.sleep(0.1)
-    # prev holds the LATEST reading here (converged or not); a genuine
-    # zero-record scan must come back as 0, never be conflated with
-    # "no reading" (round-5 ADVICE)
-    return 0 if prev is None else prev
+
+def stage_tasks(spark, action) -> "dict[int, int]":
+    """Run ``action()`` and return {stageId: completed tasks} for the
+    stages it submitted (see _scoped_stages); a stage skipped because
+    its shuffle output was reused completes no task."""
+    return _scoped_stages(spark, action, "numCompleteTasks")

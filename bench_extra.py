@@ -116,7 +116,8 @@ def main() -> None:
 
     # --- dedup e2e staged (mirrors the PRODUCTION neardup_dedup shape
     # exactly: one counted-banded pass -> single small buckets
-    # aggregate -> expansion/verify/audit as filters over it) ---
+    # aggregate, localCheckpoint'ed -> expansion/verify/audit as
+    # filters over it) ---
     from automatic_data_validator_spark.dedup import (
         _counted_banded, _expand_bucket_lists, _lsh_band_buckets,
         ngram_jaccard, dedup_keep_representatives,
@@ -137,8 +138,11 @@ def main() -> None:
         f.count()
 
     cap = config.LSH_MAX_BUCKET_SIZE
-    buckets = (
-        _counted_banded(_lsh_band_buckets(ddf, "doc_id", "text", 16, 16, 3))
+    buckets = timed(
+        "dd_sign_band_buckets",
+        lambda: _counted_banded(
+            _lsh_band_buckets(ddf, "doc_id", "text", 16, 16, 3)
+        )
         .filter(F.col("_n") >= 2)
         .groupBy("band", "bucket")
         .agg(
@@ -147,9 +151,8 @@ def main() -> None:
             ).alias("_ids"),
             F.max("_n").alias("_n"),
         )
-        .persist()
+        .localCheckpoint(eager=True),
     )
-    timed("dd_sign_band_buckets", lambda: buckets.count())
     cand = timed(
         "dd_candidates",
         lambda: _expand_bucket_lists(
@@ -162,13 +165,14 @@ def main() -> None:
         .filter(F.col("jaccard") >= 0.5)
         .localCheckpoint(eager=True),
     )
+    # production returns the audit as a lazy filter over the
+    # checkpoint; this times its consumer's read
     timed(
         "dd_oversize",
         lambda: buckets.filter(F.col("_n") > cap)
         .select("band", "bucket", F.col("_n").cast("long").alias("n_docs"))
-        .localCheckpoint(eager=True),
+        .count(),
     )
-    buckets.unpersist()
     kept_drop = timed(
         "dd_cc_droplist",
         lambda: dedup_keep_representatives(

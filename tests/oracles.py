@@ -5,7 +5,9 @@ random-hyperplane signatures. The package ships only the Arrow-batched
 kernels (dedup.minhash_signature, dedup.simhash,
 similarity.hyperplane_signatures_batch); these interpreted versions are
 several-fold slower but state the definition directly, so the tests
-pin the kernels to them bit for bit.
+pin the kernels to them bit for bit. The Column-API LSH band builder
+is kept the same way: the package builds the identical expression
+tree from one SQL string.
 """
 
 from __future__ import annotations
@@ -73,3 +75,42 @@ def hyperplane_signature_expr(
             )
         )
     return F.when(F.size(v) == dim, sig)
+
+
+def lsh_band_buckets_columns(
+    df, id_col: str, text_col: str, num_hashes: int, bands: int, shingle_k: int
+):
+    """(_id, band, bucket) rows with each band's bucket struct built
+    through the Column API: xxhash64 of the band's signature slice,
+    its elements cast to string and joined with ','. A one-row band
+    hashes its single element directly (array_join of one element is
+    that element)."""
+    rows_per_band = num_hashes // bands
+
+    def band_bucket(b: int):
+        if rows_per_band == 1:
+            return F.xxhash64(F.element_at("_sig", b + 1).cast("string"))
+        return F.xxhash64(
+            F.array_join(
+                F.transform(
+                    F.slice("_sig", b * rows_per_band + 1, rows_per_band),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            )
+        )
+
+    bucket_arr = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
+            for b in range(bands)
+        ]
+    )
+    sig = D.minhash_signature(text_col, num_hashes, shingle_k)
+    return (
+        df.select(F.col(id_col).alias("_id"), sig.alias("_sig"))
+        .select("_id", bucket_arr.alias("_bb"))
+        .select("_id", F.explode_outer("_bb").alias("bb"))
+        .filter(F.col("bb").isNotNull())
+        .select("_id", "bb.band", "bb.bucket")
+    )

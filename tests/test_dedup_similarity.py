@@ -6,8 +6,11 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
+import pytest
+
 from oracles import (
     hyperplane_signature_expr,
+    lsh_band_buckets_columns,
     minhash_signature_expr,
     simhash_expr,
 )
@@ -214,6 +217,89 @@ def test_lsh_bucket_cap_prevents_quadratic_blowup(spark):
     # uncapped default still pairs them (bucket of 1000 < default cap)
     some = D.minhash_lsh_duplicates(df.limit(50), "id", "text", num_hashes=16, bands=4)
     assert some.count() == 50 * 49 // 2
+
+
+def test_lsh_rejects_bands_outside_num_hashes(spark):
+    """More bands than hashes leaves every band empty, so every doc
+    lands in the bucket xxhash64('') and pairs with every other doc;
+    such calls must raise instead of returning all-pairs."""
+    df = spark.createDataFrame(
+        pd.DataFrame({
+            "id": range(10),
+            "text": [f"unrelated document {i} about topic {i * 7}" for i in range(10)],
+        })
+    )
+    for bands in (32, 17, 0):
+        with pytest.raises(ValueError, match="bands"):
+            D.minhash_lsh_duplicates(df, "id", "text", num_hashes=16, bands=bands)
+    with pytest.raises(ValueError, match="bands"):
+        D.lsh_oversize_buckets(df, "id", "text", num_hashes=16, bands=32)
+    with pytest.raises(ValueError, match="bands"):
+        D.neardup_dedup(df, "id", "text", num_hashes=16, bands=32)
+    # the boundary is accepted: one hash row per band
+    assert D.minhash_lsh_duplicates(
+        df, "id", "text", num_hashes=16, bands=16
+    ).count() == 0
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(16, 16), (16, 8), (16, 4)])
+def test_band_buckets_equal_column_api_reference(spark, num_hashes, bands):
+    """The one-SQL-expression band builder yields exactly the rows of
+    the Column-API reference, null and empty texts included: the
+    oversize audit publishes these (band, bucket) values."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy cat",
+        None, "", "x", "two words", "MiXeD CaSe ünïcode   spacing\there",
+    ]
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": range(len(texts)), "text": texts})
+    )
+    got = D._lsh_band_buckets(df, "id", "text", num_hashes, bands, 3)
+    ref = lsh_band_buckets_columns(df, "id", "text", num_hashes, bands, 3)
+    assert got.schema == ref.schema
+    got_rows = sorted(got.collect())
+    assert len(got_rows) == len(texts) * bands
+    assert got_rows == sorted(ref.collect())
+
+
+def test_neardup_dedup_audit_reports_oversize_buckets(spark):
+    """A boilerplate block larger than the bucket cap fills the audit:
+    its rows equal lsh_oversize_buckets with the same arguments, the
+    boilerplate yields no pairs, the planted pairs still verify, and
+    the call leaves no entry in the session's cache manager."""
+    from automatic_data_validator_spark.synth import make_neardup_corpus
+
+    planted = make_neardup_corpus(spark, 400, 40, seed=11)
+    boiler = spark.range(300).select(
+        F.format_string("bp-%04d", F.col("id")).alias("doc_id"),
+        F.lit("click here to accept cookies and agree to our terms").alias("text"),
+    )
+    df = planted.unionByName(boiler).localCheckpoint(eager=True)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cm.numCachedEntries()
+
+    kept, drop, pairs, oversize = D.neardup_dedup(
+        df, "doc_id", "text", max_bucket_size=100
+    )
+    got_over = sorted(oversize.collect())
+    got_pairs = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
+    dropped = {r["doc_id"] for r in drop.collect()}
+    n_kept = kept.count()
+
+    want_over = sorted(
+        D.lsh_oversize_buckets(
+            df, "doc_id", "text", bands=16, max_bucket_size=100
+        ).collect()
+    )
+    assert len(got_over) == 16 and all(r["n_docs"] == 300 for r in got_over)
+    assert got_over == want_over
+    assert got_pairs == [
+        (f"dd-{2 * k:012d}", f"dd-{2 * k + 1:012d}") for k in range(20)
+    ]
+    assert dropped == {f"dd-{2 * k + 1:012d}" for k in range(20)}
+    assert n_kept == 700 - 20
+    assert cm.numCachedEntries() == cached_before
 
 
 def test_simhash_single_pass_matches_multi_pass(spark):

@@ -217,6 +217,33 @@ def test_ngram_jaccard_scans_corpus_once_and_prunes(spark, tmp_path):
     assert got[("dd-000000000000", "dd-000000000002")] < 0.1
 
 
+def test_neardup_bucket_stages_coalesce(spark):
+    """neardup_dedup's bucket aggregate is checkpointed, not cached:
+    AQE never re-partitions a cached plan, so the cached shape ran the
+    window/aggregate and pair-expansion stages over every one of
+    spark.sql.shuffle.partitions partitions. With the checkpoint AQE
+    coalesces them, so on a small corpus no stage of the whole
+    pipeline (outputs included) runs that many tasks."""
+    from automatic_data_validator_spark.introspect import stage_tasks
+    from automatic_data_validator_spark.synth import make_neardup_corpus
+
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = make_neardup_corpus(spark, 2_000, 200, seed=7)
+    assert df.rdd.getNumPartitions() < n_shuffle
+    counts = {}
+
+    def run():
+        kept, drop, pairs, oversize = D.neardup_dedup(df)
+        counts.update(
+            kept=kept.count(), drop=drop.count(), pairs=pairs.count(),
+            oversize=oversize.count(),
+        )
+
+    tasks = stage_tasks(spark, run)
+    assert counts == {"kept": 1_900, "drop": 100, "pairs": 100, "oversize": 0}
+    assert tasks and max(tasks.values()) < n_shuffle, sorted(tasks.items())
+
+
 def test_sorted_table_range_scan_skips_files(spark, tmp_path):
     """write_sorted_table lays files out as disjoint sort-key ranges:
     a key-range predicate covering 1/8 of the keyspace reads ~1/8 of
