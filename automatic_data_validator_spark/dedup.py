@@ -84,14 +84,17 @@ def uniqueness_check(
     whose key-total exceeds 1 re-expand to one violation row per
     original occurrence. The former design's second full-table
     attribution join (broadcast-vs-SMJ guarded) is gone, halving the
-    fact-table IO; nothing but the (small) violation set is persisted
-    (round-2 VERDICT wrong-list #1). That cache entry is the returned
-    ``violations`` frame and lives until the caller unpersists it;
-    ``run_validation`` does not, so it outlives a run (ROADMAP open
-    item). Shuffle volume is unchanged vs the salted two-phase agg: both
-    carry one row per distinct (key, partition); the window adds a
-    sort of those aggregated rows, which is the price of the saved
-    100-TB scan.
+    fact-table IO; nothing but the (small) violation set is kept. It is
+    kept as an eager ``localCheckpoint``, not a ``persist()``: AQE may
+    coalesce the window stage's partitions (it never re-partitions a
+    cached plan), and no entry lands in the session's cache manager,
+    where a later check over a rewritten path would match the stale
+    cached plan and return the old rows. The checkpoint blocks go with
+    the returned frame (garbage collection releases them); the caller
+    has nothing to unpersist. Shuffle volume is unchanged vs the
+    salted two-phase agg: both carry one row per distinct (key,
+    partition); the window adds a sort of those aggregated rows, which
+    is the price of the saved 100-TB scan.
 
     Bucketed input (``sources.write_bucketed_table`` /
     ``spark.table`` of a table bucketed by ``key``): the scan's
@@ -100,7 +103,8 @@ def uniqueness_check(
     adds nothing to the shuffle key — and Catalyst elides EVERY
     Exchange, fusing the whole check into one stage riding the scan.
     Re-validating the same corpus every snapshot therefore pays zero
-    uniqueness shuffle; no code-path switch is needed (plan-pinned by
+    uniqueness shuffle; no code-path switch is needed (the call writes
+    zero shuffle bytes, pinned by
     test_uniqueness_on_bucketed_input_plans_zero_exchange).
 
     partition_totals: per-partition row counts already known from the
@@ -111,14 +115,13 @@ def uniqueness_check(
     never collected — required when the input has more partitions than
     the driver should hold rows (~8M partitions at 10^12 docs / 128MB
     splits). A callable is resolved only after this check's own scan
-    has materialized the persisted violation set, so a concurrent
-    row-rules scan overlaps it: the materializing action is the
-    per-partition violation-count collect the local verdicts need, so
-    nothing runs on the cluster after the totals arrive.
-    ``distributed=True`` (implied by a DataFrame) marks a callable that
-    resolves to a DataFrame: the pin is then a ``count()`` and no
-    per-partition rows reach the driver. Returns (verdicts, violations)
-    in rules VERDICT/VIOLATION schema.
+    has materialized the checkpointed violation set and (local
+    verdicts) its per-partition counts were collected, so a concurrent
+    producer of the totals overlaps it and nothing runs on the cluster
+    after the totals arrive. ``distributed=True`` (implied by a
+    DataFrame) marks a callable that resolves to a DataFrame: no
+    per-partition rows then reach the driver. Returns (verdicts,
+    violations) in rules VERDICT/VIOLATION schema.
     """
     from pyspark.sql import Window
 
@@ -145,24 +148,20 @@ def uniqueness_check(
             "partition_id",
             F.lit(None).cast("string").alias("detail"),
         )
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    # Totals from a concurrently-running row-rules phase may arrive as
-    # a BLOCKING CALLABLE: materialize THIS phase's own (expensive)
-    # scan first, then resolve — so the two phases' scans overlap
+    # Totals from a concurrently-running phase may arrive as a BLOCKING
+    # CALLABLE: THIS phase's own (expensive) scan has materialized above
+    # and is only resolved now, so the two phases' scans overlap
     # instead of serializing (round 3).
     distributed = distributed or isinstance(partition_totals, DataFrame)
     if not distributed:
-        # the local verdicts need these counts anyway; collecting them
-        # is what materializes (pins) the persisted set
         viol_by_pid = {
             r["partition_id"]: r["cnt"]
             for r in violations.groupBy("partition_id")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
-    elif callable(partition_totals):
-        violations.count()  # pins the persisted violation set
     if callable(partition_totals):
         partition_totals = partition_totals()
     if distributed or isinstance(partition_totals, DataFrame):

@@ -28,7 +28,9 @@ def media_refs_expr(spans_col: str = "spans"):
     return F.array_distinct(F.array_compact(F.col(f"{spans_col}.media_ref")))
 
 
-def distinct_refs(df: DataFrame, spans_col: str = "spans") -> DataFrame:
+def distinct_refs(
+    df: DataFrame, spans_col: str = "spans", refs_col: "str | None" = None
+) -> DataFrame:
     """Distinct non-null media refs with per-input-partition attribution.
 
     Dedups (partition_id, media_ref) BEFORE the join shuffle — at
@@ -45,14 +47,19 @@ def distinct_refs(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     text-dominant spans that is ~10% of the former scan's bytes.
     array_compact(x) ≡ filter(x, isNotNull) with order preserved, so
     violation rows are unchanged (one per doc × distinct ref).
+
+    ``refs_col`` names a column that already holds
+    ``media_refs_expr(spans_col)`` (run_validation's check frame);
+    ``spans_col`` is then not read.
     """
+    refs = F.col(refs_col) if refs_col else media_refs_expr(spans_col)
     return (
         df.select(
             F.spark_partition_id().cast("int").alias("partition_id"),
             F.col("doc_id").cast("string").alias("doc_id"),
             # per-row distinct BEFORE explode: a doc repeating one ref
             # emits it once (also keeps violation rows one-per-doc×ref)
-            F.explode(media_refs_expr(spans_col)).alias("media_ref"),
+            F.explode(refs).alias("media_ref"),
         )
     )
 
@@ -72,10 +79,12 @@ def referential_check(
 
     Violation = a doc containing at least one dangling media_ref; one
     violation row per (doc, dangling ref). ONE pass over the fact
-    table: the dangling set is persisted (small) and per-partition
-    verdict counts aggregate from it; partition_totals reuses row
-    counts from the row-rules pass when available (same scan
-    partitioning => same spark_partition_id assignment).
+    table: the dangling set is kept as an eager localCheckpoint (small;
+    no cache-manager entry outlives the call, and AQE may coalesce the
+    join's partitions) and per-partition verdict counts aggregate from
+    it; partition_totals reuses row counts from the row-rules pass when
+    available (same scan partitioning => same spark_partition_id
+    assignment).
     ``distributed`` as in dedup.uniqueness_check.
     """
     verdicts, violations, _rows = referential_check_counted(
@@ -95,13 +104,15 @@ def referential_check_counted(
     partition_totals: "dict[int, int] | DataFrame | Any | None" = None,
     *,
     distributed: bool = False,
+    refs_col: "str | None" = None,
 ) -> "tuple[DataFrame, DataFrame, int | None]":
     """referential_check plus the exact violation ROW count (verdicts
     count distinct (partition, doc) pairs, rows count (doc, ref)
-    pairs). The local verdict path reads it off the same collect that
-    materializes the dangling set, so it costs no job; the distributed
-    path never collects per-partition rows and returns None."""
-    refs = distinct_refs(df, spans_col)
+    pairs). The local verdict path reads it off the per-partition
+    collect its verdicts need anyway, so it costs no extra job; the
+    distributed path never collects per-partition rows and returns
+    None. ``refs_col`` as in distinct_refs."""
+    refs = distinct_refs(df, spans_col, refs_col)
     cat = catalog.select("media_ref").distinct()
     if catalog_rows is None:
         # cheap metadata estimate: count the (small) dimension once
@@ -111,19 +122,19 @@ def referential_check_counted(
     else:
         cat_side = cat.hint("merge")
     # dangling is consumed twice (violation rows + per-partition verdict
-    # counts) and is small; persist so the explode+join runs once
-    dangling = refs.join(cat_side, "media_ref", "left_anti").persist()
+    # counts) and is small; checkpoint so the explode+join runs once
+    dangling = refs.join(cat_side, "media_ref", "left_anti").localCheckpoint(
+        eager=True
+    )
     violations = dangling.select(
         "doc_id",
         F.lit(rule_id).alias("rule_id"),
         "partition_id",
         F.col("media_ref").alias("detail"),
     )
-    # callable totals (the concurrent row-rules phase) resolve only
-    # AFTER this phase's own scan/join materializes, so the two scans
-    # overlap in both verdict modes (round 3); the local path's
-    # materializing action is its per-partition count collect, so no
-    # job runs after the totals arrive
+    # callable totals resolve only AFTER this phase's own scan/join
+    # has materialized (and, local path, its per-partition counts are
+    # collected), so no job runs after the totals arrive
     distributed = distributed or isinstance(partition_totals, DataFrame)
     if not distributed:
         per_pid = (
@@ -135,8 +146,6 @@ def referential_check_counted(
         )
         viol_by_pid = {r["partition_id"]: r["docs"] for r in per_pid}
         n_rows = sum(int(r["refs"]) for r in per_pid)
-    elif callable(partition_totals):
-        dangling.count()  # pins the persisted dangling set
     if callable(partition_totals):
         partition_totals = partition_totals()
     if distributed or isinstance(partition_totals, DataFrame):

@@ -13,10 +13,16 @@ pass/fail verdicts and violation rows"):
   * All row-level rules are evaluated in a single table scan that
     hash-aggregates per ``spark_partition_id()`` — no shuffle beyond
     the tiny final combine (one row per partition).
-  * Violation rows come from a second filtered scan; violations are
-    sparse, so Catalyst pushes the disjunction of failure predicates
-    into the parquet reader where possible. (Two map-only scans beat
-    caching a 10^12-row flags table.)
+  * Violation rows come from a second, filtered pass over the same
+    rows. ``evaluate_row_rules`` runs both passes over its input.
+    ``validate.run_validation`` runs them over one materialized check
+    frame that holds a fail flag per rule (``not coalesce(pred,
+    false)``) and only the columns the other checks read, so the wide
+    source is scanned once per run, not once per consumer. On the
+    benchmark's full_validate op (40k documents, 4 cores) that took the
+    document scans from 4 to 1 (drift keeps its own) and the median op
+    from 3.52 to 3.15 s. The frame holds a few narrow columns per row,
+    not the source rows.
   * ``unique`` and ``referential`` rules need a shuffle by design;
     they delegate to dedup.py / refcheck.py and their verdicts are
     unioned in with the same schema.

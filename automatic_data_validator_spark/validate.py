@@ -2,23 +2,37 @@
 
 Pipeline (each phase checkpointable, resumable via state.Checkpointer):
 
-  phase "row_rules"    — all row-level rules in one scan -> per-partition
-                         verdicts + violation rows (rules.py)
+  phase "row_rules"    — all row-level rules -> per-partition verdicts
+                         + violation rows (rules.py)
   phase "uniqueness"   — two-phase salted doc_id dedup (dedup.py)
   phase "referential"  — media_ref anti-join vs catalog (refcheck.py)
-  phase "profile"      — single-pass column stats -> metrics rows
+  phase "profile"      — column stats -> metrics rows (profile.py)
   phase "drift"        — KS/PSI vs a baseline sketch snapshot
                          (opt-in via drift_baseline; drift.py)
+
+The input is read once for all phases but drift: ``check_frame``
+projects it to a narrow per-row frame (keys, one fail flag per row
+rule, each row's media refs, the columns the profile reads), which is
+materialized as an eager localCheckpoint, read by every other check,
+and released before the run returns. One per-partition aggregate over
+it carries the rule counts, the profile partials and the partition
+totals. Each check keeps its own result as a local relation or an
+eager localCheckpoint, so nothing the run creates stays in the
+session's cache manager: a later run over a path rewritten in place
+cannot be served stale cached rows. Drift maps the input to its own
+signal frame (``drift_signals``) and reads it in parallel.
 
 Outputs: ``verdicts`` / ``violations`` / ``metrics`` / ``lineage``
 DataFrames (written as parquet when a checkpoint dir is given). This is
 the Spark-native equivalent of the reference's
 upload→profile→validate loop (app.py:202-501) with the eager pandas
-passes replaced by four lazy plans.
+passes replaced by lazy plans over one scan.
 """
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 
@@ -26,11 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config, dedup, refcheck, rules as R
+from pyspark.sql import types as T
+
 from .profile import (
     _merge_quantiles,
     build_partial_profile,
     finalize_partial_profile,
-    profile_partitioned,
     profile_quantiles,
 )
 from .session import local_frame
@@ -53,6 +68,75 @@ class ValidationResult:
 
     def passed(self) -> bool:
         return self.verdicts.filter(~F.col("pass")).limit(1).count() == 0
+
+
+# check-frame column prefixes: one fail flag per row rule, one media-ref
+# array per referential phase
+_FLAG = "_advs_fail_"
+_REFS = "_advs_refs_"
+
+
+def _profile_stand_in(field: T.StructField):
+    """A column with the nulls (and, for arrays, the sizes) of a nested
+    input column: all ``build_partial_profile(distinct_nested=False)``
+    reads of one. An array of structs keeps one narrow field (the first
+    fixed-width one), a struct or map becomes a boolean; atomic
+    columns and arrays of atomics stay as they are."""
+    c, dt = F.col(field.name), field.dataType
+    if (
+        isinstance(dt, T.ArrayType)
+        and isinstance(dt.elementType, T.StructType)
+        and dt.elementType.fields
+    ):
+        fields = dt.elementType.fields
+        wide = (T.StringType, T.BinaryType, T.ArrayType, T.MapType, T.StructType)
+        pick = next(
+            (f for f in fields if not isinstance(f.dataType, wide)), fields[0]
+        )
+        return c.getField(pick.name)
+    if isinstance(dt, (T.StructType, T.MapType)):
+        return F.when(c.isNotNull(), F.lit(True))
+    return c
+
+
+def check_frame(
+    documents: DataFrame,
+    keys: "list[str]",
+    preds: "list[tuple[str, Any]]",
+    refs: "dict[str, str]",
+    profile: bool,
+) -> DataFrame:
+    """The narrow per-row frame every run_validation check but drift
+    reads: the ``keys`` columns as they are, one fail flag per row rule
+    (``not coalesce(pred, false)``, the semantics of both the verdict
+    counts and the violation rows), one array of the row's distinct
+    non-null media refs per referential phase (``refs``: column name
+    -> spans column), and, with ``profile``, every input column the
+    profile partials read (nested ones as ``_profile_stand_in``).
+
+    It is a map-only projection, so once materialized its partition i
+    is the input's partition i, and ``spark_partition_id()`` over it is
+    the input partition every verdict and violation row is attributed
+    to."""
+    cols: dict[str, Any] = {k: F.col(k) for k in keys}
+    if profile:
+        for f in documents.schema.fields:
+            cols.setdefault(f.name, _profile_stand_in(f))
+    for i, (_rid, p) in enumerate(preds):
+        cols[f"{_FLAG}{i}"] = ~F.coalesce(p, F.lit(False))
+    for name, spans_col in refs.items():
+        cols[name] = refcheck.media_refs_expr(spans_col)
+    return documents.select(*[c.alias(n) for n, c in cols.items()])
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of an eager ``localCheckpoint``: the frame's
+    plan is a LogicalRDD over the checkpointed RDD. Reading the frame
+    afterwards fails; nothing else held its blocks. (SparkContext's
+    unpersistRDD, not RDD.unpersist, which logs a warning for every
+    locally checkpointed RDD.)"""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), True)
 
 
 def run_validation(
@@ -100,7 +184,6 @@ def run_validation(
         if checkpoint_dir
         else None
     )
-    import threading
 
     # spill mode: never hold one-row-per-partition verdicts on the
     # driver. The decision only needs the input's SCALE, so use the
@@ -134,6 +217,13 @@ def run_validation(
             n_input_units = n_files
     spill = n_input_units > verdict_spill_threshold
 
+    row_rules = R.row_level(rule_set)
+    # compiled (and safety-checked) before any job runs
+    preds = [(r.rule_id, R.compile_rule(r, documents)) for r in row_rules]
+
+    def pending(name: str) -> bool:
+        return not (ckpt and ckpt.is_done(name))
+
     verdict_dfs: list[DataFrame] = []
     violation_parts: list[DataFrame] = []
     lineage_parts: list[DataFrame] = []
@@ -142,18 +232,17 @@ def run_validation(
     violation_rows: dict[str, int | None] = {}
     _acc_lock = threading.Lock()
 
-    def run_phase(name: str, fn) -> DataFrame:
-        """Run or resume one phase; returns the phase's verdicts.
+    def run_phase(name: str, fn) -> None:
+        """Run or resume one phase.
 
         Default mode: verdicts are tiny (one row per partition x rule),
         collected ONCE and rebuilt as a JVM LocalRelation
-        (``session.local_frame``), so later consumers never re-trigger
-        the full input scan and no action on them starts a Python
-        worker. Spill mode: verdicts stay distributed (persisted or
-        checkpointed), and lineage gets per-rule aggregate rows
-        (partition_id null).
-        Violation rows stay lazy unless checkpointing is on (then they
-        are written+read-back, i.e. materialized exactly once).
+        (``session.local_frame``), so no action on them starts a Python
+        worker. Spill mode: verdicts stay distributed (eagerly
+        localCheckpoint'ed, or read back from the checkpoint dir), and
+        lineage gets per-rule aggregate rows (partition_id null).
+        Violation rows come back materialized from every phase; under
+        checkpointing they are written and read back.
         """
         v_rows: list[tuple] | None = None
         if ckpt and ckpt.is_done(name):
@@ -173,13 +262,11 @@ def run_validation(
                 v_rows = [tuple(r) for r in vdf.collect()]
                 vdf = local_frame(spark, v_rows, R.VERDICT_SCHEMA)
             else:
-                vdf = vdf.persist()
+                vdf = vdf.localCheckpoint(eager=True)
             duration_s = round(_time.perf_counter() - t0, 3)
             if ckpt:
                 ckpt.write(name, "verdicts", vdf)
                 ckpt.write(name, "violations", violations)
-                if spill:
-                    vdf.unpersist()  # parquet read-back replaces the cache
                 vdf = ckpt.read(spark, name, "verdicts")
                 violations = ckpt.read(spark, name, "violations")
                 ckpt.mark_done(name, duration_s=duration_s)
@@ -203,126 +290,59 @@ def run_validation(
                 lineage_from_verdicts(spark, l_rows, name, snapshot_id,
                                       rule_version, duration_s=duration_s)
             )
-        return vdf
 
-    row_rules = R.row_level(rule_set)
-    partition_totals: dict[int, int] | DataFrame | None = None
-    # Fused rules+profile scan (round-2 directive #1): the profiler's
-    # algebraic partials ride in the row-rules per-partition aggregate,
-    # so the separate full profile pass disappears — only quantiles (for
-    # numeric columns; the flagship documents shape has none) need one
-    # extra column-pruned pass. With no row-rules scan to ride (no row
-    # rules, or resuming a checkpoint whose row_rules phase completed
-    # and whose verdicts carry no partials) the SAME partial plan runs
-    # as its own scan (profile_partitioned).
-    fused_state: dict[str, Any] = {}
-    use_fused = bool(
-        with_profile
-        and row_rules
-        and not (ckpt and ckpt.is_done("profile"))
-        and not (ckpt and ckpt.is_done("row_rules"))
-    )
-    # date-format probing is for string business columns, not ids —
-    # skip (8 try_to_timestamp exprs/string col)
-    fused_plan = (
-        build_partial_profile(documents, detect_formats=False)
-        if use_fused
-        else None
-    )
+    # Every check but drift reads ONE check frame (check_frame), kept
+    # as an eager localCheckpoint (``checks``) and released in the
+    # finally. ``frame`` holds it, the per-partition aggregate
+    # (collected rows and their local relation, or a localCheckpoint in
+    # spill mode), a blocking callable for the partition totals
+    # (aggregate_task's result) and the future of the catalog's
+    # distinct-ref count.
+    frame: dict[str, Any] = {}
+    rule_ids = [rid for rid, _p in preds]
+    flag_preds = [
+        (rid, ~F.col(f"{_FLAG}{i}")) for i, rid in enumerate(rule_ids)
+    ]
 
-    def row_rules_fused():
-        preds = [(r.rule_id, R.compile_rule(r, documents)) for r in row_rules]
-        per_part = R.per_partition_rule_aggregate(
-            documents, preds, fused_plan.exprs
-        ).persist()
-        fused_state["per_part"] = per_part
-        vdf = R.verdicts_from_per_partition(per_part, [rid for rid, _ in preds])
-        return vdf, R.violation_rows(documents, preds, key_column)
-
-    # All phases are independent reads of the same input: submit them
-    # CONCURRENTLY (Spark job submission is thread-safe). Sequential
-    # phases leave executor slots idle during each phase's small final
-    # stages; overlapping them keeps the cluster saturated — measured
-    # wall-time win grows with core count. The uniqueness/referential
-    # phases need the row-rules scan's per-partition totals ONLY to
-    # assemble their verdict rows, never for their violation plans, so
-    # they receive a BLOCKING CALLABLE resolved by the row-rules phase
-    # and all three scans overlap in BOTH verdict modes (round 3;
-    # previously row_rules ran to completion first): default mode
-    # resolves to a dict, spill mode to a lazily-joined DataFrame over
-    # the completed phase's verdicts.
-    from concurrent.futures import Future, ThreadPoolExecutor
-
-    totals_future: Future = Future()
-    if row_rules:
-        partition_totals = totals_future.result  # blocking callable
-    elif spill:
-        # no row-rules pass to reuse: build the totals distributed
-        partition_totals = (
-            documents.select(F.spark_partition_id().cast("int").alias("partition_id"))
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("row_count"))
-        )
-
-    rr_cell: dict[str, DataFrame] = {}
-
-    def _rr_fn():
-        vdf, viol = (
-            row_rules_fused()
-            if use_fused
-            else R.evaluate_row_rules(documents, row_rules, key_column)
-        )
-        rr_cell["viol"] = viol
+    def row_rules_phase():
+        viol = R.violation_rows(frame["checks"], flag_preds, key_column)
+        if ckpt is None:
+            # the check frame is released before the caller reads this
+            # (under checkpointing the phase writes it and reads it back)
+            viol = viol.localCheckpoint(eager=True)
+        frame["totals"]()  # the rule counts are in
+        if spill:
+            vdf = R.verdicts_from_per_partition(frame["part"], rule_ids)
+        else:
+            # rows are (partition_id, row_count, viol_0, ..., partials)
+            vdf = local_frame(spark, [
+                (r[0], rid, r[1], r[2 + i], r[2 + i] == 0)
+                for r in frame["rows"]
+                for i, rid in enumerate(rule_ids)
+            ], R.VERDICT_SCHEMA)
         return vdf, viol
 
-    def row_rules_task():
-        """Pool task: run the row-rules phase and publish its totals."""
-        try:
-            vdf = run_phase("row_rules", _rr_fn)
-            totals = vdf.filter(F.col("rule_id") == row_rules[0].rule_id)
-            totals_future.set_result(
-                totals.select("partition_id", "row_count")
-                if spill
-                else {
-                    int(r["partition_id"]): int(r["row_count"])
-                    for r in totals.collect()
-                }
-            )
-        except BaseException as e:
-            totals_future.set_exception(e)
-            raise
-        # Materialize the row-rules violation rows NOW — strictly after
-        # the totals future is published (the other phases block on it)
-        # so this sparse filter scan overlaps the uniqueness/referential
-        # scans instead of running serially when the caller first
-        # writes res.violations (guide §2.6: fill the tail). The TOTAL
-        # input-scan count is unchanged (the write-side scan moves into
-        # the run; pinned by test_fused_run_cuts_input_scans) and only
-        # the small violation row set is stored. Skipped in spill mode
-        # (violations at 10^12-doc scale should stream to the caller's
-        # sink, not into block storage) and under checkpointing (the
-        # phase machinery already writes+reads-back violations there).
-        raw = rr_cell.get("viol")
-        if not spill and ckpt is None and raw is not None:
-            ck = raw.localCheckpoint(eager=True)
-            with _acc_lock:
-                for i2, fr in enumerate(violation_parts):
-                    if fr is raw:
-                        violation_parts[i2] = ck
-        return vdf
-
     tasks: list[tuple[str, Any]] = []
+    key_cols: list[str] = []
+    refs_cols: dict[str, str] = {}
+    if row_rules:
+        tasks.append(("row_rules", row_rules_phase))
+        if pending("row_rules"):
+            key_cols.append(key_column)
     if check_uniqueness or any(r.kind == "unique_key" for r in rule_set):
         uniq_rules = [r for r in rule_set if r.kind == "unique_key"] or [
             R.Rule("unique_doc_id", "unique_key", column=key_column)
         ]
         for ur in uniq_rules:
+            name = f"uniqueness_{ur.rule_id}"
+            if pending(name):
+                key_cols.append(ur.column or key_column)
             tasks.append(
                 (
-                    f"uniqueness_{ur.rule_id}",
+                    name,
                     lambda ur=ur: dedup.uniqueness_check(
-                        documents, ur.column or key_column, ur.rule_id,
-                        partition_totals=partition_totals,
+                        frame["checks"], ur.column or key_column, ur.rule_id,
+                        partition_totals=frame["totals"],
                         distributed=spill,
                     ),
                 )
@@ -347,17 +367,24 @@ def run_validation(
             phase = (
                 f"referential_{rr_rule.rule_id}" if ref_rules else "referential"
             )
+            # rule ids may hold dots, so the column is named by position
+            refs_col = f"{_REFS}{len(tasks)}"
+            if pending(phase):
+                key_cols.append("doc_id")
+                refs_cols[refs_col] = spans_col
 
             def referential_phase(rr_rule=rr_rule, spans_col=spans_col,
-                                  phase=phase):
+                                  phase=phase, refs_col=refs_col):
                 # verdicts count distinct (partition, doc) pairs; the
-                # row count comes from the check's own pin
+                # row count comes from the check's own collect
                 vdf, viol, violation_rows[phase] = (
                     refcheck.referential_check_counted(
-                        documents, catalog, spans_col=spans_col,
+                        frame["checks"], catalog, spans_col=spans_col,
                         rule_id=rr_rule.rule_id,
-                        partition_totals=partition_totals,
+                        catalog_rows=frame["catalog_rows"].result(),
+                        partition_totals=frame["totals"],
                         distributed=spill,
+                        refs_col=refs_col,
                     )
                 )
                 return vdf, viol
@@ -370,7 +397,10 @@ def run_validation(
     # (drift has no per-partition attribution) and one violation row
     # per drifted COLUMN (doc_id = the column name, detail = ks/psi/
     # reason). Rides the same phase machinery, so it checkpoints,
-    # overlaps with the other scans, and lands in lineage/run_summary.
+    # overlaps with the check frame's scan, and lands in
+    # lineage/run_summary. It is the one phase that reads ``documents``
+    # itself: drift_signals maps the input to its own signal frame.
+    drift_check = None
     if drift_baseline is not None:
         from . import drift as DR
 
@@ -467,54 +497,96 @@ def run_validation(
                 local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
             )
 
-        tasks.append(("drift", drift_check))
+    profile_plan = (
+        # date-format probing is for string business columns, not ids
+        build_partial_profile(documents, detect_formats=False)
+        if with_profile and pending("profile")
+        else None
+    )
+
+    def aggregate_task():
+        """Pool task: every partition's row count, fail-flag counts and
+        profile partials over the check frame, collected once (spill
+        mode: checkpointed). Returns the partition totals."""
+        per_part = R.per_partition_rule_aggregate(
+            frame["checks"],
+            flag_preds if pending("row_rules") else [],
+            profile_plan.exprs if profile_plan else (),
+        )
+        if spill:
+            frame["part"] = per_part.localCheckpoint(eager=True)
+            return frame["part"].select(
+                F.col("partition_id").cast("int").alias("partition_id"),
+                "row_count",
+            )
+        frame["rows"] = [tuple(r) for r in per_part.collect()]
+        frame["part"] = local_frame(spark, frame["rows"], per_part.schema)
+        return {r[0]: r[1] for r in frame["rows"]}
 
     def profile_task():
-        """Pool task: the run's ProfileResult."""
-        if not use_fused:
-            return profile_partitioned(documents, detect_formats=False)
-        # partials ride the (possibly still running) row_rules scan;
-        # only the column-pruned quantile pass reads the input again,
-        # and it starts immediately
-        quantiles = profile_quantiles(documents, fused_plan.quantile_cols)
-        # the totals are published once the fused per-partition frame
-        # is collected — no need to wait for the violation-row pin
-        totals_future.result()
+        """Pool task: the run's ProfileResult, finalized over the
+        collected per-partition partials (a local relation, or the
+        spill-mode checkpoint) plus a quantile pass over the check
+        frame's numeric columns (none for the flagship documents
+        shape)."""
+        quantiles = profile_quantiles(
+            frame["checks"], profile_plan.quantile_cols
+        )
+        frame["totals"]()  # the partials are in
         return _merge_quantiles(
-            finalize_partial_profile(fused_state["per_part"], fused_plan),
-            quantiles,
+            finalize_partial_profile(frame["part"], profile_plan), quantiles
         )
 
     metrics = None
     profile_future = None
-    # try/finally: the fused per-partition frame is persisted inside a
-    # pool task — a phase exception must still release it, or the cache
-    # entry leaks for the session's lifetime (round-3 ADVICE)
+    checks = None
     try:
-        with ThreadPoolExecutor(max_workers=max(len(tasks) + 3, 2)) as pool:
-            rr_future = pool.submit(row_rules_task) if row_rules else None
-            if with_profile:
-                if ckpt and ckpt.is_done("profile"):
-                    # resume: read the checkpointed metrics back instead
-                    # of re-running the full profile scan
-                    metrics = ckpt.read(spark, "profile", "metrics")
-                else:
-                    profile_future = pool.submit(profile_task)
-            phase_futures = [
-                (name, pool.submit(run_phase, name, fn)) for name, fn in tasks
-            ]
-            if rr_future is not None:
-                rr_future.result()
-            for _name, fut in phase_futures:
+        with ThreadPoolExecutor(max_workers=len(tasks) + 4) as pool:
+            # drift reads the input itself: start it first so its scan
+            # overlaps the check frame's
+            futures = (
+                [pool.submit(run_phase, "drift", drift_check)]
+                if drift_check
+                else []
+            )
+            if profile_plan or any(pending(n) for n, _fn in tasks):
+                # the catalog side of the referential join needs no
+                # check frame: count it while the frame fills
+                frame["catalog_rows"] = pool.submit(
+                    lambda: catalog.select("media_ref").distinct().count()
+                ) if refs_cols else None
+                frame["checks"] = check_frame(
+                    documents, key_cols,
+                    preds if pending("row_rules") else [], refs_cols,
+                    profile=profile_plan is not None,
+                )
+                if any(pending(n) for n, _fn in tasks):
+                    # read by a check besides the aggregate: read the
+                    # input once (a profile-only run reads it directly)
+                    checks = frame["checks"].localCheckpoint(eager=True)
+                    frame["checks"] = checks
+                # the per-partition aggregate runs beside the checks;
+                # uniqueness/referential resolve the totals only once
+                # their own work is done
+                frame["totals"] = pool.submit(aggregate_task).result
+            futures += [pool.submit(run_phase, name, fn) for name, fn in tasks]
+            if profile_plan:
+                profile_future = pool.submit(profile_task)
+            for fut in futures:
                 fut.result()
             if profile_future is not None:
                 metrics = profile_future.result().metrics_df(spark)
+            elif with_profile:
+                # resume: the checkpointed metrics, not a profile pass
+                metrics = ckpt.read(spark, "profile", "metrics")
             if metrics is not None and ckpt and not ckpt.is_done("profile"):
                 ckpt.write("profile", "metrics", metrics)
                 ckpt.mark_done("profile")
     finally:
-        if fused_state:
-            fused_state["per_part"].unpersist()
+        # the check frame's blocks go now, not when the frame is
+        # garbage collected; every result read from it is materialized
+        if checks is not None:
+            _release_checkpoint(checks)
 
     if not verdict_dfs:
         # nothing ran (empty rule set, no uniqueness, no catalog):

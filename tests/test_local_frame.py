@@ -191,3 +191,77 @@ def test_no_create_dataframe_outside_local_frame():
     assert callers - CREATE_DATAFRAME_ALLOWED == set()
     # the guard sees the calls it allows (it is not scanning nothing)
     assert CREATE_DATAFRAME_ALLOWED <= callers
+
+
+
+# functions whose persist()/cache() must be released in a finally of the
+# same function; None = every function of the module
+RELEASED_CACHE_SCOPE = {
+    "validate": None,
+    "rules": None,
+    "refcheck": None,
+    "dedup": {"uniqueness_check"},
+}
+
+
+def _unreleased_caches(source: str, names: "set[str] | None") -> "set[str]":
+    """Functions of ``source`` (those in ``names``, or all) that call
+    .persist()/.cache() with no .unpersist() call inside a ``finally``
+    of the same function. Nested functions are separate scopes."""
+
+    def own_nodes(fn):
+        stack = list(ast.iter_child_nodes(fn))
+        while stack:
+            node = stack.pop()
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            yield node
+            stack.extend(ast.iter_child_nodes(node))
+
+    def calls(nodes, attrs):
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in attrs
+            for n in nodes
+        )
+
+    bad = set()
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if names is not None and fn.name not in names:
+            continue
+        nodes = list(own_nodes(fn))
+        if calls(nodes, {"persist", "cache"}) and not any(
+            isinstance(t, ast.Try)
+            and calls([n for st in t.finalbody for n in ast.walk(st)], {"unpersist"})
+            for t in nodes
+        ):
+            bad.add(fn.name)
+    return bad
+
+
+def test_validation_caches_are_released_in_finally():
+    """Spark-free lint against the cache-leak class: a persisted frame
+    that outlives its function stays in the session's cache manager,
+    where a later run over a path rewritten in place matches the stale
+    plan and returns the old rows. The validation path may only cache
+    a frame it releases in a ``finally``; results that outlive the call
+    are checkpoints or local relations."""
+    for module, names in RELEASED_CACHE_SCOPE.items():
+        source = (PACKAGE / f"{module}.py").read_text()
+        assert _unreleased_caches(source, names) == set(), module
+    # the guard tells a leak from a release (it is not passing vacuously)
+    leak = "def f(df):\n    x = df.persist()\n    return x\n"
+    nested = (
+        "def f(df):\n    try:\n        def g():\n            return df.cache()\n"
+        "        return g()\n    finally:\n        df.unpersist()\n"
+    )
+    released = (
+        "def f(df):\n    x = df.persist()\n    try:\n        return x.count()\n"
+        "    finally:\n        x.unpersist()\n"
+    )
+    assert _unreleased_caches(leak, None) == {"f"}
+    assert _unreleased_caches(nested, None) == {"g"}
+    assert _unreleased_caches(released, None) == set()

@@ -31,16 +31,30 @@ def test_uniqueness_violations_single_scan(spark, tmp_path):
     aggregates by (key, partition_id) — the physical partition doubles
     as skew salt and attribution — and phase 2 is a window over the
     aggregated rows, so the former second attribution scan is gone
-    (round-2 directive #1/#6)."""
+    (round-2 directive #1/#6). The violation set is checkpointed inside
+    the call, so the scan count and the plan are read from the SQL
+    executions the call submitted."""
+    from automatic_data_validator_spark.introspect import (
+        executed_plans,
+        source_records,
+    )
     from automatic_data_validator_spark.synth import make_documents
 
     path = str(tmp_path / "uniq_docs")
     make_documents(spark, 5_000, n_media=200, seed=7).write.parquet(path)
     docs = spark.read.parquet(path)
-    _, viol = D.uniqueness_check(docs, "doc_id")
-    viol.unpersist()  # drop the cache wrapper so the raw plan shows
-    p = _final_plan(viol).split("== Initial Plan ==")[0]
-    assert p.count("FileScan parquet") == 1
+    # known totals, as run_validation passes them: without them the
+    # check adds its own key-pruned totals pass
+    totals = {
+        r[0]: r[1]
+        for r in docs.groupBy(F.spark_partition_id()).count().collect()
+    }
+
+    def check():
+        D.uniqueness_check(docs, "doc_id", partition_totals=totals)
+
+    assert source_records(spark, check) == 5_000
+    p = "\n".join(executed_plans(spark, check))
     # no join anywhere: attribution comes from the aggregate itself
     assert "Join" not in p
     # both exchanges present: (doc_id, partition_id) then doc_id only
@@ -109,17 +123,21 @@ def test_uniqueness_on_bucketed_input_plans_zero_exchange(spark):
     distribution of BOTH phases — groupBy(doc_id, partition_id) (same
     doc_id => same bucket, so the pid 'salt' costs nothing) and the
     per-key window — and Catalyst elides every Exchange, fusing the
-    whole check into one stage. No code path switch is involved: the
-    salting-by-physical-partition-id design degrades to a no-op under
-    bucketing by construction. The same holds for the fixed-salt
-    two-phase duplicate_key_counts. Unbucketed input keeps its
-    shuffles (the contrast pins that the assert is about bucketing,
-    not AQE coincidence)."""
+    whole check into one stage: the call writes zero shuffle bytes. No
+    code path switch is involved: the salting-by-physical-partition-id
+    design degrades to a no-op under bucketing by construction. The
+    same holds for the fixed-salt two-phase duplicate_key_counts.
+    Unbucketed input keeps its shuffles (the contrast pins that the
+    assert is about bucketing, not AQE coincidence)."""
     import pyspark.sql.functions as F2
 
     from automatic_data_validator_spark.dedup import (
         duplicate_key_counts,
         uniqueness_check,
+    )
+    from automatic_data_validator_spark.introspect import (
+        executed_plans,
+        shuffle_write_bytes,
     )
     from automatic_data_validator_spark.sources import write_bucketed_table
 
@@ -131,10 +149,22 @@ def test_uniqueness_on_bucketed_input_plans_zero_exchange(spark):
     write_bucketed_table(df, "advs_bucketed_uniq", "doc_id", num_buckets=8)
     try:
         bucketed = spark.table("advs_bucketed_uniq")
-        verd, viol = uniqueness_check(bucketed, "doc_id")
-        plan = viol._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
+        out = {}
+        # distributed verdicts (a lazy totals frame): the only job the
+        # call runs is the one that materializes the violation set
+        totals = bucketed.groupBy(
+            F2.spark_partition_id().alias("partition_id")
+        ).agg(F2.count(F2.lit(1)).alias("row_count"))
+
+        def check():
+            out["shuffle"] = shuffle_write_bytes(spark, lambda: out.update(
+                r=uniqueness_check(bucketed, "doc_id", partition_totals=totals)
+            ))
+
+        plans = executed_plans(spark, check)
+        verd, viol = out["r"]
+        assert out["shuffle"] == 0, plans
+        assert any("Bucketed: true" in p for p in plans), plans
         dup_plan = (
             duplicate_key_counts(bucketed, "doc_id")
             ._jdf.queryExecution().executedPlan().toString()
@@ -143,12 +173,10 @@ def test_uniqueness_on_bucketed_input_plans_zero_exchange(spark):
         # every d* key occurs 5000/700-ish times -> all 700 duplicated
         assert viol.select("doc_id").distinct().count() == 700
         assert not verd.filter("`pass`").count()  # every partition hit
-        viol.unpersist()
         # unbucketed source still shuffles — same frames, same code
-        _, viol_u = uniqueness_check(df, "doc_id")
-        plan_u = viol_u._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan_u
-        viol_u.unpersist()
+        assert shuffle_write_bytes(spark, lambda: uniqueness_check(
+            df, "doc_id", partition_totals=totals
+        )) > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS advs_bucketed_uniq")
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from automatic_data_validator_spark.introspect import executed_plans
 from automatic_data_validator_spark.refcheck import referential_check
 from automatic_data_validator_spark.state import snapshot_of
 from automatic_data_validator_spark.validate import run_validation
@@ -17,17 +18,20 @@ def _viols(x):
 def test_smj_path_matches_broadcast(spark, docs, catalog):
     _vb, xb = referential_check(docs, catalog)  # broadcast (catalog small)
     broadcast_viols = _viols(xb)
-    # clear the cached `dangling` relation: Spark's plan-based cache
-    # would otherwise serve the broadcast-computed result to the
-    # hint-changed plan (hints are erased from the analyzed plan)
-    spark.catalog.clearCache()
-    _vm, xm = referential_check(docs, catalog, broadcast_limit=0)  # force SMJ
+    # no clearCache between the two calls: the check leaves no cache
+    # entry that could serve the broadcast result to the hinted plan
+    out = {}
+    plans = executed_plans(spark, lambda: out.update(
+        r=referential_check(docs, catalog, broadcast_limit=0)))  # force SMJ
+    _vm, xm = out["r"]
     assert broadcast_viols == _viols(xm)
-    # the merge hint lands in the pre-AQE physical plan (at runtime
-    # AQE may legitimately downgrade back to broadcast for a tiny
-    # catalog — that's the backstop working, not a bug)
-    plan = xm._jdf.queryExecution().sparkPlan().toString()
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+    # the merge hint lands in the initial physical plan, which the SQL
+    # status store keeps after the final one (at runtime AQE may
+    # legitimately downgrade back to broadcast for a tiny catalog —
+    # that's the backstop working, not a bug)
+    assert any(
+        "SortMergeJoin" in p or "ShuffledHashJoin" in p for p in plans
+    ), plans
 
 
 def test_snapshot_of_changes_with_input(spark, tmp_path):
@@ -75,11 +79,10 @@ def test_referential_scan_prunes_to_media_ref(spark, tmp_path):
     make_documents(spark, 5_000, n_media=300, seed=9).write.parquet(path)
     docs = spark.read.parquet(path)
     cat = make_media_catalog(spark, 300, seed=9)
-    _v, viol = referential_check(docs, cat)
-    viol.count()
-    plan = viol._jdf.queryExecution().executedPlan().toString()
-    viol.unpersist()
-    schemas = re.findall(r"ReadSchema: ([^\n]+)", plan)
+    # the dangling set is checkpointed inside the call: read the scan
+    # from the executed plans the SQL status store kept
+    plans = executed_plans(spark, lambda: referential_check(docs, cat))
+    schemas = re.findall(r"ReadSchema: ([^\n]+)", "\n".join(plans))
     fact = [s for s in schemas if "spans" in s]
     assert fact, schemas
     for s in fact:

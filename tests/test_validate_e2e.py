@@ -214,11 +214,17 @@ def test_referential_rule_honored_and_loud_without_catalog(spark, docs, catalog)
         rule_set=[
             R.Rule("nn", "not_null", column="doc_id"),
             R.Rule("my_refs", "referential", column="spans"),
+            # a dotted id must not leak into a column name
+            R.Rule("refs.v2", "referential", column="spans"),
         ],
     )
     rules_seen = {r["rule_id"] for r in res.verdicts.select("rule_id").distinct().collect()}
-    assert "my_refs" in rules_seen
-    assert res.violations.filter(F.col("rule_id") == "my_refs").count() > 0
+    assert {"my_refs", "refs.v2"} <= rules_seen
+    counts = {
+        rid: res.violations.filter(F.col("rule_id") == rid).count()
+        for rid in ("my_refs", "refs.v2")
+    }
+    assert counts["my_refs"] > 0 and counts["refs.v2"] == counts["my_refs"]
 
 
 def test_empty_rule_set_returns_empty_result(spark, docs):
@@ -544,3 +550,49 @@ def test_split_valid_invalid_quarantine(spark, docs, catalog):
         res.violations.filter("partition_id >= 0").select("doc_id").distinct(),
         "doc_id",
     ).count() == 0
+
+
+@pytest.mark.parametrize("spill_threshold", [100_000, 0], ids=["default", "spill"])
+def test_rerun_over_rewritten_path_sees_new_rows(spark, tmp_path, spill_threshold):
+    """A run over a parquet path, the path rewritten in place outside
+    Spark, and a second run in the same session on a fresh read: the
+    second run must report the NEW data. A result frame left persisted
+    by the first run would match the second run's plan in the session's
+    cache manager and return the old duplicates and dangling refs; so
+    no run may leave a cache entry behind (spill mode included)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32())])
+    schema = pa.schema([("doc_id", pa.string()), ("spans", pa.list_(span))])
+
+    def write(ids, ref):
+        spans = [[{"kind": "image", "text": None, "media_ref": ref, "offset": 0}]
+                 for _ in ids]
+        pq.write_table(pa.table({"doc_id": ids, "spans": spans}, schema=schema),
+                       str(tmp_path / "docs" / "part-0.parquet"))
+
+    (tmp_path / "docs").mkdir()
+    (tmp_path / "cat").mkdir()
+    pq.write_table(pa.table({"media_ref": ["m1"]}),
+                   str(tmp_path / "cat" / "part-0.parquet"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def run():
+        before = cache.numCachedEntries()
+        res = run_validation(
+            spark, spark.read.parquet(str(tmp_path / "docs")),
+            catalog=spark.read.parquet(str(tmp_path / "cat")),
+            verdict_spill_threshold=spill_threshold,
+        )
+        rows = res.violations.collect()
+        assert cache.numCachedEntries() == before
+        return sorted((r["rule_id"], r["doc_id"]) for r in rows)
+
+    write(["a", "a", "b", "c"], "m9")
+    assert run() == [
+        ("referential_media_ref", d) for d in ("a", "a", "b", "c")
+    ] + [("unique_doc_id", "a")] * 2
+    write(["x", "y", "z", "w"], "m1")
+    assert run() == []
