@@ -15,14 +15,17 @@ pass/fail verdicts and violation rows"):
     the tiny final combine (one row per partition).
   * Violation rows come from a second, filtered pass over the same
     rows. ``evaluate_row_rules`` runs both passes over its input.
-    ``validate.run_validation`` runs them over one materialized check
-    frame that holds a fail flag per rule (``not coalesce(pred,
-    false)``) and only the columns the other checks read, so the wide
-    source is scanned once per run, not once per consumer. On the
-    benchmark's full_validate op (40k documents, 4 cores) that took the
-    document scans from 4 to 1 (drift keeps its own) and the median op
-    from 3.52 to 3.15 s. The frame holds a few narrow columns per row,
-    not the source rows.
+    ``validate.run_validation`` runs them over its check frame: one
+    fail flag per rule (``not coalesce(pred, false)``) beside the
+    columns the other checks read. It materializes that frame only
+    when the frame copies no source column whole but the keys (the
+    documents shape: a key, the flags, media refs and nested
+    stand-ins) and the run is not in spill mode. There one source
+    read replaces one per consumer (4 on the full_validate
+    benchmark). A profiled flat table would copy its source into the
+    frame, and a spill-mode frame would hold up to 10^12 rows in
+    block storage with no lineage to recompute a lost block, so both
+    keep one column-pruned source scan per consumer.
   * ``unique`` and ``referential`` rules need a shuffle by design;
     they delegate to dedup.py / refcheck.py and their verdicts are
     unioned in with the same schema.

@@ -10,14 +10,20 @@ Pipeline (each phase checkpointable, resumable via state.Checkpointer):
   phase "drift"        — KS/PSI vs a baseline sketch snapshot
                          (opt-in via drift_baseline; drift.py)
 
-The input is read once for all phases but drift: ``check_frame``
-projects it to a narrow per-row frame (keys, one fail flag per row
-rule, each row's media refs, the columns the profile reads), which is
-materialized as an eager localCheckpoint, read by every other check,
-and released before the run returns. One per-partition aggregate over
-it carries the rule counts, the profile partials and the partition
-totals. Each check keeps its own result as a local relation or an
-eager localCheckpoint, so nothing the run creates stays in the
+Every phase but drift reads one ``check_frame``: the input projected
+to keys, one fail flag per row rule, each row's media refs and the
+columns the profile reads. When that frame is narrow (it copies no
+input column whole but the keys, as for the documents shape) and the
+run is not in spill mode, it is materialized as an eager
+localCheckpoint, read by every other check, and released before the
+run returns, so the input is read once. Otherwise (a profiled flat
+table, whose columns the frame would copy whole, or spill mode, where
+checkpoint blocks without lineage would not survive a lost executor)
+each check reads the input through its own column-pruned scan of the
+lazy frame. One per-partition
+aggregate carries the rule counts, the profile partials and the
+partition totals. Each check keeps its own result as a local relation
+or an eager localCheckpoint, so nothing the run creates stays in the
 session's cache manager: a later run over a path rewritten in place
 cannot be served stale cached rows. Drift maps the input to its own
 signal frame (``drift_signals``) and reads it in parallel.
@@ -26,7 +32,7 @@ Outputs: ``verdicts`` / ``violations`` / ``metrics`` / ``lineage``
 DataFrames (written as parquet when a checkpoint dir is given). This is
 the Spark-native equivalent of the reference's
 upload→profile→validate loop (app.py:202-501) with the eager pandas
-passes replaced by lazy plans over one scan.
+passes replaced by lazy plans over one check frame.
 """
 
 from __future__ import annotations
@@ -77,26 +83,23 @@ _REFS = "_advs_refs_"
 
 
 def _profile_stand_in(field: T.StructField):
-    """A column with the nulls (and, for arrays, the sizes) of a nested
-    input column: all ``build_partial_profile(distinct_nested=False)``
-    reads of one. An array of structs keeps one narrow field (the first
-    fixed-width one), a struct or map becomes a boolean; atomic
-    columns and arrays of atomics stay as they are."""
+    """A narrow column with the nulls (and, for arrays, the sizes) of a
+    nested input column: all ``build_partial_profile(distinct_nested=
+    False)`` reads of one. An array of structs keeps one fixed-width
+    field, a struct or map becomes a boolean. None for a column no
+    stand-in narrows (an atomic column, an array of atomics, an array of
+    structs without a fixed-width field): the check frame copies it."""
     c, dt = F.col(field.name), field.dataType
-    if (
-        isinstance(dt, T.ArrayType)
-        and isinstance(dt.elementType, T.StructType)
-        and dt.elementType.fields
-    ):
-        fields = dt.elementType.fields
+    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
         wide = (T.StringType, T.BinaryType, T.ArrayType, T.MapType, T.StructType)
         pick = next(
-            (f for f in fields if not isinstance(f.dataType, wide)), fields[0]
+            (f for f in dt.elementType.fields if not isinstance(f.dataType, wide)),
+            None,
         )
-        return c.getField(pick.name)
+        return c.getField(pick.name) if pick else None
     if isinstance(dt, (T.StructType, T.MapType)):
         return F.when(c.isNotNull(), F.lit(True))
-    return c
+    return None
 
 
 def check_frame(
@@ -105,28 +108,38 @@ def check_frame(
     preds: "list[tuple[str, Any]]",
     refs: "dict[str, str]",
     profile: bool,
-) -> DataFrame:
-    """The narrow per-row frame every run_validation check but drift
-    reads: the ``keys`` columns as they are, one fail flag per row rule
-    (``not coalesce(pred, false)``, the semantics of both the verdict
-    counts and the violation rows), one array of the row's distinct
-    non-null media refs per referential phase (``refs``: column name
-    -> spans column), and, with ``profile``, every input column the
-    profile partials read (nested ones as ``_profile_stand_in``).
+) -> "tuple[DataFrame, bool]":
+    """The per-row frame every run_validation check but drift reads,
+    and whether it is narrow. It holds the ``keys`` columns as they
+    are, one fail flag per row rule (``not coalesce(pred, false)``, the
+    semantics of both the verdict counts and the violation rows), one
+    array of the row's distinct non-null media refs per referential
+    phase (``refs``: column name -> spans column), and, with
+    ``profile``, every input column the profile partials read (nested
+    ones as ``_profile_stand_in``).
 
-    It is a map-only projection, so once materialized its partition i
-    is the input's partition i, and ``spark_partition_id()`` over it is
-    the input partition every verdict and violation row is attributed
-    to."""
+    Narrow means it copies no input column whole but the keys: the
+    documents shape (a key plus nested spans) or any run without the
+    profile. A flat table with a text column is not narrow; with the
+    profile the frame would hold the text.
+
+    It is a map-only projection, so its partition i is the input's
+    partition i, and ``spark_partition_id()`` over it (materialized or
+    not) is the input partition every verdict and violation row is
+    attributed to."""
     cols: dict[str, Any] = {k: F.col(k) for k in keys}
+    narrow = True
     if profile:
         for f in documents.schema.fields:
-            cols.setdefault(f.name, _profile_stand_in(f))
+            if f.name not in cols:
+                stand_in = _profile_stand_in(f)
+                narrow = narrow and stand_in is not None
+                cols[f.name] = F.col(f.name) if stand_in is None else stand_in
     for i, (_rid, p) in enumerate(preds):
         cols[f"{_FLAG}{i}"] = ~F.coalesce(p, F.lit(False))
     for name, spans_col in refs.items():
         cols[name] = refcheck.media_refs_expr(spans_col)
-    return documents.select(*[c.alias(n) for n, c in cols.items()])
+    return documents.select(*[c.alias(n) for n, c in cols.items()]), narrow
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -291,9 +304,12 @@ def run_validation(
                                       rule_version, duration_s=duration_s)
             )
 
-    # Every check but drift reads ONE check frame (check_frame), kept
-    # as an eager localCheckpoint (``checks``) and released in the
-    # finally. ``frame`` holds it, the per-partition aggregate
+    # Every check but drift reads ONE check frame (check_frame). When it
+    # is narrow and the run is not in spill mode it is kept as an eager
+    # localCheckpoint (``checks``) and released in the finally, so the
+    # input is read once; otherwise it stays a lazy projection, which
+    # each check reads from the input through its own pruned scan.
+    # ``frame`` holds it, the per-partition aggregate
     # (collected rows and their local relation, or a localCheckpoint in
     # spill mode), a blocking callable for the partition totals
     # (aggregate_task's result) and the future of the catalog's
@@ -306,9 +322,13 @@ def run_validation(
 
     def row_rules_phase():
         viol = R.violation_rows(frame["checks"], flag_preds, key_column)
-        if ckpt is None:
-            # the check frame is released before the caller reads this
-            # (under checkpointing the phase writes it and reads it back)
+        if ckpt is None and not spill:
+            # a kept check frame is released before the caller reads
+            # this; from a lazy one the sparse filter scan runs now,
+            # beside the other checks, not when the caller writes it.
+            # Under checkpointing the phase writes it and reads it back;
+            # spill-mode violations (10^12-doc scale) stream to the
+            # caller's sink instead of into block storage.
             viol = viol.localCheckpoint(eager=True)
         frame["totals"]()  # the rule counts are in
         if spill:
@@ -555,14 +575,17 @@ def run_validation(
                 frame["catalog_rows"] = pool.submit(
                     lambda: catalog.select("media_ref").distinct().count()
                 ) if refs_cols else None
-                frame["checks"] = check_frame(
+                frame["checks"], narrow = check_frame(
                     documents, key_cols,
                     preds if pending("row_rules") else [], refs_cols,
                     profile=profile_plan is not None,
                 )
-                if any(pending(n) for n, _fn in tasks):
+                if narrow and not spill and any(pending(n) for n, _fn in tasks):
                     # read by a check besides the aggregate: read the
-                    # input once (a profile-only run reads it directly)
+                    # input once (a profile-only run reads it directly).
+                    # Spill mode keeps the per-check reads: checkpoint
+                    # blocks have no lineage, and at that scale a lost
+                    # executor would fail the run.
                     checks = frame["checks"].localCheckpoint(eager=True)
                     frame["checks"] = checks
                 # the per-partition aggregate runs beside the checks;

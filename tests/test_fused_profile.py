@@ -217,6 +217,55 @@ def test_fused_run_cuts_input_scans(spark, parquet_docs):
     assert counts["all"] - source <= 4.2 * n_docs, (counts["all"] / n_docs,)
 
 
+@pytest.mark.parametrize("shape", ["flat_text", "spill"])
+def test_check_frame_kept_only_when_narrow(spark, parquet_docs, tmp_path, shape):
+    """run_validation materializes its check frame only when the frame
+    is narrow and the run is not in spill mode. A profiled flat
+    (doc_id, text) table would copy its text into the frame, and a
+    spill-mode frame would hold every row in block storage with no
+    lineage. Both read the source once per check instead, and no
+    per-row frame is read back from block storage."""
+    from automatic_data_validator_spark import rules as R
+    from automatic_data_validator_spark.synth import make_neardup_corpus
+    from automatic_data_validator_spark.validate import check_frame
+
+    n_docs = 30_000
+    docs = spark.read.parquet(str(parquet_docs / "docs"))
+    assert check_frame(docs, ["doc_id"], [], {}, profile=True)[1]
+    kwargs = {"with_profile": True}
+    if shape == "flat_text":
+        make_neardup_corpus(spark, n_docs, 0, seed=5).write.parquet(
+            str(tmp_path / "flat"))
+        docs = spark.read.parquet(str(tmp_path / "flat"))
+        assert not check_frame(docs, ["doc_id"], [], {}, profile=True)[1]
+        assert check_frame(docs, ["doc_id"], [], {}, profile=False)[1]
+        kwargs["rule_set"] = [R.Rule("nn", "not_null", column="doc_id")]
+        # aggregate, violation filter, uniqueness
+        n_checks = 3
+    else:
+        kwargs["catalog"] = spark.read.parquet(str(parquet_docs / "cat"))
+        kwargs["verdict_spill_threshold"] = 0
+        # aggregate, violation filter, uniqueness, referential
+        n_checks = 4
+    counts = {}
+
+    def run():
+        res = run_validation(spark, docs, **kwargs)
+        res.violations.count()
+        res.verdicts.count()
+        res.metrics.count()
+
+    def run_counting_blocks():
+        counts["all"] = _scan_records(spark, run)
+
+    source = _source_records(spark, run_counting_blocks)
+    assert n_checks * n_docs <= source <= (n_checks + 0.3) * n_docs, (
+        source / n_docs,)
+    # only the small result checkpoints (violation sets, spill-mode
+    # verdicts and partition aggregate) are read back
+    assert counts["all"] - source <= 0.5 * n_docs, (counts["all"] / n_docs,)
+
+
 def test_fused_leaves_no_cache_entries(spark, docs, catalog):
     spark.catalog.clearCache()
     docs.cache().count()
