@@ -85,11 +85,14 @@ def uniqueness_check(
     original occurrence. The former design's second full-table
     attribution join (broadcast-vs-SMJ guarded) is gone, halving the
     fact-table IO; nothing but the (small) violation set is kept. It is
-    kept as an eager ``localCheckpoint``, not a ``persist()``: AQE may
+    kept as a ``localCheckpoint``, not a ``persist()``: AQE may
     coalesce the window stage's partitions (it never re-partitions a
     cached plan), and no entry lands in the session's cache manager,
     where a later check over a rewritten path would match the stale
-    cached plan and return the old rows. The checkpoint blocks go with
+    cached plan and return the old rows. With local verdicts the
+    per-partition count collect is the job that fills the checkpoint,
+    so the window stage runs inside it instead of in a job of its own;
+    the distributed path fills it eagerly. The checkpoint blocks go with
     the returned frame (garbage collection releases them); the caller
     has nothing to unpersist. Shuffle volume is unchanged vs the
     salted two-phase agg: both carry one row per distinct (key,
@@ -125,6 +128,7 @@ def uniqueness_check(
     """
     from pyspark.sql import Window
 
+    distributed = distributed or isinstance(partition_totals, DataFrame)
     per_loc = (
         df.select(
             F.col(key).cast("string").alias("doc_id"),
@@ -148,13 +152,12 @@ def uniqueness_check(
             "partition_id",
             F.lit(None).cast("string").alias("detail"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=distributed)
     )
     # Totals from a concurrently-running phase may arrive as a BLOCKING
-    # CALLABLE: THIS phase's own (expensive) scan has materialized above
-    # and is only resolved now, so the two phases' scans overlap
-    # instead of serializing (round 3).
-    distributed = distributed or isinstance(partition_totals, DataFrame)
+    # CALLABLE: THIS phase's own (expensive) scan has materialized
+    # (above, or in the collect below) before it is resolved, so the
+    # two phases' scans overlap instead of serializing (round 3).
     if not distributed:
         viol_by_pid = {
             r["partition_id"]: r["cnt"]

@@ -79,7 +79,7 @@ def referential_check(
 
     Violation = a doc containing at least one dangling media_ref; one
     violation row per (doc, dangling ref). ONE pass over the fact
-    table: the dangling set is kept as an eager localCheckpoint (small;
+    table: the dangling set is kept as a localCheckpoint (small;
     no cache-manager entry outlives the call, and AQE may coalesce the
     join's partitions) and per-partition verdict counts aggregate from
     it; partition_totals reuses row counts from the row-rules pass when
@@ -122,9 +122,12 @@ def referential_check_counted(
     else:
         cat_side = cat.hint("merge")
     # dangling is consumed twice (violation rows + per-partition verdict
-    # counts) and is small; checkpoint so the explode+join runs once
+    # counts) and is small; checkpoint so the explode+join runs once.
+    # The local path's per-partition count collect is the job that
+    # fills it; the distributed path fills it now.
+    distributed = distributed or isinstance(partition_totals, DataFrame)
     dangling = refs.join(cat_side, "media_ref", "left_anti").localCheckpoint(
-        eager=True
+        eager=distributed
     )
     violations = dangling.select(
         "doc_id",
@@ -135,7 +138,6 @@ def referential_check_counted(
     # callable totals resolve only AFTER this phase's own scan/join
     # has materialized (and, local path, its per-partition counts are
     # collected), so no job runs after the totals arrive
-    distributed = distributed or isinstance(partition_totals, DataFrame)
     if not distributed:
         per_pid = (
             dangling.groupBy("partition_id", "doc_id")
