@@ -20,13 +20,13 @@ run returns, so the input is read once. Otherwise (a profiled flat
 table, whose columns the frame would copy whole, or spill mode, where
 checkpoint blocks without lineage would not survive a lost executor)
 each check reads the input through its own column-pruned scan of the
-lazy frame. One per-partition
-aggregate carries the rule counts, the profile partials and the
-partition totals. Each check keeps its own result as a local relation
-or an eager localCheckpoint, so nothing the run creates stays in the
-session's cache manager: a later run over a path rewritten in place
-cannot be served stale cached rows. Drift maps the input to its own
-signal frame (``drift_signals``) and reads it in parallel.
+lazy frame. One per-partition aggregate carries the rule counts, the
+profile partials and the partition totals. Each check keeps its own
+result as a local relation or a localCheckpoint, so nothing the run
+creates stays in the session's cache manager: a later run over a path
+rewritten in place cannot be served stale cached rows. Drift maps the
+input to its own signal frame (``drift_signals``) and reads it in
+parallel.
 
 Outputs: ``verdicts`` / ``violations`` / ``metrics`` / ``lineage``
 DataFrames (written as parquet when a checkpoint dir is given). This is
