@@ -30,7 +30,13 @@ from .profile import (  # noqa: F401
     profile_partitioned,
     quality_report,
 )
-from .dedup import neardup_dedup  # noqa: F401
+from .dedup import (  # noqa: F401
+    hot_prefixes,
+    lsh_oversize_buckets,
+    neardup_dedup,
+    rebase_neardup_after_compaction,
+    salted_repartition,
+)
 from .incremental import (  # noqa: F401
     compact_state,
     rebase_after_compaction,

@@ -12,10 +12,13 @@ the attribution the violation rows need, making the whole check a
 single scan of the fact table. AQE skew-join stays enabled as a
 backstop, but the salting is explicit and does not depend on it.
 
-Also provides content dedup families for training-data pipelines:
-exact (hash groupBy), MinHash signatures + LSH banding, SimHash, and
-n-gram Jaccard — all pure Spark expressions (no Python in the hot
-path).
+``hot_prefixes`` + ``salted_repartition`` are the explicit entry point
+for salting hot doc_id prefixes before any key-partitioned step.
+
+Also provides the near-duplicate pipeline for training-data corpora:
+MinHash signatures (an Arrow/numpy kernel) + LSH banding, n-gram
+Jaccard verification and connected components. Content-exact dedup is
+``correct.py``'s ``dropDuplicates`` step.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .rules import partition_verdicts
 from .session import local_frame
 
 
@@ -158,6 +162,7 @@ def uniqueness_check(
     # CALLABLE: THIS phase's own (expensive) scan has materialized
     # (above, or in the collect below) before it is resolved, so the
     # two phases' scans overlap instead of serializing (round 3).
+    viol_by_pid = None
     if not distributed:
         viol_by_pid = {
             r["partition_id"]: r["cnt"]
@@ -165,42 +170,9 @@ def uniqueness_check(
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
-    if callable(partition_totals):
-        partition_totals = partition_totals()
-    if distributed or isinstance(partition_totals, DataFrame):
-        from .rules import distributed_verdicts
-
-        return (
-            distributed_verdicts(partition_totals, violations, rule_id),
-            violations,
-        )
-    if partition_totals is None:
-        # standalone mode: no row-rules scan to reuse — one extra
-        # key-column-pruned pass for the totals
-        partition_totals = {
-            r["partition_id"]: r["cnt"]
-            for r in df.select(
-                F.spark_partition_id().cast("int").alias("partition_id")
-            )
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-    spark = df.sparkSession
-    rows = [
-        (int(pid), rule_id, int(total), int(viol_by_pid.get(pid, 0)),
-         viol_by_pid.get(pid, 0) == 0)
-        for pid, total in sorted(partition_totals.items())
-    ]
-    # a violation in a partition the totals map doesn't know about
-    # means the reused partition map diverged from this scan's
-    # assignment — surface it as a failing verdict (row_count 0 =
-    # unknown) instead of silently dropping the violations
-    for pid in sorted(set(viol_by_pid) - set(partition_totals)):
-        rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
-    from .rules import VERDICT_SCHEMA
-
-    verdicts = local_frame(spark, rows, VERDICT_SCHEMA)
+    verdicts = partition_verdicts(
+        df, violations, rule_id, partition_totals, viol_by_pid
+    )
     return verdicts, violations
 
 
@@ -261,23 +233,6 @@ def salted_repartition(
 
 
 # --- content dedup families -------------------------------------------------
-
-def exact_dedup_keys(df: DataFrame, content_cols: list[str]) -> DataFrame:
-    """Exact content duplicates via full-width hash groupBy.
-
-    Hashing first (xxhash64 over the listed columns) means the shuffle
-    carries an 8-byte key instead of full rows; md5 confirm available
-    for paranoia at 10^12 scale.
-    Returns (content_hash, n_docs) for groups with n_docs > 1.
-    """
-    h = F.xxhash64(*[F.col(c) for c in content_cols]).alias("content_hash")
-    return (
-        df.select(h)
-        .groupBy("content_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
-
 
 def word_shingles(text_col: str, k: int = 3):
     """Column expr: array of k-word shingles of a text column (JVM-side).
@@ -928,163 +883,6 @@ def lsh_oversize_buckets(
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > max_bucket_size)
-    )
-
-
-def _simhash_fold_udf():
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    powers = (np.uint64(1) << np.arange(64, dtype=np.uint64)).astype(np.uint64)
-
-    @pandas_udf("bigint")
-    def fold(hs):  # Series of array<bigint> token hashes -> bigint simhash
-        out = np.empty(len(hs), dtype=object)
-        out[:] = None
-        valid = [j for j in range(len(hs)) if hs.iloc[j] is not None]
-        if not valid:
-            return pd.Series(out)
-        arrs = [np.asarray(hs.iloc[j], dtype=np.int64) for j in valid]
-        lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=len(arrs))
-        flat = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-        # bit j of each uint64 -> column j (little-endian bytes + bits)
-        bits = np.unpackbits(
-            flat.view(np.uint64).view(np.uint8).reshape(-1, 8),
-            axis=1,
-            bitorder="little",
-        )
-        cs = np.cumsum(lens)
-        starts = np.concatenate([[0], cs[:-1]]).astype(np.int64)
-        counts = np.add.reduceat(bits.astype(np.int64), starts, axis=0)
-        vote = (2 * counts - lens[:, None]) > 0  # majority, ties -> 0 bit
-        packed = (vote.astype(np.uint64) * powers).sum(axis=1, dtype=np.uint64)
-        signed = packed.view(np.int64)
-        for row, j in enumerate(valid):
-            out[j] = int(signed[row])
-        return pd.Series(out)
-
-    return fold
-
-
-def simhash(text_col: str):
-    """Column: 64-bit SimHash of a text column as bigint.
-
-    Per-row only (no shuffle): the JVM emits one xxhash64 per token; a
-    numpy kernel unpacks bit matrices, majority-votes per row segment,
-    and repacks — identical output to the interpreted bit-vote
-    aggregate() formulation (equality pinned against tests/oracles.py)
-    without its 64-wide vote-array lambdas (round-2 directive #2).
-    """
-    token_hashes = F.transform(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: F.xxhash64(t)
-    )
-    return _simhash_fold_udf()(token_hashes)
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """SimHash near-duplicates via Hamming banding.
-
-    The 64-bit simhash splits into ``bands`` equal bit-slices; by
-    pigeonhole, any pair with hamming distance <= bands-1 shares at
-    least one identical slice, so candidates come from a bucket
-    equi-join on (band, slice) — never an all-pairs scan — and are then
-    verified exactly with ``bit_count(a XOR b) <= max_hamming``
-    (one JVM instruction per pair). Degenerate buckets are capped like
-    minhash_lsh_duplicates. Returns (id_a, id_b, hamming).
-    Note: max_hamming > bands-1 loses the recall guarantee (candidates
-    beyond it are caught only opportunistically) — raise bands instead.
-    """
-    width = 64 // bands
-    mask = (1 << width) - 1
-    sh = df.select(F.col(id_col).alias("_id"), simhash(text_col).alias("_sh"))
-    # same explode_outer + null-filter pattern as _lsh_band_buckets
-    # (see comment there): keeps the Python-UDF simhash out of
-    # optimizer-inferred filters
-    with_bands = (
-        sh.select(
-            "_id",
-            "_sh",
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("_sh", b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("slice"),
-                    )
-                    for b in range(bands)
-                ]
-            ).alias("_bb"),
-        )
-        .select("_id", "_sh", F.explode_outer("_bb").alias("bb"))
-        .filter(F.col("bb").isNotNull())
-        .select("_id", "_sh", "bb.band", "bb.slice")
-    )
-    # single-branch bucket expansion (see minhash_lsh_duplicates): one
-    # shuffle, signatures computed once, and the bucket cap applied by
-    # a spill-safe window count BEFORE collect_list so a hot bucket
-    # never fills one aggregation buffer (round-3 ADVICE)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "slice")
-    grouped = (
-        with_bands.withColumn("_n", F.count(F.lit(1)).over(w))
-        .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
-        .groupBy("band", "slice")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("_id"), F.col("_sh")))
-            ).alias("_members")
-        )
-    )
-    members = F.col("_members")
-    combos = F.flatten(
-        F.transform(
-            members,
-            lambda x, i: F.transform(
-                F.slice(members, i + F.lit(2), F.size(members)),
-                lambda y: F.struct(
-                    x["_id"].alias("id_a"),
-                    y["_id"].alias("id_b"),
-                    F.bit_count(x["_sh"].bitwiseXOR(y["_sh"])).alias("hamming"),
-                ),
-            ),
-        )
-    )
-    return (
-        grouped.select(F.explode(combos).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-        # strict inequality drops self-pairs from duplicated ids (see
-        # minhash_lsh_duplicates)
-        .filter((F.col("id_a") < F.col("id_b")) & (F.col("hamming") <= max_hamming))
-        .distinct()
-    )
-
-
-def _pair_side(candidate_pairs: DataFrame, broadcast_limit: int) -> DataFrame:
-    """Candidate-pair side of a verify join, broadcast only when small.
-
-    Post-LSH candidate sets are *usually* tiny but can exceed the
-    broadcast cap at 10^12 docs (round-2 ADVICE), so the pair set is
-    counted and falls back to a shuffle join above ``broadcast_limit``
-    — the same count-gated pattern as refcheck.referential_check's
-    catalog-side guard. No internal persist: the count and the join
-    each evaluate the candidate plan once, and nothing outlives the
-    call (round-2 wrong-list #1 standard); callers whose candidate
-    plans are expensive should persist BEFORE calling."""
-    n = candidate_pairs.count()
-    return (
-        F.broadcast(candidate_pairs)
-        if n <= broadcast_limit
-        else candidate_pairs.hint("merge")
     )
 
 

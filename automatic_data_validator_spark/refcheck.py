@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
-from .session import local_frame
+from .rules import partition_verdicts
 
 
 def media_refs_expr(spans_col: str = "spans"):
@@ -138,6 +138,7 @@ def referential_check_counted(
     # callable totals resolve only AFTER this phase's own scan/join
     # has materialized (and, local path, its per-partition counts are
     # collected), so no job runs after the totals arrive
+    viol_by_pid = n_rows = None
     if not distributed:
         per_pid = (
             dangling.groupBy("partition_id", "doc_id")
@@ -148,38 +149,8 @@ def referential_check_counted(
         )
         viol_by_pid = {r["partition_id"]: r["docs"] for r in per_pid}
         n_rows = sum(int(r["refs"]) for r in per_pid)
-    if callable(partition_totals):
-        partition_totals = partition_totals()
-    if distributed or isinstance(partition_totals, DataFrame):
-        from .rules import distributed_verdicts
-
-        return (
-            distributed_verdicts(
-                partition_totals, violations, rule_id, distinct_doc=True
-            ),
-            violations,
-            None,
-        )
-    if partition_totals is None:
-        partition_totals = {
-            r["partition_id"]: r["cnt"]
-            for r in df.select(
-                F.spark_partition_id().cast("int").alias("partition_id")
-            )
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-    from .rules import VERDICT_SCHEMA
-
-    rows = [
-        (int(pid), rule_id, int(total), int(viol_by_pid.get(pid, 0)),
-         viol_by_pid.get(pid, 0) == 0)
-        for pid, total in sorted(partition_totals.items())
-    ]
-    # violations in a partition missing from the (possibly reused)
-    # totals map must fail loudly, not vanish from the verdicts
-    for pid in sorted(set(viol_by_pid) - set(partition_totals)):
-        rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
-    verdicts = local_frame(df.sparkSession, rows, VERDICT_SCHEMA)
+    verdicts = partition_verdicts(
+        df, violations, rule_id, partition_totals, viol_by_pid,
+        distinct_doc=True,
+    )
     return verdicts, violations, n_rows

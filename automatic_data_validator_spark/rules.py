@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import local_frame
+
 VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
@@ -94,6 +96,53 @@ def distributed_verdicts(
             (F.coalesce("_viol", F.lit(0)) == 0).alias("pass"),
         )
     )
+
+
+def partition_verdicts(
+    df: DataFrame,
+    violations: DataFrame,
+    rule_id: str,
+    partition_totals: Any,
+    viol_by_pid: "dict[int, int] | None",
+    distinct_doc: bool = False,
+) -> DataFrame:
+    """The verdict tail a per-partition check (uniqueness, referential)
+    shares once its own violation set is built.
+
+    ``viol_by_pid`` is the check's collected per-partition violation
+    count, or None on the distributed path. A callable
+    ``partition_totals`` is resolved here, so the caller's own collect
+    has run before the totals arrive and no job runs after them. A
+    DataFrame of totals (or ``viol_by_pid`` None) takes
+    ``distributed_verdicts``; no totals at all costs one standalone
+    partition-count pass over ``df``. A violation in a partition the
+    totals map does not know means the reused partition map diverged
+    from this scan's assignment: it surfaces as a failing verdict with
+    row_count 0 (unknown) instead of vanishing."""
+    if callable(partition_totals):
+        partition_totals = partition_totals()
+    if viol_by_pid is None or isinstance(partition_totals, DataFrame):
+        return distributed_verdicts(
+            partition_totals, violations, rule_id, distinct_doc=distinct_doc
+        )
+    if partition_totals is None:
+        partition_totals = {
+            r["partition_id"]: r["cnt"]
+            for r in df.select(
+                F.spark_partition_id().cast("int").alias("partition_id")
+            )
+            .groupBy("partition_id")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+    rows = [
+        (int(pid), rule_id, int(total), int(viol_by_pid.get(pid, 0)),
+         viol_by_pid.get(pid, 0) == 0)
+        for pid, total in sorted(partition_totals.items())
+    ]
+    for pid in sorted(set(viol_by_pid) - set(partition_totals)):
+        rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
+    return local_frame(df.sparkSession, rows, VERDICT_SCHEMA)
 
 
 @dataclass

@@ -1,11 +1,11 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — a broadcast cross join with the
-dot product computed by ``F.zip_with`` + ``F.aggregate`` (JVM-side,
-no Python). Scale path: LSH-bucketed variant using random-hyperplane
-signatures so candidate generation is a bucket equi-join instead of a
-cross product; at 100 TB only the bucket join shuffles, and its key is
-an 8-byte hash.
+Two exact scorers: ``cosine_neardup_pairs`` is the all-pairs cosine
+near-duplicate verifier, with the dot product computed by
+``F.zip_with`` + ``F.aggregate`` (JVM-side, no Python), and
+``brute_force_topk_arrow`` is the cosine top-k per query, scored by one
+BLAS matmul per Arrow batch. The interpreted-HOF top-k it replaced is
+kept in tests/oracles.py as its reference.
 """
 
 from __future__ import annotations
@@ -24,133 +24,16 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k per query vector.
-
-    queries: (query_id, embedding). The query side is broadcast (it's
-    the small side by construction); ranking uses a window per query
-    with a deterministic (sim desc, id asc) tie-break.
-    Returns (query_id, neighbor_id, cosine_sim).
-    """
-    # norms hoisted to per-ROW columns before the join: cosine inside
-    # the pair projection would recompute both norms per PAIR (3
-    # interpreted HOF passes over dim elements instead of 1)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col)).alias("_vn"),
-    )
-    sims = v.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("_v"), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias(
-            "cosine_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def _plane_matrix(n_planes: int, dim: int, seed: int):
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    return rng.uniform(-1.0, 1.0, size=(n_planes, dim))
-
-
-def hyperplane_signatures_batch(
-    vec_col: str, n_planes: int, dim: int, seeds: "list[int]"
-):
-    """All LSH tables' random-hyperplane signatures in ONE
-    Arrow-batched matmul.
-
-    Returns array<bigint> (one bit-packed signature per table; bit p
-    set iff the projection on plane p is > 0). Per batch: (rows x dim)
-    @ (dim x tables*planes) in BLAS, then a bitpack — vs the
-    n_tables x n_planes interpreted aggregate() calls per row of the
-    Catalyst formulation (kept as the reference oracle in
-    tests/oracles.py). Plane weights are deterministic (numpy
-    RandomState per table seed), so every executor computes the same
-    planes with no broadcast variable. ``dim`` must match the
-    embedding length: mismatched or NULL rows get a NULL signature
-    (they drop out of bucket equi-joins) instead of an all-zero one
-    that would collapse every row into ONE bucket and make the LSH
-    join quadratic."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    W = np.concatenate(
-        [_plane_matrix(n_planes, dim, s).T for s in seeds], axis=1
-    )  # dim x (tables*planes)
-    bits = 1 << np.arange(n_planes, dtype=np.int64)
-
-    @pandas_udf("array<bigint>")
-    def sig(s):  # pd.Series of array<float|double> -> pd.Series of list<long>
-        out = np.empty(len(s), dtype=object)
-        out[:] = None  # null embeddings -> null signature, not a crash
-        notna = s.notna().to_numpy()
-        # wrong-dimension embeddings -> NULL signature: the row drops
-        # out of bucket equi-joins instead of failing the job
-        lens = np.fromiter(
-            (len(v) if ok else -1 for v, ok in zip(s, notna)),
-            dtype=np.int64,
-            count=len(s),
-        )
-        valid = notna & (lens == dim)
-        if valid.any():
-            M = np.array(s[valid].tolist(), dtype=np.float64)
-            P = (M @ W) > 0
-            packed = [
-                P[:, t * n_planes : (t + 1) * n_planes] @ bits
-                for t in range(len(seeds))
-            ]
-            out[np.flatnonzero(valid)] = list(np.stack(packed, axis=1))
-        return pd.Series(out)
-
-    return sig(F.col(vec_col))
-
-
 def cosine_neardup_pairs(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine_sim).
 
-    With ``candidates=None`` this is the EXACT all-pairs verifier —
-    O(n^2), for small tables and oracle checks only. At 100 TB pass a
-    candidate-pair DataFrame (id_a, id_b) from the LSH bucket join
-    (lsh_topk's bucket equi-join) or a shared-IVF-list join, and only
-    those pairs are scored (candidates broadcast when small — counted,
-    with a shuffle-join fallback above the broadcast cap — and the
-    vector table never shuffled in the broadcast case; same layering
-    and size guard as dedup.ngram_jaccard after MinHash)."""
-    from .dedup import _pair_side
+    The EXACT all-pairs verifier — a cross join, O(n^2), for small
+    tables and oracle checks only."""
     dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
     # norms are per-row columns, not per-pair recomputation
     va = vectors.select(
@@ -163,13 +46,7 @@ def cosine_neardup_pairs(
         dbl(F.col(vec_col)).alias("_vb"),
         _norm(dbl(F.col(vec_col))).alias("_nb"),
     )
-    if candidates is None:
-        pairs = va.crossJoin(vb).filter(F.col("id_a") < F.col("id_b"))
-    else:
-        from . import config
-
-        pair_side = _pair_side(candidates, config.BROADCAST_ROW_LIMIT)
-        pairs = pair_side.join(va, "id_a").join(vb, "id_b")
+    pairs = va.crossJoin(vb).filter(F.col("id_a") < F.col("id_b"))
     return pairs.select(
         "id_a",
         "id_b",
@@ -177,194 +54,6 @@ def cosine_neardup_pairs(
             "cosine_sim"
         ),
     ).filter(F.col("cosine_sim") >= threshold)
-
-
-def ivf_index(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    sample_fraction: float | None = None,
-    train_target_rows: int = 1_000_000,
-    seed: int = 42,
-):
-    """IVF coarse quantizer: k-means centroids trained on a (sampled)
-    pass, then every vector assigned to its nearest list. Returns
-    (assigned DataFrame with `_list` column, centroids as a list of
-    lists). At 100 TB: train on a sample, assignment is one map-only
-    pass, and the index column is written alongside the table so
-    queries only scan `nprobe / n_lists` of the data.
-
-    sample_fraction=None (default) bounds the k-means training set to
-    ~``train_target_rows`` rows (one cheap count job picks the
-    fraction): KMeans runs maxIter full passes over its input, so the
-    former full-table default meant 20 MLlib iterations over
-    EVERYTHING at 100 TB (round-3 VERDICT #8). Centroid quality
-    saturates far below 10^6 samples for realistic n_lists; pass 1.0
-    explicitly to train on the full table."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    train = vectors.select(array_to_vector(F.col(vec_col)).alias("features"))
-    if sample_fraction is None:
-        n = vectors.count()
-        sample_fraction = min(1.0, float(train_target_rows) / max(n, 1))
-    if sample_fraction < 1.0:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    model = KMeans(k=n_lists, seed=seed, maxIter=20).fit(train)
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    assigned = model.transform(
-        vectors.select(
-            F.col(id_col),
-            F.col(vec_col),
-            array_to_vector(F.col(vec_col)).alias("features"),
-        )
-    ).select(id_col, vec_col, F.col("prediction").alias("_list"))
-    return assigned, centroids
-
-
-def ivf_write(assigned: DataFrame, centroids: list[list[float]], path: str) -> None:
-    """Persist an IVF index: the assigned table partitioned BY `_list`
-    (hive-style directories), centroids as a tiny JSON sidecar. The
-    partitioning is the point at 100 TB: ivf_topk's `_list IN (...)`
-    probe filter then prunes whole directories at planning time —
-    the scan touches ~nprobe/n_lists of the BYTES, not just rows."""
-    import json
-
-    assigned.write.mode("overwrite").partitionBy("_list").parquet(f"{path}/vectors")
-    # sidecar via a 1-row dataframe so it lands on any hadoop-compatible fs
-    spark = assigned.sparkSession
-    local_frame(
-        spark, [(json.dumps(centroids),)], "centroids_json string"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/centroids")
-
-
-def ivf_read(spark, path: str):
-    """Load an IVF index written by ivf_write -> (assigned, centroids)."""
-    import json
-
-    assigned = spark.read.parquet(f"{path}/vectors")
-    row = spark.read.json(f"{path}/centroids").collect()[0]
-    return assigned, json.loads(row["centroids_json"])
-
-
-def ivf_topk(
-    assigned: DataFrame,
-    centroids: list[list[float]],
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """IVF search: per query, rank centroids by cosine (driver-side,
-    centroids are tiny), probe the top-`nprobe` lists, exact cosine
-    within the probed partitions. The scan is pruned to
-    nprobe/n_lists of the table via a pushdown-able `_list IN (...)`
-    filter; the query side is broadcast."""
-    import numpy as np
-
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).collect()
-    cents = np.array(centroids)
-    cents_n = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    probe_rows = []
-    for r in q_rows:
-        qv = np.array(r["_qv"], dtype=np.float64)
-        qnorm = float(np.sqrt(float(qv @ qv)))  # query norms precomputed driver-side
-        qn = qv / max(qnorm, 1e-12)
-        order = np.argsort(-(cents_n @ qn))[:nprobe]
-        for lst in order:
-            probe_rows.append((r["query_id"], int(lst), [float(x) for x in qv], qnorm))
-    spark = assigned.sparkSession
-    probes = local_frame(
-        spark, probe_rows,
-        "query_id long, _list int, _qv array<double>, _qn double",
-    )
-    # data-side norm hoisted to one per-row pass before the probe join
-    dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    prepared = assigned.select(
-        F.col(id_col), F.col("_list"), dv.alias("_vd"), _norm(dv).alias("_vn")
-    )
-    cand = prepared.join(F.broadcast(probes), "_list").select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        (_dot(F.col("_vd"), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias(
-            "cosine_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: candidates = vectors sharing any of
-    ``n_tables`` hyperplane-signature buckets with the query, then
-    exact cosine rank within candidates. The bucket join is an
-    equi-join on (table, signature) — shuffle on 8-byte keys only.
-    ``dim`` is inferred from the (small) query side when omitted. All
-    tables' signatures come from one BLAS matmul per Arrow batch
-    (hyperplane_signatures_batch)."""
-    if dim is None:
-        row = queries.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        if row is None:
-            raise ValueError(
-                "lsh_topk: cannot infer embedding dim from an empty/all-null "
-                "query set — pass dim= explicitly"
-            )
-        dim = len(row[0])
-    seeds = [seed + t for t in range(n_tables)]
-
-    def with_sigs(df, idc):
-        # norm hoisted next to the vector BEFORE the signature explode:
-        # one norm pass per row, copied (not recomputed) per table row
-        sigs = hyperplane_signatures_batch(vec_col, n_planes, dim, seeds)
-        return df.select(
-            F.col(idc).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            _norm(F.col(vec_col)).alias("_n"),
-            F.posexplode(sigs).alias("tbl", "sig"),
-        )
-
-    vs = with_sigs(vectors, id_col)
-    qs = (
-        with_sigs(queries, query_id_col)
-        .withColumnRenamed("_id", "query_id")
-        .withColumnRenamed("_v", "_qv")
-        .withColumnRenamed("_n", "_qn")
-    )
-    cand = (
-        vs.join(F.broadcast(qs), ["tbl", "sig"])
-        .select("query_id", F.col("_id").alias("neighbor_id"), "_v", "_n", "_qv", "_qn")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    sims = cand.select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("_v"), F.col("_qv")) / (F.col("_n") * F.col("_qn"))).alias(
-            "cosine_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
 
 
 def brute_force_topk_arrow(
@@ -376,9 +65,10 @@ def brute_force_topk_arrow(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact cosine top-k, vectorized: same contract and ranking as
-    ``brute_force_topk`` (query side small by construction; ties break
-    sim desc, neighbor_id asc) but the scoring is ONE float64 BLAS
-    matmul per Arrow batch instead of an interpreted aggregate()/
+    the expression baseline ``brute_force_topk`` in tests/oracles.py
+    (query side small by construction; ties break sim desc,
+    neighbor_id asc) but the scoring is ONE float64 BLAS matmul per
+    Arrow batch instead of an interpreted aggregate()/
     zip_with() HOF pair per (vector, query) — the 20x-interpreted-HOF
     cost the expression baseline pays per element.
 

@@ -1,17 +1,18 @@
-"""Reference oracles for the shipped signature kernels.
+"""Reference oracles for the shipped vectorized kernels.
 
-Pure-Catalyst expression formulations of the MinHash, SimHash and
-random-hyperplane signatures. The package ships only the Arrow-batched
-kernels (dedup.minhash_signature, dedup.simhash,
-similarity.hyperplane_signatures_batch); these interpreted versions are
-several-fold slower but state the definition directly, so the tests
-pin the kernels to them bit for bit. The Column-API LSH band builder
-is kept the same way: the package builds the identical expression
-tree from one SQL string.
+Pure-Catalyst expression formulations of the MinHash signature and of
+the exact cosine top-k. The package ships only the Arrow-batched
+kernels (dedup.minhash_signature, similarity.brute_force_topk_arrow);
+these interpreted versions are several-fold slower but state the
+definition directly, so the tests pin the kernels to them: the
+signatures bit for bit, the top-k rank for rank. The Column-API LSH
+band builder is kept the same way: the package builds the identical
+expression tree from one SQL string.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from automatic_data_validator_spark import dedup as D
@@ -30,51 +31,46 @@ def minhash_signature_expr(text_col: str, num_hashes: int = 16, shingle_k: int =
     )
 
 
-def simhash_expr(text_col: str, bits: int = 64):
-    """Bit-majority SimHash over xxhash64 token hashes: one aggregate()
-    pass with a ``bits``-wide vote accumulator, bit-packed in the
-    aggregate's finish lambda (ties -> 0 bit)."""
-    quoted = "`" + text_col.replace("`", "``") + "`"
-    return F.expr(
-        f"""
-        aggregate(
-          transform(split(lower({quoted}), '\\\\s+'), t -> xxhash64(t)),
-          array_repeat(0L, {bits}),
-          (acc, h) -> zip_with(
-              acc, sequence(0, {bits - 1}),
-              (a, b) -> a + if((shiftright(h, b) & 1L) = 1L, 1L, -1L)),
-          acc -> aggregate(
-              zip_with(acc, sequence(0, {bits - 1}),
-                       (v, b) -> if(v > 0L, shiftleft(1L, b), 0L)),
-              0L, (x, y) -> x | y)
-        )
-        """
-    )
-
-
-def hyperplane_signature_expr(
-    vec_col: str, n_planes: int = 16, dim: int = 64, seed: int = 42
+def brute_force_topk(
+    vectors,
+    queries,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
 ):
-    """One table's random-hyperplane signature as a bigint bit-pack:
-    bit p set iff the dot product with plane p (the kernel's seeded
-    plane matrix, embedded as literal arrays) is > 0. Wrong-dimension
-    rows get a NULL signature."""
-    planes = S._plane_matrix(n_planes, dim, seed)
-    v = F.col(vec_col)
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        w_lit = F.array(*[F.lit(float(x)) for x in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(v, w_lit, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return F.when(F.size(v) == dim, sig)
+    """Exact cosine top-k per query vector -> (query_id, neighbor_id,
+    cosine_sim): a broadcast cross join scored by interpreted
+    zip_with/aggregate HOFs, ranked by a window per query with the
+    (sim desc, id asc) tie-break. Rows with NULL or wrong-dimension
+    embeddings carry NULL sims, which sort last."""
+    # norms hoisted to per-ROW columns before the join: cosine inside
+    # the pair projection would recompute both norms per PAIR
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(vec_col).alias("_qv"),
+        S._norm(F.col(vec_col)).alias("_qn"),
+    )
+    v = vectors.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("_v"),
+        S._norm(F.col(vec_col)).alias("_vn"),
+    )
+    sims = v.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        (S._dot(F.col("_v"), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias(
+            "cosine_sim"
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc("neighbor_id")
+    )
+    return (
+        sims.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
 
 
 def lsh_band_buckets_columns(

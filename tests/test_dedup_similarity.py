@@ -9,10 +9,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from oracles import (
-    hyperplane_signature_expr,
+    brute_force_topk,
     lsh_band_buckets_columns,
     minhash_signature_expr,
-    simhash_expr,
 )
 
 from automatic_data_validator_spark import dedup as D
@@ -63,9 +62,6 @@ def test_exact_dedup_and_minhash(spark):
     pdf = pd.DataFrame({"id": range(len(texts)), "text": texts})
     df = spark.createDataFrame(pdf)
 
-    exact = D.exact_dedup_keys(df, ["text"]).collect()
-    assert len(exact) == 1 and exact[0]["n_docs"] == 2
-
     pairs = D.minhash_lsh_duplicates(df, "id", "text", num_hashes=32, bands=16)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (0, 1) in got  # exact dups always collide
@@ -78,22 +74,6 @@ def test_exact_dedup_and_minhash(spark):
         assert 0.0 < jmap[(0, 2)] < 1.0
 
 
-def test_simhash_hamming_locality(spark):
-    texts = [
-        "the quick brown fox jumps over the lazy dog today",
-        "the quick brown fox jumps over the lazy cat today",
-        "entirely different words describing quantum chromodynamics lattice",
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"id": range(3), "text": texts}))
-    rows = df.select("id", D.simhash("text").alias("sh")).collect()
-    sh = {r["id"]: r["sh"] for r in rows}
-
-    def ham(a, b):
-        return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-    assert ham(sh[0], sh[1]) < ham(sh[0], sh[2])
-
-
 def test_brute_force_topk_matches_numpy(spark):
     rng = np.random.RandomState(42)
     vecs = rng.normal(size=(200, 16)).astype(np.float32)
@@ -102,7 +82,7 @@ def test_brute_force_topk_matches_numpy(spark):
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [0, 1], "embedding": [vecs[0].tolist(), vecs[1].tolist()]})
     )
-    got = S.brute_force_topk(df, queries, k=5).toPandas()
+    got = S.brute_force_topk_arrow(df, queries, k=5).toPandas()
 
     norm = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     sims = norm @ norm.T
@@ -111,52 +91,6 @@ def test_brute_force_topk_matches_numpy(spark):
         mine = list(got[got.query_id == q].sort_values("cosine_sim", ascending=False)["neighbor_id"])
         assert mine == expected
         assert mine[0] == q  # self is its own nearest neighbor
-
-
-def test_lsh_topk_recall(spark):
-    # clustered data (the realistic ANN workload): 10 centers, 30 pts each
-    rng = np.random.RandomState(7)
-    centers = rng.normal(size=(10, 32)) * 5
-    vecs = np.vstack(
-        [centers[i % 10] + rng.normal(scale=0.5, size=32) for i in range(300)]
-    ).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(300), "embedding": [v.tolist() for v in vecs]})
-    df = spark.createDataFrame(pdf)
-    queries = spark.createDataFrame(
-        pd.DataFrame({"query_id": [5], "embedding": [vecs[5].tolist()]})
-    )
-    exact = set(
-        r["neighbor_id"] for r in S.brute_force_topk(df, queries, k=10).collect()
-    )
-    approx = set(
-        r["neighbor_id"]
-        for r in S.lsh_topk(df, queries, k=10, n_planes=8, n_tables=8).collect()
-    )
-    assert 5 in approx  # self found
-    assert len(exact & approx) >= 6  # recall@10 >= 0.6 on clustered data
-
-
-def test_ivf_topk_recall(spark):
-    rng = np.random.RandomState(3)
-    centers = rng.normal(size=(8, 16)) * 5
-    vecs = np.vstack(
-        [centers[i % 8] + rng.normal(scale=0.4, size=16) for i in range(400)]
-    ).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(400), "embedding": [v.tolist() for v in vecs]})
-    )
-    queries = spark.createDataFrame(
-        pd.DataFrame({"query_id": [7], "embedding": [vecs[7].tolist()]})
-    )
-    assigned, cents = S.ivf_index(df, n_lists=8)
-    assert len(cents) == 8
-    exact = [r["neighbor_id"] for r in S.brute_force_topk(df, queries, k=10).collect()]
-    approx = {
-        r["neighbor_id"]
-        for r in S.ivf_topk(assigned, cents, queries, k=10, nprobe=2).collect()
-    }
-    assert 7 in approx
-    assert len(set(exact) & approx) >= 8  # clustered data: near-full recall
 
 
 def test_uniqueness_matches_groupby_oracle_with_multiplicity(spark, docs):
@@ -297,93 +231,6 @@ def test_neardup_dedup_audit_reports_oversize_buckets(spark):
     assert cm.numCachedEntries() == cached_before
 
 
-def test_simhash_single_pass_matches_multi_pass(spark):
-    """The one-aggregate simhash must equal the per-bit formulation."""
-    import pandas as pd
-
-    texts = [
-        "the quick brown fox", "lorem ipsum dolor sit amet", "x",
-        "", "a b a b a b", "MiXeD CaSe   whitespace\ttabs",
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"id": range(len(texts)), "text": texts}))
-
-    def simhash_multi_pass(text_col, bits=64):
-        tokens = F.split(F.lower(F.col(text_col)), r"\s+")
-        hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-
-        def bit_vote(b):
-            return F.aggregate(
-                hashes, F.lit(0),
-                lambda acc, h: acc + F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1)),
-            )
-
-        out = F.lit(0).cast("long")
-        for b in range(bits):
-            out = out.bitwiseOR(
-                F.when(bit_vote(b) > 0, F.shiftleft(F.lit(1).cast("long"), b))
-                .otherwise(F.lit(0).cast("long"))
-            )
-        return out
-
-    got = df.select("id", D.simhash("text").alias("a"),
-                    simhash_multi_pass("text").alias("b")).collect()
-    for r in got:
-        assert r["a"] == r["b"], r
-
-
-def test_ivf_index_persist_and_prune(spark, tmp_path):
-    """ivf_write partitions by _list so the probe join prunes whole
-    directories (dynamic partition pruning); read-back results must
-    equal the in-memory index."""
-    rng = np.random.RandomState(3)
-    centers = rng.normal(size=(4, 16)) * 4
-    vecs = np.vstack(
-        [centers[i % 4] + rng.normal(scale=0.3, size=16) for i in range(200)]
-    ).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(200), "embedding": [v.tolist() for v in vecs]})
-    )
-    assigned, cents = S.ivf_index(df, n_lists=4, seed=3)
-    queries = spark.createDataFrame(
-        pd.DataFrame({"query_id": [7], "embedding": [vecs[7].tolist()]})
-    )
-    mem = sorted(r["neighbor_id"]
-                 for r in S.ivf_topk(assigned, cents, queries, k=5, nprobe=2).collect())
-
-    path = str(tmp_path / "ivf")
-    S.ivf_write(assigned, cents, path)
-    assigned2, cents2 = S.ivf_read(spark, path)
-    assert cents2 == cents
-    disk_topk = S.ivf_topk(assigned2, cents2, queries, k=5, nprobe=2)
-    disk = sorted(r["neighbor_id"] for r in disk_topk.collect())
-    assert disk == mem
-    plan = disk_topk._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
-
-
-def test_simhash_neardup_pairs(spark):
-    """Hamming-banded SimHash: near-identical texts pair, unrelated
-    texts don't; hamming values verified vs driver-side popcount."""
-    texts = [
-        "the quick brown fox jumps over the lazy dog and runs away today",
-        "the quick brown fox jumps over the lazy cat and runs away today",
-        "entirely different text about quantum chromodynamics lattice gauge theory",
-        "the quick brown fox jumps over the lazy dog and runs away today",  # exact dup of 0
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"id": range(4), "text": texts}))
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in D.simhash_neardup_pairs(df, "id", "text", max_hamming=10).collect()}
-    assert pairs.get((0, 3)) == 0                       # exact dup: hamming 0
-    assert (0, 1) in pairs and pairs[(0, 1)] <= 10      # one-word change
-    assert all(2 not in p for p in pairs)               # unrelated never pairs
-    # verify hamming against driver-side popcount of the simhash values
-    sh = {r["id"]: r["sh"] for r in df.select("id", D.simhash("text").alias("sh")).collect()}
-    for (a, b), h in pairs.items():
-        assert h == bin((sh[a] ^ sh[b]) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
 def test_minhash_single_pass_matches_per_permutation(spark):
     """One-aggregate minhash must equal the per-permutation formulation
     on all shapes incl. null/empty/short texts."""
@@ -408,108 +255,6 @@ def test_minhash_single_pass_matches_per_permutation(spark):
     ).collect()
     for r in rows:
         assert r["a"] == r["b"], (r["id"], r["a"], r["b"])
-
-
-def test_hyperplane_kernel_equals_expr_oracle(spark):
-    """The BLAS-batch signature kernel uses the same plane weights as
-    the Catalyst expression oracle: bucket assignments must agree on
-    real-valued data, and lsh_topk must return the top-k (cosine desc,
-    id asc) of exactly the vectors sharing an oracle bucket with the
-    query."""
-    rng = np.random.RandomState(5)
-    vecs = rng.normal(size=(120, 24)).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(120), "embedding": [v.tolist() for v in vecs]})
-    )
-    seeds = [42, 43, 44]
-    arrow = df.select(
-        "vec_id",
-        S.hyperplane_signatures_batch("embedding", 10, 24, seeds).alias("s"),
-    ).collect()
-    got_arrow = {r["vec_id"]: list(r["s"]) for r in arrow}
-    exprs = df.select(
-        "vec_id",
-        *[
-            hyperplane_signature_expr("embedding", 10, dim=24, seed=sd).alias(f"s{i}")
-            for i, sd in enumerate(seeds)
-        ],
-    ).collect()
-    got_expr = {r["vec_id"]: [r["s0"], r["s1"], r["s2"]] for r in exprs}
-    assert got_arrow == got_expr
-    # the full topk flow vs candidates bucketed by the oracle
-    q = spark.createDataFrame(
-        pd.DataFrame({"query_id": [3], "embedding": [vecs[3].tolist()]})
-    )
-    got = {r["neighbor_id"] for r in
-           S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4).collect()}
-    tables = [42, 43, 44, 45]
-    osig = {
-        r["vec_id"]: [r[f"s{t}"] for t in range(len(tables))]
-        for r in df.select(
-            "vec_id",
-            *[
-                hyperplane_signature_expr("embedding", 8, dim=24, seed=sd).alias(f"s{t}")
-                for t, sd in enumerate(tables)
-            ],
-        ).collect()
-    }
-    cand = [i for i, sg in osig.items() if any(a == b for a, b in zip(sg, osig[3]))]
-    v64 = vecs.astype(np.float64)
-    unit = v64 / np.linalg.norm(v64, axis=1, keepdims=True)
-    ranked = sorted(cand, key=lambda i: (-float(unit[i] @ unit[3]), i))
-    assert got == set(ranked[:8])
-
-
-def test_lsh_arrow_signatures_tolerate_null_embeddings(spark):
-    """Null and wrong-dimension embeddings yield null signatures
-    (dropped from buckets), never a worker crash; all-null batches
-    also survive."""
-    pdf = pd.DataFrame({"vec_id": [0, 1, 2],
-                        "embedding": [[1.0] * 8, None, [0.5] * 8]}).astype(object)
-    df = spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
-    rows = {r["vec_id"]: r["s"] for r in df.select(
-        "vec_id", S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s")
-    ).collect()}
-    assert rows[1] is None and rows[0] is not None and rows[2] is not None
-    allnull = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [9], "embedding": [None]}).astype(object),
-        "vec_id long, embedding array<double>",
-    )
-    got = allnull.select(
-        S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s")
-    ).collect()
-    assert got[0]["s"] is None
-    # wrong-dim vector -> NULL signature, not the all-zero one that
-    # would collapse every such row into one bucket — alone in a
-    # batch, mixed with valid rows, and in agreement with the oracle
-    wrong = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [3], "embedding": [[1.0] * 5]}),
-        "vec_id long, embedding array<double>",
-    )
-    sig = wrong.select(
-        S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s"),
-        hyperplane_signature_expr("embedding", 6, dim=8).alias("e"),
-    ).collect()
-    assert sig[0]["s"] is None and sig[0]["e"] is None
-    mixed = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [0, 1, 2, 3],
-                      "embedding": [[0.5] * 8, [1.0] * 5, [1.0] * 9, [-0.25] * 8]}),
-        "vec_id long, embedding array<double>",
-    )
-    rows = {r["vec_id"]: (r["s"], r["e"]) for r in mixed.select(
-        "vec_id",
-        S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s"),
-        hyperplane_signature_expr("embedding", 6, dim=8).alias("e"),
-    ).collect()}
-    assert rows[1] == (None, None) and rows[2] == (None, None)
-    for i in (0, 3):
-        assert rows[i][0] == [rows[i][1]], (i, rows[i])
-
-
-def test_simhash_quoted_column_name(spark):
-    df = spark.createDataFrame(pd.DataFrame({"the text": ["hello world"]}))
-    r = df.select(D.simhash("the text").alias("s")).collect()
-    assert isinstance(r[0]["s"], int)
 
 
 def test_minhash_kernel_equals_expr_oracle(spark):
@@ -539,23 +284,6 @@ def test_minhash_kernel_equals_expr_oracle(spark):
         assert r["a2"] == r["e2"], (r["id"], r["a2"], r["e2"])
 
 
-def test_simhash_kernel_equals_expr_oracle(spark):
-    texts = [
-        None, "", "x", "the quick brown fox", "MiXeD CaSe   whitespace\ttabs",
-        "lorem ipsum dolor sit amet " * 20, "Ünïcode tëxt",
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame({"id": range(len(texts)), "text": texts})
-    )
-    rows = df.select(
-        "id",
-        D.simhash("text").alias("a"),
-        simhash_expr("text").alias("e"),
-    ).collect()
-    for r in rows:
-        assert r["a"] == r["e"], (r["id"], r["a"], r["e"])
-
-
 def test_arrow_signatures_survive_hof_heavy_session(spark, docs):
     """Regression pin for a Spark 4.1 quirk: after unrelated HOF-heavy
     plans have been analyzed/cached in the session (the docs fixture),
@@ -579,8 +307,6 @@ def test_arrow_signatures_survive_hof_heavy_session(spark, docs):
     assert all(len(r["s"]) == 32 for r in sigs)
     pairs = D.minhash_lsh_duplicates(df, "id", "text", num_hashes=32, bands=16)
     assert (0, 1) in {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    sh = df.select(D.simhash("text").alias("h")).collect()
-    assert all(r["h"] is not None for r in sh)
 
 
 def test_lsh_no_self_pairs_for_duplicate_ids(spark):
@@ -597,9 +323,6 @@ def test_lsh_no_self_pairs_for_duplicate_ids(spark):
           for r in D.minhash_lsh_duplicates(df, "id", "text",
                                             num_hashes=16, bands=4).collect()}
     assert (7, 7) not in mh and (7, 9) in mh
-    sh = {(r["id_a"], r["id_b"])
-          for r in D.simhash_neardup_pairs(df, "id", "text").collect()}
-    assert (7, 7) not in sh and (7, 9) in sh
 
 
 def test_connected_dup_groups_matches_union_find(spark):
@@ -816,22 +539,6 @@ def test_connected_components_driver_equals_distributed(spark):
     a.unpersist()
     b.unpersist()
     assert ga == gb
-
-
-def test_simhash_bucket_cap_prevents_blowup(spark):
-    """Same spill-safe window-count cap as minhash LSH (round-3
-    ADVICE): a degenerate bucket of identical docs yields no pairs
-    under the cap instead of a quadratic expansion."""
-    df = spark.createDataFrame(
-        pd.DataFrame({"id": range(500), "text": ["same text again"] * 500})
-    )
-    pairs = D.simhash_neardup_pairs(df, "id", "text", max_bucket_size=100)
-    assert pairs.count() == 0
-    # under the cap the identical docs all pair up at hamming 0
-    some = D.simhash_neardup_pairs(df.limit(40), "id", "text")
-    rows = some.collect()
-    assert len(rows) == 40 * 39 // 2
-    assert all(r["hamming"] == 0 for r in rows)
 
 
 def test_neardup_dedup_zero_dups_after_clean(spark):
@@ -1110,7 +817,7 @@ def test_brute_force_topk_arrow_equals_expression(spark):
     vdf = spark.createDataFrame(vecs, "vec_id string, embedding array<double>").repartition(8)
     qdf = spark.createDataFrame(qs, "query_id string, embedding array<double>")
 
-    base = S.brute_force_topk(vdf, qdf, k=k)
+    base = brute_force_topk(vdf, qdf, k=k)
     fast = S.brute_force_topk_arrow(vdf, qdf, k=k)
 
     def keyed(df):
