@@ -30,6 +30,7 @@ from .profile import (  # noqa: F401
     profile_partitioned,
     quality_report,
 )
+from .drift import schema_drift, schema_snapshot  # noqa: F401
 from .dedup import (  # noqa: F401
     hot_prefixes,
     lsh_oversize_buckets,

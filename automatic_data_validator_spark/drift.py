@@ -12,13 +12,17 @@ t-digests", arXiv:1902.04023). Per-partition partial sketches are
 built with ``mapInPandas`` (Arrow batches, vectorized numpy — no
 per-row Python), each partition emits ONE serialized digest row, and
 the driver merges the tiny partials. Sketches are associative and
-serializable, so they checkpoint alongside the phase outputs and a
-later Structured Streaming wrapper could reuse them unchanged
-(SURVEY.md §2.10).
+serializable, so they checkpoint alongside the phase outputs and
+Structured Streaming reuses them unchanged (SURVEY.md §2.10).
 
-Cheap path: ``F.percentile_approx`` on a fixed grid when a
-full sketch isn't needed.
+One drift path: table-level drift is cohort drift with the single
+group None. One sketch kernel (_sketch_partials), one collector
+(sketch_columns), one comparison (drift_report_sketches) and one
+config guard (resolve_drift_config) serve run_validation,
+incremental.validate_incremental and streaming.drift_stream; a caller
+keeps only its own baseline, state and output I/O.
 """
+
 
 from __future__ import annotations
 
@@ -172,6 +176,7 @@ class TDigest:
 
 _SKETCH_SCHEMA = T.StructType(
     [
+        T.StructField("group", T.StringType(), True),
         T.StructField("column", T.StringType(), False),
         T.StructField("sketch", T.StringType(), False),
     ]
@@ -197,19 +202,22 @@ def _sketch_partials(
     columns: list[str],
     compression: float = 200.0,
     combine_buckets: int = 64,
+    group_col: "str | None" = None,
 ) -> DataFrame:
     """Distributed sketch plan ending in ≤ ``combine_buckets`` rows per
-    column — the frame sketch_columns collects.
+    (group, column) — the frame sketch_columns collects. Without
+    ``group_col`` every row is in the one group NULL (table level).
 
     Two-level merge (round-3 VERDICT hygiene #2): level 1 folds each
-    partition's Arrow batches into one digest row per column
+    partition's Arrow batches into one digest row per (group, column)
     (mapInPandas); level 2 groups those rows by
-    (column, partition_id mod k) and merges each bucket cluster-side
-    (applyInPandas), so the driver receives at most k rows per column
-    instead of one per partition per column — at the module's own
-    8M-partition scale citation the former collect() was 8M × columns
-    JSON rows. The combine shuffle moves only the already-aggregated
-    partial rows (O(partitions × compression) bytes).
+    (group, column, partition_id mod k) and merges each bucket
+    cluster-side (applyInPandas), so the driver receives at most k rows
+    per (group, column) instead of one per partition — at the module's
+    own 8M-partition scale citation the former collect() was 8M ×
+    columns JSON rows. The combine shuffle moves only the
+    already-aggregated partial rows (O(partitions × groups ×
+    compression) bytes), never raw values.
 
     Level 2 runs only when it can merge anything: with at most k
     level-1 partitions every bucket holds ONE digest, and merging one
@@ -217,147 +225,36 @@ def _sketch_partials(
     the plan ends at level 1 and the driver merges those rows in
     partition-id order — the same digests bit for bit, without the
     shuffle and the second Python crossing. See _level1_partitions for
-    when the count is known."""
+    when the count is known.
+
+    Without a group the UDF receives exactly the sketched columns and
+    runs no per-batch groupby; every partition emits a row per column.
+    With one, a group present in a partition always emits a row for
+    every column, even when all its values are null (weight-0 digest):
+    'group present, values vanished' must stay distinguishable from
+    'group missing'."""
 
     def build(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        partials: dict[str, TDigest] = {c: TDigest(compression=compression) for c in columns}
+        partials: dict[tuple, TDigest] = (
+            {} if group_col is not None
+            else {(None, c): TDigest(compression=compression) for c in columns}
+        )
         for batch in iterator:
-            for c in columns:
-                vals = pd.to_numeric(batch[c], errors="coerce").to_numpy(dtype=np.float64)
-                d = TDigest.from_values(vals, compression)
-                if d.total_weight:
-                    partials[c] = partials[c].merge(d)
-        yield pd.DataFrame(
-            {
-                "column": list(partials.keys()),
-                "sketch": [d.serialize() for d in partials.values()],
-            }
-        )
-
-    def merge_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d = TDigest.merge_all(
-            (TDigest.deserialize(s) for s in pdf["sketch"]), compression
-        )
-        return pd.DataFrame({"column": [key[0]], "sketch": [d.serialize()]})
-
-    level1 = df.select(*columns).mapInPandas(build, _SKETCH_SCHEMA)
-    if _level1_partitions(level1) <= combine_buckets:
-        return level1
-    return (
-        level1.withColumn(
-            "_b", F.pmod(F.spark_partition_id(), F.lit(int(combine_buckets)))
-        )
-        .groupBy("column", "_b")
-        .applyInPandas(merge_bucket, _SKETCH_SCHEMA)
-    )
-
-
-def sketch_columns(
-    df: DataFrame,
-    columns: list[str],
-    compression: float = 200.0,
-    combine_buckets: int = 64,
-) -> dict[str, TDigest]:
-    """One t-digest per numeric column via the two-level partial merge
-    (see _sketch_partials); the driver merges ≤ combine_buckets rows
-    per column. Network cost is O(partitions * compression) —
-    independent of table size."""
-    rows = _sketch_partials(df, columns, compression, combine_buckets).collect()
-    merged: dict[str, list[TDigest]] = {c: [] for c in columns}
-    for r in rows:
-        merged[r["column"]].append(TDigest.deserialize(r["sketch"]))
-    # every requested column gets a digest: a zero-partition input
-    # yields no partial rows, and its columns must still sketch as
-    # empty (drift_report then says empty_sketch) rather than vanish
-    return {c: TDigest.merge_all(ds, compression) for c, ds in merged.items()}
-
-
-def sketch_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    compression: float = 200.0,
-) -> dict[str, TDigest]:
-    """One t-digest per group via groupBy().applyInPandas — the
-    canonical Python-UDAF workaround (SURVEY.md §2.9 U3/U4): each
-    group's Arrow batches fold into one digest; the driver receives one
-    serialized row per group. The shuffle moves (group, value) pairs
-    only."""
-    schema = T.StructType(
-        [
-            T.StructField("group", T.StringType(), False),
-            T.StructField("sketch", T.StringType(), False),
-        ]
-    )
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pd.to_numeric(pdf[value_col], errors="coerce").to_numpy(dtype=np.float64)
-        d = TDigest.from_values(vals, compression)
-        return pd.DataFrame({"group": [str(key[0])], "sketch": [d.serialize()]})
-
-    rows = (
-        df.select(group_col, value_col)
-        .groupBy(group_col)
-        .applyInPandas(build, schema)
-        .collect()
-    )
-    return {r["group"]: TDigest.deserialize(r["sketch"]) for r in rows}
-
-
-_GROUPED_SKETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("group", T.StringType(), True),
-        T.StructField("column", T.StringType(), False),
-        T.StructField("sketch", T.StringType(), False),
-    ]
-)
-
-
-def _grouped_sketch_partials(
-    df: DataFrame,
-    group_col: str,
-    columns: list[str],
-    compression: float = 200.0,
-    combine_buckets: int = 64,
-) -> DataFrame:
-    """Per-(group, column) t-digest partials with the same two-level
-    merge discipline as _sketch_partials: level 1 folds each
-    partition's Arrow batches into one digest row per (group, column)
-    seen in the partition; level 2 merges those rows cluster-side in
-    ≤ combine_buckets buckets per (group, column). The combine shuffle
-    carries digests, not raw values — O(partitions × groups ×
-    compression) bytes, independent of row count — unlike
-    sketch_by_group, whose applyInPandas shuffles every (group, value)
-    pair. Level 2 is skipped when it would be an identity, exactly as
-    in _sketch_partials. A group present in a partition always emits a
-    row for every column, even when all its values are null (weight-0
-    digest): 'group present, values vanished' must stay
-    distinguishable from 'group missing'."""
-
-    def build(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        partials: dict[tuple[str, str], TDigest] = {}
-        for batch in iterator:
-            # group keys are canonicalized SPARK-side (string cast,
-            # NULL -> 'null') before this UDF: stringifying per batch
-            # in pandas made keys dtype-dependent — a numeric cohort
-            # column arrives as float64 in batches containing a NULL
-            # ('1.0') but int64 in null-free batches ('1'), splitting
-            # ONE cohort into two keys; and astype(str) turned NULL
-            # into 'None', never the documented 'null' (fillna after
-            # astype was dead code)
-            keys = batch[group_col]
-            for g, sub in batch.groupby(keys, sort=False):
+            groups = (
+                ((None, batch),) if group_col is None
+                else batch.groupby(batch[group_col], sort=False)
+            )
+            for g, sub in groups:
                 for c in columns:
                     vals = pd.to_numeric(sub[c], errors="coerce").to_numpy(
                         dtype=np.float64
                     )
                     d = TDigest.from_values(vals, compression)
-                    key = (str(g), c)
-                    prev = partials.get(key)
+                    prev = partials.get((g, c))
                     if prev is None:
-                        partials[key] = d
+                        partials[(g, c)] = d
                     elif d.total_weight:
-                        partials[key] = prev.merge(d)
+                        partials[(g, c)] = prev.merge(d)
         yield pd.DataFrame(
             {
                 "group": [k[0] for k in partials],
@@ -374,12 +271,18 @@ def _grouped_sketch_partials(
             {"group": [key[0]], "column": [key[1]], "sketch": [d.serialize()]}
         )
 
-    level1 = df.select(
+    # group keys are canonicalized SPARK-side (string cast, NULL ->
+    # 'null') before the UDF: stringifying per batch in pandas made keys
+    # dtype-dependent — a numeric cohort column arrives as float64 in
+    # batches containing a NULL ('1.0') but int64 in null-free batches
+    # ('1'), splitting ONE cohort into two keys; and astype(str) turned
+    # NULL into 'None', never the documented 'null'
+    keys = [] if group_col is None else [
         F.coalesce(F.col(group_col).cast("string"), F.lit("null")).alias(
             group_col
-        ),
-        *columns,
-    ).mapInPandas(build, _GROUPED_SKETCH_SCHEMA)
+        )
+    ]
+    level1 = df.select(*keys, *columns).mapInPandas(build, _SKETCH_SCHEMA)
     if _level1_partitions(level1) <= combine_buckets:
         return level1
     return (
@@ -387,33 +290,45 @@ def _grouped_sketch_partials(
             "_b", F.pmod(F.spark_partition_id(), F.lit(int(combine_buckets)))
         )
         .groupBy("group", "column", "_b")
-        .applyInPandas(merge_bucket, _GROUPED_SKETCH_SCHEMA)
+        .applyInPandas(merge_bucket, _SKETCH_SCHEMA)
     )
 
 
-def sketch_columns_by_group(
+def sketch_columns(
     df: DataFrame,
-    group_col: str,
     columns: list[str],
     compression: float = 200.0,
     combine_buckets: int = 64,
-) -> "dict[str, dict[str, TDigest]]":
-    """{group: {column: TDigest}} via the two-level partial merge; the
-    driver receives ≤ combine_buckets rows per (group, column). Meant
-    for cohort monitoring (languages, sources, shards): group count is
-    assumed bounded the way a monitoring dimension is, not key-like."""
-    rows = _grouped_sketch_partials(
-        df, group_col, columns, compression, combine_buckets
+    group_by: "str | None" = None,
+) -> dict:
+    """One t-digest per numeric column via the two-level partial merge
+    (see _sketch_partials); the driver merges ≤ combine_buckets rows
+    per (group, column). Network cost is O(partitions * compression) —
+    independent of table size.
+
+    Returns {column: TDigest}, or with ``group_by`` {group: {column:
+    TDigest}} — the shapes save_baseline / save_grouped_baseline
+    persist. Cohorts are meant for monitoring dimensions (languages,
+    sources, shards): the group count is assumed bounded, not
+    key-like."""
+    rows = _sketch_partials(
+        df, columns, compression, combine_buckets, group_by
     ).collect()
-    merged: dict[str, dict[str, list[TDigest]]] = {}
+    # every requested column gets a table-level digest: a zero-partition
+    # input yields no partial rows, and its columns must still sketch
+    # as empty (drift_report then says empty_sketch) rather than vanish
+    merged: dict = (
+        {} if group_by is not None else {None: {c: [] for c in columns}}
+    )
     for r in rows:
         merged.setdefault(r["group"], {}).setdefault(r["column"], []).append(
             TDigest.deserialize(r["sketch"])
         )
-    return {
+    out = {
         g: {c: TDigest.merge_all(ds, compression) for c, ds in cols.items()}
         for g, cols in merged.items()
     }
+    return out if group_by is not None else out[None]
 
 
 def save_grouped_baseline(
@@ -422,7 +337,7 @@ def save_grouped_baseline(
     path: str,
     snapshot_id: str = "snap-0",
 ) -> None:
-    """Persist a per-group baseline (sketch_columns_by_group output) as
+    """Persist a per-group baseline (sketch_columns(group_by=) output) as
     (snapshot_id, group, column, sketch) parquet. load_baseline on a
     grouped file raises — the formats are deliberately distinct."""
     rows = [
@@ -456,131 +371,6 @@ def load_grouped_baseline(
     for r in df.collect():
         out.setdefault(r["group"], {})[r["column"]] = TDigest.deserialize(
             r["sketch"]
-        )
-    return out
-
-
-def grouped_drift_report_columns(
-    cur: "dict[str, dict[str, TDigest]]",
-    baseline: "dict[str, dict[str, TDigest]]",
-    columns: "list[str] | None" = None,
-    ks_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-) -> list[dict]:
-    """Multi-column cohort drift over already-built grouped sketches:
-    one row per (group, column). Degenerate contract follows
-    grouped_drift_report / drift_report_sketches (round-4 review): a
-    group present on exactly one side fires drifted=true for every
-    column (reason missing_in_current/baseline — a vanished cohort IS
-    drift), a (group, column) sketch present on exactly one side fires
-    the same reasons per pair, and an empty-on-exactly-one-side sketch
-    fires reason=empty_sketch rather than comparing NaN against
-    thresholds."""
-    out = []
-    for g in sorted(set(cur) | set(baseline)):
-        if g not in cur or g not in baseline:
-            # membership test, not falsy-or: a group present with an
-            # EMPTY column dict must still fire (a vanished/appeared
-            # cohort IS drift), and when explicit columns are asked
-            # for, every one is unmonitorable for this group — emit
-            # them all rather than only those the present side happens
-            # to carry. With no column info at all, a single sentinel
-            # row keeps the cohort from vanishing silently.
-            present = cur[g] if g in cur else baseline[g]
-            cols = columns or sorted(present) or ["__any__"]
-            reason = (
-                "missing_in_current" if g not in cur else "missing_in_baseline"
-            )
-            for c in cols:
-                n_cur = (
-                    int(cur[g][c].total_weight)
-                    if g in cur and c in cur[g]
-                    else 0
-                )
-                out.append(
-                    {"group": g, "column": c, "ks": float("nan"),
-                     "psi": float("nan"), "drifted": True,
-                     "reason": reason, "n_current": n_cur}
-                )
-            continue
-        cols = columns or sorted(set(cur[g]) & set(baseline[g]))
-        # a (group, column) hole on exactly one side is unmonitorable
-        # and must surface as drift, not silence: the validate phase
-        # checks requested columns against the UNION of baseline
-        # columns across groups, so a single group missing one column
-        # would otherwise emit no verdict at all for that pair
-        # (drift_report_sketches skips one-sided columns)
-        have = [c for c in cols if c in cur[g] and c in baseline[g]]
-        for c in cols:
-            if c in cur[g] and c in baseline[g]:
-                continue
-            out.append(
-                {"group": g, "column": c, "ks": float("nan"),
-                 "psi": float("nan"), "drifted": True,
-                 "reason": (
-                     "missing_in_current" if c not in cur[g]
-                     else "missing_in_baseline"
-                 ),
-                 "n_current": (
-                     int(cur[g][c].total_weight) if c in cur[g] else 0
-                 )}
-            )
-        for r in drift_report_sketches(
-            cur[g], baseline[g], have, ks_threshold, psi_threshold
-        ):
-            out.append({"group": g, **r})
-    return out
-
-
-def grouped_drift_report(
-    current_df: DataFrame,
-    baseline_df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ks_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-) -> list[dict]:
-    """Per-group KS/PSI between two snapshots of the same table.
-
-    Same degenerate-case contract as drift_report (round-4 review):
-    a group whose sketch is empty on exactly one side (total data
-    loss/appearance of values) and a group PRESENT on exactly one
-    side both fire drifted=true with a reason — the former NaN
-    statistics compared false against every threshold, and vanished
-    groups were silently skipped. Every row carries ``reason``.
-    """
-    cur = sketch_by_group(current_df, group_col, value_col)
-    base = sketch_by_group(baseline_df, group_col, value_col)
-    out = []
-    for g in sorted(set(cur) | set(base)):
-        if g not in cur or g not in base:
-            out.append(
-                {"group": g, "ks": float("nan"), "psi": float("nan"),
-                 "drifted": True,
-                 "reason": ("missing_in_current" if g not in cur
-                            else "missing_in_baseline")}
-            )
-            continue
-        cur_empty = cur[g].total_weight == 0
-        base_empty = base[g].total_weight == 0
-        if cur_empty != base_empty:
-            out.append(
-                {"group": g, "ks": float("nan"), "psi": float("nan"),
-                 "drifted": True, "reason": "empty_sketch"}
-            )
-            continue
-        if cur_empty and base_empty:
-            out.append(
-                {"group": g, "ks": 0.0, "psi": 0.0, "drifted": False,
-                 "reason": "both_empty"}
-            )
-            continue
-        k = ks_statistic(cur[g], base[g])
-        p = psi(cur[g], base[g])
-        out.append(
-            {"group": g, "ks": k, "psi": p,
-             "drifted": bool(k > ks_threshold or p > psi_threshold),
-             "reason": "stats"}
         )
     return out
 
@@ -635,9 +425,17 @@ def drift_report(
     )
 
 
+def as_cohorts(sketches: dict) -> "dict[str | None, dict[str, TDigest]]":
+    """A sketch dict in the cohort shape {group: {column: TDigest}}; a
+    table-level {column: TDigest} dict is the single group None."""
+    if any(isinstance(v, TDigest) for v in sketches.values()):
+        return {None: sketches}
+    return sketches
+
+
 def drift_report_sketches(
-    cur: "dict[str, TDigest]",
-    baseline_sketches: "dict[str, TDigest]",
+    cur: dict,
+    baseline_sketches: dict,
     columns: "list[str] | None" = None,
     ks_threshold: float = 0.1,
     psi_threshold: float = 0.2,
@@ -645,46 +443,128 @@ def drift_report_sketches(
     """Core of drift_report over ALREADY-BUILT sketches — the entry
     point for callers that merge digests themselves (incremental mode
     merges per-increment digests; t-digest merge is associative, so
-    the corpus digest never requires re-reading old increments)."""
-    columns = columns or list(baseline_sketches)
+    the corpus digest never requires re-reading old increments).
+
+    Both sides are {column: TDigest} or {group: {column: TDigest}} (see
+    as_cohorts); one row per (group, column), ``group`` None at table
+    level. Degenerate contract (round-4 review): a group present on
+    exactly one side fires drifted=true for every column (reason
+    missing_in_current/baseline — a vanished cohort IS drift), a
+    (group, column) sketch present on exactly one side fires the same
+    reasons per pair, and an empty-on-exactly-one-side sketch fires
+    reason=empty_sketch rather than comparing NaN against
+    thresholds."""
+    cur, base = as_cohorts(cur), as_cohorts(baseline_sketches)
+    nan = float("nan")
     out = []
-    for c in columns:
-        if c not in cur or c not in baseline_sketches:
-            continue
-        cur_empty = cur[c].total_weight == 0
-        base_empty = baseline_sketches[c].total_weight == 0
-        n_cur = int(cur[c].total_weight)
-        if cur_empty != base_empty:
-            # one side has data, the other none: KS/PSI evaluate to
-            # NaN, and 'NaN > threshold' is False — an ALL-NULL batch
-            # would otherwise report drifted=false on the most severe
-            # possible change (round-4 review finding). Total data
-            # loss/appearance IS drift.
-            out.append(
-                {"column": c, "ks": float("nan"), "psi": float("nan"),
-                 "drifted": True, "reason": "empty_sketch",
-                 "n_current": n_cur}
-            )
-            continue
-        if cur_empty and base_empty:
-            out.append(
-                {"column": c, "ks": 0.0, "psi": 0.0, "drifted": False,
-                 "reason": "both_empty", "n_current": 0}
-            )
-            continue
-        k = ks_statistic(cur[c], baseline_sketches[c])
-        p = psi(cur[c], baseline_sketches[c])
-        out.append(
-            {
-                "column": c,
-                "ks": k,
-                "psi": p,
-                "drifted": bool(k > ks_threshold or p > psi_threshold),
-                "reason": "stats",
-                "n_current": n_cur,
-            }
-        )
+    for g in sorted(set(cur) | set(base)):
+        c_cols, b_cols = cur.get(g), base.get(g)
+        if c_cols is None or b_cols is None:
+            # membership test, not falsy-or: a group present with an
+            # EMPTY column dict must still fire, and when explicit
+            # columns are asked for, every one is unmonitorable for
+            # this group — emit them all rather than only those the
+            # present side happens to carry. With no column info at
+            # all, a single sentinel row keeps the cohort from
+            # vanishing silently.
+            present = b_cols if c_cols is None else c_cols
+            cols = columns or sorted(present) or ["__any__"]
+        else:
+            cols = columns or sorted(set(c_cols) & set(b_cols))
+        for c in cols:
+            d_cur = None if c_cols is None else c_cols.get(c)
+            d_base = None if b_cols is None else b_cols.get(c)
+            if d_cur is None or d_base is None:
+                # a (group, column) hole on exactly one side is
+                # unmonitorable and must surface as drift, not silence
+                stats = (nan, nan, True, (
+                    "missing_in_current"
+                    if d_cur is None and b_cols is not None
+                    else "missing_in_baseline"
+                ))
+            elif (d_cur.total_weight == 0) != (d_base.total_weight == 0):
+                # one side has data, the other none: KS/PSI evaluate to
+                # NaN, and 'NaN > threshold' is False — an ALL-NULL
+                # batch would otherwise report drifted=false on the most
+                # severe possible change (round-4 review finding). Total
+                # data loss/appearance IS drift.
+                stats = (nan, nan, True, "empty_sketch")
+            elif d_cur.total_weight == 0:
+                stats = (0.0, 0.0, False, "both_empty")
+            else:
+                k, p = ks_statistic(d_cur, d_base), psi(d_cur, d_base)
+                stats = (
+                    k, p, bool(k > ks_threshold or p > psi_threshold),
+                    "stats",
+                )
+            out.append({
+                "group": g, "column": c,
+                **dict(zip(("ks", "psi", "drifted", "reason"), stats)),
+                "n_current": 0 if d_cur is None else int(d_cur.total_weight),
+            })
     return out
+
+
+def resolve_drift_config(
+    spark,
+    baseline,
+    target: DataFrame,
+    columns: "list[str] | None" = None,
+    group_by: "str | None" = None,
+) -> "tuple[dict, list[str]]":
+    """(baseline, columns to sketch) for one drift check — the guard
+    run_validation, validate_incremental and streaming.drift_stream
+    share. A path baseline loads by mode (load_grouped_baseline with
+    ``group_by``, else load_baseline; each refuses the other's file),
+    and a dict baseline must have the mode's shape. The group column
+    must be in the signal frame ``target``. The columns are the
+    explicit ones, else the baseline columns ``target`` has.
+
+    A misconfigured check (disjoint baseline, or explicit columns
+    naming columns the baseline/target lack) would otherwise emit ZERO
+    verdicts for those columns — indistinguishable from a passing
+    check — so it raises."""
+    grouped = group_by is not None
+    if isinstance(baseline, str):
+        baseline = (load_grouped_baseline if grouped else load_baseline)(
+            spark, baseline
+        )
+    elif baseline and grouped != all(
+        isinstance(v, dict) for v in baseline.values()
+    ):
+        # the fail-fast remedy a path gets from the loaders: a flat
+        # dict in cohort mode would die on an opaque "'TDigest' is not
+        # iterable", a grouped one at table level would read cohort
+        # names as column names
+        raise ValueError(
+            "drift: the baseline is a FLAT {column: sketch} dict but a "
+            "group-by column is set — cohort drift needs a grouped "
+            "{group: {column: sketch}} baseline (sketch_columns("
+            "group_by=...) / save_grouped_baseline output)"
+            if grouped else
+            "drift: the baseline is a GROUPED {group: {column: sketch}} "
+            "dict (save_grouped_baseline shape) but no group-by column "
+            "is set — pass drift_group_by / group_by, or a flat "
+            "{column: sketch} baseline"
+        )
+    if grouped and group_by not in target.columns:
+        raise ValueError(
+            f"drift: group-by column '{group_by}' is not in the signal "
+            f"frame columns {sorted(target.columns)} — pass "
+            "drift_signals that keeps it (e.g. "
+            "document_signals(keep=[...]))"
+        )
+    base_cols = {c for cols in as_cohorts(baseline).values() for c in cols}
+    cols = columns or sorted(base_cols & set(target.columns))
+    bad = [c for c in cols if c not in base_cols or c not in target.columns]
+    if not cols or bad:
+        raise ValueError(
+            f"drift: columns {bad or sorted(target.columns)} do not "
+            f"intersect baseline columns {sorted(base_cols)} and target "
+            f"columns {sorted(target.columns)}; misconfigured baseline, "
+            "drift columns, or drift_signals"
+        )
+    return baseline, cols
 
 
 def save_baseline(
@@ -745,14 +625,6 @@ def schema_drift(
     return out
 
 
-def quantile_grid(df: DataFrame, column: str, grid: list[float]) -> list[float]:
-    """Cheap path: percentile_approx on a fixed grid (no sketch)."""
-    row = df.agg(
-        F.percentile_approx(column, grid, 10_000).alias("q")
-    ).collect()[0]
-    return list(row["q"])
-
-
 def document_signals(
     df: DataFrame, spans_col: str = "spans", keep: "list[str] | None" = None
 ) -> DataFrame:
@@ -787,21 +659,20 @@ def document_signals(
 
 
 def drift_report_rows(
-    report: "list[dict]", grouped: bool = False, inc: "int | None" = None
+    report: "list[dict]", inc: "int | None" = None
 ) -> "tuple[list, list]":
     """(verdict_rows, violation_rows) in rules.VERDICT_SCHEMA /
-    VIOLATION_SCHEMA shape from a drift_report /
-    grouped_drift_report_columns result — the ONE encoding of drift
-    rule ids (``drift_<col>`` / ``drift_<col>[<group>]``), verdict
-    tuples (partition_id -1), and violation detail strings, shared by
-    the batch validate phase and both incremental drift modes (it used
-    to exist as four hand-kept copies). ``inc`` appends the
-    increment-id suffix the incremental paths record."""
+    VIOLATION_SCHEMA shape from a drift_report_sketches result — the
+    ONE encoding of drift rule ids (``drift_<col>`` at table level,
+    ``drift_<col>[<group>]`` per cohort), verdict tuples (partition_id
+    -1), and violation detail strings, shared by the batch validate
+    phase and incremental drift (it used to exist as four hand-kept
+    copies). ``inc`` appends the increment-id suffix the incremental
+    path records."""
     v_rows, viol_rows = [], []
     for r in report:
-        key = (
-            f"{r['column']}[{r['group']}]" if grouped else r["column"]
-        )
+        g = r["group"]
+        key = r["column"] if g is None else f"{r['column']}[{g}]"
         rid = f"drift_{key}"
         v_rows.append(
             (-1, rid, int(r.get("n_current") or 0),
@@ -809,7 +680,7 @@ def drift_report_rows(
         )
         if r["drifted"]:
             detail = (
-                (f"group={r['group']};" if grouped else "")
+                ("" if g is None else f"group={g};")
                 + f"ks={r['ks']:.6f};psi={r['psi']:.6f}"
                 + f";reason={r['reason']}"
             )

@@ -1034,137 +1034,62 @@ def _incremental_drift(
     """Corpus-vs-baseline drift in incremental mode: sketch ONLY the
     delta's signal columns, persist the digests per increment, merge
     every increment's digests into the corpus digest (associative
-    t-digest merge), and compare that against the baseline. Verdict/
-    violation shapes match run_validation's drift phase (partition_id
-    -1, rule_id drift_<col>, one violation row per drifted column).
+    t-digest merge), and compare that against the baseline with the
+    batch drift path (drift.resolve_drift_config, sketch_columns,
+    drift_report_sketches). Verdict/violation shapes match
+    run_validation's drift phase (partition_id -1, rule_id
+    drift_<col>, one violation row per drifted column).
 
-    ``group_by``: COHORT drift — the delta is sketched per (group,
-    column) and merged across increments into a per-cohort corpus
-    digest, compared against a grouped baseline; rule ids follow the
-    full path's ``drift_<col>[<group>]``. The per-increment stores are
+    ``group_by``: COHORT drift — digests are per (group, column),
+    merged across increments into a per-cohort corpus digest and
+    compared against a grouped baseline; rule ids follow the full
+    path's ``drift_<col>[<group>]``. The per-increment stores are
     mode-specific (``sketches`` vs ``sketches_grouped``), so switching
     modes mid-state raises: the other mode's history cannot be folded
     into this mode's corpus digest and a silent partial sketch would
     report drift against a fraction of the corpus."""
     from . import drift as DR
 
-    if group_by is not None:
-        other = os.path.join(state_dir, "sketches")
-        if os.path.exists(other):
-            raise ValueError(
-                "incremental drift: this state_dir holds TABLE-level "
-                "per-increment sketches; cohort mode cannot fold them "
-                "into a per-group corpus digest — re-bootstrap with a "
-                "fresh state_dir to switch drift modes"
-            )
-        baseline = (
-            DR.load_grouped_baseline(spark, drift_baseline)
-            if isinstance(drift_baseline, str)
-            else drift_baseline
-        )
-        if baseline and not all(
-            isinstance(v, dict) for v in baseline.values()
-        ):
-            # the same fail-fast remedy a string path gets from
-            # load_grouped_baseline: a flat {column: TDigest} dict here
-            # would die on an opaque "'TDigest' is not iterable"
-            raise ValueError(
-                "incremental drift: drift_baseline is a FLAT "
-                "{column: sketch} dict but drift_group_by is set — "
-                "cohort drift needs a grouped {group: {column: "
-                "sketch}} baseline (sketch_columns_by_group / "
-                "save_grouped_baseline output)"
-            )
-        target = drift_signals(delta) if drift_signals else delta
-        if group_by not in target.columns:
-            raise ValueError(
-                f"incremental drift: drift_group_by column '{group_by}' "
-                f"is not in the signal frame columns "
-                f"{sorted(target.columns)}"
-            )
-        base_cols = {c for g in baseline.values() for c in g}
-        cols = sorted(base_cols & set(target.columns))
-        if not cols:
-            raise ValueError(
-                "incremental drift: grouped-baseline columns "
-                f"{sorted(base_cols)} do not intersect target columns "
-                f"{sorted(target.columns)}; misconfigured baseline or "
-                "drift_signals"
-            )
-        cur = DR.sketch_columns_by_group(target, group_by, cols)
-        rows = [
-            (g, c, d.serialize())
-            for g, gcols in cur.items()
-            for c, d in gcols.items()
-        ]
-        if rows:
-            # a 0-row delta sketches nothing — writing the empty frame
-            # would leave a file-less store that the history read below
-            # cannot infer a schema from, wedging the state
-            _write_inc(
-                local_frame(
-                    spark, rows, "group string, column string, sketch string"
-                ),
-                os.path.join(state_dir, "sketches_grouped"), inc,
-            )
-        hist = _read_store(
-            spark, os.path.join(state_dir, "sketches_grouped")
-        )
-        gmerged: dict[str, dict[str, DR.TDigest]] = {}
-        for r in [] if hist is None else hist.collect():
-            d = DR.TDigest.deserialize(r["sketch"])
-            gcols = gmerged.setdefault(r["group"], {})
-            gcols[r["column"]] = (
-                gcols[r["column"]].merge(d) if r["column"] in gcols else d
-            )
-        report = DR.grouped_drift_report_columns(
-            gmerged, baseline, cols,
-            ks_threshold=ks_threshold, psi_threshold=psi_threshold,
-        )
-        v_rows, viol_rows = DR.drift_report_rows(
-            report, grouped=True, inc=inc
-        )
-        return (
-            local_frame(spark, v_rows, R.VERDICT_SCHEMA),
-            local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
-        )
-
-    if os.path.exists(os.path.join(state_dir, "sketches_grouped")):
-        raise ValueError(
-            "incremental drift: this state_dir holds COHORT "
-            "per-increment sketches; table-level mode cannot fold them "
-            "into one corpus digest — re-bootstrap with a fresh "
-            "state_dir to switch drift modes"
-        )
-    baseline = (
-        DR.load_baseline(spark, drift_baseline)
-        if isinstance(drift_baseline, str)
-        else drift_baseline
+    grouped = group_by is not None
+    name, other = (
+        ("sketches_grouped", "sketches") if grouped
+        else ("sketches", "sketches_grouped")
     )
+    if os.path.exists(os.path.join(state_dir, other)):
+        raise ValueError(
+            f"incremental drift: this state_dir holds the other drift "
+            f"mode's per-increment sketches ('{other}'); with "
+            f"drift_group_by={group_by!r} they cannot fold into this "
+            "mode's corpus digest — re-bootstrap with a fresh state_dir "
+            "to switch drift modes"
+        )
+    store = os.path.join(state_dir, name)
     target = drift_signals(delta) if drift_signals else delta
-    cols = sorted(set(baseline) & set(target.columns))
-    if not cols:
-        raise ValueError(
-            "incremental drift: baseline columns "
-            f"{sorted(baseline)} do not intersect target columns "
-            f"{sorted(target.columns)}; misconfigured baseline or "
-            "drift_signals"
-        )
-    sk = DR.sketch_columns(target, cols)
-    _write_inc(
-        local_frame(
-            spark,
-            [(c, d.serialize()) for c, d in sk.items()],
-            "column string, sketch string",
-        ),
-        os.path.join(state_dir, "sketches"), inc,
+    baseline, cols = DR.resolve_drift_config(
+        spark, drift_baseline, target, group_by=group_by
     )
-    hist = spark.read.parquet(os.path.join(state_dir, "sketches"))
-    merged: dict[str, DR.TDigest] = {}
-    for r in hist.collect():
+    rows = [
+        (g, c, d.serialize())
+        for g, gcols in DR.as_cohorts(
+            DR.sketch_columns(target, cols, group_by=group_by)
+        ).items()
+        for c, d in gcols.items()
+    ]
+    if rows:
+        # a 0-row delta sketches no cohort — writing the empty frame
+        # would leave a file-less store that the history read below
+        # cannot infer a schema from, wedging the state
+        inc_df = local_frame(
+            spark, rows, "group string, column string, sketch string"
+        )
+        _write_inc(inc_df if grouped else inc_df.drop("group"), store, inc)
+    hist = _read_store(spark, store)
+    merged: dict = {}
+    for r in [] if hist is None else hist.collect():
         d = DR.TDigest.deserialize(r["sketch"])
-        merged[r["column"]] = (
-            merged[r["column"]].merge(d) if r["column"] in merged else d
+        gcols = merged.setdefault(r["group"] if grouped else None, {})
+        gcols[r["column"]] = (
+            gcols[r["column"]].merge(d) if r["column"] in gcols else d
         )
     report = DR.drift_report_sketches(
         merged, baseline, cols,

@@ -180,18 +180,22 @@ def drift_stream(
 ):
     """Per-micro-batch distribution drift vs a PERSISTED baseline
     snapshot — the fifth check family for streams (after rules,
-    cross-batch uniqueness, windowed quality, referential), and the
-    payoff of mergeable sketches: the SAME t-digest partials the batch
-    profiler builds (drift.sketch_columns, two-level merge) run
-    unchanged inside ``foreachBatch``.
+    cross-batch uniqueness, windowed quality, referential). A stream
+    is a table's sequence of appends, so each micro-batch runs the
+    batch drift path unchanged inside ``foreachBatch``: the config
+    guard (drift.resolve_drift_config), the t-digest partials
+    (drift.sketch_columns, two-level merge) and the comparison
+    (drift.drift_report_sketches).
 
-    Each micro-batch is sketched, compared column-by-column against
+    Each micro-batch is sketched and compared column-by-column against
     the baseline saved by ``drift.save_baseline`` (re-loaded per batch,
     so a refreshed baseline is picked up without restarting the query —
     same semantics as referential_stream's static side), and one row
     per column lands in ``{output_dir}/drift`` partitioned by
     batch_id with dynamic-overwrite (idempotent on replay, like
-    validate_stream). Returns the StreamingQuery.
+    validate_stream). A misconfigured check (explicit ``columns`` the
+    baseline or batch lacks, or no common column) raises in the batch
+    and stops the query. Returns the StreamingQuery.
 
     ``group_by``: COHORT drift per micro-batch — the baseline must be
     a ``drift.save_grouped_baseline`` file and each batch is sketched
@@ -203,69 +207,41 @@ def drift_stream(
     (a vanished cohort IS drift).
     """
     from .drift import (
-        drift_report,
-        grouped_drift_report_columns,
-        load_baseline,
-        load_grouped_baseline,
-        sketch_columns_by_group,
+        drift_report_sketches,
+        resolve_drift_config,
+        sketch_columns,
     )
+
+    grouped = group_by is not None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if group_by is not None:
-            baseline = load_grouped_baseline(spark, baseline_path)
-            cols = columns or sorted(
-                {c for g in baseline.values() for c in g}
-            )
-            cur = sketch_columns_by_group(batch_df, group_by, cols)
-            report = grouped_drift_report_columns(
-                cur, baseline, cols,
-                ks_threshold=ks_threshold, psi_threshold=psi_threshold,
-            )
-            rows = [
-                (r["group"], r["column"], float(r["ks"]), float(r["psi"]),
-                 bool(r["drifted"]), str(r.get("reason") or ""),
-                 int(r.get("n_current") or 0))
-                for r in report
-            ]
-            if not rows:
-                return
-            _write_batch_partition(
-                local_frame(
-                    spark, rows,
-                    "group string, column string, ks double, psi double, "
-                    "drifted boolean, reason string, n_current long",
-                ),
-                f"{output_dir}/drift_grouped",
-                batch_id,
-            )
-            return
-        baseline = load_baseline(spark, baseline_path)
-        report = drift_report(
-            batch_df, baseline, columns,
+        baseline, cols = resolve_drift_config(
+            spark, baseline_path, batch_df, columns, group_by
+        )
+        report = drift_report_sketches(
+            sketch_columns(batch_df, cols, group_by=group_by), baseline, cols,
             ks_threshold=ks_threshold, psi_threshold=psi_threshold,
         )
-        if not report:
-            return
         # carry `reason` + `n_current` through: an empty_sketch row
         # (total data loss in the batch — the severest drift case)
         # must stay distinguishable from ordinary stats drift in the
         # parquet output, and NaN ks alone can't tell them apart
-        rows = [
-            (r["column"], float(r["ks"]), float(r["psi"]),
-             bool(r["drifted"]), str(r.get("reason") or ""),
-             int(r.get("n_current") or 0))
-            for r in report
-        ]
+        out = local_frame(
+            spark,
+            [
+                (r["group"], r["column"], float(r["ks"]), float(r["psi"]),
+                 bool(r["drifted"]), str(r["reason"]), int(r["n_current"]))
+                for r in report
+            ],
+            "group string, column string, ks double, psi double, "
+            "drifted boolean, reason string, n_current long",
+        )
         _write_batch_partition(
-            local_frame(
-                spark, rows,
-                "column string, ks double, psi double, drifted boolean, "
-                "reason string, n_current long",
-            ),
-            f"{output_dir}/drift",
+            out if grouped else out.drop("group"),
+            f"{output_dir}/{'drift_grouped' if grouped else 'drift'}",
             batch_id,
         )
 

@@ -425,89 +425,22 @@ def run_validation(
         from . import drift as DR
 
         def drift_check():
-            grouped = drift_group_by is not None
-            baseline = (
-                (
-                    DR.load_grouped_baseline(spark, drift_baseline)
-                    if grouped
-                    else DR.load_baseline(spark, drift_baseline)
-                )
-                if isinstance(drift_baseline, str)
-                else drift_baseline
-            )
             # drift_signals: derive the frame to sketch (e.g.
             # drift.document_signals for the interleaved shape, which
             # has no plain numeric columns); default = the input table
             target = (
                 drift_signals(documents) if drift_signals else documents
             )
-            if grouped:
-                # cohort drift (r5, round-4 VERDICT directive #5): the
-                # baseline is {group: {column: sketch}}; one verdict /
-                # violation per (group, column), so a drifted cohort
-                # surfaces even when the table-level mixture is stable
-                if drift_group_by not in target.columns:
-                    raise ValueError(
-                        f"drift phase: drift_group_by column "
-                        f"'{drift_group_by}' is not in the signal frame "
-                        f"columns {sorted(target.columns)} — pass "
-                        "drift_signals that keeps it (e.g. "
-                        "document_signals(keep=[...]))"
-                    )
-                base_cols = sorted(
-                    {c for g in baseline.values() for c in g}
-                )
-                cols = drift_columns or sorted(
-                    set(base_cols) & set(target.columns)
-                )
-                bad = [
-                    c for c in cols
-                    if c not in base_cols or c not in target.columns
-                ]
-                if not cols or bad:
-                    raise ValueError(
-                        f"drift phase: columns {bad or sorted(target.columns)} "
-                        f"do not intersect grouped-baseline columns "
-                        f"{base_cols} and target columns "
-                        f"{sorted(target.columns)}"
-                    )
-                cur = DR.sketch_columns_by_group(
-                    target, drift_group_by, cols
-                )
-                report = DR.grouped_drift_report_columns(
-                    cur, baseline, cols,
-                    ks_threshold=drift_ks_threshold,
-                    psi_threshold=drift_psi_threshold,
-                )
-                v_rows, viol_rows = DR.drift_report_rows(
-                    report, grouped=True
-                )
-                return (
-                    local_frame(spark, v_rows, R.VERDICT_SCHEMA),
-                    local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
-                )
-            cols = drift_columns or sorted(
-                set(baseline) & set(target.columns)
+            # drift_group_by: cohort drift (r5, round-4 VERDICT
+            # directive #5) — one verdict / violation per (group,
+            # column), so a drifted cohort surfaces even when the
+            # table-level mixture is stable
+            baseline, cols = DR.resolve_drift_config(
+                spark, drift_baseline, target, drift_columns, drift_group_by
             )
-            # a misconfigured check (disjoint baseline, or explicit
-            # drift_columns naming columns the baseline/target lack)
-            # would otherwise emit ZERO verdicts for those columns —
-            # indistinguishable from a passing check. Fail loudly.
-            unmatched = [
-                c for c in cols
-                if c not in baseline or c not in target.columns
-            ]
-            if not cols or unmatched:
-                raise ValueError(
-                    "drift phase: columns "
-                    f"{unmatched or sorted(target.columns)} do not "
-                    f"intersect baseline columns {sorted(baseline)} "
-                    f"and target columns {sorted(target.columns)}; "
-                    "misconfigured baseline, drift_columns, or "
-                    "drift_signals"
-                )
-            report = DR.drift_report(
-                target, baseline, cols,
+            report = DR.drift_report_sketches(
+                DR.sketch_columns(target, cols, group_by=drift_group_by),
+                baseline, cols,
                 ks_threshold=drift_ks_threshold,
                 psi_threshold=drift_psi_threshold,
             )

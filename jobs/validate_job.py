@@ -281,6 +281,7 @@ def main(argv: list[str] | None = None) -> int:
         snapshot_id = iceberg_snapshot_id(spark, args.documents) or "auto"
     from automatic_data_validator_spark.drift import (
         save_baseline,
+        save_grouped_baseline,
         sketch_columns,
     )
 
@@ -329,28 +330,17 @@ def main(argv: list[str] | None = None) -> int:
                 "dead letters. Pick a table with numeric columns or "
                 "the interleaved documents shape."
             )
-        if args.drift_group_by:
-            from automatic_data_validator_spark.drift import (
-                save_grouped_baseline,
-                sketch_columns_by_group,
+        if args.drift_group_by and args.drift_group_by not in target.columns:
+            raise SystemExit(
+                f"--drift-group-by: column '{args.drift_group_by}' "
+                f"is not in the signal frame ({list(target.columns)})"
             )
-
-            if args.drift_group_by not in target.columns:
-                raise SystemExit(
-                    f"--drift-group-by: column '{args.drift_group_by}' "
-                    f"is not in the signal frame ({list(target.columns)})"
-                )
-            save_grouped_baseline(
-                sketch_columns_by_group(
-                    target, args.drift_group_by, list(cols)
-                ),
-                spark, args.save_drift_baseline, snapshot_id=snapshot_id,
-            )
-        else:
-            save_baseline(
-                sketch_columns(target, list(cols)), spark,
-                args.save_drift_baseline, snapshot_id=snapshot_id,
-            )
+        (save_grouped_baseline if args.drift_group_by else save_baseline)(
+            sketch_columns(
+                target, list(cols), group_by=args.drift_group_by or None
+            ),
+            spark, args.save_drift_baseline, snapshot_id=snapshot_id,
+        )
         print(f"drift baseline saved: {args.save_drift_baseline}")
 
     from automatic_data_validator_spark.sources import write_outputs_parallel

@@ -153,13 +153,13 @@ def test_sketch_by_group_and_grouped_drift(spark):
     )
     cur = base.copy()
     cur.loc[cur.g == "b", "v"] += 3.0  # drift group b only
-    from automatic_data_validator_spark.drift import grouped_drift_report, sketch_by_group
+    from automatic_data_validator_spark.drift import drift_report_sketches
 
-    sk = sketch_by_group(spark.createDataFrame(base), "g", "v")
-    assert abs(sk["a"].quantile(0.5) - 0.0) < 0.15
-    assert abs(sk["b"].quantile(0.5) - 5.0) < 0.15
-    rep = {r["group"]: r for r in grouped_drift_report(
-        spark.createDataFrame(cur), spark.createDataFrame(base), "g", "v")}
+    sk = sketch_columns(spark.createDataFrame(base), ["v"], group_by="g")
+    assert abs(sk["a"]["v"].quantile(0.5) - 0.0) < 0.15
+    assert abs(sk["b"]["v"].quantile(0.5) - 5.0) < 0.15
+    rep = {r["group"]: r for r in drift_report_sketches(
+        sketch_columns(spark.createDataFrame(cur), ["v"], group_by="g"), sk, ["v"])}
     assert rep["a"]["drifted"] is False
     assert rep["b"]["drifted"] is True
 
@@ -558,7 +558,7 @@ def test_grouped_drift_report_degenerate_groups(spark):
     """Round-4 review: one-sided empty sketches and vanished/appeared
     groups must fire drifted=true with a reason; every row carries a
     uniform 'reason' key."""
-    from automatic_data_validator_spark.drift import grouped_drift_report
+    from automatic_data_validator_spark.drift import drift_report_sketches
 
     rng = np.random.RandomState(13)
     base = pd.DataFrame(
@@ -572,8 +572,9 @@ def test_grouped_drift_report_degenerate_groups(spark):
          "v": list(rng.normal(0, 1, 500)) + list(rng.normal(2, 1, 500))
               + [None] * 500}
     )
-    rep = {r["group"]: r for r in grouped_drift_report(
-        spark.createDataFrame(cur), spark.createDataFrame(base), "g", "v")}
+    rep = {r["group"]: r for r in drift_report_sketches(
+        sketch_columns(spark.createDataFrame(cur), ["v"], group_by="g"),
+        sketch_columns(spark.createDataFrame(base), ["v"], group_by="g"), ["v"])}
     assert rep["a"]["drifted"] is False and rep["a"]["reason"] == "stats"
     assert rep["gone"]["drifted"] is True and rep["gone"]["reason"] == "missing_in_current"
     assert rep["new"]["drifted"] is True and rep["new"]["reason"] == "missing_in_baseline"
@@ -587,12 +588,10 @@ def test_grouped_sketch_numeric_group_keys_are_canonical(spark):
     batch-dependently in pandas (int64 batches -> '1', float64 batches
     containing a NaN -> '1.0'), splitting one cohort into two keys;
     NULL groups became 'None' instead of the documented 'null'."""
-    from automatic_data_validator_spark.drift import sketch_columns_by_group
-
     rows = [(1, float(i)) for i in range(50)]
     rows += [(None, 100.0 + i) for i in range(10)]
     df = spark.createDataFrame(rows, "cohort int, v double").repartition(6)
-    sk = sketch_columns_by_group(df, "cohort", ["v"])
+    sk = sketch_columns(df, ["v"], group_by="cohort")
     assert set(sk) == {"1", "null"}, set(sk)
     assert sk["1"]["v"].total_weight == 50
     assert sk["null"]["v"].total_weight == 10
@@ -605,13 +604,13 @@ def test_grouped_drift_per_pair_holes_fire_not_skip(spark):
     sentinel row, and requested columns are reported even when the
     present side lacks them."""
     from automatic_data_validator_spark.drift import (
-        TDigest, grouped_drift_report_columns)
+        TDigest, drift_report_sketches)
 
     d = TDigest.from_values(np.arange(100, dtype=np.float64), 100.0)
     # g1 on both sides but baseline lacks column 'v2'
     cur = {"g1": {"v1": d, "v2": d}, "g2": {}}
     baseline = {"g1": {"v1": d}}
-    rep = grouped_drift_report_columns(cur, baseline, ["v1", "v2"])
+    rep = drift_report_sketches(cur, baseline, ["v1", "v2"])
     by = {(r["group"], r["column"]): r for r in rep}
     assert not by[("g1", "v1")]["drifted"]
     assert by[("g1", "v2")]["drifted"]
@@ -621,13 +620,13 @@ def test_grouped_drift_per_pair_holes_fire_not_skip(spark):
     assert by[("g2", "v1")]["reason"] == "missing_in_baseline"
     assert by[("g2", "v2")]["drifted"] and by[("g2", "v2")]["n_current"] == 0
     # hole on the CURRENT side -> missing_in_current
-    rep2 = grouped_drift_report_columns(
+    rep2 = drift_report_sketches(
         {"g1": {"v1": d}}, {"g1": {"v1": d, "v2": d}}, ["v1", "v2"]
     )
     by2 = {(r["group"], r["column"]): r for r in rep2}
     assert by2[("g1", "v2")]["reason"] == "missing_in_current"
     # no column info at all: sentinel row keeps the cohort visible
-    rep3 = grouped_drift_report_columns({"gx": {}}, {})
+    rep3 = drift_report_sketches({"gx": {}}, {})
     assert [(r["group"], r["column"], r["reason"]) for r in rep3] == [
         ("gx", "__any__", "missing_in_baseline")
     ]

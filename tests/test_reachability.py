@@ -1,10 +1,10 @@
-"""Every public function in dedup.py and similarity.py has a caller.
+"""Every public function in dedup.py, drift.py and similarity.py has a caller.
 
 The roots are the code a user action runs: ``jobs/``,
 ``__spark_entry__.py``, ``bench.py``, ``bench_extra.py``, ``BENCH/``,
 ``perfbench/`` and the package's other modules, ``__init__.py`` and its
 exports included. A function is reached when a root names it, or when
-the body of a reached function in the two checked modules names it (a
+the body of a reached function in the checked modules names it (a
 function naming itself does not count). Names are read off the AST
 (names, attributes, import aliases), so comments and docstrings never
 count as a use. Tests are not roots: a path only tests call is dead
@@ -18,7 +18,7 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "automatic_data_validator_spark"
-CHECKED = ("dedup.py", "similarity.py")
+CHECKED = ("dedup.py", "drift.py", "similarity.py")
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -71,6 +71,7 @@ def _unreached() -> tuple[list[str], list[str]]:
 def test_every_public_dedup_and_similarity_function_is_reached():
     public, unreached = _unreached()
     assert "dedup.neardup_dedup" in public and "similarity.brute_force_topk_arrow" in public
+    assert "drift.sketch_columns" in public
     assert not unreached, (
         "public functions no job, driver query, benchmark or package "
         f"module calls: {unreached}"

@@ -212,6 +212,43 @@ def test_drift_stream_flags_shifted_batch(spark, tmp_path):
     assert rows[1]["reason"] == "stats" and rows[1]["n_current"] == 5_000
 
 
+def test_drift_stream_misconfigured_column_fails(spark, tmp_path):
+    """Explicit columns naming a column the batch has but the baseline
+    lacks stop the query with the batch path's "do not intersect ...
+    misconfigured" error, instead of writing no drift rows, silently,
+    on every batch."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.errors import StreamingQueryException
+
+    from automatic_data_validator_spark.drift import TDigest, save_baseline
+    from automatic_data_validator_spark.streaming import drift_stream
+
+    rng = np.random.RandomState(5)
+    save_baseline(
+        {"x": TDigest.from_values(rng.normal(10.0, 1.0, 1_000))},
+        spark, str(tmp_path / "baseline"),
+    )
+    src = str(tmp_path / "in")
+    spark.createDataFrame(
+        pd.DataFrame({"x": rng.normal(10.0, 1.0, 500),
+                      "y": rng.normal(0.0, 1.0, 500)})
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema("x double, y double").parquet(src)
+    q = drift_stream(
+        stream, str(tmp_path / "baseline"), str(tmp_path / "out"),
+        str(tmp_path / "ckpt"), columns=["y"],
+    )
+    try:
+        with pytest.raises(StreamingQueryException) as ei:
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert "do not intersect" in str(ei.value)
+    assert "misconfigured" in str(ei.value)
+    assert not (tmp_path / "out" / "drift").exists()
+
+
 def test_neardup_stream_cross_batch_pairs(spark, tmp_path):
     """Stream-ingest near-dup (sixth stream family): a pair planted
     INSIDE batch 1 is found at batch 1; a doc arriving in batch 2 that

@@ -375,7 +375,6 @@ def test_run_validation_grouped_drift_catches_cohort_swap(spark, tmp_path):
         load_baseline,
         save_grouped_baseline,
         sketch_columns,
-        sketch_columns_by_group,
     )
 
     def cohorts(swap: bool):
@@ -390,7 +389,7 @@ def test_run_validation_grouped_drift_catches_cohort_swap(spark, tmp_path):
         )
 
     base_df, cur_df = cohorts(False), cohorts(True)
-    grouped_base = sketch_columns_by_group(base_df, "source", ["v"])
+    grouped_base = sketch_columns(base_df, ["v"], group_by="source")
     assert set(grouped_base) == {"cohort_a", "cohort_b"}
     rs = [R.Rule("nn", "not_null", column="doc_id")]
 
@@ -511,6 +510,31 @@ def test_drift_phase_disjoint_baseline_fails_loudly(spark, docs):
             with_profile=False, drift_baseline=bogus,
         )
     assert "do not intersect" in str(ei.value)
+
+
+@pytest.mark.parametrize("group_by", ["source", None])
+def test_drift_baseline_dict_shape_must_match_mode(spark, group_by):
+    """A baseline dict of the wrong shape for the mode raises the
+    remedy-naming ValueError: a flat {column: sketch} dict with
+    drift_group_by set (it used to die on "'TDigest' object is not
+    iterable"), and a grouped {group: {column: sketch}} dict without it
+    (it used to read cohort names as columns: "do not intersect")."""
+    import numpy as np
+
+    from automatic_data_validator_spark.drift import TDigest
+
+    d = TDigest.from_values(np.arange(100.0))
+    baseline = {"v": d} if group_by else {"cohort_a": {"v": d}}
+    df = spark.createDataFrame(
+        [("d1", "cohort_a", 1.0), ("d2", "cohort_a", 2.0)],
+        "doc_id string, source string, v double",
+    )
+    with pytest.raises(ValueError, match="save_grouped_baseline"):
+        run_validation(
+            spark, df, rule_set=[], check_uniqueness=False,
+            with_profile=False, drift_baseline=baseline,
+            drift_group_by=group_by,
+        )
 
 
 def test_split_valid_invalid_quarantine(spark, docs, catalog):

@@ -15,6 +15,7 @@ import os
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from automatic_data_validator_spark import config
 from automatic_data_validator_spark import drift as DR
@@ -175,9 +176,9 @@ def test_sketch_skips_identity_level_two(spark):
 
 def test_grouped_sketch_skips_identity_level_two(spark):
     df = _signal_frame(spark, 8)
-    plan = _plan(DR._grouped_sketch_partials(df, "g", ["a", "b"]))
+    plan = _plan(DR._sketch_partials(df, ["a", "b"], group_col="g"))
     assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
-    sk = DR.sketch_columns_by_group(df, "g", ["a", "b"])
+    sk = DR.sketch_columns(df, ["a", "b"], group_by="g")
     pdf = df.select(F.spark_partition_id().alias("pid"), "g", "a", "b").toPandas()
     parts = sorted(pdf.groupby("pid"), key=lambda t: t[0])
     assert sorted(sk) == sorted(pdf["g"].unique())
@@ -191,13 +192,47 @@ def test_grouped_sketch_skips_identity_level_two(spark):
             assert _same_digest(sk[g][c], ref), (g, c)
 
 
+@pytest.mark.parametrize("partitions", [8, 16])
+def test_table_drift_is_cohort_drift_with_one_group(spark, partitions):
+    """Table-level drift is the single-group case of cohort drift: over
+    a constant cohort column both give the same digests bit for bit,
+    below (8 partitions) and above (16) the level-2 gate of
+    combine_buckets=8, and the same KS/PSI/reason report rows."""
+    df = _signal_frame(spark, partitions)
+    one = df.withColumn("k", F.lit("all"))
+    table = DR.sketch_columns(df, ["a", "b"], combine_buckets=8)
+    cohort = DR.sketch_columns(one, ["a", "b"], combine_buckets=8, group_by="k")
+    assert set(cohort) == {"all"}
+    for c in ("a", "b"):
+        assert _same_digest(table[c], cohort["all"][c]), c
+    shifted = df.select("g", (F.col("a") + 10).alias("a"), "b")
+    cur = DR.sketch_columns(shifted, ["a", "b"], combine_buckets=8)
+    cur_k = DR.sketch_columns(
+        shifted.withColumn("k", F.lit("all")), ["a", "b"],
+        combine_buckets=8, group_by="k",
+    )
+
+    def stats(report):
+        return [
+            (r["column"], r["ks"], r["psi"], r["drifted"], r["reason"],
+             r["n_current"])
+            for r in report
+        ]
+
+    rep = DR.drift_report_sketches(cur, table, ["a", "b"])
+    rep_k = DR.drift_report_sketches(cur_k, cohort, ["a", "b"])
+    assert stats(rep) == stats(rep_k)
+    assert [r["group"] for r in rep] == [None, None]
+    assert [r["drifted"] for r in rep] == [True, False]
+
+
 def test_sketch_keeps_level_two_above_buckets(spark):
     """The other side of the gate: more level-1 partitions than
     combine_buckets still runs the cluster-side combine."""
     df = _signal_frame(spark, 16)
     for part in (
         DR._sketch_partials(df, ["a"], combine_buckets=4),
-        DR._grouped_sketch_partials(df, "g", ["a"], combine_buckets=4),
+        DR._sketch_partials(df, ["a"], combine_buckets=4, group_col="g"),
     ):
         plan = _plan(part)
         assert "Exchange" in plan and "FlatMapGroupsInPandas" in plan
