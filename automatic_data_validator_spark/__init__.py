@@ -40,6 +40,7 @@ from .dedup import (  # noqa: F401
 )
 from .incremental import (  # noqa: F401
     compact_state,
+    history_report,
     rebase_after_compaction,
     validate_incremental,
 )

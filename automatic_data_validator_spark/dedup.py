@@ -1464,9 +1464,9 @@ def incremental_neardup(
     # additive id-multiset checksum (same scheme as validate_
     # incremental's): one id-pruned aggregate over the DELTA, letting
     # rebase_neardup_after_compaction verify a rewritten corpus
-    from .incremental import _key_checksum
+    from .incremental import _key_summary
 
-    d_rows, d_hash = _key_checksum(
+    d_rows, d_hash, _lo, _hi = _key_summary(
         delta.groupBy(F.col(id_col).cast("string").alias("doc_id")).agg(
             F.count(F.lit(1)).alias("cnt")
         )

@@ -263,7 +263,7 @@ def _sketch_partials(
             }
         )
 
-    def merge_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_bucket(key, pdf):
         d = TDigest.merge_all(
             (TDigest.deserialize(s) for s in pdf["sketch"]), compression
         )

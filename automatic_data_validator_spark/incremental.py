@@ -5,9 +5,14 @@ state — the corpus is never re-read.
 Why this is a first-class 100-TB feature: at 10^12 docs a full
 revalidation per snapshot re-scans ~100 TB to re-check data that has
 not changed. Parquet/Iceberg data files are immutable — a snapshot
-appends files — so per-file verdicts stay valid forever. The only
-checks that couple NEW data to OLD are corpus-level, and both have
-mergeable forms:
+appends files — so per-file verdicts stay valid forever.
+
+An increment is ``validate._run_checks`` — the phase runner of
+``run_validation`` — over the delta files, so the delta is read once
+into the same check frame and every row rule, referential rule and
+per-partition aggregate runs as in a full run. The checks that couple
+NEW data to OLD are corpus-level; the runner calls this module's state
+merges (``_IncrementMerges``) for them:
 
 * **uniqueness** — a persisted KEY-LOCATION INDEX with one row per
   (doc_id, partition, increment): cross-increment collisions come from
@@ -15,12 +20,17 @@ mergeable forms:
   raw documents. At deployment the index should be stored bucketed on
   doc_id (``sources.write_bucketed_table`` / ``write_iceberg_bucketed``)
   so this join shuffles only the delta side; here it is plain parquet.
-* **profile metrics** — the fused scan's per-partition algebraic
+* **drift** — the delta's t-digests are stored per increment and
+  merged with every earlier increment's into the corpus digest.
+* **profile metrics** — the aggregate's per-partition algebraic
   partials (counts/sums/min/max/central moments/HLL sketches/quantile
   grids) are persisted per increment; ``finalize_partial_profile``
   re-merges over every increment's partials (Pébay moment merge and
   HLL register union are associative and order-insensitive) and never
   touches the input table.
+
+This module keeps the manifest, the file delta, the state stores, the
+key checksum, and compaction/retention of the stores.
 
 Equivalence contract vs one full ``run_validation`` over the whole
 corpus (pinned by tests/test_incremental.py):
@@ -49,16 +59,18 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import refcheck
+from . import config
 from . import rules as R
-from .profile import build_partial_profile, finalize_partial_profile
+from .profile import finalize_partial_profile
 from .session import local_frame
-from .state import LINEAGE_SCHEMA, lineage_from_verdicts
+from .state import LINEAGE_SCHEMA
 
 _MANIFEST = "manifest.json"
 # multiset key checksum: sum over rows of xxhash64(key) mod P, plus the
@@ -128,19 +140,22 @@ def _file_delta(
     return full, all_files, [f for f in all_files if f not in known]
 
 
-def _key_checksum(loc: DataFrame) -> tuple[int, int]:
-    """(rows, hash) over a (doc_id, cnt) aggregate — decimal(38) sum so
-    10^12 rows cannot overflow."""
+def _key_summary(loc: DataFrame) -> "tuple[int, int, str | None, str | None]":
+    """(rows, hash, min key, max key) over a (doc_id, cnt) aggregate in
+    one job: the key multiset checksum (a decimal(38) sum, so 10^12
+    rows cannot overflow) and the key range the index probe prunes to."""
     row = loc.agg(
-        F.sum("cnt").alias("rows"),
+        F.sum("cnt"),
         F.sum(
             F.col("cnt").cast("decimal(38,0)")
             * F.pmod(F.xxhash64("doc_id"), F.lit(_CHECKSUM_P)).cast(
                 "decimal(38,0)"
             )
-        ).alias("hash"),
+        ),
+        F.min("doc_id"),
+        F.max("doc_id"),
     ).collect()[0]
-    return int(row["rows"] or 0), int(row["hash"] or 0)
+    return int(row[0] or 0), int(row[1] or 0), row[2], row[3]
 
 
 @dataclass
@@ -210,7 +225,7 @@ def _write_inc(
         # range-sorted layout (PLANS §13/§16, guide §6): each of this
         # increment's files covers a disjoint, tight ``sort_key`` range
         # so parquet footer min/max stats let the next increment's
-        # probe skip files wholesale (see _incremental_uniqueness).
+        # probe skip files wholesale (see _IncrementMerges.uniqueness).
         # Same shuffle volume as the plain repartition it replaces —
         # only the partitioner changes.
         df = df.repartitionByRange(
@@ -278,17 +293,17 @@ def validate_incremental(
     Contract: append-only input (a removed or rewritten file raises;
     after a row-preserving compaction run ``rebase_after_compaction``
     to re-point the state with checksum verification) and a frozen
-    schema (schema drift raises; run drift.schema_drift first). ``catalog`` is treated as static; if the catalog loses
-    refs, previously-validated docs are NOT re-checked — re-bootstrap
-    for that.
+    schema (schema drift raises; run drift.schema_drift first).
+    ``catalog`` is treated as static; if the catalog loses refs,
+    previously-validated docs are NOT re-checked — re-bootstrap for
+    that.
 
-    Scale note: per-increment verdicts are collected driver-side (one
-    row per DELTA partition x rule) — fine for deltas, which are small
-    by definition. Bootstrapping an already-huge corpus (~8M+
-    partitions) through this function would hit the driver-row problem
-    run_validation's spill mode exists for: bootstrap such a corpus in
-    file batches (several calls), or adopt incremental mode when the
-    corpus is created.
+    The checks are run_validation's (validate._run_checks over the
+    delta) with this increment's state merges. A unique_key rule must
+    be on ``key_column``, the one column the key index covers. A delta
+    of more input partitions than run_validation's default
+    ``verdict_spill_threshold`` takes its spill mode: verdicts stay
+    distributed instead of being collected to the driver.
     """
     mpath = os.path.join(state_dir, _MANIFEST)
     _refuse_crashed_compaction(state_dir)
@@ -336,25 +351,15 @@ def validate_incremental(
     if not delta_files:
         # nothing new: return the stored merged state, zero scans of
         # the corpus
-        verdicts = _read_store(spark, os.path.join(state_dir, "verdicts"))
-        if verdicts is None:
+        if inc == 0:
             raise ValueError(
                 f"no files under {documents_path} and no prior state "
                 f"at {state_dir}"
             )
-        return IncrementalResult(
-            verdicts,
-            _read_store(
-                spark, os.path.join(state_dir, "violations"),
-                R.VIOLATION_SCHEMA,
-            ),
+        return _merged_result(
+            spark, state_dir,
             _read_store(spark, os.path.join(state_dir, "metrics")),
-            _read_store(
-                spark, os.path.join(state_dir, "lineage"), LINEAGE_SCHEMA
-            ),
-            increment=int(manifest["increment"]),
-            n_delta_files=0,
-            delta_rows=0,
+            inc - 1, 0, 0,
         )
 
     # basePath restores hive-partition columns (corpus at /data
@@ -374,238 +379,57 @@ def validate_incremental(
             "drift.schema_drift, then re-bootstrap"
         )
 
-    from .validate import DEFAULT_RULES
+    from .validate import DEFAULT_RULES, _release_checkpoint, _run_checks
 
     rule_set = rule_set if rule_set is not None else list(DEFAULT_RULES)
-    row_rules = R.row_level(rule_set)
-    snapshot_id = f"inc-{inc}"
-
-    # ---- one fused scan of the DELTA: row rules + profile partials ----
-    preds = [(r.rule_id, R.compile_rule(r, delta)) for r in row_rules]
-    plan = (
-        build_partial_profile(
-            delta, detect_formats=False, fused_quantiles=True
-        )
-        if with_profile
-        else None
-    )
-    per_part = R.per_partition_rule_aggregate(
-        delta, preds, plan.exprs if plan else ()
-    ).persist()
-    new_verdicts: list[DataFrame] = []
-    new_violations: list[DataFrame] = []
-    lineage_rows: list[DataFrame] = []
+    off_key = [r.rule_id for r in rule_set if r.kind == "unique_key"
+               and (r.column or key_column) != key_column]
+    if off_key:
+        raise ValueError(f"unique_key rule(s) {off_key}: the key index "
+                         f"covers only key_column '{key_column}'")
+    merges = _IncrementMerges(spark, state_dir, inc, drift_group_by)
     try:
-        part_totals = {
-            int(r["partition_id"]): int(r["row_count"])
-            for r in per_part.select("partition_id", "row_count").collect()
-        }
-        delta_rows = sum(part_totals.values())
-
-        # ---- phases run CONCURRENTLY (r6): the per-partition totals
-        # above are the only cross-phase dependency, so once collected,
-        # row-rules verdict assembly, the key-index uniqueness join,
-        # the referential join, the drift sketch AND the profile-
-        # partials store write are all independent chains of small
-        # jobs — sequential submission left the cluster idle in each
-        # chain's tail (same rationale as run_validation's phase pool;
-        # the delta increment's cost is mostly fixed per-job overhead,
-        # measured ~11s for a 50k-doc delta of sub-second jobs).
-        def rr_task():
-            import time as _time
-
-            t0 = _time.perf_counter()
-            rr_v = R.verdicts_from_per_partition(
-                per_part, [rid for rid, _ in preds]
-            )
-            rr_rows = [tuple(r) for r in rr_v.collect()]
-            rr_v = local_frame(spark, rr_rows, R.VERDICT_SCHEMA)
-            rr_viol = R.violation_rows(delta, preds, key_column).withColumn(
-                "detail", F.lit(f"inc={inc}")
-            )
-            lin = lineage_from_verdicts(
-                spark, rr_rows, "row_rules", snapshot_id, rule_version,
-                duration_s=round(_time.perf_counter() - t0, 3),
-            )
-            return rr_v, rr_viol, lin
-
-        def uniq_task():
-            import time as _time
-
-            # uniqueness vs the key-location index (no corpus rescan)
-            t0 = _time.perf_counter()
-            uniq_v, uniq_viol, d_loc = _incremental_uniqueness(
-                spark, delta, state_dir, key_column, inc, part_totals
-            )
-            lin = lineage_from_verdicts(
-                spark, [tuple(r) for r in uniq_v.collect()],
-                "uniqueness", snapshot_id, rule_version,
-                duration_s=round(_time.perf_counter() - t0, 3),
-            )
-            return uniq_v, uniq_viol, lin, d_loc
-
-        def ref_task():
-            import time as _time
-
-            # referential over the delta only (catalog is static)
-            t0 = _time.perf_counter()
-            ref_v, ref_viol = refcheck.referential_check(
-                delta, catalog, partition_totals=dict(part_totals)
-            )
-            ref_viol = ref_viol.withColumn("detail", F.coalesce(
-                F.col("detail"), F.lit(f"inc={inc}")
-            ))
-            lin = lineage_from_verdicts(
-                spark, [tuple(r) for r in ref_v.collect()],
-                "referential", snapshot_id, rule_version,
-                duration_s=round(_time.perf_counter() - t0, 3),
-            )
-            return ref_v, ref_viol, lin
-
-        def drift_task():
-            import time as _time
-
-            # distribution drift: sketch the DELTA, merge digests — the
-            # CORPUS-level digest is the merge of every increment's
-            # digests (t-digest merge is associative); old increments
-            # are never re-sketched, never re-read
-            t0 = _time.perf_counter()
-            d_v, d_viol = _incremental_drift(
-                spark, delta, state_dir, inc, drift_baseline,
-                drift_signals, drift_ks_threshold, drift_psi_threshold,
-                group_by=drift_group_by,
-            )
-            lin = lineage_from_verdicts(
-                spark, [tuple(r) for r in d_v.collect()],
-                "drift", snapshot_id, rule_version,
-                duration_s=round(_time.perf_counter() - t0, 3),
-            )
-            return d_v, d_viol, lin
-
-        def partials_task():
-            # profile partials ride the (already cached) fused scan:
-            # write this increment's rows, then re-merge the history
-            keep = [
-                c for c in per_part.columns if not c.startswith("viol_")
-            ]
-            _write_inc(
-                per_part.select(*keep),
-                os.path.join(state_dir, "partials"), inc,
-            )
-            hist = spark.read.parquet(os.path.join(state_dir, "partials"))
-            missing = [
-                a for a, _, _, _ in plan.specs if a not in hist.columns
-            ]
-            if missing:
-                raise ValueError(
-                    f"stored partials at {state_dir}/partials lack "
-                    f"aliases {missing[:5]} — partials from an "
-                    "incompatible engine version; re-bootstrap"
-                )
-            prof = finalize_partial_profile(hist, plan)
-            m = prof.metrics_df(spark)
-            m.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "metrics")
-            )
-            return m
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        metrics = None
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            f_rr = pool.submit(rr_task) if preds else None
-            f_uniq = pool.submit(uniq_task)
-            f_ref = (
-                pool.submit(ref_task)
-                if catalog is not None and "spans" in delta.columns
-                else None
-            )
-            f_drift = (
-                pool.submit(drift_task)
-                if drift_baseline is not None
-                else None
-            )
-            f_partials = (
-                pool.submit(partials_task) if plan is not None else None
-            )
-            if f_rr is not None:
-                rr_v, rr_viol, rr_lin = f_rr.result()
-                new_verdicts.append(rr_v)
-                new_violations.append(rr_viol)
-                lineage_rows.append(rr_lin)
-            uniq_v, uniq_viol, uniq_lin, delta_loc = f_uniq.result()
-            new_verdicts.append(uniq_v)
-            new_violations.append(uniq_viol)
-            lineage_rows.append(uniq_lin)
-            if f_ref is not None:
-                ref_v, ref_viol, ref_lin = f_ref.result()
-                new_verdicts.append(ref_v)
-                new_violations.append(ref_viol)
-                lineage_rows.append(ref_lin)
-            if f_drift is not None:
-                d_v, d_viol, d_lin = f_drift.result()
-                new_verdicts.append(d_v)
-                new_violations.append(d_viol)
-                lineage_rows.append(d_lin)
-            if f_partials is not None:
-                metrics = f_partials.result()
-
-        # ---- persist the increment (all partitioned by increment) ----
-        verdicts_inc = new_verdicts[0]
-        for v in new_verdicts[1:]:
-            verdicts_inc = verdicts_inc.unionByName(v)
-        violations_inc = new_violations[0]
-        for v in new_violations[1:]:
-            violations_inc = violations_inc.unionByName(v)
-        lineage_inc = lineage_rows[0]
-        for l in lineage_rows[1:]:
-            lineage_inc = lineage_inc.unionByName(l)
-        # the four stores are independent: write them concurrently
-        # (Spark job submission is thread-safe; same rationale as
+        res = _run_checks(
+            spark, delta, catalog=catalog, rule_set=rule_set,
+            key_column=key_column, ckpt=None, snapshot_id=f"inc-{inc}",
+            rule_version=rule_version, with_profile=with_profile,
+            check_uniqueness=True, verdict_spill_threshold=100_000,
+            drift_baseline=drift_baseline, drift_columns=None,
+            drift_ks_threshold=drift_ks_threshold,
+            drift_psi_threshold=drift_psi_threshold,
+            drift_signals=drift_signals, drift_group_by=drift_group_by,
+            merges=merges,
+        )
+        # row-rule and new uniqueness violations carry their increment
+        violations = res.violations.withColumn(
+            "detail", F.coalesce(F.col("detail"), F.lit(f"inc={inc}"))
+        )
+        path = lambda name: os.path.join(state_dir, name)  # noqa: E731
+        writes = [
+            lambda: _write_inc(res.verdicts, path("verdicts"), inc),
+            lambda: _write_inc(violations, path("violations"), inc),
+            lambda: _write_inc(res.lineage, path("lineage"), inc),
+            # range-sorted on the key: the next increment's index
+            # probe prunes to the delta's key range
+            lambda: _write_inc(merges.loc, path("key_index"), inc,
+                               sort_key="doc_id"),
+        ]
+        if res.metrics is not None:
+            writes.append(lambda: res.metrics.write.mode("overwrite")
+                          .parquet(path("metrics")))
+        # the stores are independent: write them concurrently (Spark
+        # job submission is thread-safe; same rationale as
         # sources.write_outputs_parallel)
-        with ThreadPoolExecutor(max_workers=4) as wpool:
-            futs = [
-                wpool.submit(
-                    _write_inc, df, os.path.join(state_dir, name), inc,
-                    sort_key=sk,
-                )
-                for df, name, sk in (
-                    (verdicts_inc, "verdicts", None),
-                    (violations_inc, "violations", None),
-                    (lineage_inc, "lineage", None),
-                    # range-sorted on the key: the next increment's
-                    # index probe prunes to the delta's key range
-                    (delta_loc, "key_index", "doc_id"),
-                )
-            ]
-            for fut in futs:
+        with ThreadPoolExecutor(max_workers=len(writes)) as wpool:
+            for fut in [wpool.submit(w) for w in writes]:
                 fut.result()
-        # checksum reads the cached aggregate, not the input
-        d_rows, d_hash = _key_checksum(delta_loc)
-        delta_loc.unpersist()
     finally:
-        per_part.unpersist()
-
-    # running key checksum (additive, computed above from the cached
-    # key-location aggregate): lets rebase_after_compaction verify a
-    # rewritten corpus. Only carried when the manifest already has one
-    # (or this is the bootstrap increment) — minting one from a zero
-    # base on pre-checksum state would cover only this delta and make
-    # a later verify=True rebase fail misleadingly (round-5 ADVICE,
-    # same class as the neardup manifest)
-    old_ck = manifest.get("checksum")
-    if old_ck is not None or int(manifest["increment"]) == -1:
-        base_ck = old_ck or {"rows": 0, "hash": 0}
-        checksum = {
-            "rows": int(base_ck["rows"]) + d_rows,
-            "hash": int(base_ck["hash"]) + d_hash,
-            "key_column": key_column,
-        }
-    else:
-        checksum = None
+        if merges.loc is not None:
+            _release_checkpoint(merges.loc)
 
     # manifest LAST: a crash above leaves the old manifest, and the
     # re-run dynamically overwrites this increment's partitions
+    old_ck = manifest.get("checksum")
     prior_expired = manifest.get("expired_through")
     manifest = {
         "files": all_files,
@@ -614,27 +438,53 @@ def validate_incremental(
         "rule_version": rule_version,
         "modes": modes,
     }
-    if checksum is not None:
-        manifest["checksum"] = checksum
+    # running key checksum (additive, computed with the probe's key
+    # bounds from the key-location aggregate): lets
+    # rebase_after_compaction verify a rewritten corpus. Only carried
+    # when the manifest already has one (or this is the bootstrap
+    # increment) — minting one from a zero base on pre-checksum state
+    # would cover only this delta and make a later verify=True rebase
+    # fail misleadingly (round-5 ADVICE, same class as the neardup
+    # manifest)
+    if old_ck is not None or inc == 0:
+        base_ck = old_ck or {"rows": 0, "hash": 0}
+        manifest["checksum"] = {
+            "rows": int(base_ck["rows"]) + merges.checksum[0],
+            "hash": int(base_ck["hash"]) + merges.checksum[1],
+            "key_column": key_column,
+        }
     if prior_expired is not None:
         # retention watermark (expire_increments) survives increments
         manifest["expired_through"] = prior_expired
     _commit_manifest(mpath, manifest)
 
+    # the key-location aggregate counts every delta row once
+    return _merged_result(
+        spark, state_dir, res.metrics, inc, len(delta_files),
+        merges.checksum[0],
+    )
+
+
+def _merged_result(
+    spark: SparkSession,
+    state_dir: str,
+    metrics: "DataFrame | None",
+    increment: int,
+    n_delta_files: int,
+    delta_rows: int,
+) -> IncrementalResult:
+    """The corpus-level result: every stored increment's verdicts,
+    violations and lineage, with the merged ``metrics``."""
+
+    def store(name: str, schema) -> DataFrame:
+        return _read_store(spark, os.path.join(state_dir, name), schema)
+
     return IncrementalResult(
-        _read_store(
-            spark, os.path.join(state_dir, "verdicts"), R.VERDICT_SCHEMA
-        ),
-        _read_store(
-            spark, os.path.join(state_dir, "violations"), R.VIOLATION_SCHEMA
-        ),
+        store("verdicts", R.VERDICT_SCHEMA),
+        store("violations", R.VIOLATION_SCHEMA),
         metrics,
-        _read_store(
-            spark, os.path.join(state_dir, "lineage"), LINEAGE_SCHEMA
-        ),
-        increment=inc,
-        n_delta_files=len(delta_files),
-        delta_rows=delta_rows,
+        store("lineage", LINEAGE_SCHEMA),
+        increment, n_delta_files, delta_rows,
     )
 
 
@@ -655,17 +505,16 @@ def history_report(spark: SparkSession, state_dir: str) -> DataFrame:
     verdicts = _read_store(spark, os.path.join(state_dir, "verdicts"))
     if verdicts is None:
         raise ValueError(f"no incremental state at {state_dir}")
-    per = verdicts.groupBy("increment", "rule_id").agg(
+    totals = [
         F.sum("row_count").alias("row_count"),
         F.sum("violation_count").alias("violation_count"),
         (F.sum((~F.col("pass")).cast("long")) == 0).alias("pass"),
+    ]
+    per = verdicts.groupBy("increment", "rule_id").agg(*totals)
+    rollup = verdicts.groupBy("increment").agg(*totals).select(
+        "increment", F.lit("__all__").alias("rule_id"), "row_count",
+        "violation_count", "pass",
     )
-    rollup = verdicts.groupBy("increment").agg(
-        F.lit("__all__").alias("rule_id"),
-        F.sum("row_count").alias("row_count"),
-        F.sum("violation_count").alias("violation_count"),
-        (F.sum((~F.col("pass")).cast("long")) == 0).alias("pass"),
-    ).select("increment", "rule_id", "row_count", "violation_count", "pass")
     return per.unionByName(rollup).orderBy("increment", "rule_id")
 
 
@@ -865,7 +714,7 @@ def rebase_after_compaction(
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        rows, hsh = _key_checksum(loc)
+        rows, hsh, _lo, _hi = _key_summary(loc)
         if rows != int(ck["rows"]) or hsh != int(ck["hash"]):
             raise ValueError(
                 "compacted corpus does not match the validated state: "
@@ -1020,247 +869,223 @@ def expire_increments(
     return report
 
 
-def _incremental_drift(
-    spark: SparkSession,
-    delta: DataFrame,
-    state_dir: str,
-    inc: int,
-    drift_baseline,
-    drift_signals,
-    ks_threshold: float,
-    psi_threshold: float,
-    group_by: "str | None" = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Corpus-vs-baseline drift in incremental mode: sketch ONLY the
-    delta's signal columns, persist the digests per increment, merge
-    every increment's digests into the corpus digest (associative
-    t-digest merge), and compare that against the baseline with the
-    batch drift path (drift.resolve_drift_config, sketch_columns,
-    drift_report_sketches). Verdict/violation shapes match
-    run_validation's drift phase (partition_id -1, rule_id
-    drift_<col>, one violation row per drifted column).
+class _IncrementMerges:
+    """The state merges of one increment: the hooks
+    validate._run_checks calls in place of its whole-input uniqueness
+    check, drift sketch and profile finalize. ``loc`` is the delta's
+    (doc_id, partition_id, cnt) key-location aggregate, a local
+    checkpoint the caller appends to the key index and then releases;
+    ``checksum`` is its (rows, hash) share of the manifest checksum."""
 
-    ``group_by``: COHORT drift — digests are per (group, column),
-    merged across increments into a per-cohort corpus digest and
-    compared against a grouped baseline; rule ids follow the full
-    path's ``drift_<col>[<group>]``. The per-increment stores are
-    mode-specific (``sketches`` vs ``sketches_grouped``), so switching
-    modes mid-state raises: the other mode's history cannot be folded
-    into this mode's corpus digest and a silent partial sketch would
-    report drift against a fraction of the corpus."""
-    from . import drift as DR
+    def __init__(self, spark: SparkSession, state_dir: str, inc: int,
+                 drift_group_by: "str | None"):
+        self.spark, self.state_dir, self.inc = spark, state_dir, inc
+        self.group_by = drift_group_by
+        self.loc: "DataFrame | None" = None
+        self.checksum = (0, 0)
+        self.bounds: "list[str | None]" = [None, None]
+        self._lock = threading.Lock()
 
-    grouped = group_by is not None
-    name, other = (
-        ("sketches_grouped", "sketches") if grouped
-        else ("sketches", "sketches_grouped")
-    )
-    if os.path.exists(os.path.join(state_dir, other)):
-        raise ValueError(
-            f"incremental drift: this state_dir holds the other drift "
-            f"mode's per-increment sketches ('{other}'); with "
-            f"drift_group_by={group_by!r} they cannot fold into this "
-            "mode's corpus digest — re-bootstrap with a fresh state_dir "
-            "to switch drift modes"
-        )
-    store = os.path.join(state_dir, name)
-    target = drift_signals(delta) if drift_signals else delta
-    baseline, cols = DR.resolve_drift_config(
-        spark, drift_baseline, target, group_by=group_by
-    )
-    rows = [
-        (g, c, d.serialize())
-        for g, gcols in DR.as_cohorts(
-            DR.sketch_columns(target, cols, group_by=group_by)
-        ).items()
-        for c, d in gcols.items()
-    ]
-    if rows:
-        # a 0-row delta sketches no cohort — writing the empty frame
-        # would leave a file-less store that the history read below
-        # cannot infer a schema from, wedging the state
-        inc_df = local_frame(
-            spark, rows, "group string, column string, sketch string"
-        )
-        _write_inc(inc_df if grouped else inc_df.drop("group"), store, inc)
-    hist = _read_store(spark, store)
-    merged: dict = {}
-    for r in [] if hist is None else hist.collect():
-        d = DR.TDigest.deserialize(r["sketch"])
-        gcols = merged.setdefault(r["group"] if grouped else None, {})
-        gcols[r["column"]] = (
-            gcols[r["column"]].merge(d) if r["column"] in gcols else d
-        )
-    report = DR.drift_report_sketches(
-        merged, baseline, cols,
-        ks_threshold=ks_threshold, psi_threshold=psi_threshold,
-    )
-    v_rows, viol_rows = DR.drift_report_rows(report, inc=inc)
-    return (
-        local_frame(spark, v_rows, R.VERDICT_SCHEMA),
-        local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
-    )
+    def _key_locations(self, checks: DataFrame, key: str) -> DataFrame:
+        """``loc`` over the check frame's key column, built once (two
+        unique_key rules on key_column share it). The one collect of
+        its checksum and key range is the job that fills it."""
+        with self._lock:
+            if self.loc is None:
+                self.loc = (
+                    checks.select(
+                        F.col(key).cast("string").alias("doc_id"),
+                        F.spark_partition_id().cast("int").alias("partition_id"),
+                    )
+                    .groupBy("doc_id", "partition_id")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .localCheckpoint(eager=False)
+                )
+                rows, hsh, *self.bounds = _key_summary(self.loc)
+                self.checksum = (rows, hsh)
+        return self.loc
 
+    def uniqueness(
+        self,
+        checks: DataFrame,
+        key: str,
+        rule_id: str,
+        partition_totals,
+        *,
+        distributed: bool = False,
+    ) -> tuple[DataFrame, DataFrame]:
+        """dedup.uniqueness_check for the delta against the persisted
+        key-location index: (verdicts, violations).
 
-def _incremental_uniqueness(
-    spark: SparkSession,
-    delta: DataFrame,
-    state_dir: str,
-    key_column: str,
-    inc: int,
-    part_totals: dict[int, int],
-    rule_id: str = "unique_doc_id",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Uniqueness for the delta against the persisted key-location
-    index. Returns (verdicts, violations, delta_loc) where delta_loc
-    is the (doc_id, partition_id, cnt) aggregate to append to the
-    index.
+        Invariant maintained by induction: after increment k, the
+        stored violations contain exactly one row per OCCURRENCE of
+        every key whose running total exceeds 1. So this increment must
+        emit (a) every delta occurrence of a key whose merged total >
+        1, and (b) the single OLD occurrence of keys the delta just
+        promoted to duplicate (old total was exactly 1 — old totals >=
+        2 were fully reported when they happened). Both derive from
+        delta keys joined against the index: the raw corpus is never
+        re-read. The index store is written RANGE-SORTED on doc_id
+        (_write_inc sort_key), so the probe first narrows the index
+        scan to the delta's [min, max] key range — a pushed-down
+        predicate that parquet footer min/max stats turn into
+        whole-file skips (O(delta key range), not O(corpus); pinned by
+        test_plans.py::test_incremental_key_index_probe_prunes_files) —
+        and then broadcast-joins the delta key set, so the corpus-sized
+        side is neither shuffled nor (beyond the surviving range) read.
 
-    Invariant maintained by induction: after increment k, the stored
-    violations contain exactly one row per OCCURRENCE of every key
-    whose running total exceeds 1. So this increment must emit
-    (a) every delta occurrence of a key whose merged total > 1, and
-    (b) the single OLD occurrence of keys the delta just promoted to
-    duplicate (old total was exactly 1 — old totals >= 2 were fully
-    reported when they happened). Both derive from delta keys joined
-    against the index: the raw corpus is never re-read. The index
-    store is written RANGE-SORTED on doc_id (_write_inc sort_key), so
-    the probe first narrows the index scan to the delta's
-    [min, max] key range — a pushed-down predicate that parquet footer
-    min/max stats turn into whole-file skips (O(delta key range), not
-    O(corpus); pinned by test_plans.py::
-    test_incremental_key_index_probe_prunes_files) — and then
-    broadcast-joins the delta key set, so the corpus-sized side is
-    neither shuffled nor (beyond the surviving range) read."""
-    delta_loc = (
-        delta.select(
-            F.col(key_column).cast("string").alias("doc_id"),
-            F.spark_partition_id().cast("int").alias("partition_id"),
-        )
-        .groupBy("doc_id", "partition_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
-    delta_tot = delta_loc.groupBy("doc_id").agg(
-        F.sum("cnt").alias("new_cnt")
-    )
-    idx = _read_store(spark, os.path.join(state_dir, "key_index"))
-    if idx is not None:
+        New occurrences leave with a null detail (the caller stamps
+        ``inc=N``), promoted ones with ``inc=K;promoted_by=inc-N``."""
+        loc = self._key_locations(checks, key)
+        delta_tot = loc.groupBy("doc_id").agg(F.sum("cnt").alias("new_cnt"))
         # crash-recovery: a crashed attempt at THIS increment may have
         # written its key_index partition before dying (manifest is
         # committed last) — reading it back would count every delta
         # key against itself and report the whole delta as duplicates
-        idx = idx.filter(F.col("increment") < inc)
+        idx = _read_store(
+            self.spark, os.path.join(self.state_dir, "key_index"),
+            "doc_id string, partition_id int, cnt long, increment int",
+        ).filter(F.col("increment") < self.inc)
         # narrow the index scan to the delta's key range BEFORE the
-        # join: the index is stored range-sorted on doc_id (_write_inc
-        # sort_key), so this pushed-down between-predicate lets parquet
-        # footer min/max stats skip every file whose range misses the
-        # delta — any real append pattern (monotonic ids, per-source
-        # prefixes) touches a narrow slice of the keyspace, making the
-        # probe O(delta key range) instead of O(corpus). Equivalence:
+        # join: any real append pattern (monotonic ids, per-source
+        # prefixes) touches a narrow slice of the keyspace. Equivalence:
         # the join keeps only index rows whose doc_id EQUALS a delta
         # key, and every delta key lies within [lo, hi] by definition
-        # of min/max — the filter removes no potential match. The
-        # bounds aggregate reads the persisted delta_loc (and is what
-        # first materializes it — no extra delta scan).
-        bounds = delta_loc.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is not None:
-            idx = idx.filter(
-                F.col("doc_id").between(bounds["lo"], bounds["hi"])
-            )
+        # of min/max — the filter removes no potential match
+        lo, hi = self.bounds
+        if lo is not None:
+            idx = idx.filter(F.col("doc_id").between(lo, hi))
         # broadcast the DELTA key set into the index probe when the
-        # delta is small (the normal case — deltas are small by
-        # definition; gated on the already-known delta row count, same
-        # standard as every other verify join): without the hint the
-        # planner's estimate for the cached-aggregate side can force a
+        # delta is small (the normal case; gated on the delta row count,
+        # same standard as every other verify join): without the hint
+        # the planner's estimate for the checkpointed side can force a
         # sort-merge join that sorts the whole (corpus-sized) index —
         # measured 1.9s -> ~0.4s for a 50k-key delta vs a 1M-key index
-        from . import config as _config
-
         delta_keys = delta_tot.select("doc_id")
-        if sum(part_totals.values()) <= _config.BROADCAST_ROW_LIMIT:
+        if self.checksum[0] <= config.BROADCAST_ROW_LIMIT:
             delta_keys = F.broadcast(delta_keys)
         hits = idx.join(delta_keys, "doc_id").persist()
         old_tot = hits.groupBy("doc_id").agg(F.sum("cnt").alias("old_cnt"))
-    else:
-        hits = None
-        old_tot = local_frame(spark, [], "doc_id string, old_cnt long")
-    tot = (
-        delta_tot.join(old_tot, "doc_id", "left")
-        .withColumn("old_cnt", F.coalesce(F.col("old_cnt"), F.lit(0)))
-        .withColumn("total", F.col("new_cnt") + F.col("old_cnt"))
-    )
-    dup_keys = tot.filter(F.col("total") > 1).persist()
-    new_viol = (
-        delta_loc.join(dup_keys.select("doc_id"), "doc_id")
-        .select(
-            "doc_id",
-            "partition_id",
-            F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i"),
+        tot = (
+            delta_tot.join(old_tot, "doc_id", "left")
+            .withColumn("old_cnt", F.coalesce(F.col("old_cnt"), F.lit(0)))
+            .withColumn("total", F.col("new_cnt") + F.col("old_cnt"))
         )
-        .select(
+        dup_keys = tot.filter(F.col("total") > 1).persist()
+        promoted = hits.join(
+            dup_keys.filter(F.col("old_cnt") == 1).select("doc_id"), "doc_id"
+        ).select(
             "doc_id",
             F.lit(rule_id).alias("rule_id"),
-            "partition_id",
-            F.lit(f"inc={inc}").alias("detail"),
+            F.col("partition_id").cast("int"),
+            F.concat(
+                F.lit("inc="), F.col("increment").cast("string"),
+                F.lit(f";promoted_by=inc-{self.inc}"),
+            ).alias("detail"),
         )
-    )
-    if hits is not None:
-        promoted = (
-            hits.join(
-                dup_keys.filter(F.col("old_cnt") == 1).select("doc_id"),
+        violations = (
+            loc.join(dup_keys.select("doc_id"), "doc_id")
+            .select(
                 "doc_id",
+                "partition_id",
+                F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i"),
             )
             .select(
                 "doc_id",
                 F.lit(rule_id).alias("rule_id"),
-                F.col("partition_id").cast("int"),
-                F.concat(
-                    F.lit("inc="), F.col("increment").cast("string"),
-                    F.lit(";promoted_by=inc-"), F.lit(str(inc)),
-                ).alias("detail"),
+                "partition_id",
+                F.lit(None).cast("string").alias("detail"),
             )
+            .unionByName(promoted)
         )
-        violations = new_viol.unionByName(promoted)
-    else:
-        violations = new_viol
-    violations = violations.localCheckpoint(eager=True)
-    if hits is not None:
+        # as in dedup.uniqueness_check: the per-partition count collect
+        # fills the checkpoint (the distributed path fills it now).
+        # Promoted OLD occurrences count in one partition_id = -1
+        # verdict row (their physical partition belongs to a previous
+        # increment's numbering), so per-rule totals still sum to the
+        # full-revalidation count
+        violations = violations.localCheckpoint(eager=distributed)
+        by_pid = violations.select(
+            F.when(F.col("detail").isNull(), F.col("partition_id"))
+            .otherwise(F.lit(-1)).alias("partition_id"),
+            "doc_id",
+        )
+        viol_by_pid = None if distributed else {
+            r[0]: r[1] for r in by_pid.groupBy("partition_id").count().collect()
+        }
         hits.unpersist()
-    dup_keys.unpersist()
+        dup_keys.unpersist()
+        return R.partition_verdicts(
+            checks, by_pid, rule_id, partition_totals, viol_by_pid
+        ), violations
 
-    # verdicts: delta partitions carry their own (row_count, delta-side
-    # violation count); retroactively-promoted OLD occurrences land in
-    # one partition_id = -1 row (their physical partition belongs to a
-    # previous increment's numbering) so per-rule totals still sum to
-    # the full-revalidation count
-    # one aggregation job for BOTH the per-partition delta-side counts
-    # and the promoted total (was two collect jobs over the same tiny
-    # checkpointed frame — pure fixed overhead at delta scale)
-    delta_side: dict[int, int] = {}
-    n_promoted = 0
-    for r in (
-        violations.groupBy(
-            "partition_id", F.col("detail").contains("promoted").alias("_p")
+    def sketches(self, sketches: dict) -> dict:
+        """The corpus drift sketches: the delta's ``sketches`` are
+        stored per increment and merged with every stored increment's
+        (t-digest merge is associative; old increments are never
+        re-sketched or re-read).
+
+        Cohort drift keeps its digests per (group, column) in its own
+        store, ``sketches_grouped``, so switching modes mid-state
+        raises: the other mode's history cannot be folded into this
+        mode's corpus digest and a silent partial sketch would report
+        drift against a fraction of the corpus."""
+        from . import drift as DR
+
+        grouped = self.group_by is not None
+        name, other = (
+            ("sketches_grouped", "sketches") if grouped
+            else ("sketches", "sketches_grouped")
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    ):
-        if r["_p"]:
-            n_promoted += int(r["n"])
-        else:
-            delta_side[r["partition_id"]] = int(r["n"])
-    rows = [
-        (int(pid), rule_id, int(total), int(delta_side.get(pid, 0)),
-         delta_side.get(pid, 0) == 0)
-        for pid, total in sorted(part_totals.items())
-    ]
-    if n_promoted:
-        rows.append((-1, rule_id, 0, int(n_promoted), False))
-    verdicts = local_frame(spark, rows, R.VERDICT_SCHEMA)
-    # delta_loc stays persisted: the caller writes it to the key index
-    # (reading the cached blocks, not rescanning the delta) and then
-    # unpersists it
-    return verdicts, violations, delta_loc
+        if os.path.exists(os.path.join(self.state_dir, other)):
+            raise ValueError(
+                f"incremental drift: this state_dir holds the other drift "
+                f"mode's per-increment sketches ('{other}'); with "
+                f"drift_group_by={self.group_by!r} they cannot fold into "
+                "this mode's corpus digest — re-bootstrap with a fresh "
+                "state_dir to switch drift modes"
+            )
+        store = os.path.join(self.state_dir, name)
+        rows = [
+            (g, c, d.serialize())
+            for g, gcols in DR.as_cohorts(sketches).items()
+            for c, d in gcols.items()
+        ]
+        if rows:
+            # a 0-row delta sketches no cohort — writing the empty frame
+            # would leave a file-less store that the history read below
+            # cannot infer a schema from, wedging the state
+            inc_df = local_frame(
+                self.spark, rows, "group string, column string, sketch string"
+            )
+            _write_inc(inc_df if grouped else inc_df.drop("group"), store,
+                       self.inc)
+        hist = _read_store(self.spark, store)
+        merged: dict = {}
+        for r in [] if hist is None else hist.collect():
+            d = DR.TDigest.deserialize(r["sketch"])
+            gcols = merged.setdefault(r["group"] if grouped else None, {})
+            gcols[r["column"]] = (
+                gcols[r["column"]].merge(d) if r["column"] in gcols else d
+            )
+        return merged
+
+    def profile(self, part: DataFrame, plan):
+        """The corpus profile: this increment's per-partition partials
+        (the 33-point quantile grid plan) are stored, then finalized
+        with every stored increment's — Pébay moment merge, HLL
+        register union and grid merge are order-insensitive, and the
+        input table is never re-read."""
+        store = os.path.join(self.state_dir, "partials")
+        _write_inc(
+            part.select(*[c for c in part.columns if not c.startswith("viol_")]),
+            store, self.inc,
+        )
+        hist = self.spark.read.parquet(store)
+        missing = [a for a, _, _, _ in plan.specs if a not in hist.columns]
+        if missing:
+            raise ValueError(
+                f"stored partials at {store} lack aliases {missing[:5]} — "
+                "partials from an incompatible engine version; re-bootstrap"
+            )
+        return finalize_partial_profile(hist, plan)

@@ -126,10 +126,13 @@ def _scoped_executions(spark, action, read_one) -> "dict[int, Any]":
 def _file_scan_rows(store, execution) -> int:
     """Rows output by the file-source scans of one SQL execution: plan
     nodes carrying a "number of files read" metric (FileSourceScanExec;
-    not the scans of cached, checkpointed or local relations)."""
+    not the scans of cached, checkpointed or local relations). A scan
+    under a cached relation read twice in one plan shows up in the
+    graph once per read with the same metric: it counts once."""
     graph = store.planGraph(execution.executionId())
     values = store.executionMetrics(execution.executionId())
     nodes = graph.allNodes()
+    seen = set()
     rows = 0
     for i in range(nodes.size()):
         metrics = nodes.apply(i).metrics()
@@ -137,8 +140,10 @@ def _file_scan_rows(store, execution) -> int:
                  for j in range(metrics.size())}
         if "number of files read" not in names:
             continue
-        v = values.get(names["number of output rows"].accumulatorId())
-        if v.isDefined():
+        acc = names["number of output rows"].accumulatorId()
+        v = values.get(acc)
+        if v.isDefined() and acc not in seen:
+            seen.add(acc)
             rows += int("".join(ch for ch in v.get() if ch.isdigit()) or 0)
     return rows
 

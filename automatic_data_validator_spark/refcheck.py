@@ -105,15 +105,21 @@ def referential_check_counted(
     *,
     distributed: bool = False,
     refs_col: "str | None" = None,
+    catalog_refs: "DataFrame | None" = None,
 ) -> "tuple[DataFrame, DataFrame, int | None]":
     """referential_check plus the exact violation ROW count (verdicts
     count distinct (partition, doc) pairs, rows count (doc, ref)
     pairs). The local verdict path reads it off the per-partition
     collect its verdicts need anyway, so it costs no extra job; the
     distributed path never collects per-partition rows and returns
-    None. ``refs_col`` as in distinct_refs."""
+    None. ``refs_col`` as in distinct_refs. ``catalog_refs``: the
+    catalog's distinct media_ref column, already materialized
+    (run_validation's); ``catalog`` is then not read."""
     refs = distinct_refs(df, spans_col, refs_col)
-    cat = catalog.select("media_ref").distinct()
+    cat = (
+        catalog_refs if catalog_refs is not None
+        else catalog.select("media_ref").distinct()
+    )
     if catalog_rows is None:
         # cheap metadata estimate: count the (small) dimension once
         catalog_rows = cat.count()

@@ -1,5 +1,12 @@
 """End-to-end validation run: the engine's flagship entry point.
 
+One private phase runner, ``_run_checks``, runs every check for both
+callers: ``run_validation`` over a whole input, and
+``incremental.validate_incremental`` over the files appended since its
+last call, with that increment's state merges (key index, drift
+sketches, profile partials) in place of the whole-input uniqueness,
+drift and profile steps.
+
 Pipeline (each phase checkpointable, resumable via state.Checkpointer):
 
   phase "row_rules"    — all row-level rules -> per-partition verdicts
@@ -20,7 +27,9 @@ run returns, so the input is read once. Otherwise (a profiled flat
 table, whose columns the frame would copy whole, or spill mode, where
 checkpoint blocks without lineage would not survive a lost executor)
 each check reads the input through its own column-pruned scan of the
-lazy frame. One per-partition aggregate carries the rule counts, the
+lazy frame. The catalog's distinct refs are read once, into a local
+checkpoint every referential join reads (spill mode reads the catalog
+per use). One per-partition aggregate carries the rule counts, the
 profile partials and the partition totals. Each check keeps its own
 result as a local relation or a localCheckpoint, so nothing the run
 creates stays in the session's cache manager: a later run over a path
@@ -40,6 +49,7 @@ from __future__ import annotations
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -178,7 +188,6 @@ def run_validation(
     built with cluster-side joins (rules.distributed_verdicts), and
     lineage carries one per-rule aggregate row per phase instead of one
     row per partition."""
-    rule_set = rule_set if rule_set is not None else list(DEFAULT_RULES)
     if snapshot_id == "auto":
         from .state import snapshot_of
 
@@ -197,7 +206,56 @@ def run_validation(
         if checkpoint_dir
         else None
     )
+    return _run_checks(
+        spark, documents, catalog=catalog, rule_set=rule_set,
+        key_column=key_column, ckpt=ckpt, snapshot_id=snapshot_id,
+        rule_version=rule_version, with_profile=with_profile,
+        check_uniqueness=check_uniqueness,
+        verdict_spill_threshold=verdict_spill_threshold,
+        drift_baseline=drift_baseline, drift_columns=drift_columns,
+        drift_ks_threshold=drift_ks_threshold,
+        drift_psi_threshold=drift_psi_threshold,
+        drift_signals=drift_signals, drift_group_by=drift_group_by,
+    )
 
+
+def _run_checks(
+    spark: SparkSession,
+    documents: DataFrame,
+    *,
+    catalog: DataFrame | None,
+    rule_set: "list[R.Rule] | None",
+    key_column: str,
+    ckpt: "Checkpointer | None",
+    snapshot_id: str,
+    rule_version: str,
+    with_profile: bool,
+    check_uniqueness: bool,
+    verdict_spill_threshold: int,
+    drift_baseline: "dict | str | None",
+    drift_columns: "list[str] | None",
+    drift_ks_threshold: float,
+    drift_psi_threshold: float,
+    drift_signals: "Any | None",
+    drift_group_by: "str | None",
+    merges: "Any | None" = None,
+) -> ValidationResult:
+    """The phase runner behind run_validation and
+    incremental.validate_incremental (keyword arguments as
+    run_validation's, with the Checkpointer already built).
+
+    ``merges`` is an increment's state merge (incremental.py), or None
+    for a run over the whole input. It supplies three hooks:
+    ``uniqueness`` replaces dedup.uniqueness_check (same arguments and
+    result), ``sketches(sketches)`` returns the drift sketches to
+    compare (the input's merged with the stored history), and
+    ``profile(part, plan)`` finalizes the profile from the
+    per-partition partials (stored, then merged with the history). With
+    it, the profile rides 33-point quantile grids in the aggregate
+    instead of a separate quantile pass, so the partials merge across
+    increments, and drift violation details carry ``;inc=<merges.inc>``.
+    """
+    rule_set = rule_set if rule_set is not None else list(DEFAULT_RULES)
     # spill mode: never hold one-row-per-partition verdicts on the
     # driver. The decision only needs the input's SCALE, so use the
     # already-listed file inventory (driver-side metadata, no plan
@@ -313,8 +371,11 @@ def run_validation(
     # (collected rows and their local relation, or a localCheckpoint in
     # spill mode), a blocking callable for the partition totals
     # (aggregate_task's result) and the futures of the catalog's
-    # distinct-ref count and of the profile's partial-aggregate plan.
+    # distinct refs with their count and of the profile's
+    # partial-aggregate plan. ``held`` collects the local checkpoints
+    # released before the runner returns.
     frame: dict[str, Any] = {}
+    held: list[DataFrame] = []
     rule_ids = [rid for rid, _p in preds]
     flag_preds = [
         (rid, ~F.col(f"{_FLAG}{i}")) for i, rid in enumerate(rule_ids)
@@ -353,6 +414,7 @@ def run_validation(
         uniq_rules = [r for r in rule_set if r.kind == "unique_key"] or [
             R.Rule("unique_doc_id", "unique_key", column=key_column)
         ]
+        uniqueness = merges.uniqueness if merges else dedup.uniqueness_check
         for ur in uniq_rules:
             name = f"uniqueness_{ur.rule_id}"
             if pending(name):
@@ -360,7 +422,7 @@ def run_validation(
             tasks.append(
                 (
                     name,
-                    lambda ur=ur: dedup.uniqueness_check(
+                    lambda ur=ur: uniqueness(
                         frame["checks"], ur.column or key_column, ur.rule_id,
                         partition_totals=frame["totals"],
                         distributed=spill,
@@ -395,21 +457,35 @@ def run_validation(
 
             def referential_phase(rr_rule=rr_rule, spans_col=spans_col,
                                   phase=phase, refs_col=refs_col):
+                cat_refs, cat_rows = frame["catalog"].result()
                 # verdicts count distinct (partition, doc) pairs; the
                 # row count comes from the check's own collect
                 vdf, viol, violation_rows[phase] = (
                     refcheck.referential_check_counted(
                         frame["checks"], catalog, spans_col=spans_col,
                         rule_id=rr_rule.rule_id,
-                        catalog_rows=frame["catalog_rows"].result(),
+                        catalog_rows=cat_rows,
                         partition_totals=frame["totals"],
                         distributed=spill,
                         refs_col=refs_col,
+                        catalog_refs=cat_refs,
                     )
                 )
                 return vdf, viol
 
             tasks.append((phase, referential_phase))
+
+    def catalog_task():
+        """Pool task: the catalog's distinct refs and their count.
+        Outside spill mode the count is the job that fills a local
+        checkpoint of them, which every referential join then reads,
+        so the catalog is read once. Spill mode reads it per use: a
+        checkpoint block has no lineage to recompute it from."""
+        cat_refs = catalog.select("media_ref").distinct()
+        if not spill:
+            cat_refs = cat_refs.localCheckpoint(eager=False)
+            held.append(cat_refs)
+        return cat_refs, cat_refs.count()
 
     # distribution-drift phase (north_rule's fourth check family): one
     # sketch pass (t-digest partials, two-level merge) compared vs the
@@ -438,13 +514,17 @@ def run_validation(
             baseline, cols = DR.resolve_drift_config(
                 spark, drift_baseline, target, drift_columns, drift_group_by
             )
+            sketches = DR.sketch_columns(target, cols, group_by=drift_group_by)
+            if merges:
+                sketches = merges.sketches(sketches)
             report = DR.drift_report_sketches(
-                DR.sketch_columns(target, cols, group_by=drift_group_by),
-                baseline, cols,
+                sketches, baseline, cols,
                 ks_threshold=drift_ks_threshold,
                 psi_threshold=drift_psi_threshold,
             )
-            v_rows, viol_rows = DR.drift_report_rows(report)
+            v_rows, viol_rows = DR.drift_report_rows(
+                report, inc=merges.inc if merges else None
+            )
             return (
                 local_frame(spark, v_rows, R.VERDICT_SCHEMA),
                 local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
@@ -476,17 +556,14 @@ def run_validation(
         collected per-partition partials (a local relation, or the
         spill-mode checkpoint) plus a quantile pass over the check
         frame's numeric columns (none for the flagship documents
-        shape)."""
+        shape, none with ``merges``: its grids ride the aggregate)."""
         plan = frame["profile"].result()
         quantiles = profile_quantiles(frame["checks"], plan.quantile_cols)
         frame["totals"]()  # the partials are in
-        return _merge_quantiles(
-            finalize_partial_profile(frame["part"], plan), quantiles
-        )
+        finalize = merges.profile if merges else finalize_partial_profile
+        return _merge_quantiles(finalize(frame["part"], plan), quantiles)
 
     metrics = None
-    profile_future = None
-    checks = None
     try:
         with ThreadPoolExecutor(max_workers=len(tasks) + 5) as pool:
             # drift reads the input itself: start it first so its scan
@@ -502,14 +579,13 @@ def run_validation(
                 # Date-format probing is for string business columns,
                 # not ids.
                 frame["profile"] = pool.submit(
-                    build_partial_profile, documents, detect_formats=False
+                    build_partial_profile, documents, detect_formats=False,
+                    fused_quantiles=merges is not None,
                 )
             if profiling or any(pending(n) for n, _fn in tasks):
-                # the catalog side of the referential join needs no
-                # check frame: count it while the frame fills
-                frame["catalog_rows"] = pool.submit(
-                    lambda: catalog.select("media_ref").distinct().count()
-                ) if refs_cols else None
+                if refs_cols:
+                    # needs no check frame: runs while the frame fills
+                    frame["catalog"] = pool.submit(catalog_task)
                 frame["checks"], narrow = check_frame(
                     documents, key_cols,
                     preds if pending("row_rules") else [], refs_cols,
@@ -521,15 +597,14 @@ def run_validation(
                     # Spill mode keeps the per-check reads: checkpoint
                     # blocks have no lineage, and at that scale a lost
                     # executor would fail the run.
-                    checks = frame["checks"].localCheckpoint(eager=True)
-                    frame["checks"] = checks
+                    frame["checks"] = frame["checks"].localCheckpoint(eager=True)
+                    held.append(frame["checks"])
                 # the per-partition aggregate runs beside the checks;
                 # uniqueness/referential resolve the totals only once
                 # their own work is done
                 frame["totals"] = pool.submit(aggregate_task).result
             futures += [pool.submit(run_phase, name, fn) for name, fn in tasks]
-            if profiling:
-                profile_future = pool.submit(profile_task)
+            profile_future = pool.submit(profile_task) if profiling else None
             for fut in futures:
                 fut.result()
             if profile_future is not None:
@@ -541,10 +616,11 @@ def run_validation(
                 ckpt.write("profile", "metrics", metrics)
                 ckpt.mark_done("profile")
     finally:
-        # the check frame's blocks go now, not when the frame is
-        # garbage collected; every result read from it is materialized
-        if checks is not None:
-            _release_checkpoint(checks)
+        # the check frame's and the catalog refs' blocks go now, not
+        # when the frames are garbage collected; every result read
+        # from them is materialized
+        for df in held:
+            _release_checkpoint(df)
 
     if not verdict_dfs:
         # nothing ran (empty rule set, no uniqueness, no catalog):
@@ -557,12 +633,8 @@ def run_validation(
             metrics,
             local_frame(spark, [], LINEAGE_SCHEMA),
         )
-    verdicts = verdict_dfs[0]
-    for x in verdict_dfs[1:]:
-        verdicts = verdicts.unionByName(x)
-    violations = violation_parts[0]
-    for x in violation_parts[1:]:
-        violations = violations.unionByName(x)
+    verdicts = reduce(DataFrame.unionByName, verdict_dfs)
+    violations = reduce(DataFrame.unionByName, violation_parts)
     # small violation sets leave as one partition (one output file)
     # instead of one per shuffle partition of the uniqueness window.
     # Only in default mode without checkpointing, where every part is
@@ -576,9 +648,7 @@ def run_validation(
         and sum(violation_rows.values()) <= config.VIOLATIONS_ONE_FILE_ROWS
     ):
         violations = violations.coalesce(1)
-    lineage = lineage_parts[0]
-    for l in lineage_parts[1:]:
-        lineage = lineage.unionByName(l)
+    lineage = reduce(DataFrame.unionByName, lineage_parts)
     # driver-held rows (lineage and metrics always, verdicts outside
     # spill mode): one partition each, so a write makes one file
     # instead of one per local-relation slice of every unioned phase
@@ -617,8 +687,6 @@ def split_valid_invalid(
     joining on the corpus's OWN keys only — a drift violation row
     must not quarantine a document that happens to share the column's
     name."""
-    from . import config
-
     bad = (
         violations.filter(F.col("partition_id") >= 0)
         .groupBy(F.col("doc_id").alias("_k"))

@@ -165,6 +165,18 @@ def main(argv: list[str] | None = None) -> int:
     docs = read_table(spark, args.documents)
     catalog = read_table(spark, args.catalog) if args.catalog else None
 
+    # shape-aware rules: DEFAULT_RULES are the interleaved documents
+    # contract (span_order/span_shape reference `spans`); a plain table
+    # without that column would otherwise fail rule COMPILATION before
+    # any check runs, in either run mode. Fall back to a minimal
+    # not-null on the key.
+    rule_set = None
+    if "spans" not in docs.columns:
+        from automatic_data_validator_spark import rules as _R
+
+        key = "doc_id" if "doc_id" in docs.columns else docs.columns[0]
+        rule_set = [_R.Rule(f"not_null_{key}", "not_null", column=key)]
+
     if args.incremental_state:
         # snapshot-delta mode: only the files appended since the last
         # run are scanned; results merge with the persisted state
@@ -205,7 +217,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         ires = validate_incremental(
             spark, args.documents, args.incremental_state,
-            catalog=catalog, with_profile=not args.no_profile,
+            catalog=catalog, rule_set=rule_set,
+            with_profile=not args.no_profile,
             rule_version=args.rule_version,
             drift_baseline=args.drift_baseline,
             drift_signals=signals_fn,
@@ -286,17 +299,6 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     numeric, signals_fn = _pick_signals_fn(docs, args.drift_group_by)
-
-    # shape-aware rules: DEFAULT_RULES are the interleaved documents
-    # contract (span_order/span_shape reference `spans`); a plain table
-    # without that column would otherwise fail rule COMPILATION before
-    # any check runs. Fall back to a minimal not-null on the key.
-    rule_set = None
-    if "spans" not in docs.columns:
-        from automatic_data_validator_spark import rules as _R
-
-        key = "doc_id" if "doc_id" in docs.columns else docs.columns[0]
-        rule_set = [_R.Rule(f"not_null_{key}", "not_null", column=key)]
 
     res = run_validation(
         spark,

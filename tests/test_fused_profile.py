@@ -283,6 +283,35 @@ def test_fused_leaves_no_cache_entries(spark, docs, catalog):
     assert n <= 3, n
 
 
+def test_run_reads_catalog_once(spark, docs, tmp_path):
+    """The referential check reads its catalog once per run: the
+    distinct-ref count fills a local checkpoint that the join reads.
+    The documents are in memory, so every file-source row the run
+    reads is a catalog row. The checkpoint is released before the run
+    returns: only the result's three violation sets stay in block
+    storage."""
+    from automatic_data_validator_spark.synth import make_media_catalog
+
+    make_media_catalog(spark, 500, seed=42).write.parquet(str(tmp_path / "cat"))
+    catalog = spark.read.parquet(str(tmp_path / "cat"))
+    n = catalog.count()
+    docs.count()  # the fixture's cache is in place before the count
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    got = {}
+
+    def run():
+        res = run_validation(spark, docs, catalog=catalog, with_profile=False)
+        res.violations.count()
+        got["verdicts"] = res.verdicts.collect()
+        got["rdds"] = jsc.getPersistentRDDs().size() - before
+
+    assert _source_records(spark, run) == n
+    assert any(r["rule_id"] == "referential_media_ref" and r["violation_count"]
+               for r in got["verdicts"])
+    assert got["rdds"] <= 3, got["rdds"]
+
+
 def test_fused_run_with_numeric_columns_adds_quantile_pass(spark):
     """Generic tables with numeric columns go through the fused scan
     PLUS the column-pruned quantile pass; metrics must still match the

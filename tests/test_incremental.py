@@ -350,6 +350,80 @@ def test_incremental_reads_delta_not_corpus(spark, tmp_path):
     assert read <= 2 * n_corpus + 10 * n_delta, (read,)
 
 
+def test_increment_reads_delta_once(spark, tmp_path):
+    """With drift off, an increment reads its delta files once: every
+    check reads one materialized check frame. The call's file-source
+    rows are the delta's plus those of the stores and the catalog it
+    reads (the earlier increments' key index, the profile partials);
+    one read per check would add >= 3 more delta passes."""
+    from automatic_data_validator_spark.introspect import source_records
+
+    corpus = str(tmp_path / "docs")
+    state = str(tmp_path / "state")
+    make_media_catalog(spark, 200, seed=42).write.parquet(str(tmp_path / "cat"))
+    cat = spark.read.parquet(str(tmp_path / "cat"))
+    make_documents(spark, 2000, n_media=200, seed=42, num_partitions=2).write.mode(
+        "append"
+    ).parquet(corpus)
+    validate_incremental(spark, corpus, state, catalog=cat)
+    n_delta = 4000
+    make_documents(spark, n_delta, n_media=200, seed=43, num_partitions=2).write.mode(
+        "append"
+    ).parquet(corpus)
+    index_rows = spark.read.parquet(os.path.join(state, "key_index")).count()
+    got = {}
+    read = source_records(spark, lambda: got.__setitem__(
+        "r", validate_incremental(spark, corpus, state, catalog=cat)))
+    assert got["r"].delta_rows == n_delta
+    partial_rows = spark.read.parquet(os.path.join(state, "partials")).count()
+    budget = n_delta + index_rows + partial_rows + cat.count()
+    assert read <= budget, (read, budget)
+
+
+def test_incremental_honors_unique_key_and_referential_rules(spark, tmp_path):
+    """Explicit unique_key and referential rules run in an increment as
+    they do in run_validation: each keeps its own rule id (a unique_key
+    rule without a column checks key_column), and the merged totals
+    equal a full run's. A referential rule without a
+    catalog raises, and so does a unique_key rule on a column other
+    than key_column (the key index covers key_column only)."""
+    from automatic_data_validator_spark import rules as R
+    from automatic_data_validator_spark.validate import DEFAULT_RULES
+
+    corpus = str(tmp_path / "docs")
+    state = str(tmp_path / "state")
+    cat = make_media_catalog(spark, 100, seed=42)
+    # two unique_key rules share the increment's one key-location
+    # aggregate while their phases run concurrently
+    rules = list(DEFAULT_RULES) + [
+        R.Rule("uniq_key", "unique_key", column="doc_id"),
+        R.Rule("uniq_key_again", "unique_key"),
+        R.Rule("ref_media", "referential", column="spans"),
+    ]
+    for seed, n in ((42, 1500), (43, 600)):
+        make_documents(
+            spark, n, n_media=100, seed=seed, num_partitions=2
+        ).write.mode("append").parquet(corpus)
+        r = validate_incremental(spark, corpus, state, catalog=cat, rule_set=rules)
+    full = run_validation(
+        spark, spark.read.parquet(corpus), catalog=cat, rule_set=rules
+    )
+    inc_tot, full_tot = _rule_totals(r.verdicts), _rule_totals(full.verdicts)
+    assert {"uniq_key", "uniq_key_again", "ref_media"} <= set(inc_tot)
+    assert inc_tot == full_tot
+    assert full_tot["uniq_key"][1] > 0 and full_tot["ref_media"][1] > 0
+    assert inc_tot["uniq_key"] == inc_tot["uniq_key_again"]
+    assert _viol_multiset(r.violations) == _viol_multiset(full.violations)
+
+    with pytest.raises(ValueError, match="require"):
+        validate_incremental(spark, corpus, str(tmp_path / "s2"), rule_set=rules)
+    with pytest.raises(ValueError, match="key index covers only"):
+        validate_incremental(
+            spark, corpus, str(tmp_path / "s3"), catalog=cat,
+            rule_set=[R.Rule("uniq_spans", "unique_key", column="spans")],
+        )
+
+
 def test_incremental_job_flag(spark, tmp_path):
     """jobs/validate_job.py --incremental-state drives the snapshot-
     delta path end to end: second invocation after an append validates
@@ -422,6 +496,35 @@ def test_incremental_job_flag(spark, tmp_path):
             "--incremental-state", f"{base}/state",
             "--expire-archive", f"{base}/arch",
         ])
+
+
+def test_incremental_job_flag_on_flat_table(spark, tmp_path):
+    """jobs/validate_job.py builds its fallback rule set for a table
+    without spans (not_null_<key>) for both run modes: the incremental
+    run validates a flat (doc_id, text) table like the full run."""
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import validate_job
+
+    base = str(tmp_path / "job")
+    spark.createDataFrame(
+        [("a", "x"), ("b", "y"), ("c", "z")], "doc_id string, text string"
+    ).coalesce(1).write.parquet(f"{base}/docs")
+    rc_full = validate_job.main(
+        ["--documents", f"{base}/docs", "--output", f"{base}/full"]
+    )
+    rc_inc = validate_job.main([
+        "--documents", f"{base}/docs", "--output", f"{base}/inc",
+        "--incremental-state", f"{base}/state",
+    ])
+    assert rc_inc == rc_full
+
+    def totals(out):
+        return _rule_totals(spark.read.parquet(f"{out}/verdicts"))
+
+    assert totals(f"{base}/inc") == totals(f"{base}/full")
+    assert set(totals(f"{base}/inc")) == {"not_null_doc_id", "unique_doc_id"}
 
 
 def test_history_report(spark, tmp_path):

@@ -1,4 +1,7 @@
-"""Every public function in dedup.py, drift.py and similarity.py has a caller.
+"""Every public function in the checked modules has a caller.
+
+The checked modules are dedup.py, drift.py, incremental.py,
+similarity.py and validate.py.
 
 The roots are the code a user action runs: ``jobs/``,
 ``__spark_entry__.py``, ``bench.py``, ``bench_extra.py``, ``BENCH/``,
@@ -18,7 +21,9 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "automatic_data_validator_spark"
-CHECKED = ("dedup.py", "drift.py", "similarity.py")
+CHECKED = (
+    "dedup.py", "drift.py", "incremental.py", "similarity.py", "validate.py",
+)
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -72,6 +77,8 @@ def test_every_public_dedup_and_similarity_function_is_reached():
     public, unreached = _unreached()
     assert "dedup.neardup_dedup" in public and "similarity.brute_force_topk_arrow" in public
     assert "drift.sketch_columns" in public
+    assert "validate.run_validation" in public
+    assert "incremental.validate_incremental" in public
     assert not unreached, (
         "public functions no job, driver query, benchmark or package "
         f"module calls: {unreached}"
