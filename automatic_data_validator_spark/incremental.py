@@ -300,8 +300,13 @@ def validate_incremental(
 
     The checks are run_validation's (validate._run_checks over the
     delta) with this increment's state merges. A unique_key rule must
-    be on ``key_column``, the one column the key index covers. A delta
-    of more input partitions than run_validation's default
+    be on ``key_column``, the one column the key index covers; the
+    uniqueness rule ids are fixed for the state_dir's lifetime (a
+    state written before explicit unique_key rules were honoured
+    stored ``unique_doc_id`` only). The lineage store names the
+    uniqueness phase ``uniqueness_<rule_id>`` as a full run does;
+    increments written before that name it ``uniqueness``. A delta of
+    more input partitions than run_validation's default
     ``verdict_spill_threshold`` takes its spill mode: verdicts stay
     distributed instead of being collected to the driver.
     """
@@ -325,17 +330,32 @@ def validate_incremental(
     # was stored) while the results still claim corpus-level coverage
     # drift_group_by participates too (round-5 review): switching the
     # cohort COLUMN (or cohort<->table mode) would merge digests keyed
-    # by different dimensions into one corpus sketch
+    # by different dimensions into one corpus sketch. So do the
+    # uniqueness rule ids: a renamed rule would split its per-rule
+    # totals between the old and the new id
+    from . import validate as V
+
+    rule_set = rule_set if rule_set is not None else list(V.DEFAULT_RULES)
+    uniq_ids = [r.rule_id for r in rule_set if r.kind == "unique_key"]
+    off_key = [r.rule_id for r in rule_set if r.kind == "unique_key"
+               and (r.column or key_column) != key_column]
+    if off_key:
+        raise ValueError(f"unique_key rule(s) {off_key}: the key index "
+                         f"covers only key_column '{key_column}'")
     modes = {"with_profile": bool(with_profile),
              "drift": drift_baseline is not None,
-             "drift_group_by": drift_group_by}
+             "drift_group_by": drift_group_by,
+             # the runner's fallback when the rule set has none
+             "unique_rules": sorted(uniq_ids) or ["unique_doc_id"]}
     stored_modes = manifest.get("modes")
     if stored_modes is not None:
-        # manifests written before the key existed ran table-level
+        # manifests written before a key existed ran table-level drift
+        # and stored every key-index verdict as unique_doc_id
         stored_modes.setdefault("drift_group_by", None)
+        stored_modes.setdefault("unique_rules", ["unique_doc_id"])
     if stored_modes is not None and stored_modes != modes:
         raise ValueError(
-            f"profile/drift participation changed ({stored_modes} "
+            f"profile/drift/uniqueness participation changed ({stored_modes} "
             f"-> {modes}): increments that skip a merged family drop "
             "out of the corpus-level result silently — keep the flags "
             "consistent for the state_dir's lifetime, or re-bootstrap"
@@ -379,21 +399,14 @@ def validate_incremental(
             "drift.schema_drift, then re-bootstrap"
         )
 
-    from .validate import DEFAULT_RULES, _release_checkpoint, _run_checks
-
-    rule_set = rule_set if rule_set is not None else list(DEFAULT_RULES)
-    off_key = [r.rule_id for r in rule_set if r.kind == "unique_key"
-               and (r.column or key_column) != key_column]
-    if off_key:
-        raise ValueError(f"unique_key rule(s) {off_key}: the key index "
-                         f"covers only key_column '{key_column}'")
     merges = _IncrementMerges(spark, state_dir, inc, drift_group_by)
     try:
-        res = _run_checks(
+        res = V._run_checks(
             spark, delta, catalog=catalog, rule_set=rule_set,
             key_column=key_column, ckpt=None, snapshot_id=f"inc-{inc}",
             rule_version=rule_version, with_profile=with_profile,
-            check_uniqueness=True, verdict_spill_threshold=100_000,
+            check_uniqueness=True,
+            verdict_spill_threshold=V._VERDICT_SPILL_THRESHOLD,
             drift_baseline=drift_baseline, drift_columns=None,
             drift_ks_threshold=drift_ks_threshold,
             drift_psi_threshold=drift_psi_threshold,
@@ -424,8 +437,7 @@ def validate_incremental(
             for fut in [wpool.submit(w) for w in writes]:
                 fut.result()
     finally:
-        if merges.loc is not None:
-            _release_checkpoint(merges.loc)
+        merges.release()
 
     # manifest LAST: a crash above leaves the old manifest, and the
     # re-run dynamically overwrites this increment's partitions
@@ -505,16 +517,17 @@ def history_report(spark: SparkSession, state_dir: str) -> DataFrame:
     verdicts = _read_store(spark, os.path.join(state_dir, "verdicts"))
     if verdicts is None:
         raise ValueError(f"no incremental state at {state_dir}")
-    totals = [
+    per = verdicts.groupBy("increment", "rule_id").agg(
         F.sum("row_count").alias("row_count"),
         F.sum("violation_count").alias("violation_count"),
         (F.sum((~F.col("pass")).cast("long")) == 0).alias("pass"),
-    ]
-    per = verdicts.groupBy("increment", "rule_id").agg(*totals)
-    rollup = verdicts.groupBy("increment").agg(*totals).select(
-        "increment", F.lit("__all__").alias("rule_id"), "row_count",
-        "violation_count", "pass",
     )
+    rollup = verdicts.groupBy("increment").agg(
+        F.lit("__all__").alias("rule_id"),
+        F.sum("row_count").alias("row_count"),
+        F.sum("violation_count").alias("violation_count"),
+        (F.sum((~F.col("pass")).cast("long")) == 0).alias("pass"),
+    ).select("increment", "rule_id", "row_count", "violation_count", "pass")
     return per.unionByName(rollup).orderBy("increment", "rule_id")
 
 
@@ -873,8 +886,8 @@ class _IncrementMerges:
     """The state merges of one increment: the hooks
     validate._run_checks calls in place of its whole-input uniqueness
     check, drift sketch and profile finalize. ``loc`` is the delta's
-    (doc_id, partition_id, cnt) key-location aggregate, a local
-    checkpoint the caller appends to the key index and then releases;
+    (doc_id, partition_id, cnt) key-location aggregate, which the
+    caller appends to the key index and then frees with ``release``;
     ``checksum`` is its (rows, hash) share of the manifest checksum."""
 
     def __init__(self, spark: SparkSession, state_dir: str, inc: int,
@@ -882,28 +895,46 @@ class _IncrementMerges:
         self.spark, self.state_dir, self.inc = spark, state_dir, inc
         self.group_by = drift_group_by
         self.loc: "DataFrame | None" = None
+        self._spill = False
         self.checksum = (0, 0)
         self.bounds: "list[str | None]" = [None, None]
         self._lock = threading.Lock()
 
-    def _key_locations(self, checks: DataFrame, key: str) -> DataFrame:
+    def _key_locations(self, checks: DataFrame, key: str,
+                       spill: bool) -> DataFrame:
         """``loc`` over the check frame's key column, built once (two
         unique_key rules on key_column share it). The one collect of
-        its checksum and key range is the job that fills it."""
+        its checksum and key range is the job that fills it: a local
+        checkpoint, or in spill mode a persisted frame, whose lost
+        blocks are recomputed from their lineage."""
         with self._lock:
             if self.loc is None:
-                self.loc = (
+                loc = (
                     checks.select(
                         F.col(key).cast("string").alias("doc_id"),
                         F.spark_partition_id().cast("int").alias("partition_id"),
                     )
                     .groupBy("doc_id", "partition_id")
                     .agg(F.count(F.lit(1)).alias("cnt"))
-                    .localCheckpoint(eager=False)
+                )
+                self._spill = spill
+                self.loc = loc.persist() if spill else loc.localCheckpoint(
+                    eager=False
                 )
                 rows, hsh, *self.bounds = _key_summary(self.loc)
                 self.checksum = (rows, hsh)
         return self.loc
+
+    def release(self) -> None:
+        """Free ``loc``'s blocks once the key index is written."""
+        if self.loc is None:
+            return
+        if self._spill:
+            self.loc.unpersist()
+        else:
+            from .validate import _release_checkpoint
+
+            _release_checkpoint(self.loc)
 
     def uniqueness(
         self,
@@ -936,7 +967,7 @@ class _IncrementMerges:
 
         New occurrences leave with a null detail (the caller stamps
         ``inc=N``), promoted ones with ``inc=K;promoted_by=inc-N``."""
-        loc = self._key_locations(checks, key)
+        loc = self._key_locations(checks, key, distributed)
         delta_tot = loc.groupBy("doc_id").agg(F.sum("cnt").alias("new_cnt"))
         # crash-recovery: a crashed attempt at THIS increment may have
         # written its key_index partition before dying (manifest is
@@ -947,74 +978,86 @@ class _IncrementMerges:
             "doc_id string, partition_id int, cnt long, increment int",
         ).filter(F.col("increment") < self.inc)
         # narrow the index scan to the delta's key range BEFORE the
-        # join: any real append pattern (monotonic ids, per-source
-        # prefixes) touches a narrow slice of the keyspace. Equivalence:
+        # join: the index is stored range-sorted on doc_id (_write_inc
+        # sort_key), so this pushed-down between-predicate lets parquet
+        # footer min/max stats skip every file whose range misses the
+        # delta — any real append pattern (monotonic ids, per-source
+        # prefixes) touches a narrow slice of the keyspace, making the
+        # probe O(delta key range) instead of O(corpus). Equivalence:
         # the join keeps only index rows whose doc_id EQUALS a delta
         # key, and every delta key lies within [lo, hi] by definition
-        # of min/max — the filter removes no potential match
+        # of min/max — the filter removes no potential match. The
+        # bounds come from the collect that fills ``loc`` (no extra
+        # delta scan).
         lo, hi = self.bounds
         if lo is not None:
             idx = idx.filter(F.col("doc_id").between(lo, hi))
         # broadcast the DELTA key set into the index probe when the
-        # delta is small (the normal case; gated on the delta row count,
-        # same standard as every other verify join): without the hint
-        # the planner's estimate for the checkpointed side can force a
+        # delta is small (the normal case — deltas are small by
+        # definition; gated on the already-known delta row count, same
+        # standard as every other verify join): without the hint the
+        # planner's estimate for the checkpointed side can force a
         # sort-merge join that sorts the whole (corpus-sized) index —
         # measured 1.9s -> ~0.4s for a 50k-key delta vs a 1M-key index
         delta_keys = delta_tot.select("doc_id")
         if self.checksum[0] <= config.BROADCAST_ROW_LIMIT:
             delta_keys = F.broadcast(delta_keys)
-        hits = idx.join(delta_keys, "doc_id").persist()
-        old_tot = hits.groupBy("doc_id").agg(F.sum("cnt").alias("old_cnt"))
-        tot = (
-            delta_tot.join(old_tot, "doc_id", "left")
-            .withColumn("old_cnt", F.coalesce(F.col("old_cnt"), F.lit(0)))
-            .withColumn("total", F.col("new_cnt") + F.col("old_cnt"))
-        )
-        dup_keys = tot.filter(F.col("total") > 1).persist()
-        promoted = hits.join(
-            dup_keys.filter(F.col("old_cnt") == 1).select("doc_id"), "doc_id"
-        ).select(
-            "doc_id",
-            F.lit(rule_id).alias("rule_id"),
-            F.col("partition_id").cast("int"),
-            F.concat(
-                F.lit("inc="), F.col("increment").cast("string"),
-                F.lit(f";promoted_by=inc-{self.inc}"),
-            ).alias("detail"),
-        )
-        violations = (
-            loc.join(dup_keys.select("doc_id"), "doc_id")
-            .select(
-                "doc_id",
-                "partition_id",
-                F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i"),
+        # both caches go in the finally, also when a job below fails
+        hits = dup_keys = None
+        try:
+            hits = idx.join(delta_keys, "doc_id").persist()
+            old_tot = hits.groupBy("doc_id").agg(F.sum("cnt").alias("old_cnt"))
+            tot = (
+                delta_tot.join(old_tot, "doc_id", "left")
+                .withColumn("old_cnt", F.coalesce(F.col("old_cnt"), F.lit(0)))
+                .withColumn("total", F.col("new_cnt") + F.col("old_cnt"))
             )
-            .select(
+            dup_keys = tot.filter(F.col("total") > 1).persist()
+            promoted = hits.join(
+                dup_keys.filter(F.col("old_cnt") == 1).select("doc_id"), "doc_id"
+            ).select(
                 "doc_id",
                 F.lit(rule_id).alias("rule_id"),
-                "partition_id",
-                F.lit(None).cast("string").alias("detail"),
+                F.col("partition_id").cast("int"),
+                F.concat(
+                    F.lit("inc="), F.col("increment").cast("string"),
+                    F.lit(f";promoted_by=inc-{self.inc}"),
+                ).alias("detail"),
             )
-            .unionByName(promoted)
-        )
-        # as in dedup.uniqueness_check: the per-partition count collect
-        # fills the checkpoint (the distributed path fills it now).
-        # Promoted OLD occurrences count in one partition_id = -1
-        # verdict row (their physical partition belongs to a previous
-        # increment's numbering), so per-rule totals still sum to the
-        # full-revalidation count
-        violations = violations.localCheckpoint(eager=distributed)
-        by_pid = violations.select(
-            F.when(F.col("detail").isNull(), F.col("partition_id"))
-            .otherwise(F.lit(-1)).alias("partition_id"),
-            "doc_id",
-        )
-        viol_by_pid = None if distributed else {
-            r[0]: r[1] for r in by_pid.groupBy("partition_id").count().collect()
-        }
-        hits.unpersist()
-        dup_keys.unpersist()
+            violations = (
+                loc.join(dup_keys.select("doc_id"), "doc_id")
+                .select(
+                    "doc_id",
+                    "partition_id",
+                    F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i"),
+                )
+                .select(
+                    "doc_id",
+                    F.lit(rule_id).alias("rule_id"),
+                    "partition_id",
+                    F.lit(None).cast("string").alias("detail"),
+                )
+                .unionByName(promoted)
+            )
+            # as in dedup.uniqueness_check: the per-partition count collect
+            # fills the checkpoint (the distributed path fills it now).
+            # Promoted OLD occurrences count in one partition_id = -1
+            # verdict row (their physical partition belongs to a previous
+            # increment's numbering), so per-rule totals still sum to the
+            # full-revalidation count
+            violations = violations.localCheckpoint(eager=distributed)
+            by_pid = violations.select(
+                F.when(F.col("detail").isNull(), F.col("partition_id"))
+                .otherwise(F.lit(-1)).alias("partition_id"),
+                "doc_id",
+            )
+            viol_by_pid = None if distributed else {
+                r[0]: r[1] for r in by_pid.groupBy("partition_id").count().collect()
+            }
+        finally:
+            for cached in (hits, dup_keys):
+                if cached is not None:
+                    cached.unpersist()
         return R.partition_verdicts(
             checks, by_pid, rule_id, partition_totals, viol_by_pid
         ), violations

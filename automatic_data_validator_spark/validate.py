@@ -49,7 +49,6 @@ from __future__ import annotations
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -90,6 +89,9 @@ class ValidationResult:
 # array per referential phase
 _FLAG = "_advs_fail_"
 _REFS = "_advs_refs_"
+# run_validation's default verdict_spill_threshold, which an increment
+# (incremental.validate_incremental) uses too
+_VERDICT_SPILL_THRESHOLD = 100_000
 
 
 def _profile_stand_in(field: T.StructField):
@@ -173,7 +175,7 @@ def run_validation(
     rule_version: str = "v1",
     with_profile: bool = True,
     check_uniqueness: bool = True,
-    verdict_spill_threshold: int = 100_000,
+    verdict_spill_threshold: int = _VERDICT_SPILL_THRESHOLD,
     drift_baseline: "dict | str | None" = None,
     drift_columns: "list[str] | None" = None,
     drift_ks_threshold: float = 0.1,
@@ -564,6 +566,7 @@ def _run_checks(
         return _merge_quantiles(finalize(frame["part"], plan), quantiles)
 
     metrics = None
+    profile_future = None
     try:
         with ThreadPoolExecutor(max_workers=len(tasks) + 5) as pool:
             # drift reads the input itself: start it first so its scan
@@ -604,7 +607,8 @@ def _run_checks(
                 # their own work is done
                 frame["totals"] = pool.submit(aggregate_task).result
             futures += [pool.submit(run_phase, name, fn) for name, fn in tasks]
-            profile_future = pool.submit(profile_task) if profiling else None
+            if profiling:
+                profile_future = pool.submit(profile_task)
             for fut in futures:
                 fut.result()
             if profile_future is not None:
@@ -633,8 +637,12 @@ def _run_checks(
             metrics,
             local_frame(spark, [], LINEAGE_SCHEMA),
         )
-    verdicts = reduce(DataFrame.unionByName, verdict_dfs)
-    violations = reduce(DataFrame.unionByName, violation_parts)
+    verdicts = verdict_dfs[0]
+    for x in verdict_dfs[1:]:
+        verdicts = verdicts.unionByName(x)
+    violations = violation_parts[0]
+    for x in violation_parts[1:]:
+        violations = violations.unionByName(x)
     # small violation sets leave as one partition (one output file)
     # instead of one per shuffle partition of the uniqueness window.
     # Only in default mode without checkpointing, where every part is
@@ -648,7 +656,9 @@ def _run_checks(
         and sum(violation_rows.values()) <= config.VIOLATIONS_ONE_FILE_ROWS
     ):
         violations = violations.coalesce(1)
-    lineage = reduce(DataFrame.unionByName, lineage_parts)
+    lineage = lineage_parts[0]
+    for l in lineage_parts[1:]:
+        lineage = lineage.unionByName(l)
     # driver-held rows (lineage and metrics always, verdicts outside
     # spill mode): one partition each, so a write makes one file
     # instead of one per local-relation slice of every unioned phase
@@ -687,6 +697,8 @@ def split_valid_invalid(
     joining on the corpus's OWN keys only — a drift violation row
     must not quarantine a document that happens to share the column's
     name."""
+    from . import config
+
     bad = (
         violations.filter(F.col("partition_id") >= 0)
         .groupBy(F.col("doc_id").alias("_k"))

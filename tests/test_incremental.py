@@ -608,6 +608,98 @@ def test_profile_mode_must_stay_consistent(spark, tmp_path):
         )
 
 
+def test_uniqueness_rule_ids_must_stay_consistent(spark, tmp_path):
+    """The uniqueness rule ids are pinned like the profile/drift flags:
+    a renamed unique_key rule would split its per-rule totals between
+    two ids. A manifest without the key (written when every increment
+    stored unique_doc_id) reads as unique_doc_id."""
+    import json
+
+    from automatic_data_validator_spark import rules as R
+
+    corpus = str(tmp_path / "docs")
+    state = str(tmp_path / "state")
+    for i, key in enumerate("ab"):
+        spark.createDataFrame(
+            [(key, i)], "doc_id string, value int"
+        ).coalesce(1).write.mode("append").parquet(corpus)
+        if i == 0:
+            validate_incremental(spark, corpus, state, rule_set=[])
+    mpath = os.path.join(state, "manifest.json")
+    manifest = json.load(open(mpath))
+    assert manifest["modes"]["unique_rules"] == ["unique_doc_id"]
+    del manifest["modes"]["unique_rules"]
+    json.dump(manifest, open(mpath, "w"))
+    with pytest.raises(ValueError, match="participation changed"):
+        validate_incremental(
+            spark, corpus, state,
+            rule_set=[R.Rule("uniq_key", "unique_key", column="doc_id")],
+        )
+    r = validate_incremental(spark, corpus, state, rule_set=[])
+    assert r.increment == 1
+    assert _rule_totals(r.verdicts) == {"unique_doc_id": (2, 0)}
+
+
+def test_incremental_spill_mode_equals_default(spark, tmp_path, monkeypatch):
+    """A delta of more input partitions than run_validation's default
+    verdict_spill_threshold takes the runner's spill mode: distributed
+    verdicts (the promoted occurrences' partition -1 row included),
+    spill-mode profile partials, persisted key locations and lazy
+    row-rule violations written after the runner returns. Forced here
+    with a threshold of 0, two increments with cross-increment
+    duplicates give the per-rule totals, violation multiset and metrics
+    of a default-mode state, and leave no cache entry."""
+    from automatic_data_validator_spark import incremental as I
+    from automatic_data_validator_spark import validate as V
+
+    cat = make_media_catalog(spark, 100, seed=42)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    seen = []
+    uniqueness = I._IncrementMerges.uniqueness
+
+    def spy(self, *args, distributed=False, **kw):
+        seen.append(distributed)
+        return uniqueness(self, *args, distributed=distributed, **kw)
+
+    monkeypatch.setattr(I._IncrementMerges, "uniqueness", spy)
+    results = {}
+    for seed, n in ((42, 1500), (43, 600)):
+        batch = make_documents(spark, n, n_media=100, seed=seed, num_partitions=2)
+        for mode, threshold in (("default", 100_000), ("spill", 0)):
+            monkeypatch.setattr(V, "_VERDICT_SPILL_THRESHOLD", threshold)
+            corpus = str(tmp_path / mode / "docs")
+            batch.write.mode("append").parquet(corpus)
+            spark.catalog.clearCache()
+            results[mode] = validate_incremental(
+                spark, corpus, str(tmp_path / mode / "state"), catalog=cat
+            )
+            assert cache.isEmpty(), mode
+    assert seen == [False, True, False, True]
+
+    default, spill = results["default"], results["spill"]
+    assert spill.increment == 1
+    tot = _rule_totals(spill.verdicts)
+    assert tot == _rule_totals(default.verdicts)
+    assert tot["unique_doc_id"][1] > 0
+    # the second increment promoted first-increment occurrences
+    assert spill.verdicts.filter(
+        (F.col("rule_id") == "unique_doc_id") & (F.col("partition_id") == -1)
+        & (F.col("increment") == 1)
+    ).count() == 1
+    assert _viol_multiset(spill.violations) == _viol_multiset(default.violations)
+
+    def metrics(r):
+        return {(m["column"], m["metric"]): m["value"] for m in r.metrics.collect()}
+
+    spill_m, default_m = metrics(spill), metrics(default)
+    assert set(spill_m) == set(default_m)
+    for k, v in default_m.items():
+        if v is None or (isinstance(v, float) and math.isnan(v)):
+            assert spill_m[k] is None or math.isnan(spill_m[k]), k
+        else:
+            assert spill_m[k] == pytest.approx(v, rel=1e-9, abs=1e-9), k
+
+
 def test_read_store_propagates_corrupt_parquet(spark, tmp_path):
     """An unreadable store must raise, not masquerade as 'never
     written' (which would silently skip cross-increment checks —

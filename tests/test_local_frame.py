@@ -201,6 +201,8 @@ RELEASED_CACHE_SCOPE = {
     "rules": None,
     "refcheck": None,
     "dedup": {"uniqueness_check"},
+    # the key-index probe that replaces uniqueness_check in an increment
+    "incremental": {"uniqueness"},
 }
 
 
