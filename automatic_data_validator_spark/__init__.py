@@ -25,15 +25,19 @@ from . import config  # noqa: F401
 from .correct import CorrectionPlan, apply_plan, build_plan, clean, summary_report  # noqa: F401
 from .pipeline import create_package, emit_pipeline, emit_tests  # noqa: F401
 from .profile import (  # noqa: F401
+    correlation_pairs,
+    missing_pattern,
     mixed_type_report,
+    normality_jarque_bera,
     profile,
     profile_partitioned,
     quality_report,
+    shapiro_wilk_column,
+    topk_values,
 )
 from .drift import schema_drift, schema_snapshot  # noqa: F401
 from .dedup import (  # noqa: F401
     hot_prefixes,
-    lsh_oversize_buckets,
     neardup_dedup,
     rebase_neardup_after_compaction,
     salted_repartition,
@@ -45,12 +49,27 @@ from .incremental import (  # noqa: F401
     validate_incremental,
 )
 from .rules import Rule, distributed_verdicts, evaluate_row_rules  # noqa: F401
-from .sources import write_bucketed_table, write_sorted_table  # noqa: F401
+from .schema import CastSpec, apply_cast_plan, suggest_cast_plan, validate_cast_plan  # noqa: F401
+from .sources import (  # noqa: F401
+    read_csv,
+    read_excel,
+    read_json,
+    read_text,
+    write_bucketed_table,
+    write_sorted_table,
+)
 from .state import (  # noqa: F401
     Checkpointer,
     CheckpointRegistry,
     export_summary,
     run_summary,
 )
-from .textops import text_change_report  # noqa: F401
+from .streaming import (  # noqa: F401
+    drift_stream,
+    referential_stream,
+    stateful_uniqueness,
+    validate_stream,
+    windowed_quality,
+)
+from .textops import cleaning_suggestions, fix_encoding_artifacts, text_change_report  # noqa: F401
 from .validate import ValidationResult, canonical_violations, run_validation  # noqa: F401

@@ -10,9 +10,7 @@ from __future__ import annotations
 
 # --- semantic thresholds (reference: config.py:43,56-58) -----------------
 CATEGORICAL_THRESHOLD = 0.05        # unique/total below this => categorical
-MISSING_VALUE_THRESHOLD = 0.5       # columns with > this null share flagged
 OUTLIER_ZSCORE_THRESHOLD = 3.0      # |x - mean| / std above this => outlier
-DUPLICATE_THRESHOLD = 0.1           # duplicate share above this flagged
 HIGH_NULL_DROP_THRESHOLD = 0.9      # reference data_corrector.py:562-565
 IMPUTE_MEDIAN_NULL_SHARE = 0.3      # median if < 30% null else mean
                                     # (reference data_corrector.py:568-577)
@@ -87,7 +85,7 @@ BROADCAST_ROW_LIMIT = 5_000_000
 # LSH band-buckets larger than this are dropped from the candidate
 # self-join (a degenerate bucket — empty/boilerplate texts — goes
 # quadratic: 10^6 identical docs => 5*10^11 pairs from ONE bucket).
-# Dropped buckets are auditable via dedup.lsh_oversize_buckets.
+# neardup_dedup returns the dropped buckets as its oversize audit.
 LSH_MAX_BUCKET_SIZE = 2_000
 # Connected-components pair sets at or below this edge count are solved
 # driver-side with one collect + union-find instead of the iterative

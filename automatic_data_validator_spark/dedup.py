@@ -783,9 +783,9 @@ def minhash_lsh_duplicates(
     hashing identically) would make the self-join quadratic, so buckets
     larger than ``max_bucket_size`` are excluded — and singleton
     buckets are dropped too, shrinking both join inputs. This is a
-    visible cap, not silent truncation: ``lsh_oversize_buckets`` with
-    the same arguments returns exactly what was dropped (callers
-    should surface its count when max_bucket_size matters).
+    visible cap, not silent truncation: ``neardup_dedup`` returns
+    exactly what was dropped as its oversize audit (callers should
+    surface its count when max_bucket_size matters).
     """
     with_bands = _lsh_band_buckets(
         df, id_col, text_col, num_hashes, bands, shingle_k
@@ -863,26 +863,6 @@ def _expand_bucket_lists(grouped: DataFrame) -> DataFrame:
         # l._id < r._id excluded it (round-3 review finding)
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
-    )
-
-
-def lsh_oversize_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """Audit companion to minhash_lsh_duplicates' bucket cap: the
-    (band, bucket, n_docs) rows that exceeded max_bucket_size and were
-    therefore excluded from candidate generation."""
-    return (
-        _lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k)
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket_size)
     )
 
 

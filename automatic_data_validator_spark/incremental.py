@@ -18,8 +18,9 @@ merges (``_IncrementMerges``) for them:
   (doc_id, partition, increment): cross-increment collisions come from
   joining the delta's key set against the index, never from re-reading
   raw documents. At deployment the index should be stored bucketed on
-  doc_id (``sources.write_bucketed_table`` / ``write_iceberg_bucketed``)
-  so this join shuffles only the delta side; here it is plain parquet.
+  doc_id (``sources.write_bucketed_table``, or an Iceberg
+  ``bucket(N, doc_id)`` partition transform) so this join shuffles only
+  the delta side; here it is plain parquet.
 * **drift** — the delta's t-digests are stored per increment and
   merged with every earlier increment's into the corpus digest.
 * **profile metrics** — the aggregate's per-partition algebraic

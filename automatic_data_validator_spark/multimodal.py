@@ -7,7 +7,7 @@ the container has no image/audio libraries — behind
 ``DecodeUnavailable`` or a deterministic fake so tests can assert the
 pipeline shape end-to-end. A production deployment passes
 ``decoder=<bytes -> ndarray>`` (any Pillow/torchvision wrapper) to
-extract_features/resize_images; nothing else changes.
+extract_features; nothing else changes.
 
 Fake/real parity contract (q52): the driver-adjudicated oracle pins
 the FAKE path byte-exactly — feature[i] == payload_byte[i] / 255 for
@@ -32,27 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("media_kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                    T.StructField("mime", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -82,30 +61,6 @@ def _decode_image_fake(payload: bytes, out_dim: int = 16) -> np.ndarray:
     return (arr[: out_dim].astype(np.float32) / 255.0)
 
 
-def synth_media_payloads(catalog: DataFrame, payload_bytes: int = 64) -> DataFrame:
-    """Attach deterministic binary payloads + typed metadata to a media
-    catalog — expression-only (payload = repeated md5 of the ref)."""
-    h = F.md5(F.col("media_ref"))
-    payload = F.to_binary(
-        F.substring(F.repeat(h, (payload_bytes // 16) + 1), 1, payload_bytes * 2), F.lit("hex")
-    )
-    meta = F.struct(
-        (F.pmod(F.xxhash64("media_ref", F.lit("w")), F.lit(1920)) + 16).cast("int").alias("width"),
-        (F.pmod(F.xxhash64("media_ref", F.lit("h")), F.lit(1080)) + 16).cast("int").alias("height"),
-        F.when(
-            F.col("media_kind") == "audio",
-            (F.pmod(F.xxhash64("media_ref", F.lit("d")), F.lit(600_000)) + 1000).cast("int"),
-        ).otherwise(F.lit(None).cast("int")).alias("duration_ms"),
-        F.concat(F.lit("application/x-"), F.col("media_kind")).alias("mime"),
-    )
-    return catalog.select(
-        "media_ref",
-        "media_kind",
-        payload.alias("payload"),
-        meta.alias("meta"),
-    )
-
-
 def extract_features(
     media: DataFrame,
     out_dim: int = 16,
@@ -133,9 +88,9 @@ def extract_features(
             feats, ok = [], []
             for payload in b["payload"]:
                 if payload is None:
-                    # missing media is a decode FAILURE (consistent with
-                    # resize_images), not a zero-vector "success" whose
-                    # zero norm would NaN any cosine consumer
+                    # missing media is a decode FAILURE, not a
+                    # zero-vector "success" whose zero norm would NaN
+                    # any cosine consumer
                     feats.append(None)
                     ok.append(False)
                     continue
@@ -161,71 +116,6 @@ def extract_features(
             )
 
     return media.select("media_ref", "payload").mapInPandas(run, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("resize_ok", T.BooleanType(), False),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame, target_w: int = 224, target_h: int = 224,
-    use_fake_decoder: bool = True,
-    decoder: "Callable[[bytes], np.ndarray] | None" = None,
-) -> DataFrame:
-    """Batch image resize via mapInPandas — the Spark plumbing (schema,
-    Arrow batch shape, metadata rewrite) is real; the pixel work is the
-    stubbed decoder slot like extract_features. The fake path re-emits
-    a deterministic payload digest sized to the target so downstream
-    batch-shape tests are stable; the real slot raises
-    DecodeUnavailable until a codec is wired via ``decoder`` (same
-    injection contract as extract_features)."""
-    import hashlib
-
-    real_decode = decoder or _decode_image_real
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out_payload, ok = [], []
-            for payload in b["payload"]:
-                if payload is None:
-                    # missing media fails before any decoder runs (an
-                    # injected codec need not handle None)
-                    out_payload.append(None)
-                    ok.append(False)
-                    continue
-                try:
-                    # an injected codec is always exercised; otherwise
-                    # the raising real slot gates the non-fake path.
-                    # ANY codec failure routes to resize_ok=false (an
-                    # injected real codec raises its own exception
-                    # types on corrupt payloads, not DecodeUnavailable)
-                    if decoder is not None or not use_fake_decoder:
-                        real_decode(payload)
-                    digest = hashlib.md5(bytes(payload)).digest()
-                    n = max((target_w * target_h) // 64, len(digest))
-                    out_payload.append((digest * (n // len(digest) + 1))[:n])
-                    ok.append(True)
-                except Exception:
-                    out_payload.append(None)
-                    ok.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_ref": b["media_ref"],
-                    "payload": out_payload,
-                    "width": target_w,
-                    "height": target_h,
-                    "resize_ok": ok,
-                }
-            )
-
-    return media.select("media_ref", "payload").mapInPandas(run, RESIZED_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:

@@ -1,10 +1,10 @@
 """Sources & sinks.
 
-Mirrors the reference's file_handler.py surface (CSV/JSON/TXT/Excel
-read, CSV/JSON sink) on Spark readers. Engine-native format is
-parquet (Iceberg table when a catalog is configured — the sandbox has
-no Iceberg runtime, so `read_table` falls back to a parquet dir; the
-call sites don't change).
+Mirrors the reference's file_handler.py read surface (CSV/JSON/TXT/
+Excel) on Spark readers, plus the engine's parquet table writers.
+Engine-native format is parquet (Iceberg table when a catalog is
+configured — the sandbox has no Iceberg runtime, so `read_table`
+falls back to a parquet dir; the call sites don't change).
 
 Reference parity notes:
   * CSV encoding fallback chain utf-8 -> latin-1 -> cp1252
@@ -12,8 +12,8 @@ Reference parity notes:
     encoding; the fallback loop retries the *read definition*, which
     is driver-side metadata only — no data pass until an action.
   * JSON: nested structures are KEPT (our documents are nested by
-    design); the reference's pd.json_normalize flattening
-    (file_handler.py:198-218) is available as `flatten_struct`.
+    design); the reference flattens them with pd.json_normalize
+    (file_handler.py:198-218).
   * Excel (file_handler.py:94-183): driver-side pandas read (openpyxl
     not guaranteed here — import-gated), then Arrow createDataFrame +
     unionByName with `_source_sheet` provenance.
@@ -164,53 +164,6 @@ def read_excel(spark: SparkSession, path: str, sheets: list[str] | None = None) 
     return spark.createDataFrame(book)
 
 
-def write_excel_report(frames: "dict[str, DataFrame]", path: str,
-                       max_rows_per_sheet: int = 100_000) -> None:
-    """Multi-sheet Excel report sink (S8, reference app.py:1067-1121):
-    one sheet per named frame. Driver-side by design — report frames
-    (verdicts, metrics, summaries) are small aggregates; anything big
-    belongs in the parquet sinks, so rows are hard-capped per sheet.
-    openpyxl when available, else the from-scratch stdlib
-    SpreadsheetML writer (xlsx.py)."""
-    try:
-        import openpyxl  # noqa: F401
-
-        have_openpyxl = True
-    except ImportError:
-        have_openpyxl = False
-    try:
-        import pandas as pd
-    except ImportError as e:  # pragma: no cover
-        raise RuntimeError(
-            "pandas required for the Excel report sink; "
-            "use write_output for parquet/csv/json"
-        ) from e
-
-    seen: dict[str, int] = {}
-    sheets: dict[str, tuple] = {}
-    for name, df in frames.items():
-        sheet = name[:31]
-        # Excel's 31-char limit can collide distinct frame names;
-        # suffix deterministically instead of letting a writer rename
-        if sheet in seen:
-            seen[sheet] += 1
-            sheet = f"{sheet[:28]}~{seen[sheet]:02d}"
-        else:
-            seen[sheet] = 0
-        pdf = df.limit(max_rows_per_sheet).toPandas()
-        sheets[sheet] = (list(pdf.columns), pdf.values.tolist())
-    if have_openpyxl:
-        with pd.ExcelWriter(path, engine="openpyxl") as xw:
-            for sheet, (cols, rows) in sheets.items():
-                pd.DataFrame(rows, columns=cols).to_excel(
-                    xw, sheet_name=sheet, index=False
-                )
-    else:
-        from .xlsx import write_xlsx
-
-        write_xlsx(path, sheets)
-
-
 def is_path_like(name_or_path: str) -> bool:
     """True for filesystem/URI inputs (s3://…, hdfs://…, /dir, rel/dir),
     False for catalog table identifiers (db.table). os.path.exists is
@@ -251,28 +204,6 @@ def write_outputs_parallel(frames: "dict[str, DataFrame]", base_dir: str,
         ]
         for f in futs:
             f.result()
-
-
-def write_output(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
-    writer = df.write.mode(mode)
-    if fmt == "csv":
-        writer.option("header", True).csv(path)
-    elif fmt == "json":
-        writer.json(path)
-    else:
-        writer.parquet(path)
-
-
-def flatten_struct(df: DataFrame, sep: str = ".") -> DataFrame:
-    """Opt-in pd.json_normalize analog: expand all top-level structs."""
-    cols = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.StructType):
-            for sub in f.dataType.fields:
-                cols.append(F.col(f"{f.name}.{sub.name}").alias(f"{f.name}{sep}{sub.name}"))
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
 
 
 def file_stats(df: DataFrame) -> dict:
@@ -371,71 +302,3 @@ def write_sorted_table(
     parted.sortWithinPartitions(sort_key).write.mode(mode).parquet(path)
 
 
-def write_iceberg_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    num_buckets: int = 64,
-    mode: str = "createOrReplace",
-) -> None:
-    """Iceberg-NATIVE co-location: persist with the ``bucket(N, key)``
-    partition TRANSFORM via the public DataFrameWriterV2 API
-    (``df.writeTo(t).partitionedBy(F.bucket(N, key))``).
-
-    `write_bucketed_table` above records bucketing only in the
-    Spark/Hive catalog (``bucketBy``/``saveAsTable``) — invisible to
-    Iceberg. The north-star deployment stores the corpus as Iceberg
-    tables, where co-location is expressed as a partition transform
-    that any engine reading the table (and Spark's storage-partitioned
-    joins, SPARK-37375) can exploit; this writer emits that form.
-    ``mode``: createOrReplace | create | append.
-
-    Requires an Iceberg-enabled catalog
-    (``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog``
-    + the iceberg-spark-runtime jar). This sandbox has neither, so the
-    session catalog rejects the transform and this raises RuntimeError
-    with that context — exercised for real on clusters only."""
-    if mode not in ("createOrReplace", "create", "append"):
-        raise ValueError(f"unsupported mode: {mode}")
-    writer = df.writeTo(table_name)
-    if mode != "append":
-        # the transform is table metadata: declared at creation,
-        # inherited by appends. Spark 4 moved the transform functions
-        # to functions.partitioning (F.bucket is deprecated there).
-        try:
-            from pyspark.sql.functions import partitioning as _P
-
-            transform = _P.bucket(num_buckets, F.col(bucket_key))
-        except ImportError:  # Spark 3.x
-            transform = F.bucket(num_buckets, F.col(bucket_key))
-        writer = writer.partitionedBy(transform)
-    try:
-        getattr(writer, mode)()
-    except Exception as e:
-        # re-label ONLY catalog/transform-capability rejections (the
-        # session catalog raises UNSUPPORTED_FEATURE / "does not
-        # support" / transform errors); anything else — table already
-        # exists, missing column, permissions — propagates unchanged
-        # so the operator debugs the real problem, not cluster config
-        # case-insensitive, narrow tokens: Spark 4 raises
-        # UNSUPPORTED_FEATURE / "does not support ..."; Spark 3.x's
-        # session catalog says "transforms cannot be converted to
-        # partition columns". A bare "transform" token would
-        # false-match user errors mentioning a column named
-        # transform_ts (round-5 review finding).
-        msg = str(e).lower()
-        capability = any(
-            s in msg
-            for s in ("unsupported_feature", "does not support",
-                      "cannot be converted to partition columns")
-        )
-        if not capability:
-            raise
-        raise RuntimeError(
-            f"write_iceberg_bucketed('{table_name}') needs a catalog "
-            "with Iceberg partition-transform support "
-            "(spark.sql.catalog.<name> = "
-            "org.apache.iceberg.spark.SparkCatalog and the "
-            "iceberg-spark-runtime jar on the cluster); the current "
-            f"catalog rejected bucket({num_buckets}, {bucket_key}): {e}"
-        ) from e

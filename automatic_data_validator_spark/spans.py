@@ -1,120 +1,19 @@
-"""Span-array operators for the interleaved text+media document model
-(doc_id, spans:array<struct<kind,text,media_ref,offset>>).
+"""Span-array normalization for the interleaved text+media document
+model (doc_id, spans:array<struct<kind,text,media_ref,offset>>).
 
 Descendant of the reference's only nested structure — text chunks
-(text_processor.py:355-426). Everything here is a Catalyst
-higher-order-function expression except ``normalize_spans_arrow``,
-the vectorized Arrow path mandated by input_hint for free-form
-transforms.
+(text_processor.py:355-426). ``normalize_spans_arrow`` is the
+vectorized Arrow path for free-form span transforms.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .synth import SPAN_SCHEMA
-
-
-def span_fingerprint(spans_col: str = "spans") -> Column:
-    """Order-sensitive per-doc fingerprint over the span invariant
-    tuple (kind, text, media_ref, order). Two docs fingerprint equal
-    iff their span sequences are equal (modulo 64-bit collisions).
-
-    A null-pattern mask is hashed alongside the fields: Spark's
-    xxhash64 SKIPS null arguments, so without it
-    (text='x', media_ref=null) and (text=null, media_ref='x') — a
-    structural, not random, collision class — would hash identically."""
-    c = F.col(spans_col)
-
-    def span_hash(s):
-        null_mask = (
-            s["kind"].isNull().cast("int")
-            + s["text"].isNull().cast("int") * 2
-            + s["media_ref"].isNull().cast("int") * 4
-            + s["offset"].isNull().cast("int") * 8
-        )
-        return F.xxhash64(
-            s["kind"], s["text"], s["media_ref"], s["offset"], null_mask
-        )
-
-    per_span = F.transform(c, span_hash)
-    return F.xxhash64(F.array_join(F.transform(per_span, lambda h: h.cast("string")), ","))
-
-
-def span_sequence_key(spans_col: str = "spans") -> Column:
-    """Canonical JSON of the invariant tuple sequence — the exact
-    (collision-free) comparison key for span-sequence equality."""
-    c = F.col(spans_col)
-    return F.to_json(
-        F.transform(
-            c,
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        )
-    )
-
-
-def spans_ordered(spans_col: str = "spans") -> Column:
-    """TRUE iff offsets are strictly increasing (rule W2). Delegates to
-    the lambda-free formulation in rules.py (HOF aggregate measured 20x
-    slower — see rules.span_order_pred)."""
-    from .rules import span_order_pred
-
-    return span_order_pred(spans_col)
-
-
-def text_of(spans_col: str = "spans", sep: str = " ") -> Column:
-    """Concatenated text content of all text spans, in offset order
-    (spans are stored ordered; sort defensively by offset first)."""
-    c = F.array_sort(
-        F.col(spans_col), lambda a, b: F.when(a["offset"] < b["offset"], -1).when(
-            a["offset"] > b["offset"], 1
-        ).otherwise(0)
-    )
-    texts = F.filter(F.transform(c, lambda s: s["text"]), lambda t: t.isNotNull())
-    return F.array_join(texts, sep)
-
-
-def media_refs(spans_col: str = "spans") -> Column:
-    c = F.col(spans_col)
-    return F.filter(F.transform(c, lambda s: s["media_ref"]), lambda r: r.isNotNull())
-
-
-def span_kind_counts(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Corpus-level span histogram by kind — explode-free: per-row
-    counts via higher-order filter, then a plain sum."""
-    kinds = ["text", "image", "audio", "table"]
-
-    def kind_count(k: str):
-        return F.sum(
-            F.size(F.filter(F.col(spans_col), lambda s: s["kind"] == k)).cast("long")
-        ).alias(f"n_{k}")
-
-    aggs = [kind_count(k) for k in kinds]
-    return df.agg(*aggs)
-
-
-def explode_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """(doc_id, span_idx, kind, text, media_ref, offset) — posexplode
-    keeps the original order index for invariant checks."""
-    return df.select(
-        "doc_id", F.posexplode(spans_col).alias("span_idx", "s")
-    ).select(
-        "doc_id",
-        "span_idx",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
 
 
 def normalize_spans_arrow(df: DataFrame, spans_col: str = "spans") -> DataFrame:

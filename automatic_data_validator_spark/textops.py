@@ -8,9 +8,8 @@ Column or DataFrame built purely from ``pyspark.sql.functions``; no
 Python executes per row, so the whole suite stays inside whole-stage
 codegen.
 
-Also provides the training-pipeline text ops: language-ID heuristic,
-quality scoring, token counting (whitespace + BPE-ish regex), and
-rolling-hash document fingerprinting.
+Also provides the training-pipeline text ops: quality scoring and
+BPE-ish token counting.
 """
 
 from __future__ import annotations
@@ -28,39 +27,6 @@ def word_count(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     t = F.trim(c)
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def line_count(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.split(c, "\n"))
-
-
-def sentence_count(col) -> Column:
-    """Sentence count via terminal-punctuation splits (the reference
-    uses nltk.sent_tokenize; this is the declarative approximation,
-    documented divergence per SURVEY.md §7)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.filter(F.split(c, r"[.!?]+"), lambda s: F.trim(s) != ""))
-
-
-def split_sentences(col, mode: str = "regex") -> Column:
-    """array<string> of sentences. mode='regex': terminal-punctuation
-    split (matches sentence_count). mode='locale': Spark's built-in
-    ``sentences()`` (java.text.BreakIterator) — the closest JVM analog
-    to nltk.sent_tokenize (handles abbreviations better than the
-    regex); returns each sentence re-joined from its token array."""
-    c = F.col(col) if isinstance(col, str) else col
-    if mode == "locale":
-        return F.transform(F.sentences(c), lambda s: F.array_join(s, " "))
-    return F.filter(
-        F.transform(F.split(c, r"[.!?]+"), lambda s: F.trim(s)),
-        lambda s: s != "",
-    )
-
-
-def char_count(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
 
 
 # --- cleaning (reference text_processor.py:48-56, 462-548) -----------------
@@ -118,40 +84,6 @@ def english_stopword_ratio(col) -> Column:
     return _let(F.split(F.lower(F.trim(c)), r"\s+"), ratio_of)
 
 
-def is_english(col) -> Column:
-    return english_stopword_ratio(col) > config.EN_STOPWORD_RATIO
-
-
-def lang_id_ngram(col) -> Column:
-    """Tiny n-gram/stopword language classifier: en/es/de/fr/other.
-
-    Heuristic marker-word voting — deterministic, expression-only; a
-    stand-in for a real model at the same plumbing (one withColumn).
-    """
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    markers = {
-        "en": ["the", "and", "of", "to", "is"],
-        "es": ["el", "la", "los", "que", "de"],
-        "de": ["der", "die", "das", "und", "ist"],
-        "fr": ["le", "la", "les", "est", "une"],
-    }
-
-    def best_of(words):
-        def marker_hits(ws: list[str]):
-            arr = F.array(*[F.lit(w) for w in ws])
-            return F.size(F.filter(words, lambda w: F.array_contains(arr, w)))
-
-        scores = [
-            F.struct(marker_hits(ws).alias("n"), F.lit(lang).alias("lang"))
-            for lang, ws in markers.items()
-        ]
-        best = F.array_max(F.array(*scores))
-        return F.when(best["n"] > 0, best["lang"]).otherwise(F.lit("other"))
-
-    # let-bound: one split feeds all four language filters
-    return _let(F.split(F.trim(c), r"\s+"), best_of)
-
-
 # --- quality scoring --------------------------------------------------------
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -195,11 +127,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 # BPE-ish pre-tokenizer: word pieces, numbers, punctuation runs —
 # approximates GPT-2-style regex splitting with RE2-compatible syntax.
 _BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
-
-
-def token_count_ws(col) -> Column:
-    """Whitespace token count."""
-    return word_count(col)
 
 
 def token_count_bpe(col) -> Column:
@@ -260,280 +187,6 @@ def remove_stopwords(col, stopwords: list[str] | None = None) -> Column:
     return F.array_join(kept, " ")
 
 
-# --- fingerprinting ---------------------------------------------------------
-
-def doc_fingerprint(col) -> Column:
-    """Cheap whole-doc fingerprint: xxhash64 of normalized text
-    (lowercased, whitespace-collapsed) — the dedup pre-key."""
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    return F.xxhash64(norm)
-
-
-def rolling_fingerprints(col, window: int = 8) -> Column:
-    """Rolling-hash fingerprints: hash of every `window`-word shingle,
-    keeping the minimum per document (winnowing-lite). Returns bigint.
-    Word array let-bound: the split runs once per row, not per shingle."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    def fp_of(words):
-        n = F.size(words)
-        shingles = F.when(
-            n >= window,
-            F.transform(
-                F.sequence(F.lit(0), n - window),
-                lambda i: F.xxhash64(F.array_join(F.slice(words, i + 1, window), " ")),
-            ),
-        ).otherwise(F.array(F.xxhash64(F.array_join(words, " "))))
-        return F.array_min(shingles)
-
-    return _let(F.split(F.lower(F.trim(c)), r"\s+"), fp_of)
-
-
-# --- stemming / lemmatization (F9) ------------------------------------------
-#
-# The reference's pipeline templates stem/lemmatize with NLTK
-# (text_processor.py:489-518). NLTK is not in this environment, so the
-# Porter stemmer is implemented from scratch below, from the PUBLIC
-# algorithm (M.F. Porter, "An algorithm for suffix stripping",
-# Program 14(3), 1980 — original rule set; NLTK's default mode adds
-# extensions, so a few suffix classes may differ). This is the
-# documented slow-path parity slot: per-unique-token Python inside an
-# Arrow-batched pandas UDF with a batch-level cache — the same
-# execution shape as the reference's per-token NLTK calls, but
-# distributed.
-
-_VOWELS = "aeiou"
-
-
-def _is_cons(w: str, i: int) -> bool:
-    c = w[i]
-    if c in _VOWELS:
-        return False
-    if c == "y":
-        return i == 0 or not _is_cons(w, i - 1)
-    return True
-
-
-def _measure(w: str) -> int:
-    """Porter's m: number of vowel->consonant transitions in w."""
-    m, i, n = 0, 0, len(w)
-    while i < n and _is_cons(w, i):
-        i += 1
-    while i < n:
-        while i < n and not _is_cons(w, i):
-            i += 1
-        if i >= n:
-            break
-        m += 1
-        while i < n and _is_cons(w, i):
-            i += 1
-    return m
-
-
-def _has_vowel(w: str) -> bool:
-    return any(not _is_cons(w, i) for i in range(len(w)))
-
-
-def _ends_double_cons(w: str) -> bool:
-    return len(w) >= 2 and w[-1] == w[-2] and _is_cons(w, len(w) - 1)
-
-
-def _cvc(w: str) -> bool:
-    n = len(w)
-    return (
-        n >= 3
-        and _is_cons(w, n - 1)
-        and not _is_cons(w, n - 2)
-        and _is_cons(w, n - 3)
-        and w[-1] not in "wxy"
-    )
-
-
-_STEP2 = [
-    ("ational", "ate"), ("tional", "tion"), ("enci", "ence"), ("anci", "ance"),
-    ("izer", "ize"), ("abli", "able"), ("alli", "al"), ("entli", "ent"),
-    ("eli", "e"), ("ousli", "ous"), ("ization", "ize"), ("ation", "ate"),
-    ("ator", "ate"), ("alism", "al"), ("iveness", "ive"), ("fulness", "ful"),
-    ("ousness", "ous"), ("aliti", "al"), ("iviti", "ive"), ("biliti", "ble"),
-]
-_STEP3 = [
-    ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
-    ("ical", "ic"), ("ful", ""), ("ness", ""),
-]
-_STEP4 = [
-    "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
-    "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous", "ive", "ize",
-]
-
-
-def porter_stem(word: str) -> str:
-    """Original Porter (1980) stemmer, steps 1a-5b."""
-    w = word
-    if len(w) <= 2:
-        return w
-    # step 1a
-    if w.endswith("sses"):
-        w = w[:-2]
-    elif w.endswith("ies"):
-        w = w[:-2]
-    elif not w.endswith("ss") and w.endswith("s"):
-        w = w[:-1]
-    # step 1b
-    flag_1b = False
-    if w.endswith("eed"):
-        if _measure(w[:-3]) > 0:
-            w = w[:-1]
-    elif w.endswith("ed") and _has_vowel(w[:-2]):
-        w = w[:-2]
-        flag_1b = True
-    elif w.endswith("ing") and _has_vowel(w[:-3]):
-        w = w[:-3]
-        flag_1b = True
-    if flag_1b:
-        if w.endswith(("at", "bl", "iz")):
-            w += "e"
-        elif _ends_double_cons(w) and not w.endswith(("l", "s", "z")):
-            w = w[:-1]
-        elif _measure(w) == 1 and _cvc(w):
-            w += "e"
-    # step 1c
-    if w.endswith("y") and _has_vowel(w[:-1]):
-        w = w[:-1] + "i"
-    # step 2
-    for suf, rep in _STEP2:
-        if w.endswith(suf):
-            stem = w[: -len(suf)]
-            if _measure(stem) > 0:
-                w = stem + rep
-            break
-    # step 3
-    for suf, rep in _STEP3:
-        if w.endswith(suf):
-            stem = w[: -len(suf)]
-            if _measure(stem) > 0:
-                w = stem + rep
-            break
-    # step 4 (longest match first within same ending is implicit in the
-    # list order for the overlapping cases ement/ment/ent)
-    for suf in _STEP4:
-        if w.endswith(suf):
-            stem = w[: -len(suf)]
-            if _measure(stem) > 1 and (suf != "ion" or stem.endswith(("s", "t"))):
-                w = stem
-            break
-    # step 5a
-    if w.endswith("e"):
-        stem = w[:-1]
-        m = _measure(stem)
-        if m > 1 or (m == 1 and not _cvc(stem)):
-            w = stem
-    # step 5b
-    if _measure(w) > 1 and w.endswith("ll"):
-        w = w[:-1]
-    return w
-
-
-# Irregular noun forms (standard English morphology, public
-# linguistic knowledge) — the reference's WordNetLemmatizer defaults
-# to pos='n', so NOUN lemmatization is the behavior to match: it does
-# NOT touch verb inflections ('running' stays 'running' at pos='n'),
-# and neither does this table+rules combination.
-_IRREGULAR_NOUNS = {
-    "children": "child", "men": "man", "women": "woman",
-    "people": "person", "feet": "foot", "teeth": "tooth",
-    "geese": "goose", "mice": "mouse", "lice": "louse", "oxen": "ox",
-    "dice": "die", "indices": "index", "matrices": "matrix",
-    "vertices": "vertex", "appendices": "appendix",
-    "criteria": "criterion", "phenomena": "phenomenon",
-    "data": "datum", "media": "medium", "analyses": "analysis",
-    "bases": "basis", "crises": "crisis", "theses": "thesis",
-    "hypotheses": "hypothesis", "diagnoses": "diagnosis",
-    "parentheses": "parenthesis", "axes": "axis", "series": "series",
-    "species": "species", "corpora": "corpus", "genera": "genus",
-    "alumni": "alumnus", "fungi": "fungus", "nuclei": "nucleus",
-    "radii": "radius", "stimuli": "stimulus", "syllabi": "syllabus",
-    "cacti": "cactus", "foci": "focus", "loci": "locus",
-    "larvae": "larva", "algae": "alga", "antennae": "antenna",
-    "leaves": "leaf", "loaves": "loaf", "knives": "knife",
-    "lives": "life", "wives": "wife", "halves": "half",
-    "calves": "calf", "shelves": "shelf", "wolves": "wolf",
-    "thieves": "thief", "scarves": "scarf", "sheep": "sheep",
-    "deer": "deer", "fish": "fish",
-}
-
-
-def lemmatize_light(word: str) -> str:
-    """Rule-based NOUN lemmatizer — from-scratch parity with the
-    reference's WordNetLemmatizer at its DEFAULT pos='n'
-    (text_processor.py:489-518): irregular forms from the table above,
-    then regular plural suffix rules. Verb/adjective inflections are
-    untouched, exactly as wordnet's noun mode leaves them. Remaining
-    divergence vs wordnet: nouns whose singular genuinely requires the
-    dictionary (e.g. uncountable-only entries) fall through the
-    regular rules, and capitalized forms are lemmatized
-    case-preserved ('Children' -> 'Child') like this function's
-    regular rules ('Tables' -> 'Table'), where wordnet's
-    case-sensitive lookup would return them unchanged."""
-    lw = word.lower()
-    irr = _IRREGULAR_NOUNS.get(lw)
-    if irr is not None:
-        # preserve the input's casing the way the suffix rules below
-        # do naturally — returning the table's lowercase form made
-        # 'Children' the one inconsistent case in the function
-        if word.isupper() and len(word) > 1:
-            return irr.upper()
-        if word[:1].isupper():
-            return irr[:1].upper() + irr[1:]
-        return irr
-    if len(word) <= 3:
-        return word
-    if word.endswith("ies"):
-        return word[:-3] + "y"
-    if word.endswith(("ches", "shes", "xes", "sses", "zes")):
-        return word[:-2]
-    if word.endswith("s") and not word.endswith(("ss", "us", "is")):
-        return word[:-1]
-    return word
-
-
-def stem_text(col, mode: str = "stem") -> Column:
-    """Whitespace-tokenize, stem (or lemmatize) each token, re-join.
-
-    Arrow-batched pandas UDF with a per-batch unique-token cache: real
-    corpora repeat tokens heavily, so the Python stemmer runs once per
-    DISTINCT token per batch, not once per occurrence.
-
-    CONTRACT: this is an explicit OPT-IN transform — the only
-    per-token-Python operator in the package. It must never be
-    composed into the hot validation/profile path (validate.py,
-    profile.py, rules.py reference it nowhere; pinned by
-    test_textops.test_stemmer_stays_out_of_hot_paths)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    fn = porter_stem if mode == "stem" else lemmatize_light
-
-    @pandas_udf("string")
-    def _stem(s):  # -> pd.Series of strings (no annotations: pandas_udf
-        # resolves hints from module globals, and pandas is imported
-        # lazily here; the returnType string above is authoritative)
-        cache: dict[str, str] = {}
-
-        def line(x):
-            if x is None:
-                return None
-            return " ".join(
-                cache.get(t) or cache.setdefault(t, fn(t.lower()))
-                for t in x.split()
-            )
-
-        return s.map(line)
-
-    c = F.col(col) if isinstance(col, str) else col
-    return _stem(c)
-
-
 def cleaning_suggestions(
     df: DataFrame, text_col: str = "text", simple: bool = False
 ) -> "list[dict] | list[str]":
@@ -559,7 +212,9 @@ def cleaning_suggestions(
         ).alias("special_ratio"),
         F.avg(c.rlike(r"\s{2,}").cast("double")).alias("ws"),
         F.avg(has_encoding_artifacts(c).cast("double")).alias("enc"),
-        F.avg(is_english(c).cast("double")).alias("english"),
+        F.avg(
+            (english_stopword_ratio(c) > config.EN_STOPWORD_RATIO).cast("double")
+        ).alias("english"),
     ).collect()[0]
 
     def present(key: str) -> bool:

@@ -1,14 +1,13 @@
-"""From-scratch minimal XLSX reader/writer — stdlib only.
+"""From-scratch minimal XLSX reader — stdlib only.
 
 XLSX is a zip of XML parts (ECMA-376 / ISO 29500 SpreadsheetML, a
 public standard): ``xl/workbook.xml`` lists sheets, each worksheet is
 ``<row><c r="A1" t="s"><v>idx</v></c>…</row>`` rows, strings live in
 ``xl/sharedStrings.xml`` or inline. This sandbox has no openpyxl, so
-the reference's Excel surface (file_handler.py:63-118 multi-sheet
-read via pd.read_excel; app.py:1067-1121 multi-sheet report export)
-is covered by this implementation instead of an import-gated stub:
-``sources.read_excel`` / ``write_excel_report`` fall back here
-automatically when openpyxl is absent.
+the reference's Excel input surface (file_handler.py:63-118
+multi-sheet read via pd.read_excel) is covered by this implementation
+instead of an import-gated stub: ``sources.read_excel`` falls back
+here automatically when openpyxl is absent.
 
 Deliberately minimal and driver-side, matching the reference's scale
 envelope (it hard-caps Excel input at 100 MB, config.py:14): cell
@@ -16,7 +15,7 @@ values + sheet names only — no styles, merged cells, formulas
 (cached values ARE read), charts, or dates-as-serials (a date-styled
 number surfaces as the raw serial; the schema module's detection
 handles strings). Big data belongs in parquet; Excel is an
-interchange format for small reports, and both ends here are bounded.
+interchange format for small inputs.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ from __future__ import annotations
 import re
 import zipfile
 from xml.etree import ElementTree as ET
-from xml.sax.saxutils import escape, quoteattr
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _NS_REL = (
@@ -33,19 +31,10 @@ _NS_REL = (
 _CELL_REF = re.compile(r"([A-Z]+)(\d+)")
 
 # ECMA-376 _xHHHH_ escaping: control characters are invalid in XML 1.0
-# (so raw \x01 in a doc_id would corrupt the whole workbook), and \r —
-# XML-valid — is normalized to \n by every parser on read. Both are
-# escaped the way Excel itself does in sharedStrings; a literal
-# "_xHHHH_" substring gets its leading underscore escaped as _x005F_.
+# and \r is normalized to \n by every parser, so writers (Excel itself
+# in sharedStrings) store them as _xHHHH_; a literal "_xHHHH_" substring
+# is stored with its leading underscore escaped as _x005F_.
 _X_UNESC = re.compile(r"_x([0-9A-Fa-f]{4})_")
-_X_BAD_TEXT = re.compile("[\x00-\x08\x0b-\x1f]")  # keeps \t \n raw
-_X_BAD_ATTR = re.compile("[\x00-\x1f]")  # attrs also normalize \t \n
-
-
-def _esc_oox(s: str, attr: bool = False) -> str:
-    s = _X_UNESC.sub(lambda m: f"_x005F_x{m.group(1)}_", s)
-    bad = _X_BAD_ATTR if attr else _X_BAD_TEXT
-    return bad.sub(lambda m: "_x%04X_" % ord(m.group()), s)
 
 
 def _unesc_oox(s: str) -> str:
@@ -58,16 +47,6 @@ def _col_index(letters: str) -> int:
     for ch in letters:
         i = i * 26 + (ord(ch) - ord("A") + 1)
     return i - 1
-
-
-def _col_letters(i: int) -> str:
-    """0 -> 'A', 26 -> 'AA'."""
-    out = ""
-    i += 1
-    while i:
-        i, r = divmod(i - 1, 26)
-        out = chr(ord("A") + r) + out
-    return out
 
 
 def _si_text(si) -> str:
@@ -145,110 +124,3 @@ def read_xlsx(path: str) -> "dict[str, list[list]]":
     return out
 
 
-def _sheet_xml(columns: list[str], rows: "list[list]") -> bytes:
-    """Worksheet XML: header row + data rows, strings inline (no
-    sharedStrings part needed), numbers/bools as native cells."""
-    parts = ['<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-             '<worksheet xmlns="http://schemas.openxmlformats.org/'
-             'spreadsheetml/2006/main"><sheetData>']
-
-    def cell(ref: str, v) -> str:
-        if v is None:
-            return ""
-        if isinstance(v, bool):
-            return f'<c r="{ref}" t="b"><v>{1 if v else 0}</v></c>'
-        if isinstance(v, (int, float)):
-            # NaN/inf are not valid SpreadsheetML numerics: a report
-            # frame with a NULL double reaches here as float('nan')
-            # via pandas — blank cell for NaN (pandas to_excel
-            # default), inline 'inf'/'-inf' strings (its inf_rep).
-            if isinstance(v, float) and v != v:
-                return ""
-            if isinstance(v, float) and v in (float("inf"), float("-inf")):
-                return (
-                    f'<c r="{ref}" t="inlineStr"><is><t>'
-                    f'{"inf" if v > 0 else "-inf"}</t></is></c>'
-                )
-            return f'<c r="{ref}"><v>{v!r}</v></c>'
-        return (
-            f'<c r="{ref}" t="inlineStr"><is><t xml:space="preserve">'
-            f"{escape(_esc_oox(str(v)))}</t></is></c>"
-        )
-
-    for rix, vals in enumerate([list(columns)] + [list(r) for r in rows]):
-        cells = "".join(
-            cell(f"{_col_letters(cix)}{rix + 1}", v)
-            for cix, v in enumerate(vals)
-        )
-        parts.append(f'<row r="{rix + 1}">{cells}</row>')
-    parts.append("</sheetData></worksheet>")
-    return "".join(parts).encode()
-
-
-def write_xlsx(path: str, sheets: "dict[str, tuple[list[str], list[list]]]") -> None:
-    """Write {sheet_name: (columns, rows)} as a minimal valid xlsx."""
-    if not sheets:
-        raise ValueError("write_xlsx: no sheets")
-    names = list(sheets)
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
-        overrides = "".join(
-            f'<Override PartName="/xl/worksheets/sheet{i + 1}.xml" '
-            'ContentType="application/vnd.openxmlformats-officedocument.'
-            'spreadsheetml.worksheet+xml"/>'
-            for i in range(len(names))
-        )
-        z.writestr(
-            "[Content_Types].xml",
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            '<Types xmlns="http://schemas.openxmlformats.org/package/2006/'
-            'content-types">'
-            '<Default Extension="rels" ContentType="application/vnd.'
-            'openxmlformats-package.relationships+xml"/>'
-            '<Default Extension="xml" ContentType="application/xml"/>'
-            '<Override PartName="/xl/workbook.xml" ContentType="application/'
-            "vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"
-            f'"/>{overrides}</Types>',
-        )
-        z.writestr(
-            "_rels/.rels",
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            '<Relationships xmlns="http://schemas.openxmlformats.org/'
-            'package/2006/relationships">'
-            '<Relationship Id="rId1" Type="http://schemas.openxmlformats.'
-            'org/officeDocument/2006/relationships/officeDocument" '
-            'Target="xl/workbook.xml"/></Relationships>',
-        )
-        # attribute context: escape() alone leaves double quotes raw,
-        # which would terminate the name="…" attribute early; control
-        # chars AND \t \n \r need _xHHHH_ (attribute-value
-        # normalization would fold the whitespace ones to spaces)
-        sheet_tags = "".join(
-            f'<sheet name={quoteattr(_esc_oox(n, attr=True))} '
-            f'sheetId="{i + 1}" r:id="rId{i + 1}"/>'
-            for i, n in enumerate(names)
-        )
-        z.writestr(
-            "xl/workbook.xml",
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            '<workbook xmlns="http://schemas.openxmlformats.org/'
-            'spreadsheetml/2006/main" xmlns:r="http://schemas.'
-            'openxmlformats.org/officeDocument/2006/relationships">'
-            f"<sheets>{sheet_tags}</sheets></workbook>",
-        )
-        rels = "".join(
-            f'<Relationship Id="rId{i + 1}" Type="http://schemas.'
-            'openxmlformats.org/officeDocument/2006/relationships/'
-            f'worksheet" Target="worksheets/sheet{i + 1}.xml"/>'
-            for i in range(len(names))
-        )
-        z.writestr(
-            "xl/_rels/workbook.xml.rels",
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            '<Relationships xmlns="http://schemas.openxmlformats.org/'
-            f'package/2006/relationships">{rels}</Relationships>',
-        )
-        for i, n in enumerate(names):
-            columns, rows = sheets[n]
-            z.writestr(
-                f"xl/worksheets/sheet{i + 1}.xml", _sheet_xml(columns, rows)
-            )

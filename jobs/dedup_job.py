@@ -115,8 +115,8 @@ def main(argv: list[str] | None = None) -> int:
 
     docs = read_table(spark, args.documents)
     # the audit comes from neardup_dedup's own banded frame — a
-    # separate lsh_oversize_buckets call would re-run the signature
-    # UDF over the whole corpus (round-4 review finding)
+    # separate audit pass would re-run the signature UDF over the
+    # whole corpus (round-4 review finding)
     kept, drop_list, pairs, audit = neardup_dedup(
         docs, args.id_col, args.text_col, jaccard_threshold=args.tau,
         num_hashes=args.num_hashes, bands=args.bands, shingle_k=args.shingle_k,

@@ -7,7 +7,10 @@ these interpreted versions are several-fold slower but state the
 definition directly, so the tests pin the kernels to them: the
 signatures bit for bit, the top-k rank for rank. The Column-API LSH
 band builder is kept the same way: the package builds the identical
-expression tree from one SQL string.
+expression tree from one SQL string. ``lsh_oversize_buckets`` is the
+reference for ``neardup_dedup``'s oversize audit, and
+``span_sequence_key`` the exact key of the per-row span-sequence
+invariant.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from automatic_data_validator_spark import config
 from automatic_data_validator_spark import dedup as D
 from automatic_data_validator_spark import similarity as S
 
@@ -109,4 +113,42 @@ def lsh_band_buckets_columns(
         .select("_id", F.explode_outer("_bb").alias("bb"))
         .filter(F.col("bb").isNotNull())
         .select("_id", "bb.band", "bb.bucket")
+    )
+
+
+def lsh_oversize_buckets(
+    df,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 16,
+    bands: int = 4,
+    shingle_k: int = 3,
+    max_bucket_size: int = config.LSH_MAX_BUCKET_SIZE,
+):
+    """The (band, bucket, n_docs) rows that exceed max_bucket_size and
+    are therefore excluded from candidate generation: an independent
+    groupBy over the package's band builder."""
+    return (
+        D._lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k)
+        .groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .filter(F.col("n_docs") > max_bucket_size)
+    )
+
+
+def span_sequence_key(spans_col: str = "spans"):
+    """Canonical JSON of the (kind, text, media_ref, offset) sequence —
+    the exact (collision-free) comparison key for span-sequence
+    equality."""
+    c = F.col(spans_col)
+    return F.to_json(
+        F.transform(
+            c,
+            lambda s: F.struct(
+                s["kind"].alias("kind"),
+                s["text"].alias("text"),
+                s["media_ref"].alias("media_ref"),
+                s["offset"].alias("offset"),
+            ),
+        )
     )

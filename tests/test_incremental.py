@@ -356,7 +356,7 @@ def test_increment_reads_delta_once(spark, tmp_path):
     rows are the delta's plus those of the stores and the catalog it
     reads (the earlier increments' key index, the profile partials);
     one read per check would add >= 3 more delta passes."""
-    from automatic_data_validator_spark.introspect import source_records
+    from scan_counters import source_records
 
     corpus = str(tmp_path / "docs")
     state = str(tmp_path / "state")

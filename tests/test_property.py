@@ -232,7 +232,9 @@ def _expected_cell(v):
     rows=st.lists(st.lists(_XLSX_CELL, min_size=5, max_size=5), max_size=6),
 )
 def test_xlsx_roundtrip_property(tmp_path_factory, name, header, rows):
-    from automatic_data_validator_spark.xlsx import read_xlsx, write_xlsx
+    from fixtures import write_xlsx
+
+    from automatic_data_validator_spark.xlsx import read_xlsx
 
     header = (header + [""] * 5)[:5]
     path = str(tmp_path_factory.mktemp("xlsx") / "p.xlsx")

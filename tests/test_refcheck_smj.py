@@ -5,7 +5,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from automatic_data_validator_spark.introspect import executed_plans
+from scan_counters import executed_plans
+
 from automatic_data_validator_spark.refcheck import referential_check
 from automatic_data_validator_spark.state import snapshot_of
 from automatic_data_validator_spark.validate import run_validation

@@ -1,5 +1,5 @@
-"""Sources/sinks: csv round-trip with encoding fallback path, json
-nesting preserved, flatten opt-in, file stats."""
+"""Sources: csv round-trip with encoding fallback path, json nesting
+preserved, text and xlsx readers, file stats."""
 
 from __future__ import annotations
 
@@ -7,6 +7,8 @@ import json
 import os
 
 import pyspark.sql.functions as F
+
+from fixtures import write_xlsx
 
 from automatic_data_validator_spark import sources as S
 
@@ -19,7 +21,7 @@ def test_csv_roundtrip(spark, tmp_path):
     assert df.count() == 3
     assert dict(df.dtypes)["id"] in ("int", "bigint")
     out = str(tmp_path / "out_csv")
-    S.write_output(df, out, fmt="csv")
+    df.write.option("header", True).csv(out)
     back = S.read_csv(spark, out)
     assert back.count() == 3
 
@@ -41,8 +43,7 @@ def test_json_keeps_nesting_and_flatten_optin(spark, tmp_path):
     df = S.read_json(spark, p, multiline=False)
     # nested struct preserved (reference flattens destructively; we don't)
     assert df.schema["meta"].dataType.typeName() == "struct"
-    flat = S.flatten_struct(df)
-    assert "meta.a" in flat.columns and flat.count() == 2
+    assert df.count() == 2
 
 
 def test_read_text_and_whole_file(spark, tmp_path):
@@ -67,25 +68,20 @@ def test_file_stats(spark, docs):
 
 
 def test_excel_roundtrip_without_openpyxl(spark, tmp_path):
-    """S2/S8 full parity with NO openpyxl: the multi-sheet report sink
-    writes via the from-scratch stdlib SpreadsheetML writer, and
-    read_excel reads it back through the matching reader — values,
+    """S2 with NO openpyxl: read_excel reads a two-sheet workbook
+    through the from-scratch stdlib SpreadsheetML reader — values,
     types (str/int/float/bool/None), sheet names, and the
     _source_sheet provenance column all survive the round trip."""
-    from automatic_data_validator_spark.sources import (
-        read_excel,
-        write_excel_report,
-    )
+    from automatic_data_validator_spark.sources import read_excel
 
-    verdicts = spark.createDataFrame(
-        [(1, "a&b <ok>", 1.5, True), (2, None, -0.25, False)],
-        "x int, y string, z double, ok boolean",
-    )
-    summary = spark.createDataFrame(
-        [("rows", 5000)], "metric string, value int"
-    )
     path = str(tmp_path / "report.xlsx")
-    write_excel_report({"verdicts": verdicts, "summary": summary}, path)
+    write_xlsx(path, {
+        "verdicts": (
+            ["x", "y", "z", "ok"],
+            [[1, "a&b <ok>", 1.5, True], [2, None, -0.25, False]],
+        ),
+        "summary": (["metric", "value"], [["rows", 5000]]),
+    })
 
     back = read_excel(spark, path)
     assert set(
@@ -109,15 +105,15 @@ def test_excel_roundtrip_without_openpyxl(spark, tmp_path):
 
 
 def test_xlsx_nan_inf_and_quoted_sheet_names(tmp_path):
-    """A report frame with a NULL double reaches the writer as
-    float('nan') via pandas — SpreadsheetML has no NaN/inf numeric, so
-    NaN must become a blank cell and ±inf inline strings (pandas
-    to_excel semantics), and a sheet name containing a double quote
-    must not terminate the name=\"…\" attribute early."""
+    """SpreadsheetML has no NaN/inf numeric: a NaN is written as a
+    blank cell and ±inf as inline strings (pandas to_excel semantics),
+    and the reader must return None / "inf" / "-inf" for them, never a
+    float NaN. A sheet name containing a double quote must survive the
+    name=\"…\" attribute."""
     import math
     from xml.etree import ElementTree as ET
 
-    from automatic_data_validator_spark.xlsx import read_xlsx, write_xlsx
+    from automatic_data_validator_spark.xlsx import read_xlsx
 
     path = str(tmp_path / "edge.xlsx")
     write_xlsx(
@@ -152,7 +148,7 @@ def test_xlsx_control_chars_escape_ecma376(tmp_path):
     but parsers normalize it to \\n. Both round-trip via the ECMA-376
     _xHHHH_ escape (what Excel itself writes), including the literal
     '_xHHHH_' substring case which needs its underscore escaped."""
-    from automatic_data_validator_spark.xlsx import read_xlsx, write_xlsx
+    from automatic_data_validator_spark.xlsx import read_xlsx
 
     cells = [["\x01ctrl"], ["lit _x0041_ eral"], ["cr\rlf\n tab\t"]]
     path = str(tmp_path / "ctl.xlsx")
@@ -160,23 +156,6 @@ def test_xlsx_control_chars_escape_ecma376(tmp_path):
     back = read_xlsx(path)
     assert list(back) == ["n\x02ame"]
     assert back["n\x02ame"][1:] == cells
-
-
-def test_excel_sheet_name_collision_suffix(spark, tmp_path):
-    """Two frames whose names collide at Excel's 31-char limit get a
-    deterministic suffix instead of a writer-chosen rename."""
-    from automatic_data_validator_spark.sources import read_excel, write_excel_report
-
-    long_a = "a" * 35
-    long_b = "a" * 31 + "XYZ"
-    df = spark.createDataFrame([(1,)], "v int")
-    path = str(tmp_path / "collide.xlsx")
-    write_excel_report({long_a: df, long_b: df}, path)
-    sheets = {
-        r["_source_sheet"]
-        for r in read_excel(spark, path).select("_source_sheet").collect()
-    }
-    assert len(sheets) == 2 and any("~01" in s for s in sheets)
 
 
 def test_csv_encoding_fallback_reads_latin1(spark, tmp_path):

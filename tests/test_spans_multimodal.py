@@ -1,24 +1,17 @@
-"""Span operators: fingerprints, sequence invariant, Arrow normalize;
-multimodal plumbing with stubbed decode."""
+"""Span normalization (sequence invariant, Arrow rebuild) and the span
+order predicate; multimodal plumbing with stubbed decode."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from fixtures import synth_media_payloads
+from oracles import span_sequence_key
+
 from automatic_data_validator_spark import spans as SP
 from automatic_data_validator_spark import multimodal as MM
+from automatic_data_validator_spark.rules import span_order_pred
 from automatic_data_validator_spark.synth import make_media_catalog
-
-
-def test_span_fingerprint_order_sensitive(spark):
-    a = [("d1", [{"kind": "text", "text": "a", "media_ref": None, "offset": 0},
-                 {"kind": "text", "text": "b", "media_ref": None, "offset": 1}])]
-    b = [("d1", [{"kind": "text", "text": "b", "media_ref": None, "offset": 0},
-                 {"kind": "text", "text": "a", "media_ref": None, "offset": 1}])]
-    schema = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    fa = spark.createDataFrame(a, schema).select(SP.span_fingerprint().alias("f")).collect()[0]["f"]
-    fb = spark.createDataFrame(b, schema).select(SP.span_fingerprint().alias("f")).collect()[0]["f"]
-    assert fa != fb
 
 
 def test_span_sequence_equality_invariant(spark, docs):
@@ -28,8 +21,8 @@ def test_span_sequence_equality_invariant(spark, docs):
     # doc_id is not unique (synth injects dups), so compare multisets of
     # (doc_id, span_sequence_key) — synth text is already
     # whitespace-normalized, so keys must be preserved exactly
-    a = docs.select("doc_id", SP.span_sequence_key().alias("k"))
-    b = normalized.select("doc_id", SP.span_sequence_key().alias("k"))
+    a = docs.select("doc_id", span_sequence_key().alias("k"))
+    b = normalized.select("doc_id", span_sequence_key().alias("k"))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
@@ -58,26 +51,15 @@ def test_normalize_spans_handles_empty_and_null(spark):
     assert got2 == {"e1": [], "e2": None}
 
 
-def test_explode_and_text_extraction(spark, docs):
-    ex = SP.explode_spans(docs)
-    assert set(ex.columns) == {"doc_id", "span_idx", "kind", "text", "media_ref", "offset"}
-    n_spans = docs.select(F.sum(F.size("spans"))).collect()[0][0]
-    assert ex.count() == n_spans
-    t = docs.select("doc_id", SP.text_of().alias("txt")).filter(F.length("txt") > 0)
-    assert t.count() > 0
-    kc = SP.span_kind_counts(docs).collect()[0]
-    assert kc["n_text"] > 0 and kc["n_text"] + kc["n_image"] + kc["n_audio"] + kc["n_table"] == n_spans
-
-
 def test_spans_ordered_flag_matches_rule(spark, docs):
-    flags = docs.select(SP.spans_ordered().alias("ok"))
+    flags = docs.select(span_order_pred("spans").alias("ok"))
     bad = flags.filter(~F.col("ok")).count()
     assert bad > 0  # synth injects ~0.3%
 
 
 def test_multimodal_pipeline_with_fake_decoder(spark):
     cat = make_media_catalog(spark, 200)
-    media = MM.synth_media_payloads(cat, payload_bytes=64)
+    media = synth_media_payloads(cat, payload_bytes=64)
     assert media.schema["payload"].dataType.typeName() == "binary"
     feats = MM.extract_features(media, out_dim=8)
     rows = feats.collect()
@@ -91,28 +73,11 @@ def test_multimodal_pipeline_with_fake_decoder(spark):
 
 def test_frame_sample_plan(spark):
     cat = make_media_catalog(spark, 100)
-    media = MM.synth_media_payloads(cat)
+    media = synth_media_payloads(cat)
     frames = MM.frame_sample_plan(media, every_ms=60_000)
     audio = media.filter("media_kind = 'audio'").count()
     assert frames.select("media_ref").distinct().count() == audio
     assert frames.filter("frame_ts_ms % 60000 != 0").count() == 0
-
-
-def test_resize_images_plumbing(spark):
-    cat = make_media_catalog(spark, 50)
-    media = MM.synth_media_payloads(cat, payload_bytes=64)
-    resized = MM.resize_images(media, target_w=64, target_h=64)
-    rows = resized.collect()
-    assert len(rows) == 50
-    assert all(r["width"] == 64 and r["height"] == 64 for r in rows)
-    assert all(r["resize_ok"] and len(r["payload"]) == 64 for r in rows)
-    # deterministic: same input -> identical payloads across runs
-    again = {r["media_ref"]: bytes(r["payload"])
-             for r in MM.resize_images(media, 64, 64).collect()}
-    assert all(bytes(r["payload"]) == again[r["media_ref"]] for r in rows)
-    # real-decoder slot degrades to resize_ok=false, not a crash
-    real = MM.resize_images(media, 64, 64, use_fake_decoder=False).collect()
-    assert all(not r["resize_ok"] for r in real)
 
 
 def test_normalize_preserves_null_span_elements(spark):
@@ -133,19 +98,6 @@ def test_normalize_preserves_null_span_elements(spark):
     assert out[2]["media_ref"] == "m-9"
 
 
-def test_span_fingerprint_distinguishes_null_field_patterns(spark):
-    """xxhash64 skips null args; the null-pattern mask must keep
-    (text='x', media_ref=null) distinct from (text=null, media_ref='x')."""
-    schema = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    a = spark.createDataFrame(
-        [("d", [{"kind": "k", "text": "x", "media_ref": None, "offset": 0}])], schema)
-    b = spark.createDataFrame(
-        [("d", [{"kind": "k", "text": None, "media_ref": "x", "offset": 0}])], schema)
-    fa = a.select(SP.span_fingerprint().alias("f")).collect()[0]["f"]
-    fb = b.select(SP.span_fingerprint().alias("f")).collect()[0]["f"]
-    assert fa != fb
-
-
 def test_real_decoder_slot_activates_when_codec_injected(spark):
     """Directive: prove the real-decoder slot is live plumbing, not
     dead code — inject a working bytes->ndarray codec and the SAME
@@ -163,7 +115,7 @@ def test_real_decoder_slot_activates_when_codec_injected(spark):
         )
 
     cat = make_media_catalog(spark, 60)
-    media = MM.synth_media_payloads(cat, payload_bytes=32)
+    media = synth_media_payloads(cat, payload_bytes=32)
     # without a codec the real path fails closed (existing contract)
     gated = MM.extract_features(media, out_dim=8, use_fake_decoder=False)
     assert all(not r["decode_ok"] for r in gated.collect())
@@ -176,11 +128,6 @@ def test_real_decoder_slot_activates_when_codec_injected(spark):
     for r in live:
         want = [float(x) for x in payloads[r["media_ref"]][:8]]
         assert r["feature"] == want
-    # resize: same injection contract
-    resized = MM.resize_images(
-        media, 32, 32, use_fake_decoder=False, decoder=_toy_decoder
-    ).collect()
-    assert all(r["resize_ok"] for r in resized)
 
 
 def test_injected_decoder_skips_null_payloads(spark):
@@ -200,15 +147,12 @@ def test_injected_decoder_skips_null_payloads(spark):
     feats = {r["media_ref"]: r for r in MM.extract_features(
         media, out_dim=4, decoder=touchy).collect()}
     assert feats["m-1"]["decode_ok"] and not feats["m-2"]["decode_ok"]
-    rs = {r["media_ref"]: r for r in MM.resize_images(
-        media, 16, 16, decoder=touchy).collect()}
-    assert rs["m-1"]["resize_ok"] and not rs["m-2"]["resize_ok"]
 
 
 def test_injected_decoder_failures_route_per_row(spark):
     """Round-5 review fix: a real codec raises its OWN exception types
     on corrupt payloads (not DecodeUnavailable) — one bad payload must
-    land as decode_ok/resize_ok=False, never abort the job; and a
+    land as decode_ok=False, never abort the job; and a
     codec returning FEWER than out_dim elements is zero-padded like
     the fake path (ANSI element_at(feature, out_dim) must stay safe)."""
     media = spark.createDataFrame(
@@ -233,7 +177,3 @@ def test_injected_decoder_failures_route_per_row(spark):
     # 2-byte payload decodes to 2 elements -> padded to out_dim=4
     assert rows["m-short"]["decode_ok"]
     assert rows["m-short"]["feature"] == [1.0, 2.0, 0.0, 0.0]
-    rs = {r["media_ref"]: r for r in MM.resize_images(
-        media, 16, 16, decoder=picky).collect()}
-    assert rs["m-ok"]["resize_ok"] and rs["m-short"]["resize_ok"]
-    assert not rs["m-corrupt"]["resize_ok"]
