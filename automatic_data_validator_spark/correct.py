@@ -27,7 +27,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import config
 from .profile import ProfileResult, profile

@@ -1155,14 +1155,15 @@ def dedup_keep_representatives(
     outside any pair are untouched.
 
     On the driver path (pair graph under CC_DRIVER_EDGE_LIMIT) the
-    drop list is a local relation built from the union-find labels.
-    Otherwise it is localCheckpoint'ed (it is small by the pipeline's
-    own contract) so the connected-components cache can be RELEASED
-    here instead of leaking for the session (round-4 review finding) —
-    previously the persisted comps frame had no handle for callers to
-    unpersist, and dropping the cache without materializing first
-    would make later actions replay the iterative label plan
-    exponentially (each round references the previous one twice)."""
+    drop list is a one-partition local relation built from the
+    union-find labels, so it is written as one file. Otherwise it is
+    localCheckpoint'ed (it is small by the pipeline's own contract) so
+    the connected-components cache can be RELEASED here instead of
+    leaking for the session (round-4 review finding) — previously the
+    persisted comps frame had no handle for callers to unpersist, and
+    dropping the cache without materializing first would make later
+    actions replay the iterative label plan exponentially (each round
+    references the previous one twice)."""
     labels = _driver_labels(pairs, config.CC_DRIVER_EDGE_LIMIT)
     if labels is not None:
         # driver fast path (r6): the union-find already holds every
@@ -1173,11 +1174,13 @@ def dedup_keep_representatives(
         # distributed path's filter(doc_id != component) over the same
         # fixpoint labels.
         # a local relation: its rows already live in the JVM plan, so
-        # there is nothing to checkpoint
+        # there is nothing to checkpoint. One partition, like
+        # run_validation's driver-held frames: one file when written,
+        # not one per default slice
         drop_rows = sorted((x, r) for x, r in labels.items() if x != r)
         drop_list = local_frame(
             df.sparkSession, drop_rows, _label_schema(pairs)
-        )
+        ).coalesce(1)
         n_drop = len(drop_rows)
     else:
         comps = connected_dup_groups(pairs)

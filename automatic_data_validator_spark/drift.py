@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import local_frame
+from .sources import parquet_writer
 
 
 # --- t-digest ---------------------------------------------------------------
@@ -345,10 +346,10 @@ def save_grouped_baseline(
         for g, cols in sketches.items()
         for c, d in cols.items()
     ]
-    local_frame(
+    parquet_writer(local_frame(
         spark, rows,
         "snapshot_id string, group string, column string, sketch string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    ).coalesce(1)).parquet(path)
 
 
 def load_grouped_baseline(
@@ -576,9 +577,9 @@ def save_baseline(
     a later run loads + merges-free compares without rescanning the
     baseline data."""
     rows = [(snapshot_id, c, d.serialize()) for c, d in sketches.items()]
-    local_frame(
+    parquet_writer(local_frame(
         spark, rows, "snapshot_id string, column string, sketch string"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    ).coalesce(1)).parquet(path)
 
 
 def load_baseline(spark, path: str) -> "dict[str, TDigest]":

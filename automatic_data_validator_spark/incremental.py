@@ -71,6 +71,7 @@ from . import config
 from . import rules as R
 from .profile import finalize_partial_profile
 from .session import local_frame
+from .sources import parquet_writer
 from .state import LINEAGE_SCHEMA
 
 _MANIFEST = "manifest.json"
@@ -234,13 +235,9 @@ def _write_inc(
         ).sortWithinPartitions(sort_key)
     elif num_files:
         df = df.repartition(num_files)
-    (
-        df.withColumn("increment", F.lit(inc))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("increment")
-        .parquet(path)
-    )
+    parquet_writer(
+        df.withColumn("increment", F.lit(inc)), partition_by="increment"
+    ).option("partitionOverwriteMode", "dynamic").parquet(path)
 
 
 def _read_store(
@@ -429,7 +426,7 @@ def validate_incremental(
                                sort_key="doc_id"),
         ]
         if res.metrics is not None:
-            writes.append(lambda: res.metrics.write.mode("overwrite")
+            writes.append(lambda: parquet_writer(res.metrics)
                           .parquet(path("metrics")))
         # the stores are independent: write them concurrently (Spark
         # job submission is thread-safe; same rationale as
@@ -569,7 +566,7 @@ def _swap_store(
     out = frame.coalesce(n_files)
     if sort_key:
         out = out.sortWithinPartitions("increment", sort_key)
-    out.write.mode("overwrite").partitionBy("increment").parquet(tmp)
+    parquet_writer(out, partition_by="increment").parquet(tmp)
     bak = live + _COMPACT_BAK
     os.rename(live, bak)
     os.rename(tmp, live)
@@ -870,7 +867,7 @@ def expire_increments(
     n_exp = 0 if viol is None else viol.filter(newly_expired).count()
     if n_exp:
         if archive_dir is not None:
-            viol.filter(newly_expired).write.mode("append").parquet(
+            parquet_writer(viol.filter(newly_expired), "append").parquet(
                 archive_dir
             )
             report["archive_dir"] = archive_dir

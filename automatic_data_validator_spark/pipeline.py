@@ -40,6 +40,7 @@ from pyspark.sql import SparkSession
 
 from automatic_data_validator_spark import rules as R
 from automatic_data_validator_spark.correct import CorrectionPlan, apply_plan
+from automatic_data_validator_spark.sources import parquet_writer
 from automatic_data_validator_spark.validate import run_validation
 
 RULESET = json.loads({ruleset_literal})
@@ -64,17 +65,18 @@ def run(spark, inp, out):
                          checkpoint_dir=out + "/_checkpoints",
                          snapshot_id="auto",
                          rule_version="{rule_version}")
-    res.verdicts.write.mode("overwrite").parquet(out + "/verdicts")
-    res.violations.write.mode("overwrite").parquet(out + "/violations")
+    # zstd, like every parquet file the engine writes
+    parquet_writer(res.verdicts).parquet(out + "/verdicts")
+    parquet_writer(res.violations).parquet(out + "/violations")
     if res.metrics is not None:
-        res.metrics.write.mode("overwrite").parquet(out + "/metrics")
-    res.lineage.write.mode("overwrite").parquet(out + "/lineage")
+        parquet_writer(res.metrics).parquet(out + "/metrics")
+    parquet_writer(res.lineage).parquet(out + "/lineage")
     if PLAN is not None:
         plan_dict = dict(PLAN)
         plan_dict["caps"] = {{k: tuple(v) for k, v in (plan_dict.get("caps") or {{}}).items()}}
         plan = CorrectionPlan(**plan_dict)
         cleaned = apply_plan(df, plan)
-        cleaned.write.mode("overwrite").parquet(out + "/cleaned")
+        parquet_writer(cleaned).parquet(out + "/cleaned")
     return res
 
 

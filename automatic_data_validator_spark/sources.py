@@ -6,6 +6,11 @@ Engine-native format is parquet (Iceberg table when a catalog is
 configured — the sandbox has no Iceberg runtime, so `read_table`
 falls back to a parquet dir; the call sites don't change).
 
+Every parquet file the engine writes (outputs, checkpoints, state
+stores, baselines) goes through ``parquet_writer``, which sets the
+zstd codec. This module imports nothing from the package, so any
+module can use the writer without an import cycle.
+
 Reference parity notes:
   * CSV encoding fallback chain utf-8 -> latin-1 -> cp1252
     (file_handler.py:72-92): Spark reads bytes with a declared
@@ -23,7 +28,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -185,18 +190,39 @@ def read_table(spark: SparkSession, name_or_path: str) -> DataFrame:
     return spark.read.table(name_or_path)
 
 
+def parquet_writer(
+    df: DataFrame, mode: str = "overwrite", partition_by: str | None = None
+) -> DataFrameWriter:
+    """The engine's one parquet writer: ``df.write`` in ``mode`` with
+    zstd compression, partitioned by ``partition_by`` when given.
+
+    zstd is Iceberg's default parquet codec
+    (``write.parquet.compression-codec``); Spark's own default is
+    snappy. On the near-dup kept corpus zstd files are about half the
+    snappy bytes for a few percent more write time, and every byte the
+    engine writes is stored, listed and read again downstream. The
+    codec is set per write, never as a session conf, so a caller's own
+    writes keep Spark's default. Readers need nothing: parquet records
+    the codec per column chunk, so snappy files written before still
+    read, alone or mixed with zstd ones in one store, and footer
+    min/max statistics (file pruning) do not depend on the codec."""
+    writer = df.write.mode(mode).option("compression", "zstd")
+    return writer.partitionBy(partition_by) if partition_by else writer
+
+
 def write_outputs_parallel(frames: "dict[str, DataFrame]", base_dir: str,
                            mode: str = "overwrite") -> None:
-    """Write several independent DataFrames as parquet under
-    base_dir/<name> with CONCURRENT job submission — sequential writes
-    leave executor slots idle during each job's small final stages.
-    Shared by bench.py and jobs/validate_job.py."""
+    """Write several independent DataFrames as zstd parquet (through
+    ``parquet_writer``) under base_dir/<name>, with CONCURRENT job
+    submission — sequential writes leave executor slots idle during
+    each job's small final stages. Shared by bench.py, perfbench and
+    the jobs in ``jobs/``."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=max(len(frames), 1)) as pool:
         futs = [
             pool.submit(
-                lambda df=df, name=name: df.write.mode(mode).parquet(
+                lambda df=df, name=name: parquet_writer(df, mode).parquet(
                     f"{base_dir}/{name}"
                 )
             )
@@ -252,7 +278,8 @@ def write_bucketed_table(
     records bucketing metadata in the catalog — plain
     ``.parquet(path)`` cannot express it."""
     writer = (
-        df.write.mode(mode).format("parquet").bucketBy(num_buckets, bucket_key)
+        parquet_writer(df, mode).format("parquet")
+        .bucketBy(num_buckets, bucket_key)
     )
     if sort_by:
         writer = writer.sortBy(sort_by)
@@ -299,6 +326,6 @@ def write_sorted_table(
         if num_files is not None
         else df.repartitionByRange(key)
     )
-    parted.sortWithinPartitions(sort_key).write.mode(mode).parquet(path)
+    parquet_writer(parted.sortWithinPartitions(sort_key), mode).parquet(path)
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import local_frame
+from .sources import parquet_writer
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -126,7 +127,7 @@ class Checkpointer:
         return os.path.join(self.root, phase, artifact)
 
     def write(self, phase: str, artifact: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.phase_dir(phase, artifact))
+        parquet_writer(df).parquet(self.phase_dir(phase, artifact))
 
     def read(self, spark: SparkSession, phase: str, artifact: str) -> DataFrame:
         return spark.read.parquet(self.phase_dir(phase, artifact))

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from . import rules as R
 from .session import local_frame
+from .sources import parquet_writer
 
 
 def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
@@ -25,13 +26,9 @@ def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
     batch_id + dynamic partition overwrite, so a micro-batch replayed
     after a crash rewrites ITS partition instead of appending duplicate
     rows (foreachBatch requires idempotent sinks for exactly-once)."""
-    (
-        df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    parquet_writer(
+        df.withColumn("batch_id", F.lit(batch_id)), partition_by="batch_id"
+    ).option("partitionOverwriteMode", "dynamic").parquet(path)
 
 
 def _start_foreach(stream_df: DataFrame, process_batch, checkpoint_dir: str,

@@ -407,8 +407,6 @@ def test_hot_prefixes_driver_histogram_bounded(spark, monkeypatch):
     hot prefix is still returned."""
     import math
 
-    import pyspark.sql as psql
-
     from automatic_data_validator_spark import config
 
     uniform = spark.range(4000).select(
@@ -439,8 +437,6 @@ def test_connected_components_single_action_per_round(spark, monkeypatch):
     checksum aggregate — no join-based changed probe, no .count()
     probes. A triangle converges after one propagation round, so the
     whole call performs exactly two collect-actions."""
-    import pyspark.sql as psql
-
     clique = spark.createDataFrame(
         pd.DataFrame({"id_a": [10, 10, 20], "id_b": [20, 30, 30]})
     )

@@ -148,7 +148,7 @@ def test_driver_held_outputs_plan_without_python_rdd(spark, docs, catalog, tmp_p
     try:
         for name, df in frames.items():
             assert "ExistingRDD" not in _plan(df), name
-        for name in ("verdicts", "lineage", "metrics"):
+        for name in ("verdicts", "lineage", "metrics", "drop_list"):
             out = tmp_path / name
             frames[name].write.parquet(str(out))
             assert len(list(out.glob("part-*.parquet"))) == 1, name

@@ -85,3 +85,52 @@ def test_every_public_function_and_class_is_reached():
         "public functions and classes no job, driver query, benchmark or "
         f"package module calls: {unreached}"
     )
+
+
+def _annotation_names(tree: ast.AST) -> set[str]:
+    """Names inside quoted annotations (``x: "A | None"``), which the
+    AST holds as string constants."""
+    out = set()
+    for n in ast.walk(tree):
+        anns = []
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = n.args
+            anns = [x.annotation for x in
+                    a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+                    if x is not None] + [n.returns]
+        elif isinstance(n, ast.AnnAssign):
+            anns = [n.annotation]
+        for ann in anns:
+            for s in ast.walk(ann) if ann is not None else ():
+                if isinstance(s, ast.Constant) and isinstance(s.value, str):
+                    out |= {m.id for m in ast.walk(ast.parse(s.value, mode="eval"))
+                            if isinstance(m, ast.Name)}
+    return out
+
+
+def _unused_imports(path: pathlib.Path) -> list[str]:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    bound = {}
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                bound[a.asname or a.name.split(".")[0]] = node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            for a in node.names:
+                bound[a.asname or a.name] = node.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    used |= _annotation_names(tree)
+    return [f"{path.name}:{line} {name}" for name, line in bound.items()
+            if name not in used]
+
+
+def test_every_module_level_import_is_used():
+    """Package and test modules import nothing they do not use;
+    ``__init__.py``'s re-exports are its purpose and are exempt."""
+    files = [p for p in sorted(PACKAGE.glob("*.py")) if p.name != "__init__.py"]
+    files += sorted((ROOT / "tests").glob("*.py"))
+    assert len(files) >= 40, files
+    # a quoted-annotation-only use counts (refcheck's ``Any``)
+    assert "Any" in _annotation_names(ast.parse((PACKAGE / "refcheck.py").read_text()))
+    unused = [u for p in files for u in _unused_imports(p)]
+    assert not unused, unused

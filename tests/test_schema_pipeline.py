@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 
 from automatic_data_validator_spark import rules as R
 from automatic_data_validator_spark.correct import CorrectionPlan

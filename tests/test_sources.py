@@ -4,9 +4,6 @@ preserved, text and xlsx readers, file stats."""
 from __future__ import annotations
 
 import json
-import os
-
-import pyspark.sql.functions as F
 
 from fixtures import write_xlsx
 

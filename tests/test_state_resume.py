@@ -7,7 +7,6 @@ import json
 import os
 
 import pyspark.sql.functions as F
-import pytest
 
 from automatic_data_validator_spark.state import Checkpointer
 from automatic_data_validator_spark.validate import canonical_violations, run_validation

@@ -3,8 +3,6 @@ windowed quality agg."""
 
 from __future__ import annotations
 
-import time
-
 import pyspark.sql.functions as F
 import pytest
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pandas as pd
-import pyspark.sql.functions as F
 
 from automatic_data_validator_spark import config
 from automatic_data_validator_spark import textops as TX
