@@ -82,10 +82,11 @@ HOT_PREFIX_SHARE = 0.05
 # Broadcast the referential catalog when its estimated row count is
 # below this (at ~64B/row this stays well under the 8GB broadcast cap).
 BROADCAST_ROW_LIMIT = 5_000_000
-# LSH band-buckets larger than this are dropped from the candidate
-# self-join (a degenerate bucket — empty/boilerplate texts — goes
-# quadratic: 10^6 identical docs => 5*10^11 pairs from ONE bucket).
-# neardup_dedup returns the dropped buckets as its oversize audit.
+# LSH band-buckets larger than this yield no candidate pairs: their id
+# list is left empty by the bucket aggregate (a degenerate bucket —
+# empty/boilerplate texts — goes quadratic: 10^6 identical docs =>
+# 5*10^11 pairs from ONE bucket). neardup_dedup returns the capped
+# buckets as its oversize audit.
 LSH_MAX_BUCKET_SIZE = 2_000
 # Connected-components pair sets at or below this edge count are solved
 # driver-side with one collect + union-find instead of the iterative

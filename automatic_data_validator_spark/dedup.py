@@ -776,91 +776,89 @@ def minhash_lsh_duplicates(
     """Near-duplicate candidate pairs via LSH banding.
 
     Docs sharing any band of the MinHash signature land in the same
-    bucket; the bucket groupBy is the only shuffle and its key is an
-    8-byte hash. Returns (id_a, id_b) candidate pairs (id_a < id_b).
+    bucket; one shuffle keyed on the 8-byte (band, bucket) hash builds
+    each bucket's sorted id list, and pairs are expanded from it.
+    Returns (id_a, id_b) candidate pairs (id_a < id_b).
 
     Scale guard: a degenerate bucket (e.g. 10^6 empty/boilerplate docs
-    hashing identically) would make the self-join quadratic, so buckets
-    larger than ``max_bucket_size`` are excluded — and singleton
-    buckets are dropped too, shrinking both join inputs. This is a
-    visible cap, not silent truncation: ``neardup_dedup`` returns
-    exactly what was dropped as its oversize audit (callers should
-    surface its count when max_bucket_size matters).
+    hashing identically) would expand quadratically, so a bucket
+    larger than ``max_bucket_size`` collects an empty id list in
+    ``_bucket_lists`` and yields no pairs. This is a visible cap, not
+    silent truncation: ``neardup_dedup`` returns exactly those buckets
+    as its oversize audit (callers should surface its count when
+    max_bucket_size matters).
     """
     with_bands = _lsh_band_buckets(
         df, id_col, text_col, num_hashes, bands, shingle_k
     )
-    return _pairs_from_banded(with_bands, max_bucket_size)
+    return _expand_bucket_lists(_bucket_lists(with_bands, max_bucket_size))
 
 
-def _counted_banded(with_bands: DataFrame) -> DataFrame:
-    """(_id, band, bucket, _n) — the banded frame with each row's
-    bucket size attached by a window COUNT over (band, bucket). The
-    window's shuffle is the ONE exchange the whole candidate/audit
-    derivation needs: pair expansion groups by the same key (exchange
-    reuse), and the oversize audit is a filter over the same rows.
-    neardup_dedup aggregates THIS frame (post-shuffle) into one row
-    per non-singleton bucket and localCheckpoints that aggregate, so
-    the signature pass AND the bucket shuffle both run exactly once
-    across candidates + audit, and AQE may coalesce the shuffle's
-    partitions (it never does under a cached plan)."""
+def _bucket_lists(
+    banded: DataFrame, max_bucket_size: int, stored: "DataFrame | None" = None
+) -> DataFrame:
+    """One row per non-singleton (band, bucket) of ``banded``: ``_ids``,
+    its members as (_id, _new) structs sorted by id, and ``_n``, its
+    size. With ``stored`` (committed (_id, band, bucket) rows), the
+    stored rows in the same buckets join them flagged ``_new = false``
+    (a left-semi join on the banded keys), so ``_n`` and the cap see
+    the COMBINED bucket.
+
+    The size is a window COUNT taken BEFORE collect_list: collecting
+    first would materialize a degenerate hot bucket's full id list in
+    one aggregation buffer (collect_list does not spill; round-3
+    ADVICE), while the window's group buffer spills and shares the
+    groupBy's hash partitioning, so its shuffle is the only one. An
+    over-cap bucket collects an EMPTY list and keeps its row for the
+    oversize audit."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("band", "bucket")
-    return with_bands.withColumn("_n", F.count(F.lit(1)).over(w))
-
-
-def _pairs_from_banded(with_bands: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Pair expansion from a (_id, band, bucket) frame — shared by
-    minhash_lsh_duplicates, incremental_neardup and (via
-    _pairs_from_counted) neardup_dedup.
-
-    Single-branch pair generation: ONE shuffle keyed (band, bucket),
-    pairs expanded from the sorted in-bucket id list. The former
-    bucket self-join read the banded table twice — recomputing every
-    signature per side when exchange reuse didn't fire (and the
-    Python-UDF signature of the duplicated right branch escaped
-    ArrowEvalPython extraction entirely) — while this shape computes
-    signatures once. The bucket cap is applied by a window COUNT
-    BEFORE collect_list: collecting first would materialize a
-    degenerate hot bucket's full id list in one aggregation buffer
-    (collect_list does not spill; round-3 ADVICE) — the window's
-    group buffer spills to disk, and it shares the groupBy's
-    hash-partitioning so no extra shuffle is introduced. In-bucket
-    expansion is then safe: surviving lists are ≤ max_bucket_size."""
-    return _pairs_from_counted(_counted_banded(with_bands), max_bucket_size)
-
-
-def _pairs_from_counted(counted: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Pair expansion from a window-counted (_id, band, bucket, _n)
-    frame (see _pairs_from_banded for the shape rationale)."""
-    grouped = (
-        counted
-        .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
+    rows = banded.withColumn("_new", F.lit(True))
+    if stored is not None:
+        rows = rows.unionByName(
+            stored.join(banded.select("band", "bucket"), ["band", "bucket"],
+                        "leftsemi")
+            .select("_id", "band", "bucket", F.lit(False).alias("_new"))
+        )
+    n = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    member = F.struct("_id", "_new")
+    return (
+        rows.withColumn("_n", n)
+        .filter(F.col("_n") >= 2)
         .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
+        .agg(
+            F.sort_array(F.collect_list(
+                F.when(F.col("_n") <= max_bucket_size, member)
+            )).alias("_ids"),
+            # the window count is constant within a bucket
+            F.max("_n").alias("_n"),
+        )
     )
-    return _expand_bucket_lists(grouped)
 
 
-def _expand_bucket_lists(grouped: DataFrame) -> DataFrame:
-    """(band, bucket, _ids sorted) -> distinct (id_a, id_b) pairs."""
+def _expand_bucket_lists(buckets: DataFrame) -> DataFrame:
+    """``_bucket_lists`` rows -> distinct (id_a, id_b) pairs with at
+    least one new member (two stored members were paired at the
+    increment the later of them arrived)."""
     ids = F.col("_ids")
     combos = F.flatten(
         F.transform(
             ids,
             lambda x, i: F.transform(
                 F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                lambda y: F.struct(
+                    x["_id"].alias("id_a"), y["_id"].alias("id_b"),
+                    (x["_new"] | y["_new"]).alias("_new"),
+                ),
             ),
         )
     )
     return (
-        grouped.select(F.explode(combos).alias("p"))
+        buckets.select(F.explode(combos).alias("p"))
+        .filter(F.col("p._new"))
         .select("p.id_a", "p.id_b")
         # a DUPLICATE id landing twice in one bucket would otherwise
-        # emit the self-pair (id, id) — the former self-join's strict
-        # l._id < r._id excluded it (round-3 review finding)
+        # emit the self-pair (id, id) (round-3 review finding)
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
@@ -1241,44 +1239,51 @@ def neardup_dedup(
     (one hash row per band) keeps recall at ~1 for pairs at or above
     jaccard 0.5: the miss probability is (1-j)^bands.
     """
-    # ONE materialization point for everything bucket-derived: the
-    # signature pass, the (band, bucket) window shuffle, and one
-    # bucket-list aggregation produce a single small frame
-    # (non-singleton buckets only) from which BOTH the candidate pairs
-    # and the oversize audit are cheap filters. The collect_list is
-    # null-guarded by the window count, so a degenerate over-cap
-    # bucket collects an EMPTY list, never a quadratic id list — the
-    # spill-safe cap semantics are unchanged.
-    counted = _counted_banded(
-        _lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k)
+    verified, oversize = _neardup_pairs(
+        _lsh_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_k),
+        df, id_col, text_col, jaccard_threshold, shingle_k, max_bucket_size,
+        broadcast_limit,
     )
-    # localCheckpoint, not persist: AQE never re-partitions a cached
-    # plan (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    # is off by default), so a persisted aggregate kept every
-    # spark.sql.shuffle.partitions partition through the window,
-    # aggregate and pair-expansion stages. The checkpoint runs the
-    # aggregate as an ordinary AQE query (coalesced partitions), and
-    # its blocks are released by the context cleaner on GC — nothing
-    # for a caller to unpersist.
-    buckets = (
-        counted.filter(F.col("_n") >= 2)
-        .groupBy("band", "bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("_n") <= max_bucket_size, F.col("_id"))
-                )
-            ).alias("_ids"),
-            # the window count is constant within a bucket
-            F.max("_n").alias("_n"),
-        )
-        .localCheckpoint(eager=True)
+    kept, drop_list = dedup_keep_representatives(
+        df, verified.select("id_a", "id_b"), id_col
     )
-    cand = _expand_bucket_lists(buckets.filter(F.col("_n") <= max_bucket_size))
+    return kept, drop_list, verified, oversize
+
+
+def _neardup_pairs(
+    banded: DataFrame,
+    texts: DataFrame,
+    id_col: str,
+    text_col: str,
+    jaccard_threshold: float,
+    shingle_k: int,
+    max_bucket_size: int,
+    broadcast_limit: int,
+    stored: "DataFrame | None" = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(verified pairs, oversize audit) for the docs of ``banded``: the
+    whole corpus (neardup_dedup), or one delta whose buckets also hold
+    the ``stored`` banded rows (incremental_neardup). ``texts`` holds
+    every id a candidate can name; verify reads only the candidates'.
+
+    ONE materialization point for everything bucket-derived: the
+    signature pass, the (band, bucket) window shuffle and the
+    bucket-list aggregate produce one small frame (non-singleton
+    buckets only) from which the candidates and the audit are cheap
+    derivations. localCheckpoint, not persist: AQE never re-partitions
+    a cached plan (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    is off by default), so a persisted aggregate kept every
+    spark.sql.shuffle.partitions partition through the window,
+    aggregate and pair-expansion stages. The checkpoint runs as an
+    ordinary AQE query (coalesced partitions), and its blocks are
+    released by the context cleaner on GC — nothing to unpersist."""
+    buckets = _bucket_lists(banded, max_bucket_size, stored).localCheckpoint(
+        eager=True
+    )
     verified = (
         ngram_jaccard(
-            df, id_col, text_col, cand, shingle_k=shingle_k,
-            broadcast_limit=broadcast_limit,
+            texts, id_col, text_col, _expand_bucket_lists(buckets),
+            shingle_k=shingle_k, broadcast_limit=broadcast_limit,
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
         # checkpointed so nothing returned replays the verify join
@@ -1289,10 +1294,7 @@ def neardup_dedup(
     oversize = buckets.filter(F.col("_n") > max_bucket_size).select(
         "band", "bucket", F.col("_n").cast("long").alias("n_docs")
     )
-    kept, drop_list = dedup_keep_representatives(
-        df, verified.select("id_a", "id_b"), id_col
-    )
-    return kept, drop_list, verified, oversize
+    return verified, oversize
 
 
 @dataclass
@@ -1300,8 +1302,9 @@ class IncrementalNeardupResult:
     """State after one near-dup increment: ``new_pairs`` verified this
     increment, ``pairs`` = every verified pair so far (with an
     ``increment`` column), ``drop_list`` = (doc_id, component) over the
-    merged pair set (None when requested with skip_drop_list), ``oversize_buckets`` = buckets whose COMBINED
-    (old + delta) size exceeded the cap this increment."""
+    merged pair set (None when requested with ``skip_drop_list``),
+    ``oversize_buckets`` = buckets whose COMBINED (old + delta) size
+    exceeded the cap this increment."""
 
     new_pairs: DataFrame
     pairs: DataFrame
@@ -1326,9 +1329,10 @@ def incremental_neardup(
     skip_drop_list: bool = False,
 ) -> IncrementalNeardupResult:
     """Snapshot-delta near-duplicate detection: sign ONLY the files
-    appended since the last call, find candidates against a persisted
-    (_id, band, bucket) signature store, verify, and merge — the
-    corpus is never re-signed (the Python-UDF MinHash chain, the
+    appended since the last call and run neardup_dedup's pair runner
+    over them, with the persisted (_id, band, bucket) signature store
+    supplying the stored members of the buckets the delta touches —
+    the corpus is never re-signed (the Python-UDF MinHash chain, the
     dominant cost, runs over delta rows only).
 
     ``skip_drop_list=True`` returns ``drop_list=None`` without running
@@ -1342,12 +1346,11 @@ def incremental_neardup(
     Why this is sound: LSH pair discovery is a pairwise co-bucket
     property — two docs pair iff they share a (band, bucket) — so
     every pair is found exactly once, at the increment its LATER
-    member arrives: new-new pairs inside the delta's buckets, new-old
-    pairs by joining the delta's banded rows against the store on
-    (band, bucket). Old-old pairs were found when those docs were the
-    delta. The verify step fetches ONLY the candidate ids' texts from
-    the corpus (column-pruned semi join; candidates are bounded), so
-    the full text column is never re-read either.
+    member arrives: the pair expansion skips pairs of two stored rows,
+    which were found when those docs were the delta. The verify step
+    fetches ONLY the candidate ids' texts from the corpus
+    (column-pruned semi join; candidates are bounded), so the full
+    text column is never re-read either.
 
     Bucket-cap semantics differ from the one-shot ``neardup_dedup``:
     the cap applies to the COMBINED (stored + delta) bucket size at
@@ -1365,9 +1368,12 @@ def incremental_neardup(
     import json as _json
     import os as _os
 
+    from pyspark.sql import types as T
+
     from .incremental import (
         _commit_manifest,
         _file_delta,
+        _key_summary,
         _read_store,
         _refuse_crashed_compaction,
         _write_inc,
@@ -1403,159 +1409,80 @@ def incremental_neardup(
         "keys on doc ids, so only the manifest needs re-pointing); "
         "otherwise re-bootstrap with a fresh state_dir",
     )
-    inc = int(manifest["increment"]) + 1
+    inc = int(manifest["increment"])
+    if not delta_files and inc < 0:
+        raise ValueError(f"no input files and no prior state at {state_dir}")
     pairs_path = _os.path.join(state_dir, "pairs")
-    def _empty_pairs() -> DataFrame:
-        # typed from the corpus: id_a/id_b inherit id_col's actual type
-        # (int, string, ...) — a fixed schema string could not. Covers
-        # the legitimate "increments ran, zero pairs verified" state,
-        # where the purge-on-empty write leaves a file-less store.
-        return (
-            corpus.select(
-                F.col(id_col).alias("id_a"),
-                F.col(id_col).alias("id_b"),
-                F.lit(0.0).alias("jaccard"),
+    banded_path = _os.path.join(state_dir, "banded")
+    if delta_files:
+        inc += 1
+        # basePath keeps hive-partition columns visible (id/text may be
+        # ordinary columns, but a partitioned corpus must read the same
+        # shape here as in one-shot neardup_dedup over the directory)
+        delta = spark.read.option("basePath", corpus_path).parquet(*delta_files)
+        # additive id-multiset checksum (same scheme as validate_
+        # incremental's): one id-pruned aggregate over the DELTA, letting
+        # rebase_neardup_after_compaction verify a rewritten corpus
+        d_rows, d_hash, _lo, _hi = _key_summary(
+            delta.groupBy(F.col(id_col).cast("string").alias("doc_id")).agg(
+                F.count(F.lit(1)).alias("cnt")
             )
-            .limit(0)
-            .withColumn("increment", F.lit(0))
         )
+        stored = _read_store(spark, banded_path)
+        if stored is not None:
+            # crash recovery: a crashed attempt at THIS increment may
+            # have written its partitions before dying (manifest last);
+            # the store must present only COMMITTED increments, else
+            # delta docs would count twice toward the cap and pair with
+            # their own orphaned signatures
+            stored = stored.filter(F.col("increment") < inc)
+        banded_delta = _lsh_band_buckets(
+            delta, id_col, text_col, num_hashes, bands, shingle_k
+        ).persist()
+        try:
+            new_pairs, oversize = _neardup_pairs(
+                banded_delta, corpus.select(F.col(id_col), F.col(text_col)),
+                id_col, text_col, jaccard_threshold, shingle_k,
+                max_bucket_size, broadcast_limit, stored=stored,
+            )
+            # the banded store scales with delta x bands — keep its
+            # natural partitioning (num_files=None) rather than the
+            # small-store 4-file cap, which would bottleneck a large
+            # delta's store write through 4 tasks
+            _write_inc(banded_delta, banded_path, inc, num_files=None)
+            _write_inc(new_pairs, pairs_path, inc)
+        finally:
+            banded_delta.unpersist()
+        # only carry a checksum when the manifest already has one (or
+        # this is the bootstrap increment): minting one from a zero base
+        # on pre-checksum state would cover only this delta, making a
+        # later rebase_neardup_after_compaction(verify=True) on a
+        # legitimate row-preserving compaction fail with the misleading
+        # 'rewrite changed the row multiset' error instead of the
+        # intended 'manifest has no checksum' guidance (round-5 ADVICE)
+        old_ck = manifest.get("checksum")
+        new_manifest = {"files": all_files, "increment": inc, "params": params}
+        if old_ck is not None or inc == 0:
+            base_ck = old_ck or {"rows": 0, "hash": 0}
+            new_manifest["checksum"] = {
+                "rows": int(base_ck["rows"]) + d_rows,
+                "hash": int(base_ck["hash"]) + d_hash,
+                "key_column": id_col,
+            }
+        _commit_manifest(mpath, new_manifest)
 
+    # typed from the corpus: id_a/id_b inherit id_col's actual type
+    # (int, string, ...). The fallback covers the legitimate
+    # "increments ran, zero pairs verified" state, where the
+    # purge-on-empty write leaves a file-less store.
+    id_type = corpus.select(id_col).schema[0].dataType
+    pairs = _read_store(spark, pairs_path, schema=T.StructType([
+        T.StructField("id_a", id_type), T.StructField("id_b", id_type),
+        T.StructField("jaccard", T.DoubleType()),
+    ]))
     if not delta_files:
-        if int(manifest["increment"]) < 0:
-            raise ValueError(f"no input files and no prior state at {state_dir}")
-        pairs = _read_store(spark, pairs_path)
-        if pairs is None:
-            pairs = _empty_pairs()
-        drop_list = (
-            None
-            if skip_drop_list
-            else dedup_keep_representatives(
-                corpus.limit(0), pairs.select("id_a", "id_b"), id_col
-            )[1]
-        )
-        empty_over = local_frame(spark, [], "band int, bucket long, n_docs long")
-        return IncrementalNeardupResult(
-            pairs.limit(0).select("id_a", "id_b", "jaccard"),
-            pairs, drop_list, empty_over,
-            int(manifest["increment"]), 0,
-        )
-
-    # basePath keeps hive-partition columns visible (id/text may be
-    # ordinary columns, but a partitioned corpus must read the same
-    # shape here as in one-shot neardup_dedup over the directory)
-    delta = spark.read.option("basePath", corpus_path).parquet(*delta_files)
-    # additive id-multiset checksum (same scheme as validate_
-    # incremental's): one id-pruned aggregate over the DELTA, letting
-    # rebase_neardup_after_compaction verify a rewritten corpus
-    from .incremental import _key_summary
-
-    d_rows, d_hash, _lo, _hi = _key_summary(
-        delta.groupBy(F.col(id_col).cast("string").alias("doc_id")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-    )
-    banded_delta = _lsh_band_buckets(
-        delta, id_col, text_col, num_hashes, bands, shingle_k
-    ).persist()
-    try:
-        # combined bucket sizes from the ADDITIVE counts store — the
-        # cap must see old + delta together, and summing tiny
-        # per-increment count rows avoids re-scanning the banded store
-        delta_counts = banded_delta.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        counts_hist = _read_store(spark, _os.path.join(state_dir, "bucket_counts"))
-        if counts_hist is not None:
-            # crash-recovery: a crashed attempt at THIS increment may
-            # have written its partitions before dying (manifest last)
-            # — counting them would double the delta's bucket sizes,
-            # falsely tripping the cap and permanently losing pairs
-            counts_hist = counts_hist.filter(F.col("increment") < inc)
-            old_counts = counts_hist.groupBy("band", "bucket").agg(
-                F.sum("n").alias("n_old")
-            )
-        else:
-            old_counts = local_frame(
-                spark, [], "band int, bucket long, n_old long"
-            )
-        combined = (
-            delta_counts.join(old_counts, ["band", "bucket"], "left")
-            .withColumn("n_old", F.coalesce(F.col("n_old"), F.lit(0)))
-            .withColumn("total", F.col("n") + F.col("n_old"))
-        )
-        oversize = (
-            combined.filter(F.col("total") > max_bucket_size)
-            .select("band", "bucket", F.col("total").alias("n_docs"))
-            .localCheckpoint(eager=True)
-        )
-        ok_buckets = combined.filter(
-            F.col("total") <= max_bucket_size
-        ).select("band", "bucket")
-        banded_ok = banded_delta.join(ok_buckets, ["band", "bucket"])
-
-        # new-new candidates inside the delta's (capped) buckets
-        cand = _pairs_from_banded(banded_ok, max_bucket_size)
-        # new-old candidates: delta rows vs the signature STORE on the
-        # 8-byte (band, bucket) key — the store is narrow (3 cols); at
-        # deployment write it bucketed on (band, bucket) so only the
-        # delta side shuffles
-        old_banded = _read_store(spark, _os.path.join(state_dir, "banded"))
-        if old_banded is not None:
-            # same crash-recovery filter: the store must present only
-            # COMMITTED increments (else delta docs would pair with
-            # their own orphaned signatures as "old" docs)
-            old_banded = old_banded.filter(F.col("increment") < inc)
-            cross = (
-                banded_ok.join(
-                    old_banded.select(
-                        F.col("_id").alias("_id_old"), "band", "bucket"
-                    ),
-                    ["band", "bucket"],
-                )
-                .select(
-                    F.least("_id", "_id_old").alias("id_a"),
-                    F.greatest("_id", "_id_old").alias("id_b"),
-                )
-                .filter(F.col("id_a") != F.col("id_b"))
-                .distinct()
-            )
-            cand = cand.unionByName(cross).distinct()
-
-        # verify: ngram_jaccard itself semi-join-prunes the corpus to
-        # the candidate ids before shingling (round-5), so only their
-        # texts are fetched — the former caller-side ids/semi-join
-        # block duplicated exactly that and pruned an already-pruned
-        # frame
-        cand = cand.localCheckpoint(eager=True)
-        verified = (
-            ngram_jaccard(
-                corpus.select(F.col(id_col), F.col(text_col)),
-                id_col, text_col, cand, shingle_k=shingle_k,
-                broadcast_limit=broadcast_limit,
-            )
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .localCheckpoint(eager=True)
-        )
-
-        # banded/bucket_counts scale with delta x bands — keep their
-        # natural partitioning (num_files=None) rather than the small-
-        # store 4-file cap, which would bottleneck a large delta's
-        # store write through 4 tasks
-        _write_inc(
-            banded_delta, _os.path.join(state_dir, "banded"), inc,
-            num_files=None,
-        )
-        _write_inc(
-            delta_counts, _os.path.join(state_dir, "bucket_counts"), inc,
-            num_files=None,
-        )
-        _write_inc(verified, pairs_path, inc)
-    finally:
-        banded_delta.unpersist()
-
-    pairs = _read_store(spark, pairs_path)
-    if pairs is None:
-        pairs = _empty_pairs()
+        new_pairs = pairs.limit(0).select("id_a", "id_b", "jaccard")
+        oversize = local_frame(spark, [], "band int, bucket long, n_docs long")
     drop_list = (
         None
         if skip_drop_list
@@ -1563,26 +1490,8 @@ def incremental_neardup(
             corpus.limit(0), pairs.select("id_a", "id_b"), id_col
         )[1]
     )
-    # only carry a checksum when the manifest already has one (or this
-    # is the bootstrap increment): minting one from a zero base on
-    # pre-checksum state would cover only this delta, making a later
-    # rebase_neardup_after_compaction(verify=True) on a legitimate
-    # row-preserving compaction fail with the misleading 'rewrite
-    # changed the row multiset' error instead of the intended
-    # 'manifest has no checksum' guidance (round-5 ADVICE)
-    old_ck = manifest.get("checksum")
-    new_manifest = {"files": all_files, "increment": inc, "params": params}
-    if old_ck is not None or int(manifest["increment"]) == -1:
-        base_ck = old_ck or {"rows": 0, "hash": 0}
-        new_manifest["checksum"] = {
-            "rows": int(base_ck["rows"]) + d_rows,
-            "hash": int(base_ck["hash"]) + d_hash,
-            "key_column": id_col,
-        }
-    manifest = new_manifest
-    _commit_manifest(mpath, manifest)
     return IncrementalNeardupResult(
-        verified, pairs, drop_list, oversize, inc, len(delta_files)
+        new_pairs, pairs, drop_list, oversize, inc, len(delta_files)
     )
 
 
@@ -1595,9 +1504,9 @@ def rebase_neardup_after_compaction(
     """Re-point ``incremental_neardup`` state at a COMPACTED corpus
     (files rewritten, row multiset unchanged) — closing the same
     append-only seam ``incremental.rebase_after_compaction`` closes
-    for validation state. The banded/bucket_counts/pairs stores key on
-    doc ids, not file identity, so only the manifest's file inventory
-    goes stale; with ``verify`` the compacted corpus's id multiset is
+    for validation state. The banded and pairs stores key on doc ids,
+    not file identity, so only the manifest's file inventory goes
+    stale; with ``verify`` the compacted corpus's id multiset is
     checked against the manifest's additive checksum in ONE id-only
     scan (state written before checksum support refuses — re-bootstrap
     or pass verify=False). Returns the new inventory's file count."""

@@ -534,7 +534,7 @@ _COMPACTABLE_STORES = (
     "sketches", "sketches_grouped",
     # dedup.incremental_neardup state (same per-increment layout;
     # stores absent from a given state_dir are skipped)
-    "banded", "bucket_counts", "pairs",
+    "banded", "pairs",
 )
 
 
@@ -749,12 +749,13 @@ def expire_increments(
     base partition (``increment=-1``) and drop — or move to
     ``archive_dir`` — their violation rows.
 
-    Why this is the last piece of the unbounded-state story: the
-    merged families are already size-bounded (``key_index`` ~ one row
-    per corpus key, ``partials``/``sketches`` ~ O(partitions x columns)
-    per increment, both file-compactable via ``compact_state``), but
-    verdicts/violations/lineage keep one row per historical event
-    FOREVER — after years of hourly snapshots the state outgrows the
+    What this bounds, and what it does not: ``key_index`` holds about
+    one row per corpus key, while ``partials`` and ``sketches`` each
+    grow by one partition set (O(partitions x columns) rows) per
+    increment; ``compact_state`` merges their files but keeps every
+    row, and expiry leaves them alone (see below). Verdicts,
+    violations and lineage keep one row per historical event FOREVER
+    — after years of hourly snapshots that history outgrows the
     deltas it serves. Expired history collapses to per-rule totals
     (``partition_id=-1``, exactly the aggregate ``history_report``
     derived from it), so grand totals across the whole report are

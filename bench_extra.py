@@ -114,12 +114,11 @@ def main() -> None:
         f"in {out['minhash_partitions']} partitions")
     big.unpersist()
 
-    # --- dedup e2e staged (mirrors the PRODUCTION neardup_dedup shape
-    # exactly: one counted-banded pass -> single small buckets
-    # aggregate, localCheckpoint'ed -> expansion/verify/audit as
-    # filters over it) ---
+    # --- dedup e2e staged: the production bucket aggregate
+    # (_bucket_lists, localCheckpoint'ed as neardup_dedup's runner does)
+    # -> expansion/verify/audit over it ---
     from automatic_data_validator_spark.dedup import (
-        _counted_banded, _expand_bucket_lists, _lsh_band_buckets,
+        _bucket_lists, _expand_bucket_lists, _lsh_band_buckets,
         ngram_jaccard, dedup_keep_representatives,
     )
     from automatic_data_validator_spark import config
@@ -140,24 +139,13 @@ def main() -> None:
     cap = config.LSH_MAX_BUCKET_SIZE
     buckets = timed(
         "dd_sign_band_buckets",
-        lambda: _counted_banded(
-            _lsh_band_buckets(ddf, "doc_id", "text", 16, 16, 3)
-        )
-        .filter(F.col("_n") >= 2)
-        .groupBy("band", "bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.when(F.col("_n") <= cap, F.col("_id")))
-            ).alias("_ids"),
-            F.max("_n").alias("_n"),
-        )
-        .localCheckpoint(eager=True),
+        lambda: _bucket_lists(
+            _lsh_band_buckets(ddf, "doc_id", "text", 16, 16, 3), cap
+        ).localCheckpoint(eager=True),
     )
     cand = timed(
         "dd_candidates",
-        lambda: _expand_bucket_lists(
-            buckets.filter(F.col("_n") <= cap)
-        ).localCheckpoint(eager=True),
+        lambda: _expand_bucket_lists(buckets).localCheckpoint(eager=True),
     )
     verified = timed(
         "dd_verify",

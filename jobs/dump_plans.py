@@ -49,7 +49,7 @@ def main() -> None:
     )
     from automatic_data_validator_spark.spans import normalize_spans_arrow
     from automatic_data_validator_spark.dedup import (
-        _lsh_band_buckets, _pairs_from_banded, minhash_signature,
+        _lsh_band_buckets, minhash_lsh_duplicates, minhash_signature,
     )
     from pyspark.sql import functions as F
 
@@ -61,7 +61,8 @@ def main() -> None:
     dump("minhash_sig", dd.select(minhash_signature("text").alias("sig")))
     banded = _lsh_band_buckets(dd, "doc_id", "text", 16, 16, 3)
     dump("lsh_banded", banded)
-    dump("lsh_pairs", _pairs_from_banded(banded, 2000))
+    dump("lsh_pairs", minhash_lsh_duplicates(
+        dd, "doc_id", "text", num_hashes=16, bands=16, max_bucket_size=2000))
 
     from automatic_data_validator_spark.validate import run_validation
 

@@ -763,6 +763,46 @@ def test_incremental_neardup_random_batches(spark, tmp_path):
         assert inc_set == full_set, (trial, cuts)
 
 
+def test_incremental_neardup_cap_applies_to_combined_bucket(spark, tmp_path):
+    """The incremental bucket cap sees the COMBINED (stored + delta)
+    bucket size: two stored identical docs plus two new copies make a
+    bucket of 4 over a cap of 3, so the new copies pair with nothing,
+    the audit reports each band's bucket at 4 docs, and the stored pair
+    stays. A one-shot run over the same corpus drops that bucket
+    entirely and keeps only the pair that never reached the cap."""
+    corpus = str(tmp_path / "docs")
+    state = str(tmp_path / "nd_state")
+    same = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    near = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
+
+    def append_and_run(rows):
+        spark.createDataFrame(
+            pd.DataFrame(rows, columns=["doc_id", "text"])
+        ).coalesce(1).write.mode("append").parquet(corpus)
+        return D.incremental_neardup(
+            spark, corpus, state, "doc_id", "text", max_bucket_size=3
+        )
+
+    def pairset(df):
+        return sorted(
+            (r["id_a"], r["id_b"]) for r in df.select("id_a", "id_b").collect()
+        )
+
+    r0 = append_and_run([("a0", same), ("a1", same)])
+    assert pairset(r0.new_pairs) == [("a0", "a1")]
+    r1 = append_and_run([
+        ("a2", same), ("a3", same), ("b0", near + " x1"), ("b1", near + " x2"),
+    ])
+    assert pairset(r1.new_pairs) == [("b0", "b1")]
+    audit = r1.oversize_buckets.collect()
+    assert len(audit) == 16 and all(r["n_docs"] == 4 for r in audit), audit
+    assert pairset(r1.pairs) == [("a0", "a1"), ("b0", "b1")]
+    _k, _d, full_pairs, _o = D.neardup_dedup(
+        spark.read.parquet(corpus), "doc_id", "text", max_bucket_size=3
+    )
+    assert pairset(full_pairs) == [("b0", "b1")]
+
+
 def test_neardup_corpus_planted_ground_truth(spark):
     """make_neardup_corpus (the dedup_e2e bench input): the pipeline
     must recover EXACTLY the planted consecutive pairs — count, pair

@@ -134,3 +134,33 @@ def test_every_module_level_import_is_used():
     assert "Any" in _annotation_names(ast.parse((PACKAGE / "refcheck.py").read_text()))
     unused = [u for p in files for u in _unused_imports(p)]
     assert not unused, unused
+
+
+def _callers(tree: ast.AST, callee: str) -> list[str]:
+    """Top-level definitions whose bodies call ``callee`` by name or
+    attribute; a call at module level reports ``<module>``."""
+    found = []
+    for top in tree.body:
+        scope = top.name if isinstance(top, _DEFS) else "<module>"
+        for n in ast.walk(top):
+            if isinstance(n, ast.Call) and callee in (
+                getattr(n.func, "id", None), getattr(n.func, "attr", None)
+            ):
+                found.append(scope)
+    return found
+
+
+def test_one_neardup_body():
+    """Near-dup verify and the bucket aggregate have one caller in the
+    package, the runner ``neardup_dedup`` and ``incremental_neardup``
+    share (plus ``minhash_lsh_duplicates`` for the aggregate), so a
+    second near-dup body cannot grow back beside it."""
+    callers: dict[str, list[str]] = {"ngram_jaccard": [], "_bucket_lists": []}
+    for path in sorted(PACKAGE.glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for callee, found in callers.items():
+            found += [f"{path.stem}.{s}" for s in _callers(tree, callee)]
+    assert {k: sorted(v) for k, v in callers.items()} == {
+        "ngram_jaccard": ["dedup._neardup_pairs"],
+        "_bucket_lists": ["dedup._neardup_pairs", "dedup.minhash_lsh_duplicates"],
+    }, callers
