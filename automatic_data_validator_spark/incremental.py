@@ -21,8 +21,9 @@ merges (``_IncrementMerges``) for them:
   doc_id (``sources.write_bucketed_table``, or an Iceberg
   ``bucket(N, doc_id)`` partition transform) so this join shuffles only
   the delta side; here it is plain parquet.
-* **drift** — the delta's t-digests are stored per increment and
-  merged with every earlier increment's into the corpus digest.
+* **drift** — the delta's quantile-grid sketches are stored per
+  increment, and the corpus sketch is one order-insensitive merge of
+  every stored increment's grid.
 * **profile metrics** — the aggregate's per-partition algebraic
   partials (counts/sums/min/max/central moments/HLL sketches/quantile
   grids) are persisted per increment; ``finalize_partial_profile``
@@ -324,10 +325,10 @@ def validate_incremental(
         )
     # profile/drift participation must be consistent across increments:
     # an increment that skips them would silently VANISH from every
-    # future merged metric / corpus digest (the merges read only what
+    # future merged metric / corpus sketch (the merges read only what
     # was stored) while the results still claim corpus-level coverage
     # drift_group_by participates too (round-5 review): switching the
-    # cohort COLUMN (or cohort<->table mode) would merge digests keyed
+    # cohort COLUMN (or cohort<->table mode) would merge sketches keyed
     # by different dimensions into one corpus sketch. So do the
     # uniqueness rule ids: a renamed rule would split its per-rule
     # totals between the old and the new id
@@ -605,7 +606,7 @@ def compact_state(
     Why this matters at scale: every increment writes each store with
     the session's shuffle-partition fan-out, so after K increments a
     store holds O(K x shuffle_partitions) tiny files — and every later
-    merge (the key-index join, the partials re-merge, the digest
+    merge (the key-index join, the partials re-merge, the sketch
     history read) pays per-file open/footer cost. This is the
     STATE-side small-file problem, the twin of the corpus-side
     compaction ``rebase_after_compaction`` exists for. Rows, the
@@ -766,7 +767,7 @@ def expire_increments(
     NOT touched, by design: ``key_index`` (cross-increment uniqueness
     needs every key's location forever), ``partials`` (metrics
     re-merge), ``sketches``/``sketches_grouped`` (corpus drift
-    digests), ``metrics``. Expiry bounds the *history*, never the
+    sketches), ``metrics``. Expiry bounds the *history*, never the
     merged state the next increment's correctness depends on — pinned
     by the post-expiry promotion test.
 
@@ -1062,15 +1063,16 @@ class _IncrementMerges:
         ), violations
 
     def sketches(self, sketches: dict) -> dict:
-        """The corpus drift sketches: the delta's ``sketches`` are
-        stored per increment and merged with every stored increment's
-        (t-digest merge is associative; old increments are never
-        re-sketched or re-read).
+        """The corpus drift sketches: the delta's quantile grids are
+        stored per increment, and the corpus grid is ONE
+        order-insensitive merge of every stored increment's grid
+        (drift.QuantileGrid.merge; no merge of merges, and old
+        increments are never re-sketched or re-read).
 
-        Cohort drift keeps its digests per (group, column) in its own
+        Cohort drift keeps its grids per (group, column) in its own
         store, ``sketches_grouped``, so switching modes mid-state
         raises: the other mode's history cannot be folded into this
-        mode's corpus digest and a silent partial sketch would report
+        mode's corpus sketch and a silent partial sketch would report
         drift against a fraction of the corpus."""
         from . import drift as DR
 
@@ -1084,15 +1086,11 @@ class _IncrementMerges:
                 f"incremental drift: this state_dir holds the other drift "
                 f"mode's per-increment sketches ('{other}'); with "
                 f"drift_group_by={self.group_by!r} they cannot fold into "
-                "this mode's corpus digest — re-bootstrap with a fresh "
+                "this mode's corpus sketch — re-bootstrap with a fresh "
                 "state_dir to switch drift modes"
             )
         store = os.path.join(self.state_dir, name)
-        rows = [
-            (g, c, d.serialize())
-            for g, gcols in DR.as_cohorts(sketches).items()
-            for c, d in gcols.items()
-        ]
+        rows = DR.sketch_rows(sketches)
         if rows:
             # a 0-row delta sketches no cohort — writing the empty frame
             # would leave a file-less store that the history read below
@@ -1103,14 +1101,10 @@ class _IncrementMerges:
             _write_inc(inc_df if grouped else inc_df.drop("group"), store,
                        self.inc)
         hist = _read_store(self.spark, store)
-        merged: dict = {}
-        for r in [] if hist is None else hist.collect():
-            d = DR.TDigest.deserialize(r["sketch"])
-            gcols = merged.setdefault(r["group"] if grouped else None, {})
-            gcols[r["column"]] = (
-                gcols[r["column"]].merge(d) if r["column"] in gcols else d
-            )
-        return merged
+        return DR.merge_sketch_rows(
+            (r["group"] if grouped else None, r["column"], r["sketch"])
+            for r in ([] if hist is None else hist.collect())
+        )
 
     def profile(self, part: DataFrame, plan):
         """The corpus profile: this increment's per-partition partials

@@ -180,9 +180,9 @@ def drift_stream(
     cross-batch uniqueness, windowed quality, referential). A stream
     is a table's sequence of appends, so each micro-batch runs the
     batch drift path unchanged inside ``foreachBatch``: the config
-    guard (drift.resolve_drift_config), the t-digest partials
-    (drift.sketch_columns, two-level merge) and the comparison
-    (drift.drift_report_sketches).
+    guard (drift.resolve_drift_config), the quantile-grid aggregate
+    (drift.sketch_columns, one JVM aggregate, no Python worker) and the
+    comparison (drift.drift_report_sketches).
 
     Each micro-batch is sketched and compared column-by-column against
     the baseline saved by ``drift.save_baseline`` (re-loaded per batch,

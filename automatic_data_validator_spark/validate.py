@@ -490,7 +490,8 @@ def _run_checks(
         return cat_refs, cat_refs.count()
 
     # distribution-drift phase (north_rule's fourth check family): one
-    # sketch pass (t-digest partials, two-level merge) compared vs the
+    # sketch pass (drift.sketch_columns: a percentile_approx quantile-
+    # grid aggregate in the JVM, no Python worker) compared vs the
     # baseline snapshot — table-level verdicts use partition_id = -1
     # (drift has no per-partition attribution) and one violation row
     # per drifted COLUMN (doc_id = the column name, detail = ks/psi/

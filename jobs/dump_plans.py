@@ -51,7 +51,6 @@ def main() -> None:
     from automatic_data_validator_spark.dedup import (
         _lsh_band_buckets, minhash_lsh_duplicates, minhash_signature,
     )
-    from pyspark.sql import functions as F
 
     docs = make_documents(spark, 20_000, n_media=1000, seed=42)
     catalog = make_media_catalog(spark, 1000, seed=42)

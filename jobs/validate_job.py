@@ -37,11 +37,8 @@ import sys
 # repo root (parent of jobs/) must be importable too.
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-# the drift phase ships Arrow UDFs (t-digest sketch partials) to
-# executors — local-mode workers resolve imports from PYTHONPATH, not
-# the driver's sys.path, so export it BEFORE the JVM starts; a real
-# cluster uses --py-files instead (see dedup_job.py)
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
+# validation runs no Python UDF (drift sketches are a JVM aggregate), so
+# executors never import the package and PYTHONPATH needs no export
 
 
 def _pick_signals_fn(docs, group_by: str | None = None):
@@ -101,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
                          "dir and merge (incremental.validate_"
                          "incremental); --documents must be a parquet "
                          "path; --drift-baseline is supported (delta "
-                         "sketches merge into the corpus digest); "
+                         "sketches merge into the corpus sketch); "
                          "--checkpoint/--save-drift-baseline are "
                          "rejected")
     ap.add_argument("--expire-keep-last", type=int, default=None,
@@ -198,9 +195,9 @@ def main(argv: list[str] | None = None) -> int:
                 "full run"
             )
         # --drift-baseline IS supported: the increment sketches its
-        # delta signals and the merged corpus digest is compared.
-        # --drift-group-by too (r5): per-(group, column) digests merge
-        # across increments into per-cohort corpus digests, vs a
+        # delta signals and the merged corpus sketch is compared.
+        # --drift-group-by too (r5): per-(group, column) sketches merge
+        # across increments into per-cohort corpus sketches, vs a
         # save_grouped_baseline snapshot
         if args.drift_group_by and not args.drift_baseline:
             raise SystemExit(
@@ -322,7 +319,7 @@ def main(argv: list[str] | None = None) -> int:
             target, cols = docs, numeric
         else:
             # no numeric columns AND no spans column: sketching string
-            # columns yields all-NaN → empty digests, and every future
+            # columns yields all-NaN → empty sketches, and every future
             # drift check against that baseline passes with
             # reason=both_empty — silent dead monitoring. Refuse.
             raise SystemExit(

@@ -4,7 +4,9 @@
 package only reads xlsx (``sources.read_excel`` -> ``xlsx.read_xlsx``),
 so the tests write their workbooks with this. ``synth_media_payloads``
 attaches deterministic binary payloads and typed metadata to a media
-catalog for the multimodal tests.
+catalog for the multimodal tests. ``grid_sketch`` builds a drift
+sketch from local values, for tests that need a baseline without a
+Spark job.
 """
 
 from __future__ import annotations
@@ -13,9 +15,12 @@ import re
 import zipfile
 from xml.sax.saxutils import escape, quoteattr
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from automatic_data_validator_spark.drift import QuantileGrid
+from automatic_data_validator_spark.profile import _DRIFT_QUANTILE_GRID
 from automatic_data_validator_spark.xlsx import _X_UNESC
 
 # ECMA-376 _xHHHH_ escaping: control characters are invalid in XML 1.0
@@ -174,3 +179,16 @@ def synth_media_payloads(catalog: DataFrame, payload_bytes: int = 64) -> DataFra
         payload.alias("payload"),
         meta.alias("meta"),
     )
+
+
+def grid_sketch(values=()) -> QuantileGrid:
+    """The drift sketch of local values: their exact quantiles at the
+    grid levels (what ``drift.sketch_columns``' ``percentile_approx``
+    grid approximates) and their count; NaN is dropped, and no values
+    give the empty sketch."""
+    v = np.asarray(values, dtype=np.float64)
+    v = v[~np.isnan(v)]
+    if not v.size:
+        return QuantileGrid()
+    levels = np.linspace(0.0, 1.0, _DRIFT_QUANTILE_GRID)
+    return QuantileGrid(np.quantile(v, levels, method="inverted_cdf"), v.size)

@@ -1,48 +1,112 @@
-"""t-digest sketch properties, KS/PSI drift, correction pipeline
+"""Quantile-grid sketch properties, KS/PSI drift, correction pipeline
 vs the reference fixture (FIXTURES.md §4)."""
 
 from __future__ import annotations
 
+import json
 import math
+import random
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from automatic_data_validator_spark import synth
 from automatic_data_validator_spark.correct import build_plan, apply_plan, clean
 from automatic_data_validator_spark.drift import (
-    TDigest,
+    QuantileGrid,
+    _sketch_frame,
+    document_signals,
     drift_report,
+    drift_report_sketches,
     ks_statistic,
+    merge_sketch_rows,
     psi,
     sketch_columns,
+    sketch_rows,
 )
+from fixtures import grid_sketch
 
 
-def test_tdigest_quantiles_accurate():
+def _exact_ks(a: np.ndarray, b: np.ndarray) -> float:
+    x = np.unique(np.concatenate([a, b]))
+    fa = np.searchsorted(np.sort(a), x, side="right") / a.size
+    fb = np.searchsorted(np.sort(b), x, side="right") / b.size
+    return float(np.abs(fa - fb).max())
+
+
+def test_grid_quantiles_accurate(spark):
     rng = np.random.RandomState(42)
     vals = rng.normal(100, 15, 50_000)
-    d = TDigest.from_values(vals)
+    d = sketch_columns(spark.createDataFrame(pd.DataFrame({"x": vals})), ["x"])["x"]
     for q in (0.01, 0.25, 0.5, 0.75, 0.99):
         assert abs(d.quantile(q) - np.quantile(vals, q)) < 0.5, q
     assert abs(d.cdf(100.0) - 0.5) < 0.01
+    assert d.quantile(0.0) == vals.min() and d.quantile(1.0) == vals.max()
 
 
-def test_tdigest_merge_associative():
+def test_grid_ks_matches_exact_two_sample_ks(spark):
+    """On the documents signals (integer ties and a long-tailed
+    length), the grid KS stays within 0.01 of the exact two-sample KS,
+    unshifted and with text_chars shifted by 1.2x."""
+    cols = ["n_spans", "text_chars", "n_media_refs"]
+    cur = document_signals(synth.make_documents(spark, 10_000, n_media=500, seed=11))
+    base = document_signals(synth.make_documents(spark, 4_000, n_media=500, seed=12))
+    shifted = cur.withColumn("text_chars", F.col("text_chars") * 1.2)
+    b_sk, b_pd = sketch_columns(base, cols), base.toPandas()
+    for frame in (cur, shifted):
+        sk, pdf = sketch_columns(frame, cols), frame.toPandas()
+        for c in cols:
+            exact = _exact_ks(pdf[c].to_numpy(), b_pd[c].to_numpy())
+            assert abs(ks_statistic(sk[c], b_sk[c]) - exact) <= 0.01, (c, exact)
+    assert _exact_ks(shifted.toPandas()["text_chars"].to_numpy(),
+                     b_pd["text_chars"].to_numpy()) > 0.1
+
+
+def test_grid_merge_order_insensitive(spark):
+    """The corpus grid of a per-increment history is one merge of every
+    stored grid: bit-identical in any row order, and within 0.01 KS of
+    a one-shot sketch of the same rows."""
     rng = np.random.RandomState(1)
-    a, b, c = (TDigest.from_values(rng.normal(0, 1, 10_000)) for _ in range(3))
-    m1 = a.merge(b).merge(c)
-    m2 = a.merge(b.merge(c))
-    for q in (0.1, 0.5, 0.9):
-        assert math.isclose(m1.quantile(q), m2.quantile(q), abs_tol=0.05)
-    assert math.isclose(m1.total_weight, 30_000)
+    pdf = pd.DataFrame({"x": np.concatenate([
+        rng.normal(0, 1, 9_000), rng.exponential(3.0, 4_000),
+        rng.randint(0, 5, 2_000).astype(float)])})
+    pdf["inc"] = np.repeat([0, 1, 2, 3], [7_000, 4_500, 2_500, 1_000])
+    df = spark.createDataFrame(pdf)
+    rows = [r for i in range(4)
+            for r in sketch_rows(sketch_columns(df.filter(F.col("inc") == i), ["x"]))]
+    merged = merge_sketch_rows(rows)[None]["x"]
+    for seed in range(3):
+        random.Random(seed).shuffle(rows)
+        again = merge_sketch_rows(rows)[None]["x"]
+        assert np.array_equal(again.q, merged.q)
+        assert again.total_weight == merged.total_weight
+    one_shot = sketch_columns(df, ["x"])["x"]
+    assert merged.total_weight == one_shot.total_weight == 15_000
+    assert ks_statistic(merged, one_shot) <= 0.01
+    assert merged.quantile(0.0) == pdf["x"].min()
+    assert merged.quantile(1.0) == pdf["x"].max()
 
 
-def test_tdigest_serialize_roundtrip():
-    d = TDigest.from_values(np.arange(1000, dtype=float))
-    d2 = TDigest.deserialize(d.serialize())
+def test_grid_serialize_roundtrip(spark):
+    d = sketch_columns(spark.range(1000).select(F.col("id").cast("double").alias("x")),
+                       ["x"])["x"]
+    d2 = QuantileGrid.deserialize(d.serialize())
+    assert np.array_equal(d.q, d2.q) and d2.total_weight == 1000
     assert math.isclose(d.quantile(0.5), d2.quantile(0.5))
-    assert d2.min_val == 0.0 and d2.max_val == 999.0
+    assert d2.quantile(0.0) == 0.0 and d2.quantile(1.0) == 999.0
+    assert QuantileGrid.deserialize(QuantileGrid().serialize()).total_weight == 0
+    # a sketch stored as t-digest JSON reads as a grid at the same levels
+    old = {"c": 200.0, "m": [float(i) for i in range(1000)], "w": [1.0] * 1000,
+           "lo": 0.0, "hi": 999.0}
+    legacy = QuantileGrid.deserialize(json.dumps(old))
+    assert legacy.total_weight == 1000 and legacy.q.size == d.q.size
+    assert legacy.quantile(0.0) == 0.0 and legacy.quantile(1.0) == 999.0
+    assert abs(legacy.quantile(0.5) - 499.5) < 1.0
+    assert ks_statistic(legacy, d) < 0.01
+    empty = {"c": 200.0, "m": [], "w": [], "lo": None, "hi": None}
+    assert QuantileGrid.deserialize(json.dumps(empty)).total_weight == 0
 
 
 def test_distributed_sketch_matches_local(spark):
@@ -50,17 +114,51 @@ def test_distributed_sketch_matches_local(spark):
     vals = rng.normal(50, 5, 20_000)
     df = spark.createDataFrame(pd.DataFrame({"x": vals})).repartition(8)
     sk = sketch_columns(df, ["x"])["x"]
-    local = TDigest.from_values(vals)
+    local = grid_sketch(vals)
     for q in (0.25, 0.5, 0.75):
         assert abs(sk.quantile(q) - local.quantile(q)) < 0.1
     assert sk.total_weight == 20_000
 
 
+def test_sketch_is_deterministic(spark):
+    """Sketching the same (shuffled) signal frame twice gives
+    bit-identical KS/PSI rows."""
+    docs = synth.make_documents(spark, 6_000, n_media=300, seed=5)
+    signals = document_signals(docs.repartition(7)).repartition(5)
+    cols = ["n_spans", "text_chars", "n_media_refs"]
+    base = sketch_columns(document_signals(docs), cols)
+    first, second = (
+        drift_report_sketches(sketch_columns(signals, cols), base, cols)
+        for _ in range(2)
+    )
+    assert first == second
+
+
+def test_sketch_is_one_jvm_aggregate(spark):
+    """The sketch plan starts no Python worker, and its collect returns
+    one row per cohort (one at table level)."""
+    rng = np.random.RandomState(7)
+    df = spark.createDataFrame(pd.DataFrame({
+        "g": rng.choice(["a", "b", "c"], 20_000),
+        "a": rng.normal(10, 2, 20_000), "b": rng.normal(0, 1, 20_000),
+    })).repartition(64)
+    for group_by, n_rows in ((None, 1), ("g", 3)):
+        frame = _sketch_frame(df, ["a", "b"], group_by)
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython",
+                     "BatchEvalPython"):
+            assert node not in plan, (node, plan)
+        assert len(frame.collect()) == n_rows
+    sk = sketch_columns(df, ["a", "b"])
+    assert sk["b"].total_weight == 20_000
+    assert abs(sk["a"].quantile(0.5) - 10) < 0.1
+
+
 def test_ks_psi_fire_on_shift(spark):
     rng = np.random.RandomState(4)
-    base = TDigest.from_values(rng.normal(0, 1, 20_000))
-    same = TDigest.from_values(rng.normal(0, 1, 20_000))
-    shifted = TDigest.from_values(rng.normal(1.0, 1, 20_000))
+    base = grid_sketch(rng.normal(0, 1, 20_000))
+    same = grid_sketch(rng.normal(0, 1, 20_000))
+    shifted = grid_sketch(rng.normal(1.0, 1, 20_000))
     assert ks_statistic(same, base) < 0.05
     assert ks_statistic(shifted, base) > 0.3
     assert psi(same, base) < 0.05
@@ -73,8 +171,8 @@ def test_drift_report_end_to_end(spark):
         pd.DataFrame({"a": rng.normal(10, 1, 5000), "b": rng.normal(0, 1, 5000)})
     )
     baseline = {
-        "a": TDigest.from_values(rng.normal(10, 1, 5000)),  # no drift
-        "b": TDigest.from_values(rng.normal(3, 1, 5000)),   # drifted
+        "a": grid_sketch(rng.normal(10, 1, 5000)),  # no drift
+        "b": grid_sketch(rng.normal(3, 1, 5000)),   # drifted
     }
     rep = {r["column"]: r for r in drift_report(cur, baseline)}
     assert rep["a"]["drifted"] is False
@@ -332,8 +430,6 @@ def test_apply_plan_skips_type_incompatible_imputations(spark):
     """Round-3 review finding: numeric fills must not coerce
     string/timestamp columns (df.na.fill dict semantics), and integer
     fills stay exact (no double round-trip above 2^53)."""
-    import pandas as pd
-
     from automatic_data_validator_spark.correct import CorrectionPlan, apply_plan
 
     big = (1 << 60) + 3
@@ -374,28 +470,6 @@ def test_apply_plan_imputes_nan_in_float_columns(spark):
     rows = {r["k"]: r["x"] for r in apply_plan(df, plan).collect()}
     assert rows == {0: 1.0, 1: 5.0, 2: 5.0, 3: 50.0}, rows
     assert not any(math.isnan(v) for v in rows.values())
-
-
-def test_sketch_partials_bound_driver_rows(spark):
-    """Round-3 VERDICT hygiene #2: the two-level merge must deliver at
-    most combine_buckets rows per column to the driver even when the
-    input has far more partitions — and the merged digest must still be
-    accurate."""
-    from automatic_data_validator_spark.drift import _sketch_partials
-
-    rng = np.random.RandomState(7)
-    vals = rng.normal(10, 2, 20_000)
-    df = spark.createDataFrame(
-        pd.DataFrame({"a": vals, "b": vals * 3})
-    ).repartition(64)
-    k = 4
-    part = _sketch_partials(df, ["a", "b"], combine_buckets=k)
-    assert part.count() <= k * 2
-    sk = sketch_columns(df, ["a", "b"], combine_buckets=k)
-    local = TDigest.from_values(vals)
-    for q in (0.25, 0.5, 0.75):
-        assert abs(sk["a"].quantile(q) - local.quantile(q)) < 0.1
-    assert sk["b"].total_weight == 20_000
 
 
 def test_run_summary_matches_hand_computed(spark):
@@ -469,7 +543,6 @@ def test_text_change_report_counts(spark):
     """text_change_report vs hand-computed terms on a tiny corpus
     (reference text_processor.py:645-718 wording)."""
     from automatic_data_validator_spark.textops import clean_text, text_change_report
-    from pyspark.sql import functions as F
 
     orig = spark.createDataFrame(
         [
@@ -520,8 +593,8 @@ def test_drift_report_flags_empty_current_sketch(spark):
     NaN KS/PSI — 'NaN > threshold' is False, so total data loss was
     reported as drifted=false. One-sided emptiness must fire."""
     rng = np.random.RandomState(11)
-    baseline = {"x": TDigest.from_values(rng.normal(5, 1, 5000)),
-                "z": TDigest()}
+    baseline = {"x": grid_sketch(rng.normal(5, 1, 5000)),
+                "z": grid_sketch()}
     cur = spark.createDataFrame(
         pd.DataFrame({"x": [None] * 100, "z": [None] * 100}), "x double, z double"
     )
@@ -603,10 +676,9 @@ def test_grouped_drift_per_pair_holes_fire_not_skip(spark):
     empty column dict on the present side of a one-sided group emits a
     sentinel row, and requested columns are reported even when the
     present side lacks them."""
-    from automatic_data_validator_spark.drift import (
-        TDigest, drift_report_sketches)
+    from automatic_data_validator_spark.drift import drift_report_sketches
 
-    d = TDigest.from_values(np.arange(100, dtype=np.float64), 100.0)
+    d = grid_sketch(np.arange(100, dtype=np.float64))
     # g1 on both sides but baseline lacks column 'v2'
     cur = {"g1": {"v1": d, "v2": d}, "g2": {}}
     baseline = {"g1": {"v1": d}}
@@ -637,10 +709,10 @@ def test_load_grouped_baseline_rejects_flat_file(spark, tmp_path):
     at a FLAT save_baseline file must fail fast with the remedy named,
     not die on an opaque Row['group'] error inside a streaming job."""
     from automatic_data_validator_spark.drift import (
-        TDigest, load_grouped_baseline, save_baseline)
+        load_grouped_baseline, save_baseline)
 
     save_baseline(
-        {"x": TDigest.from_values(np.arange(100, dtype=np.float64))},
+        {"x": grid_sketch(np.arange(100, dtype=np.float64))},
         spark, str(tmp_path / "flat"),
     )
     with pytest.raises(ValueError, match="save_grouped_baseline"):

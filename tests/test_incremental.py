@@ -9,6 +9,7 @@ import math
 import os
 
 import pytest
+from fixtures import grid_sketch
 from pyspark.sql import functions as F
 
 from automatic_data_validator_spark.incremental import validate_incremental
@@ -730,9 +731,9 @@ def test_drift_columns_naming_missing_column_fails(spark, docs):
     finding: the guard previously covered only the default path)."""
     import numpy as np
 
-    from automatic_data_validator_spark.drift import TDigest, document_signals
+    from automatic_data_validator_spark.drift import document_signals
 
-    baseline = {"n_spans": TDigest.from_values(np.arange(100.0))}
+    baseline = {"n_spans": grid_sketch(np.arange(100.0))}
     with pytest.raises(ValueError, match="misconfigured"):
         run_validation(
             spark, docs, rule_set=[], check_uniqueness=False,
@@ -751,17 +752,16 @@ def test_incremental_grouped_drift_cohorts(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from automatic_data_validator_spark.drift import (
-        TDigest, save_grouped_baseline)
+    from automatic_data_validator_spark.drift import save_grouped_baseline
 
     rng = np.random.RandomState(3)
     corpus = str(tmp_path / "docs")
     state = str(tmp_path / "state")
     bpath = str(tmp_path / "baseline")
     save_grouped_baseline(
-        {"A": {"x": TDigest.from_values(rng.normal(10.0, 1.0, 20_000))},
-         "B": {"x": TDigest.from_values(rng.normal(20.0, 1.0, 20_000))},
-         "C": {"x": TDigest.from_values(rng.normal(0.0, 1.0, 20_000))}},
+        {"A": {"x": grid_sketch(rng.normal(10.0, 1.0, 20_000))},
+         "B": {"x": grid_sketch(rng.normal(20.0, 1.0, 20_000))},
+         "C": {"x": grid_sketch(rng.normal(0.0, 1.0, 20_000))}},
         spark, bpath,
     )
 
@@ -817,7 +817,7 @@ def test_incremental_grouped_drift_cohorts(spark, tmp_path):
     with pytest.raises(ValueError, match="re-bootstrap"):
         validate_incremental(  # cohort -> table-level
             spark, corpus, state, rule_set=[], with_profile=False,
-            drift_baseline={"x": TDigest.from_values(
+            drift_baseline={"x": grid_sketch(
                 rng.normal(10.0, 1.0, 1000))},
         )
     with pytest.raises(ValueError, match="re-bootstrap"):
@@ -832,7 +832,7 @@ def test_incremental_grouped_drift_cohorts(spark, tmp_path):
         validate_incremental(
             spark, corpus, str(tmp_path / "state2"), rule_set=[],
             with_profile=False,
-            drift_baseline={"x": TDigest.from_values(
+            drift_baseline={"x": grid_sketch(
                 rng.normal(10.0, 1.0, 1000))},
             drift_group_by="cohort",
         )
@@ -1106,3 +1106,63 @@ def test_incremental_sees_hive_partition_columns(spark, tmp_path):
     for k, v in full_m.items():
         if isinstance(v, float) and not math.isnan(v):
             assert inc_m[k] == pytest.approx(v, rel=1e-9, abs=1e-9), k
+
+
+LEGACY = os.path.join(os.path.dirname(__file__), "golden", "legacy_tdigest")
+
+
+def test_legacy_tdigest_state_continues(spark, tmp_path):
+    """State written when drift sketches were t-digest JSON keeps
+    working. The fixture (tests/golden/legacy_tdigest) holds a
+    save_baseline file and the ``sketches`` store row of a bootstrap
+    increment, both written by the t-digest engine over the frames
+    below. The baseline loads, an increment continues the stored
+    history, and the drift flags equal the ones that engine gave:
+    increment 0 passes, and at increment 1 only ``shifted`` drifts (it
+    reported ks=0.162395, psi=0.234196; the grid KS stays within 0.01
+    of it)."""
+    import shutil
+
+    from automatic_data_validator_spark.drift import load_baseline
+
+    def frame(lo, hi, shift):
+        i = F.col("id")
+        return spark.range(lo, hi, 1, 1).select(
+            F.concat(F.lit("d"), i.cast("string")).alias("doc_id"),
+            ((i * 37) % 1000).cast("double").alias("stable"),
+            ((i * 53) % 1000 + shift).cast("double").alias("shifted"),
+            (i % 7).cast("double").alias("mixed"),
+        )
+
+    baseline_path = os.path.join(LEGACY, "baseline")
+    baseline = load_baseline(spark, baseline_path)
+    assert sorted(baseline) == ["mixed", "shifted", "stable"]
+    assert all(g.total_weight == 5000 for g in baseline.values())
+    assert baseline["stable"].quantile(0.0) == 0.0
+    assert baseline["stable"].quantile(1.0) == 999.0
+
+    corpus, state = str(tmp_path / "docs"), str(tmp_path / "state")
+
+    def drift_flags(inc):
+        res = validate_incremental(
+            spark, corpus, state, rule_set=[], with_profile=False,
+            drift_baseline=baseline_path,
+        )
+        details.update({r["doc_id"]: r["detail"] for r in res.violations.collect()
+                        if r["rule_id"].startswith("drift_")})
+        return {r["rule_id"]: r["pass"] for r in res.verdicts.collect()
+                if r["rule_id"].startswith("drift_") and r["increment"] == inc}
+
+    details: dict = {}
+
+    frame(0, 3000, 0).write.parquet(corpus)
+    assert drift_flags(0) == {
+        "drift_mixed": True, "drift_shifted": True, "drift_stable": True}
+    # the bootstrap's history is the t-digest engine's row
+    shutil.rmtree(os.path.join(state, "sketches"))
+    shutil.copytree(os.path.join(LEGACY, "sketches"), os.path.join(state, "sketches"))
+    frame(3000, 5000, 400).write.mode("append").parquet(corpus)
+    assert drift_flags(1) == {
+        "drift_mixed": True, "drift_shifted": False, "drift_stable": True}
+    ks = float(details["shifted"].split(";")[0].removeprefix("ks="))
+    assert abs(ks - 0.162395) < 0.01, details

@@ -108,31 +108,47 @@ def _annotation_names(tree: ast.AST) -> set[str]:
     return out
 
 
-def _unused_imports(path: pathlib.Path) -> list[str]:
-    tree = ast.parse(path.read_text(), filename=str(path))
-    bound = {}
-    for node in tree.body:
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                bound[a.asname or a.name.split(".")[0]] = node.lineno
-        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
-            for a in node.names:
-                bound[a.asname or a.name] = node.lineno
-    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
-    used |= _annotation_names(tree)
-    return [f"{path.name}:{line} {name}" for name, line in bound.items()
-            if name not in used]
+def _unused_in(tree: ast.AST, name: str) -> list[str]:
+    """Imports a scope (the module or a function) binds but never uses
+    within itself, nested scopes included."""
+    out = []
+    scopes = [tree] + [n for n in ast.walk(tree)
+                       if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    for scope in scopes:
+        bound = {}
+        todo = list(ast.iter_child_nodes(scope))
+        while todo:  # this scope's statements, not nested functions'
+            node = todo.pop()
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    bound[a.asname or a.name.split(".")[0]] = node.lineno
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                for a in node.names:
+                    bound[a.asname or a.name] = node.lineno
+            elif not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                todo += ast.iter_child_nodes(node)
+        used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        used |= _annotation_names(scope)
+        out += [f"{name}:{line} {b}" for b, line in sorted(bound.items(), key=lambda t: t[1])
+                if b not in used]
+    return out
 
 
 def test_every_module_level_import_is_used():
-    """Package and test modules import nothing they do not use;
-    ``__init__.py``'s re-exports are its purpose and are exempt."""
+    """Package, job and test modules import nothing they do not use,
+    at module level or inside a function; ``__init__.py``'s re-exports
+    are its purpose and are exempt."""
     files = [p for p in sorted(PACKAGE.glob("*.py")) if p.name != "__init__.py"]
     files += sorted((ROOT / "tests").glob("*.py"))
-    assert len(files) >= 40, files
+    files += sorted((ROOT / "jobs").glob("*.py"))
+    assert len(files) >= 45, files
     # a quoted-annotation-only use counts (refcheck's ``Any``)
     assert "Any" in _annotation_names(ast.parse((PACKAGE / "refcheck.py").read_text()))
-    unused = [u for p in files for u in _unused_imports(p)]
+    # a function-local import is checked against its own function
+    probe = ast.parse("import os\ndef f():\n    import os\n    return 1\nos.sep\n")
+    assert _unused_in(probe, "probe.py") == ["probe.py:3 os"]
+    unused = [u for p in files
+              for u in _unused_in(ast.parse(p.read_text(), filename=str(p)), p.name)]
     assert not unused, unused
 
 

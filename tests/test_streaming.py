@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from fixtures import grid_sketch
 
 from automatic_data_validator_spark import rules as R
 from automatic_data_validator_spark.streaming import validate_stream, windowed_quality
@@ -173,13 +174,13 @@ def test_drift_stream_flags_shifted_batch(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from automatic_data_validator_spark.drift import TDigest, save_baseline
+    from automatic_data_validator_spark.drift import save_baseline
     from automatic_data_validator_spark.streaming import drift_stream
 
     rng = np.random.RandomState(42)
     base_vals = rng.normal(10.0, 1.0, 20_000)
     save_baseline(
-        {"x": TDigest.from_values(base_vals)}, spark, str(tmp_path / "baseline")
+        {"x": grid_sketch(base_vals)}, spark, str(tmp_path / "baseline")
     )
 
     src = str(tmp_path / "in")
@@ -219,12 +220,12 @@ def test_drift_stream_misconfigured_column_fails(spark, tmp_path):
     import pandas as pd
     from pyspark.errors import StreamingQueryException
 
-    from automatic_data_validator_spark.drift import TDigest, save_baseline
+    from automatic_data_validator_spark.drift import save_baseline
     from automatic_data_validator_spark.streaming import drift_stream
 
     rng = np.random.RandomState(5)
     save_baseline(
-        {"x": TDigest.from_values(rng.normal(10.0, 1.0, 1_000))},
+        {"x": grid_sketch(rng.normal(10.0, 1.0, 1_000))},
         spark, str(tmp_path / "baseline"),
     )
     src = str(tmp_path / "in")
@@ -305,14 +306,13 @@ def test_drift_stream_grouped_cohorts(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from automatic_data_validator_spark.drift import (
-        TDigest, save_grouped_baseline)
+    from automatic_data_validator_spark.drift import save_grouped_baseline
     from automatic_data_validator_spark.streaming import drift_stream
 
     rng = np.random.RandomState(7)
     save_grouped_baseline(
-        {"A": {"x": TDigest.from_values(rng.normal(10.0, 1.0, 20_000))},
-         "B": {"x": TDigest.from_values(rng.normal(20.0, 1.0, 20_000))}},
+        {"A": {"x": grid_sketch(rng.normal(10.0, 1.0, 20_000))},
+         "B": {"x": grid_sketch(rng.normal(20.0, 1.0, 20_000))}},
         spark, str(tmp_path / "baseline"),
     )
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from fixtures import grid_sketch
 
 from automatic_data_validator_spark import rules as R
 from automatic_data_validator_spark.validate import run_validation, canonical_violations
@@ -309,7 +310,7 @@ def test_run_validation_drift_phase(spark, tmp_path):
     import numpy as np
 
     from automatic_data_validator_spark import rules as R
-    from automatic_data_validator_spark.drift import TDigest, save_baseline
+    from automatic_data_validator_spark.drift import save_baseline
 
     rng = np.random.RandomState(21)
     df = spark.range(0, 8000, 1, 4).select(
@@ -318,8 +319,8 @@ def test_run_validation_drift_phase(spark, tmp_path):
         (F.col("id") % 100 + 500).cast("double").alias("shifted"),
     )
     baseline = {
-        "stable": TDigest.from_values(rng.randint(0, 100, 20_000).astype(float)),
-        "shifted": TDigest.from_values(rng.randint(0, 100, 20_000).astype(float)),
+        "stable": grid_sketch(rng.randint(0, 100, 20_000).astype(float)),
+        "shifted": grid_sketch(rng.randint(0, 100, 20_000).astype(float)),
     }
     rs = [R.Rule("nn", "not_null", column="doc_id")]
     res = run_validation(
@@ -501,9 +502,7 @@ def test_drift_phase_disjoint_baseline_fails_loudly(spark, docs):
     must be distinguishable from passing monitoring)."""
     import numpy as np
 
-    from automatic_data_validator_spark.drift import TDigest
-
-    bogus = {"no_such_column": TDigest.from_values(np.arange(100.0))}
+    bogus = {"no_such_column": grid_sketch(np.arange(100.0))}
     with pytest.raises(Exception) as ei:
         run_validation(
             spark, docs, rule_set=[], check_uniqueness=False,
@@ -516,14 +515,12 @@ def test_drift_phase_disjoint_baseline_fails_loudly(spark, docs):
 def test_drift_baseline_dict_shape_must_match_mode(spark, group_by):
     """A baseline dict of the wrong shape for the mode raises the
     remedy-naming ValueError: a flat {column: sketch} dict with
-    drift_group_by set (it used to die on "'TDigest' object is not
+    drift_group_by set (it used to die on "'<sketch>' object is not
     iterable"), and a grouped {group: {column: sketch}} dict without it
     (it used to read cohort names as columns: "do not intersect")."""
     import numpy as np
 
-    from automatic_data_validator_spark.drift import TDigest
-
-    d = TDigest.from_values(np.arange(100.0))
+    d = grid_sketch(np.arange(100.0))
     baseline = {"v": d} if group_by else {"cohort_a": {"v": d}}
     df = spark.createDataFrame(
         [("d1", "cohort_a", 1.0), ("d2", "cohort_a", 2.0)],

@@ -1,12 +1,12 @@
 """The tail of run_validation: what runs after the row-rules totals
-arrive, how the violation rows leave, and the drift merge levels.
+arrive, how the violation rows leave, and the drift sketch's edges.
 
 - uniqueness/referential pin their caches with the per-partition
   collect their verdicts need, so no job runs after the totals;
 - violations leave as one partition when their exact row count is at
   most ``config.VIOLATIONS_ONE_FILE_ROWS`` (default mode only);
-- the drift sketch skips its level-2 combine when it would be an
-  identity, and still sketches every column of a zero-partition input.
+- the drift sketch sketches every column of a zero-partition input,
+  and table-level drift equals cohort drift over one constant cohort.
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ import os
 
 import numpy as np
 import pyspark.sql.functions as F
+from fixtures import grid_sketch
 import pytest
 
 from automatic_data_validator_spark import config
@@ -123,7 +124,7 @@ def test_drift_phase_reports_zero_partition_input(spark):
     as the same empty data with partitions does."""
     docs = local_frame(spark, [], "doc_id string, x double")
     assert docs.rdd.getNumPartitions() == 0
-    baseline = {"x": DR.TDigest.from_values(np.arange(100, dtype=float))}
+    baseline = {"x": grid_sketch(np.arange(100, dtype=float))}
     res = run_validation(
         spark, docs, rule_set=[R.Rule("nn", "not_null", column="doc_id")],
         check_uniqueness=False, with_profile=False, drift_baseline=baseline,
@@ -145,71 +146,27 @@ def _signal_frame(spark, partitions: int):
     )
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _same_digest(x: DR.TDigest, y: DR.TDigest) -> bool:
-    return (
-        np.array_equal(x.means, y.means)
-        and np.array_equal(x.weights, y.weights)
-        and (x.min_val, x.max_val) == (y.min_val, y.max_val)
-    )
-
-
-def test_sketch_skips_identity_level_two(spark):
-    """With at most combine_buckets level-1 partitions, the plan ends at
-    the level-1 mapInPandas, and sketch_columns equals, bit for bit, a
-    driver merge of the per-partition digests in partition order."""
-    df = _signal_frame(spark, 8)
-    plan = _plan(DR._sketch_partials(df, ["a", "b"]))
-    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
-    sk = DR.sketch_columns(df, ["a", "b"])
-    pdf = df.select(F.spark_partition_id().alias("pid"), "a", "b").toPandas()
-    for c in ("a", "b"):
-        ref = DR.TDigest.merge_all(
-            DR.TDigest.from_values(part[c].to_numpy())
-            for _pid, part in sorted(pdf.groupby("pid"), key=lambda t: t[0])
-        )
-        assert _same_digest(sk[c], ref), c
-
-
-def test_grouped_sketch_skips_identity_level_two(spark):
-    df = _signal_frame(spark, 8)
-    plan = _plan(DR._sketch_partials(df, ["a", "b"], group_col="g"))
-    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
-    sk = DR.sketch_columns(df, ["a", "b"], group_by="g")
-    pdf = df.select(F.spark_partition_id().alias("pid"), "g", "a", "b").toPandas()
-    parts = sorted(pdf.groupby("pid"), key=lambda t: t[0])
-    assert sorted(sk) == sorted(pdf["g"].unique())
-    for g in sk:
-        for c in ("a", "b"):
-            ref = DR.TDigest.merge_all(
-                DR.TDigest.from_values(part.loc[part["g"] == g, c].to_numpy())
-                for _pid, part in parts
-                if (part["g"] == g).any()
-            )
-            assert _same_digest(sk[g][c], ref), (g, c)
+def _same_grid(x: DR.QuantileGrid, y: DR.QuantileGrid) -> bool:
+    return np.array_equal(x.q, y.q) and x.total_weight == y.total_weight
 
 
 @pytest.mark.parametrize("partitions", [8, 16])
 def test_table_drift_is_cohort_drift_with_one_group(spark, partitions):
     """Table-level drift is the single-group case of cohort drift: over
-    a constant cohort column both give the same digests bit for bit,
-    below (8 partitions) and above (16) the level-2 gate of
-    combine_buckets=8, and the same KS/PSI/reason report rows."""
+    a constant cohort column both give the same grids bit for bit, at
+    8 and 16 input partitions, and the same KS/PSI/reason report
+    rows."""
     df = _signal_frame(spark, partitions)
     one = df.withColumn("k", F.lit("all"))
-    table = DR.sketch_columns(df, ["a", "b"], combine_buckets=8)
-    cohort = DR.sketch_columns(one, ["a", "b"], combine_buckets=8, group_by="k")
+    table = DR.sketch_columns(df, ["a", "b"])
+    cohort = DR.sketch_columns(one, ["a", "b"], group_by="k")
     assert set(cohort) == {"all"}
     for c in ("a", "b"):
-        assert _same_digest(table[c], cohort["all"][c]), c
+        assert _same_grid(table[c], cohort["all"][c]), c
     shifted = df.select("g", (F.col("a") + 10).alias("a"), "b")
-    cur = DR.sketch_columns(shifted, ["a", "b"], combine_buckets=8)
+    cur = DR.sketch_columns(shifted, ["a", "b"])
     cur_k = DR.sketch_columns(
-        shifted.withColumn("k", F.lit("all")), ["a", "b"],
-        combine_buckets=8, group_by="k",
+        shifted.withColumn("k", F.lit("all")), ["a", "b"], group_by="k"
     )
 
     def stats(report):
@@ -224,16 +181,3 @@ def test_table_drift_is_cohort_drift_with_one_group(spark, partitions):
     assert stats(rep) == stats(rep_k)
     assert [r["group"] for r in rep] == [None, None]
     assert [r["drifted"] for r in rep] == [True, False]
-
-
-def test_sketch_keeps_level_two_above_buckets(spark):
-    """The other side of the gate: more level-1 partitions than
-    combine_buckets still runs the cluster-side combine."""
-    df = _signal_frame(spark, 16)
-    for part in (
-        DR._sketch_partials(df, ["a"], combine_buckets=4),
-        DR._sketch_partials(df, ["a"], combine_buckets=4, group_col="g"),
-    ):
-        plan = _plan(part)
-        assert "Exchange" in plan and "FlatMapGroupsInPandas" in plan
-    assert DR._sketch_partials(df, ["a"], combine_buckets=4).count() <= 4
