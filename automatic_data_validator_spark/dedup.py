@@ -1361,59 +1361,35 @@ def incremental_neardup(
     (pinned by test). LSH parameters are pinned in the manifest —
     mixing signature parameters across increments raises.
 
-    Same manifest/store discipline as incremental.validate_incremental:
-    per-increment dynamic-overwrite stores, manifest committed last,
-    crashed increments re-run idempotently.
+    Same state protocol as incremental.validate_incremental: each
+    increment writes its store partitions and commits them in one
+    versioned manifest; reads see only committed increments.
     """
-    import json as _json
-    import os as _os
-
     from pyspark.sql import types as T
 
     from .incremental import (
-        _commit_manifest,
-        _file_delta,
+        _commit_increment,
         _key_summary,
-        _read_store,
-        _refuse_crashed_compaction,
+        _open_increment,
         _write_inc,
     )
 
-    # a compact_state swap that crashed mid-rename would make the
-    # banded store read as never-written — every stored signature
-    # would silently stop pairing with new docs
-    _refuse_crashed_compaction(state_dir)
     params = {
         "num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k,
         "jaccard_threshold": jaccard_threshold, "id_col": id_col,
         "text_col": text_col,
     }
-    mpath = _os.path.join(state_dir, "neardup_manifest.json")
-    manifest = (
-        _json.load(open(mpath)) if _os.path.exists(mpath)
-        else {"files": [], "increment": -1, "params": params}
-    )
-    # older manifests pin a "signature_impl" choice; every value of it
-    # signed bit-identically, so it must not refuse the merge
-    manifest["params"].pop("signature_impl", None)
-    if manifest["params"] != params:
-        raise ValueError(
-            "LSH parameters changed between increments "
-            f"({manifest['params']} -> {params}); signatures cannot "
-            "merge — re-bootstrap with a fresh state_dir"
-        )
-    corpus, all_files, delta_files = _file_delta(
-        spark, corpus_path, manifest,
+    st, corpus, all_files, delta_files = _open_increment(
+        spark, state_dir, "neardup_manifest", corpus_path,
+        {"params": (params, "LSH parameters", "signatures cannot merge")},
         "if this was a row-preserving compaction, run "
         "rebase_neardup_after_compaction() first (the banded store "
         "keys on doc ids, so only the manifest needs re-pointing); "
         "otherwise re-bootstrap with a fresh state_dir",
     )
-    inc = int(manifest["increment"])
+    inc = st.increment
     if not delta_files and inc < 0:
         raise ValueError(f"no input files and no prior state at {state_dir}")
-    pairs_path = _os.path.join(state_dir, "pairs")
-    banded_path = _os.path.join(state_dir, "banded")
     if delta_files:
         inc += 1
         # basePath keeps hive-partition columns visible (id/text may be
@@ -1423,19 +1399,7 @@ def incremental_neardup(
         # additive id-multiset checksum (same scheme as validate_
         # incremental's): one id-pruned aggregate over the DELTA, letting
         # rebase_neardup_after_compaction verify a rewritten corpus
-        d_rows, d_hash, _lo, _hi = _key_summary(
-            delta.groupBy(F.col(id_col).cast("string").alias("doc_id")).agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-        )
-        stored = _read_store(spark, banded_path)
-        if stored is not None:
-            # crash recovery: a crashed attempt at THIS increment may
-            # have written its partitions before dying (manifest last);
-            # the store must present only COMMITTED increments, else
-            # delta docs would count twice toward the cap and pair with
-            # their own orphaned signatures
-            stored = stored.filter(F.col("increment") < inc)
+        d_rows, d_hash, _lo, _hi = _key_summary(delta, id_col)
         banded_delta = _lsh_band_buckets(
             delta, id_col, text_col, num_hashes, bands, shingle_k
         ).persist()
@@ -1443,40 +1407,29 @@ def incremental_neardup(
             new_pairs, oversize = _neardup_pairs(
                 banded_delta, corpus.select(F.col(id_col), F.col(text_col)),
                 id_col, text_col, jaccard_threshold, shingle_k,
-                max_bucket_size, broadcast_limit, stored=stored,
+                max_bucket_size, broadcast_limit,
+                stored=st.read(spark, "banded"),
             )
             # the banded store scales with delta x bands — keep its
             # natural partitioning (num_files=None) rather than the
             # small-store 4-file cap, which would bottleneck a large
             # delta's store write through 4 tasks
-            _write_inc(banded_delta, banded_path, inc, num_files=None)
-            _write_inc(new_pairs, pairs_path, inc)
+            _write_inc(banded_delta, st.path(st.gen("banded")), inc,
+                       num_files=None)
+            _write_inc(new_pairs, st.path(st.gen("pairs")), inc)
         finally:
             banded_delta.unpersist()
-        # only carry a checksum when the manifest already has one (or
-        # this is the bootstrap increment): minting one from a zero base
-        # on pre-checksum state would cover only this delta, making a
-        # later rebase_neardup_after_compaction(verify=True) on a
-        # legitimate row-preserving compaction fail with the misleading
-        # 'rewrite changed the row multiset' error instead of the
-        # intended 'manifest has no checksum' guidance (round-5 ADVICE)
-        old_ck = manifest.get("checksum")
-        new_manifest = {"files": all_files, "increment": inc, "params": params}
-        if old_ck is not None or inc == 0:
-            base_ck = old_ck or {"rows": 0, "hash": 0}
-            new_manifest["checksum"] = {
-                "rows": int(base_ck["rows"]) + d_rows,
-                "hash": int(base_ck["hash"]) + d_hash,
-                "key_column": id_col,
-            }
-        _commit_manifest(mpath, new_manifest)
+        st = _commit_increment(
+            st, all_files, inc, {"params": params}, (d_rows, d_hash), id_col,
+            {name: st.gen(name) for name in ("banded", "pairs")},
+        )
 
     # typed from the corpus: id_a/id_b inherit id_col's actual type
     # (int, string, ...). The fallback covers the legitimate
     # "increments ran, zero pairs verified" state, where the
     # purge-on-empty write leaves a file-less store.
     id_type = corpus.select(id_col).schema[0].dataType
-    pairs = _read_store(spark, pairs_path, schema=T.StructType([
+    pairs = st.read(spark, "pairs", schema=T.StructType([
         T.StructField("id_a", id_type), T.StructField("id_b", id_type),
         T.StructField("jaccard", T.DoubleType()),
     ]))

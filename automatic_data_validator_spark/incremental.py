@@ -47,10 +47,15 @@ corpus (pinned by tests/test_incremental.py):
   quantiles (the flagship documents shape has no numeric columns, so
   no quantile metrics at all).
 
-Failure atomicity: every store is written ``partitionBy("increment")``
-with dynamic partition overwrite and the manifest is committed LAST,
-so a crashed increment re-runs idempotently (its partial partition is
-overwritten, never duplicated).
+Failure atomicity: state is published by versioned manifests, never
+by renames. An increment writes its partition of every store (and a
+new generation of ``metrics``) and then commits them all with one
+write-once ``manifest.<n>.json``; readers see only the increments and
+store generations the newest manifest that parses names. A crash
+before the commit leaves the prior manifest in force, and the retry
+clears the uncommitted partitions and writes them again. The same
+protocol serves compaction, expiry and ``dedup.incremental_neardup``
+on any Hadoop filesystem (``fsio``).
 
 Reference parity note: the reference validates a whole pandas frame
 per run (data_analyzer.py:40-118); incremental mode is this engine's
@@ -61,6 +66,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -68,71 +74,159 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import config
+from . import config, fsio
 from . import rules as R
 from .profile import finalize_partial_profile
 from .session import local_frame
 from .sources import parquet_writer
 from .state import LINEAGE_SCHEMA
 
-_MANIFEST = "manifest.json"
 # multiset key checksum: sum over rows of xxhash64(key) mod P, plus the
 # row count — additive across increments (computed on each delta from
 # the already-aggregated key-location frame) and recomputable from a
 # compacted corpus in ONE key-only scan, so rebase_after_compaction can
 # verify the rewrite preserved the row multiset without trusting it
 _CHECKSUM_P = 2**40
-# compaction swap suffixes — shared by compact_state's two-rename swap
-# and the guards that refuse to read a mid-swap state
-_COMPACT_BAK = ".compact_bak"
-_COMPACT_TMP = ".compact_tmp"
+# the stores each protocol's manifest names, by manifest prefix
+_PROTOCOL_STORES = {
+    "manifest": ("verdicts", "violations", "lineage", "key_index",
+                 "partials", "sketches", "sketches_grouped", "metrics"),
+    "neardup_manifest": ("banded", "pairs"),
+}
+_VERSIONED = re.compile(r"^(?P<name>\w+)\.(?P<v>\d+)\.json$")
+_GENERATION = re.compile(r"^(?P<store>[a-z_]+)(\.g(?P<g>\d+))?$")
 
 
-def _refuse_crashed_compaction(state_dir: str) -> None:
-    """Raise if a compaction crashed between its two swap renames here
-    (<store>.compact_bak present, live dir possibly missing): reading
-    such a state would silently treat the store as never written — an
-    absent key index passes every cross-increment duplicate."""
-    if not os.path.isdir(state_dir):
-        return
-    crashed = [
-        d for d in os.listdir(state_dir) if d.endswith(_COMPACT_BAK)
-    ]
+@dataclass
+class _State:
+    """One protocol's state: the newest ``<name>.<n>.json`` that parses
+    (``version`` 0: an unversioned ``<name>.json``; -1: none). The
+    manifest names the latest committed ``increment`` and, under
+    ``stores``, each store's generation dir relative to ``state_dir``
+    (``<store>``, then ``<store>.g<k>`` after k rewrites). ``newest``
+    counts torn manifests too, so one never blocks the next commit."""
+
+    state_dir: str
+    name: str
+    version: int
+    newest: int
+    manifest: dict
+
+    @property
+    def increment(self) -> int:
+        return int(self.manifest["increment"])
+
+    def gen(self, store: str) -> str:
+        return self.manifest["stores"].get(store, store)
+
+    def path(self, rel: str) -> str:
+        return os.path.join(self.state_dir, rel)
+
+    def read(self, spark: SparkSession, store: str, schema=None):
+        """``store`` as the manifest commits it: its generation, only
+        the committed increments."""
+        return _read_store(spark, self.path(self.gen(store)), schema,
+                           through=self.increment)
+
+
+def _load_state(state_dir: str, name: str) -> _State:
+    """Read the newest manifest of protocol ``name`` that parses. An
+    unversioned ``<name>.json`` (stores at ``<store>/increment=<k>``)
+    reads as version 0, whose generations are the store directories
+    themselves; it refuses while an older compaction left a
+    ``<store>.compact_bak`` (its two-rename swap crashed midway, and the
+    store may be missing — an absent key index passes every
+    cross-increment duplicate)."""
+    entries = fsio.ls(state_dir)
+    versions = sorted(
+        (int(m["v"]) for e in entries
+         if (m := _VERSIONED.match(e.name)) and m["name"] == name),
+        reverse=True,
+    )
+    newest = versions[0] if versions else 0
+    for v in versions:
+        manifest = fsio.read_json(os.path.join(state_dir, f"{name}.{v}.json"))
+        if isinstance(manifest, dict):
+            return _State(state_dir, name, v, newest, manifest)
+    legacy = fsio.read_json(os.path.join(state_dir, f"{name}.json"))
+    if not isinstance(legacy, dict):
+        return _State(state_dir, name, -1, newest,
+                      {"files": [], "increment": -1, "stores": {}})
+    crashed = sorted(e.name for e in entries if e.name.endswith(".compact_bak"))
     if crashed:
         raise ValueError(
             f"state_dir {state_dir} holds a crashed compaction "
-            f"({sorted(crashed)}); run compact_state() first — it "
-            "restores the backed-up store before doing anything else"
+            f"({crashed}) from an earlier engine version: rename each "
+            "backup back to its store name if the store is missing, "
+            "else delete the backup"
         )
+    legacy["stores"] = {e.name: e.name for e in entries
+                        if e.is_dir and e.name in _PROTOCOL_STORES[name]}
+    # keys older manifests lack, or carry for a choice since removed:
+    # table-level drift with every key-index verdict as unique_doc_id,
+    # and a signature kernel whose every value signed bit-identically
+    if legacy.get("modes") is not None:
+        legacy["modes"].setdefault("drift_group_by", None)
+        legacy["modes"].setdefault("unique_rules", ["unique_doc_id"])
+    legacy.get("params", {}).pop("signature_impl", None)
+    return _State(state_dir, name, 0, newest, legacy)
 
 
-def _commit_manifest(mpath: str, manifest: dict) -> None:
-    """THE manifest commit: atomic tmp-write + rename, LAST in every
-    increment protocol — a crash before this line leaves the prior
-    manifest in force and the crashed increment's partition writes are
-    re-done idempotently on retry. Shared by validate_incremental,
-    expire_increments, rebase_after_compaction, and
-    dedup.incremental_neardup so the crash-commit protocol has exactly
-    one implementation."""
-    os.makedirs(os.path.dirname(mpath), exist_ok=True)
-    tmp = mpath + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, mpath)
+def _commit(st: _State, manifest: dict) -> _State:
+    """THE commit of every state protocol: write ``manifest`` once as
+    the next version, then delete every manifest of the protocol but
+    the newest two, and every generation of its stores that the
+    manifest no longer names (superseded ones, and those of crashed
+    rewrites). A crash before the write leaves ``st`` in force; one
+    after it leaves only garbage, which the next commit deletes."""
+    v = max(st.newest, st.version) + 1
+    fsio.write_once(st.path(f"{st.name}.{v}.json"), json.dumps(manifest))
+    live = set(manifest["stores"].values())
+    for e in fsio.ls(st.state_dir):
+        m = _VERSIONED.match(e.name)
+        gen = _GENERATION.match(e.name)
+        if (
+            (m and m["name"] == st.name and int(m["v"]) not in (v, st.version))
+            or (e.name == f"{st.name}.json" and st.version != 0)
+            or (e.is_dir and gen and e.name not in live
+                and gen["store"] in manifest["stores"])
+        ):
+            fsio.delete(st.path(e.name))
+    return _State(st.state_dir, st.name, v, v, manifest)
 
 
-def _file_delta(
-    spark: SparkSession, input_path: str, manifest: dict, remedy: str
-) -> "tuple[DataFrame, list[str], list[str]]":
-    """File-inventory diff against a manifest: returns (full frame,
-    all_files, delta_files) and raises on a removed/rewritten file —
-    the append-only contract both incremental protocols share. At a
+def _next_gen(st: _State, store: str) -> str:
+    """The generation directory after ``store``'s committed one (the
+    store's own name when none is committed yet): a retried rewrite
+    lands on the same name, replacing its crashed attempt's files."""
+    m = _GENERATION.match(st.manifest["stores"].get(store, ""))
+    return f"{store}.g{int(m['g'] or 0) + 1}" if m else store
+
+
+def _open_increment(
+    spark: SparkSession, state_dir: str, name: str, input_path: str,
+    pins: dict, remedy: str,
+) -> "tuple[_State, DataFrame, list[str], list[str]]":
+    """Load protocol ``name``'s state and diff the input's file
+    inventory against it: (state, full frame, all_files, delta_files).
+    ``pins`` maps each manifest key fixed for the state's lifetime to
+    (value, what changed, why it cannot merge); a stored value that
+    differs raises, and so does a removed/rewritten file — the
+    append-only contract both incremental protocols share. At a
     deployment with millions of files, derive the delta from Iceberg
     snapshot manifests (snapshot_id diff) instead of this listing —
     callers' merge machinery is unchanged."""
+    st = _load_state(state_dir, name)
+    for key, (value, what, why) in pins.items():
+        stored = st.manifest.get(key)
+        if stored is not None and stored != value:
+            raise ValueError(
+                f"{what} changed between increments ({stored} -> {value}): "
+                f"{why} — re-bootstrap with a fresh state_dir"
+            )
     full = spark.read.parquet(input_path)
     all_files = sorted(full.inputFiles())
-    known = set(manifest["files"])
+    known = set(st.manifest["files"])
     removed = known - set(all_files)
     if removed:
         raise ValueError(
@@ -140,13 +234,42 @@ def _file_delta(
             f"(e.g. {sorted(removed)[0]}): the append-only contract is "
             f"broken — {remedy}"
         )
-    return full, all_files, [f for f in all_files if f not in known]
+    return st, full, all_files, [f for f in all_files if f not in known]
 
 
-def _key_summary(loc: DataFrame) -> "tuple[int, int, str | None, str | None]":
-    """(rows, hash, min key, max key) over a (doc_id, cnt) aggregate in
-    one job: the key multiset checksum (a decimal(38) sum, so 10^12
-    rows cannot overflow) and the key range the index probe prunes to."""
+def _commit_increment(
+    st: _State, all_files: "list[str]", inc: int, pinned: dict,
+    checksum: "tuple[int, int]", key_column: str, stores: "dict[str, str]",
+) -> _State:
+    """Commit increment ``inc``: the input inventory, the pinned keys,
+    the stores written (store -> generation) and the running key
+    checksum, carried only when the manifest has one (or this is the
+    bootstrap) — one minted on pre-checksum state would cover only this
+    delta and fail a later verify=True rebase misleadingly. Other keys
+    (the expiry watermark) carry over."""
+    manifest = {**st.manifest, **pinned, "files": all_files, "increment": inc,
+                "stores": {**st.manifest["stores"], **stores}}
+    old_ck = st.manifest.get("checksum")
+    if old_ck is not None or inc == 0:
+        base = old_ck or {"rows": 0, "hash": 0}
+        manifest["checksum"] = {
+            "rows": int(base["rows"]) + checksum[0],
+            "hash": int(base["hash"]) + checksum[1],
+            "key_column": key_column,
+        }
+    return _commit(st, manifest)
+
+
+def _key_summary(
+    loc: DataFrame, key: "str | None" = None
+) -> "tuple[int, int, str | None, str | None]":
+    """(rows, hash, min key, max key) over a (doc_id, cnt) aggregate —
+    or over the rows of ``loc`` keyed by column ``key`` — in one job:
+    the key multiset checksum (a decimal(38) sum, so 10^12 rows cannot
+    overflow) and the key range the index probe prunes to."""
+    if key is not None:
+        loc = loc.groupBy(F.col(key).cast("string").alias("doc_id")).agg(
+            F.count(F.lit(1)).alias("cnt"))
     row = loc.agg(
         F.sum("cnt"),
         F.sum(
@@ -183,21 +306,20 @@ class IncrementalResult:
         drift rows count — an increment that cured a drift must not be
         held to a stale fail (the history stays queryable in the
         store)."""
+        # latest increment WITH drift rows, not the global latest: an
+        # increment that (somehow) carried no drift rows must not make a
+        # standing drift failure vanish un-re-evaluated
         v = self.verdicts
-        if "increment" in v.columns:
-            # latest increment WITH drift rows, not the global latest:
-            # an increment that (somehow) carried no drift rows must
-            # not make a standing drift failure vanish un-re-evaluated
-            latest = (
-                v.filter(F.col("rule_id").startswith("drift_"))
-                .agg(F.max("increment"))
-                .collect()[0][0]
+        latest = (
+            v.filter(F.col("rule_id").startswith("drift_"))
+            .agg(F.max("increment"))
+            .collect()[0][0]
+        )
+        if latest is not None:
+            v = v.filter(
+                (~F.col("rule_id").startswith("drift_"))
+                | (F.col("increment") == latest)
             )
-            if latest is not None:
-                v = v.filter(
-                    (~F.col("rule_id").startswith("drift_"))
-                    | (F.col("increment") == latest)
-                )
         return v.filter(~F.col("pass")).limit(1).count() == 0
 
 
@@ -208,15 +330,11 @@ def _write_inc(
     num_files: int = 4,
     sort_key: "str | None" = None,
 ) -> None:
-    # explicitly clear this increment's partition first: dynamic
-    # overwrite of an EMPTY frame writes no partitions, so a crashed
-    # attempt's orphaned rows would otherwise survive a re-run whose
-    # frame is legitimately empty (round-5 review finding)
-    part_dir = os.path.join(path, f"increment={inc}")
-    if os.path.isdir(part_dir):
-        import shutil
-
-        shutil.rmtree(part_dir)
+    """Write ``df`` as partition ``increment=inc`` of the store
+    generation at ``path``. The partition is cleared first: it can only
+    hold a crashed attempt's uncommitted files, and an empty ``df``
+    writes no partition to replace them."""
+    fsio.delete(os.path.join(path, f"increment={inc}"))
     # cap the per-increment file fan-out (guide §6): the store frames
     # inherit the shuffle/createDataFrame partitioning (64 near-empty
     # files per store per increment at bench scale), and per-file
@@ -237,15 +355,57 @@ def _write_inc(
     elif num_files:
         df = df.repartition(num_files)
     parquet_writer(
-        df.withColumn("increment", F.lit(inc)), partition_by="increment"
-    ).option("partitionOverwriteMode", "dynamic").parquet(path)
+        df.withColumn("increment", F.lit(inc)), "append", partition_by="increment"
+    ).parquet(path)
+
+
+def _write_gen(
+    st: _State, stores: "dict[str, str]", store: str, frame: DataFrame,
+    n_files: int = 4, sort_key: "str | None" = None,
+) -> str:
+    """Write ``frame`` as the next generation of increment-partitioned
+    ``store`` in ``n_files`` tasks (``compact_state``,
+    ``expire_increments``), record it in ``stores`` and return its
+    path. A retry lands on the same generation and overwrites it.
+
+    ``sort_key``: stores written range-sorted (the key index) must stay
+    prunable after a rewrite — rows are re-sorted by (increment,
+    sort_key) inside each coalesced task so row-group min/max stats
+    remain tight even when an increment collapses to a single file."""
+    stores[store] = _next_gen(st, store)
+    out = frame.coalesce(n_files)
+    if sort_key:
+        out = out.sortWithinPartitions("increment", sort_key)
+    parquet_writer(out, partition_by="increment").parquet(st.path(stores[store]))
+    return st.path(stores[store])
+
+
+def _parquet_file_count(path: str, first_only: bool = False) -> int:
+    """Count data files under a store, mirroring Spark's hidden-path
+    filter (_temporary/ leftovers and dot/underscore-prefixed entries
+    are NOT data — counting them would make a crashed store write
+    raise UNABLE_TO_INFER_SCHEMA forever instead of recovering).
+    ``first_only`` stops at 1 — the emptiness probe of ``_read_store``."""
+    n, dirs = 0, [path]
+    while dirs and not (first_only and n):
+        d = dirs.pop()
+        for e in fsio.ls(d):
+            if e.name.startswith(("_", ".")):
+                continue
+            if e.is_dir:
+                dirs.append(os.path.join(d, e.name))
+            elif e.name.endswith(".parquet"):
+                n += 1
+    return n
 
 
 def _read_store(
-    spark: SparkSession, path: str, schema=None
+    spark: SparkSession, path: str, schema=None, through: "int | None" = None
 ) -> DataFrame | None:
-    """Read a state store; a missing dir (or one with no parquet files
-    — partitionBy writes nothing for an empty frame, so a clean corpus
+    """Read a store generation, keeping only ``increment <= through``
+    when given (the committed increments: a crashed attempt's partition
+    lies above them). A missing dir (or one with no parquet files —
+    partitionBy writes nothing for an empty frame, so a clean corpus
     legitimately produces a file-less violations store) falls back to
     an empty frame of ``schema`` (+ the increment partition column)
     when given, else None.
@@ -255,8 +415,9 @@ def _read_store(
     treating it as 'never written' would silently skip merged checks
     (e.g. an unreadable key index would pass every cross-increment
     duplicate) and produce false-pass results."""
-    if os.path.isdir(path) and _parquet_file_count(path, first_only=True):
-        return spark.read.parquet(path)
+    if _parquet_file_count(path, first_only=True):
+        df = spark.read.parquet(path)
+        return df if through is None else df.filter(F.col("increment") <= through)
     if schema is None:
         return None
     from pyspark.sql import types as T
@@ -309,20 +470,6 @@ def validate_incremental(
     ``verdict_spill_threshold`` takes its spill mode: verdicts stay
     distributed instead of being collected to the driver.
     """
-    mpath = os.path.join(state_dir, _MANIFEST)
-    _refuse_crashed_compaction(state_dir)
-    manifest = (
-        json.load(open(mpath)) if os.path.exists(mpath)
-        else {"files": [], "increment": -1, "schema": None,
-              "rule_version": rule_version}
-    )
-    if manifest.get("rule_version", rule_version) != rule_version:
-        raise ValueError(
-            f"rule_version changed ({manifest.get('rule_version')} -> "
-            f"{rule_version}): previously-validated increments were "
-            "checked under different rules and cannot merge — "
-            "re-bootstrap with a fresh state_dir"
-        )
     # profile/drift participation must be consistent across increments:
     # an increment that skips them would silently VANISH from every
     # future merged metric / corpus sketch (the merges read only what
@@ -346,26 +493,22 @@ def validate_incremental(
              "drift_group_by": drift_group_by,
              # the runner's fallback when the rule set has none
              "unique_rules": sorted(uniq_ids) or ["unique_doc_id"]}
-    stored_modes = manifest.get("modes")
-    if stored_modes is not None:
-        # manifests written before a key existed ran table-level drift
-        # and stored every key-index verdict as unique_doc_id
-        stored_modes.setdefault("drift_group_by", None)
-        stored_modes.setdefault("unique_rules", ["unique_doc_id"])
-    if stored_modes is not None and stored_modes != modes:
-        raise ValueError(
-            f"profile/drift/uniqueness participation changed ({stored_modes} "
-            f"-> {modes}): increments that skip a merged family drop "
-            "out of the corpus-level result silently — keep the flags "
-            "consistent for the state_dir's lifetime, or re-bootstrap"
-        )
-    full, all_files, delta_files = _file_delta(
-        spark, documents_path, manifest,
+    st, full, all_files, delta_files = _open_increment(
+        spark, state_dir, "manifest", documents_path,
+        {"rule_version": (
+            rule_version, "rule_version",
+            "previously-validated increments were checked under "
+            "different rules and cannot merge"),
+         "modes": (
+            modes, "profile/drift/uniqueness participation",
+            "increments that skip a merged family drop out of the "
+            "corpus-level result silently — keep the flags consistent "
+            "for the state_dir's lifetime")},
         "if this was a row-preserving compaction, run "
         "rebase_after_compaction() first; otherwise start a fresh "
         "state_dir or run a full validation",
     )
-    inc = int(manifest["increment"]) + 1
+    inc = st.increment + 1
 
     if not delta_files:
         # nothing new: return the stored merged state, zero scans of
@@ -375,30 +518,27 @@ def validate_incremental(
                 f"no files under {documents_path} and no prior state "
                 f"at {state_dir}"
             )
-        return _merged_result(
-            spark, state_dir,
-            _read_store(spark, os.path.join(state_dir, "metrics")),
-            inc - 1, 0, 0,
-        )
+        gen = st.manifest["stores"].get("metrics")
+        metrics = gen and _read_store(spark, st.path(gen))
+        return _merged_result(spark, st, metrics, 0, 0)
 
     # basePath restores hive-partition columns (corpus at /data
     # partitioned by ds=…): reading leaf files alone disables partition
     # discovery, so every increment — bootstrap included — would
     # silently validate/profile WITHOUT the ds column while a full
     # run_validation over the same path sees it
-    delta = (
-        spark.read.option("basePath", documents_path).parquet(*delta_files)
-    )
+    delta = spark.read.option("basePath", documents_path).parquet(*delta_files)
     schema_str = delta.schema.simpleString()
-    if manifest["schema"] is not None and manifest["schema"] != schema_str:
+    stored_schema = st.manifest.get("schema")
+    if stored_schema is not None and stored_schema != schema_str:
         raise ValueError(
             "schema drift between increments: stored "
-            f"{manifest['schema']} vs delta {schema_str}; incremental "
+            f"{stored_schema} vs delta {schema_str}; incremental "
             "state cannot merge across schemas — see "
             "drift.schema_drift, then re-bootstrap"
         )
 
-    merges = _IncrementMerges(spark, state_dir, inc, drift_group_by)
+    merges = _IncrementMerges(spark, st, inc, drift_group_by)
     try:
         res = V._run_checks(
             spark, delta, catalog=catalog, rule_set=rule_set,
@@ -416,19 +556,23 @@ def validate_incremental(
         violations = res.violations.withColumn(
             "detail", F.coalesce(F.col("detail"), F.lit(f"inc={inc}"))
         )
-        path = lambda name: os.path.join(state_dir, name)  # noqa: E731
+        frames = {"verdicts": res.verdicts, "violations": violations,
+                  "lineage": res.lineage, "key_index": merges.loc}
+        stores = {name: st.gen(name) for name in frames}
+        # the key index is range-sorted on the key: the next
+        # increment's index probe prunes to the delta's key range
         writes = [
-            lambda: _write_inc(res.verdicts, path("verdicts"), inc),
-            lambda: _write_inc(violations, path("violations"), inc),
-            lambda: _write_inc(res.lineage, path("lineage"), inc),
-            # range-sorted on the key: the next increment's index
-            # probe prunes to the delta's key range
-            lambda: _write_inc(merges.loc, path("key_index"), inc,
-                               sort_key="doc_id"),
+            lambda name=name: _write_inc(
+                frames[name], st.path(stores[name]), inc,
+                sort_key="doc_id" if name == "key_index" else None)
+            for name in frames
         ]
         if res.metrics is not None:
-            writes.append(lambda: parquet_writer(res.metrics)
-                          .parquet(path("metrics")))
+            # the merged metrics replace the previous increment's: a
+            # new generation, committed with the rest
+            stores["metrics"] = _next_gen(st, "metrics")
+            writes.append(lambda: parquet_writer(res.metrics).parquet(
+                st.path(stores["metrics"])))
         # the stores are independent: write them concurrently (Spark
         # job submission is thread-safe; same rationale as
         # sources.write_outputs_parallel)
@@ -438,64 +582,32 @@ def validate_incremental(
     finally:
         merges.release()
 
-    # manifest LAST: a crash above leaves the old manifest, and the
-    # re-run dynamically overwrites this increment's partitions
-    old_ck = manifest.get("checksum")
-    prior_expired = manifest.get("expired_through")
-    manifest = {
-        "files": all_files,
-        "increment": inc,
-        "schema": schema_str,
-        "rule_version": rule_version,
-        "modes": modes,
-    }
-    # running key checksum (additive, computed with the probe's key
-    # bounds from the key-location aggregate): lets
-    # rebase_after_compaction verify a rewritten corpus. Only carried
-    # when the manifest already has one (or this is the bootstrap
-    # increment) — minting one from a zero base on pre-checksum state
-    # would cover only this delta and make a later verify=True rebase
-    # fail misleadingly (round-5 ADVICE, same class as the neardup
-    # manifest)
-    if old_ck is not None or inc == 0:
-        base_ck = old_ck or {"rows": 0, "hash": 0}
-        manifest["checksum"] = {
-            "rows": int(base_ck["rows"]) + merges.checksum[0],
-            "hash": int(base_ck["hash"]) + merges.checksum[1],
-            "key_column": key_column,
-        }
-    if prior_expired is not None:
-        # retention watermark (expire_increments) survives increments
-        manifest["expired_through"] = prior_expired
-    _commit_manifest(mpath, manifest)
-
+    st = _commit_increment(
+        st, all_files, inc,
+        {"schema": schema_str, "rule_version": rule_version, "modes": modes},
+        merges.checksum, key_column, {**stores, **merges.stores},
+    )
     # the key-location aggregate counts every delta row once
     return _merged_result(
-        spark, state_dir, res.metrics, inc, len(delta_files),
-        merges.checksum[0],
+        spark, st, res.metrics, len(delta_files), merges.checksum[0]
     )
 
 
 def _merged_result(
     spark: SparkSession,
-    state_dir: str,
+    st: _State,
     metrics: "DataFrame | None",
-    increment: int,
     n_delta_files: int,
     delta_rows: int,
 ) -> IncrementalResult:
-    """The corpus-level result: every stored increment's verdicts,
+    """The corpus-level result: every committed increment's verdicts,
     violations and lineage, with the merged ``metrics``."""
-
-    def store(name: str, schema) -> DataFrame:
-        return _read_store(spark, os.path.join(state_dir, name), schema)
-
     return IncrementalResult(
-        store("verdicts", R.VERDICT_SCHEMA),
-        store("violations", R.VIOLATION_SCHEMA),
+        st.read(spark, "verdicts", R.VERDICT_SCHEMA),
+        st.read(spark, "violations", R.VIOLATION_SCHEMA),
         metrics,
-        store("lineage", LINEAGE_SCHEMA),
-        increment, n_delta_files, delta_rows,
+        st.read(spark, "lineage", LINEAGE_SCHEMA),
+        st.increment, n_delta_files, delta_rows,
     )
 
 
@@ -512,85 +624,19 @@ def history_report(spark: SparkSession, state_dir: str) -> DataFrame:
     base: per-rule totals of all expired history, so grand totals over
     the whole report are invariant under retention.
     """
-    _refuse_crashed_compaction(state_dir)
-    verdicts = _read_store(spark, os.path.join(state_dir, "verdicts"))
+    st = _load_state(state_dir, "manifest")
+    verdicts = st.read(spark, "verdicts") if st.version >= 0 else None
     if verdicts is None:
         raise ValueError(f"no incremental state at {state_dir}")
-    per = verdicts.groupBy("increment", "rule_id").agg(
+    aggs = [
         F.sum("row_count").alias("row_count"),
         F.sum("violation_count").alias("violation_count"),
         (F.sum((~F.col("pass")).cast("long")) == 0).alias("pass"),
-    )
-    rollup = verdicts.groupBy("increment").agg(
-        F.lit("__all__").alias("rule_id"),
-        F.sum("row_count").alias("row_count"),
-        F.sum("violation_count").alias("violation_count"),
-        (F.sum((~F.col("pass")).cast("long")) == 0).alias("pass"),
-    ).select("increment", "rule_id", "row_count", "violation_count", "pass")
+    ]
+    per = verdicts.groupBy("increment", "rule_id").agg(*aggs)
+    rollup = verdicts.groupBy("increment").agg(*aggs).withColumn(
+        "rule_id", F.lit("__all__"))
     return per.unionByName(rollup).orderBy("increment", "rule_id")
-
-
-_COMPACTABLE_STORES = (
-    "verdicts", "violations", "lineage", "key_index", "partials",
-    "sketches", "sketches_grouped",
-    # dedup.incremental_neardup state (same per-increment layout;
-    # stores absent from a given state_dir are skipped)
-    "banded", "pairs",
-)
-
-
-def _swap_store(
-    live: str,
-    frame: DataFrame,
-    n_files: int = 4,
-    sort_key: "str | None" = None,
-) -> None:
-    """THE two-rename crash-swap for state stores, shared by
-    ``compact_state`` and ``expire_increments``: write ``frame`` to
-    ``<store>.compact_tmp`` (coalesced to ``n_files`` tasks), rename
-    the live dir to ``<store>.compact_bak``, rename tmp in, drop the
-    backup. A crash mid-swap leaves the backup, which every reader
-    refuses (``_refuse_crashed_compaction``) and the next
-    ``compact_state`` call restores — keep that recovery loop in sync
-    if the protocol here ever changes.
-
-    ``sort_key``: stores written range-sorted (the key index) must
-    stay prunable after a rewrite — rows are re-sorted by
-    (increment, sort_key) inside each coalesced task so row-group
-    min/max stats remain tight even when an increment collapses to a
-    single file."""
-    import shutil
-
-    tmp = live + _COMPACT_TMP
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    out = frame.coalesce(n_files)
-    if sort_key:
-        out = out.sortWithinPartitions("increment", sort_key)
-    parquet_writer(out, partition_by="increment").parquet(tmp)
-    bak = live + _COMPACT_BAK
-    os.rename(live, bak)
-    os.rename(tmp, live)
-    shutil.rmtree(bak)
-
-
-def _parquet_file_count(path: str, first_only: bool = False) -> int:
-    """Count data files under a store, mirroring Spark's hidden-path
-    filter (_temporary/ leftovers and dot/underscore-prefixed entries
-    are NOT data — counting them would make a crashed store write
-    raise UNABLE_TO_INFER_SCHEMA forever instead of recovering).
-    ``first_only`` early-exits at 1 — the emptiness probe
-    ``_read_store`` uses."""
-    n = 0
-    for _root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        n += sum(
-            1 for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        if first_only and n:
-            return n
-    return n
 
 
 def compact_state(
@@ -611,65 +657,50 @@ def compact_state(
     STATE-side small-file problem, the twin of the corpus-side
     compaction ``rebase_after_compaction`` exists for. Rows, the
     ``increment`` partition layout, and crash-idempotency semantics
-    are preserved exactly — only file counts change.
+    are preserved exactly — only file counts change. Both protocols'
+    stores in ``state_dir`` (validation and ``dedup.incremental_neardup``)
+    are compacted.
 
-    Crash safety: each store is rewritten to ``<store>.compact_tmp``
-    first, then swapped in two renames with a ``<store>.compact_bak``
-    backup. A crash mid-swap leaves the backup; the next
-    ``compact_state`` call restores it before doing anything else, and
-    ``validate_incremental`` refuses to run while a backup exists
-    (an absent key index would otherwise silently pass every
-    cross-increment duplicate). Run between increments, not
-    concurrently with one."""
-    import shutil
-
-    if not os.path.isdir(state_dir):
-        raise ValueError(f"no incremental state at {state_dir}")
+    Crash safety: each rewritten store is written as a new generation
+    directory, all of them are committed in one new manifest, and only
+    then are the old generations deleted. A crash before the commit
+    leaves the old state in force (the retry rewrites the same
+    generation names); a crash after it leaves garbage the next commit
+    deletes. Run between increments, not concurrently with one."""
     if files_per_increment < 1:
         raise ValueError("files_per_increment must be >= 1")
-    # recovery from a previous crashed compaction, before any rewrite
-    for store in _COMPACTABLE_STORES:
-        live = os.path.join(state_dir, store)
-        bak = live + _COMPACT_BAK
-        tmp = live + _COMPACT_TMP
-        if os.path.isdir(bak):
-            if os.path.isdir(live):
-                # crashed after the swap completed, before cleanup:
-                # live is the compacted store, the backup is stale
-                shutil.rmtree(bak)
-            else:
-                # crashed between the two renames: restore the backup
-                os.rename(bak, live)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-
+    states = [st for name in _PROTOCOL_STORES
+              if (st := _load_state(state_dir, name)).version >= 0]
+    if not states:
+        raise ValueError(f"no incremental state at {state_dir}")
     report: dict[str, tuple[int, int]] = {}
-    for store in _COMPACTABLE_STORES:
-        live = os.path.join(state_dir, store)
-        if not os.path.isdir(live):
-            continue
-        before = _parquet_file_count(live)
-        if before == 0:
-            continue
-        # the hive layout answers the idempotency check locally — no
-        # Spark job for stores that are already compact (the common
-        # repeated-call case)
-        n_incs = sum(
-            1 for d in os.listdir(live) if d.startswith("increment=")
-        )
-        if before <= n_incs * files_per_increment:
-            report[store] = (before, before)
-            continue
-        df = _read_store(spark, live)
-        # coalesce(k) + partitionBy: k tasks each write one file per
-        # increment directory they hold rows for — ≤ k files/increment.
-        # key_index keeps its range-sorted layout through the rewrite
-        # (row-group-level pruning survives compaction)
-        _swap_store(
-            live, df, files_per_increment,
-            sort_key="doc_id" if store == "key_index" else None,
-        )
-        report[store] = (before, _parquet_file_count(live))
+    for st in states:
+        stores = dict(st.manifest["stores"])
+        for store, gen in st.manifest["stores"].items():
+            if store == "metrics":  # one unpartitioned frame
+                continue
+            before = _parquet_file_count(st.path(gen))
+            if before == 0:
+                continue
+            # the hive layout answers the idempotency check locally — no
+            # Spark job for stores that are already compact (the common
+            # repeated-call case)
+            n_incs = sum(1 for e in fsio.ls(st.path(gen))
+                         if e.name.startswith("increment="))
+            if before <= n_incs * files_per_increment:
+                report[store] = (before, before)
+                continue
+            # coalesce(k) + partitionBy: k tasks each write one file per
+            # increment directory they hold rows for — ≤ k files/increment.
+            # key_index keeps its range-sorted layout through the rewrite
+            # (row-group-level pruning survives compaction)
+            path = _write_gen(
+                st, stores, store, st.read(spark, store), files_per_increment,
+                sort_key="doc_id" if store == "key_index" else None,
+            )
+            report[store] = (before, _parquet_file_count(path))
+        if stores != st.manifest["stores"]:
+            _commit(st, {**st.manifest, "stores": stores})
     return report
 
 
@@ -678,7 +709,7 @@ def rebase_after_compaction(
     documents_path: str,
     state_dir: str,
     verify: bool = True,
-    manifest_name: str = _MANIFEST,
+    manifest_name: str = "manifest.json",
 ) -> int:
     """Re-point incremental state at a COMPACTED corpus (files
     rewritten, row multiset unchanged) — the operation the append-only
@@ -705,14 +736,12 @@ def rebase_after_compaction(
     the default is validation state; ``dedup.
     rebase_neardup_after_compaction`` passes the near-dup manifest
     (same file-inventory + additive-checksum layout)."""
-    mpath = os.path.join(state_dir, manifest_name)
-    if not os.path.exists(mpath):
+    st = _load_state(state_dir, manifest_name.removesuffix(".json"))
+    if st.version < 0:
         raise ValueError(f"no incremental state at {state_dir}")
-    _refuse_crashed_compaction(state_dir)
-    manifest = json.load(open(mpath))
     full = spark.read.parquet(documents_path)
     all_files = sorted(full.inputFiles())
-    ck = manifest.get("checksum")
+    ck = st.manifest.get("checksum")
     if verify:
         if not ck:
             raise ValueError(
@@ -720,13 +749,7 @@ def rebase_after_compaction(
                 "before rebase support) — cannot verify; re-bootstrap "
                 "or pass verify=False at your own risk"
             )
-        key_column = ck.get("key_column", "doc_id")
-        loc = (
-            full.select(F.col(key_column).cast("string").alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        rows, hsh, _lo, _hi = _key_summary(loc)
+        rows, hsh, _lo, _hi = _key_summary(full, ck.get("key_column", "doc_id"))
         if rows != int(ck["rows"]) or hsh != int(ck["hash"]):
             raise ValueError(
                 "compacted corpus does not match the validated state: "
@@ -734,8 +757,7 @@ def rebase_after_compaction(
                 f"{ck['hash']} — the rewrite changed the row multiset; "
                 "re-bootstrap instead of rebasing"
             )
-    manifest["files"] = all_files
-    _commit_manifest(mpath, manifest)
+    _commit(st, {**st.manifest, "files": all_files})
     return len(all_files)
 
 
@@ -771,13 +793,14 @@ def expire_increments(
     merged state the next increment's correctness depends on — pinned
     by the post-expiry promotion test.
 
-    Crash safety: each store is rewritten with the same two-rename
-    ``.compact_tmp``/``.compact_bak`` swap as ``compact_state``, so a
-    crash mid-swap is refused by every reader and recovered by the
-    next ``compact_state`` call. Archiving is at-least-once: a crash
-    between the archive append and the swap re-archives the same rows
-    on retry — dedupe downstream on (doc_id, rule_id, detail,
-    increment) if the archive must be exactly-once.
+    Crash safety: the rewritten stores are new generations committed
+    together in one new manifest with the watermark, and the old
+    generations are deleted only after that commit, as in
+    ``compact_state``: a crash anywhere leaves either the old state or
+    the new one. Archiving is at-least-once: a crash between the
+    archive append and the commit re-archives the same rows on retry —
+    dedupe downstream on (doc_id, rule_id, detail, increment) if the
+    archive must be exactly-once.
 
     Returns ``{store: (rows_expired, rows_after)}`` plus
     ``expired_through`` (highest increment id ever expired for this
@@ -787,98 +810,57 @@ def expire_increments(
     expired, so it is excluded."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    mpath = os.path.join(state_dir, _MANIFEST)
-    if not os.path.exists(mpath):
+    st = _load_state(state_dir, "manifest")
+    if st.version < 0:
         raise ValueError(f"no incremental state at {state_dir}")
-    _refuse_crashed_compaction(state_dir)
-    manifest = json.load(open(mpath))
-    latest = int(manifest["increment"])
+    latest = st.increment
     cutoff = latest - keep_last + 1
     # never regresses: keep_last growing between calls must not make
     # the recorded watermark move backwards
-    through = max(cutoff - 1, int(manifest.get("expired_through", -1)))
+    through = max(cutoff - 1, int(st.manifest.get("expired_through", -1)))
     report: dict = {"expired_through": through}
     if cutoff <= 0:
         return report
 
     expired = F.col("increment") < cutoff  # includes a prior -1 base
     # a REAL increment partition (not the -1 base) inside the expiry
-    # window; counted per store so (a) the report never counts base
-    # rows that are merely re-merged, and (b) a crash between two
-    # stores' swaps cannot wedge the later stores unexpired (the
-    # re-run sees the first store already clean and must NOT
-    # early-return for the rest)
+    # window: the report never counts base rows that are merely
+    # re-merged
     newly_expired = expired & (F.col("increment") >= 0)
-
-    # ---- verdicts: expired rows -> one per-rule total row ----
-    live = os.path.join(state_dir, "verdicts")
-    v = _read_store(spark, live)
-    if v is None:
-        raise ValueError(f"no incremental state at {state_dir}")
-    n_exp = v.filter(newly_expired).count()
-    if n_exp:
-        base_v = (
-            v.filter(expired)
-            .groupBy("rule_id")
-            .agg(
-                F.sum("row_count").alias("row_count"),
-                F.sum("violation_count").alias("violation_count"),
-            )
-            .select(
-                F.lit(-1).cast("int").alias("partition_id"),
-                "rule_id",
-                "row_count",
-                "violation_count",
-                (F.col("violation_count") == 0).alias("pass"),
-                F.lit(-1).cast("int").alias("increment"),
-            )
-        )
-        _swap_store(live, v.filter(~expired).unionByName(base_v))
-        report["verdicts"] = (n_exp, _read_store(spark, live).count())
-
-    # ---- lineage: expired rows -> per-(phase, op) total rows ----
-    live = os.path.join(state_dir, "lineage")
-    lin = _read_store(spark, live)
-    n_exp = 0 if lin is None else lin.filter(newly_expired).count()
-    if n_exp:
-        base_l = (
-            lin.filter(expired)
-            .groupBy("phase", "op")
-            .agg(
-                F.max("rule_version").alias("rule_version"),
-                F.max("ts").alias("ts"),
-                F.sum("duration_s").alias("duration_s"),
-                F.sum("row_count").alias("row_count"),
-                F.sum("violation_count").alias("violation_count"),
-            )
-            .select(
-                "phase",
-                F.lit(-1).cast("int").alias("partition_id"),
-                F.lit(f"expired<={through}").alias("snapshot_id"),
-                "rule_version", "ts", "duration_s", "op",
-                "row_count", "violation_count",
-                F.lit(-1).cast("int").alias("increment"),
-            )
-        )
-        _swap_store(live, lin.filter(~expired).unionByName(base_l))
-        report["lineage"] = (n_exp, _read_store(spark, live).count())
-
-    # ---- violations: archive (optional), then drop expired rows ----
-    live = os.path.join(state_dir, "violations")
-    viol = _read_store(spark, live)
-    n_exp = 0 if viol is None else viol.filter(newly_expired).count()
-    if n_exp:
-        if archive_dir is not None:
-            parquet_writer(viol.filter(newly_expired), "append").parquet(
+    stores = dict(st.manifest["stores"])
+    total = lambda c: F.sum(c).alias(c)  # noqa: E731
+    # expired verdicts and lineage roll into one base row per rule and
+    # per (phase, op); expired violations are archived or dropped
+    rollups = {
+        "verdicts": lambda df: df.groupBy("rule_id").agg(
+            total("row_count"), total("violation_count")
+        ).withColumn("partition_id", F.lit(-1).cast("int")).withColumn(
+            "pass", F.col("violation_count") == 0),
+        "lineage": lambda df: df.groupBy("phase", "op").agg(
+            F.max("rule_version").alias("rule_version"), F.max("ts").alias("ts"),
+            total("duration_s"), total("row_count"), total("violation_count"),
+        ).withColumn("partition_id", F.lit(-1).cast("int")).withColumn(
+            "snapshot_id", F.lit(f"expired<={through}")),
+        "violations": None,
+    }
+    for store, rollup in rollups.items():
+        df = st.read(spark, store)
+        n_exp = 0 if df is None else df.filter(newly_expired).count()
+        if not n_exp:
+            continue
+        kept = df.filter(~expired)
+        if rollup is not None:
+            kept = kept.unionByName(rollup(df.filter(expired)).withColumn(
+                "increment", F.lit(-1).cast("int")))
+        elif archive_dir is not None:
+            parquet_writer(df.filter(newly_expired), "append").parquet(
                 archive_dir
             )
             report["archive_dir"] = archive_dir
-        _swap_store(live, viol.filter(~expired))
-        kept = _read_store(spark, live)
-        report["violations"] = (n_exp, 0 if kept is None else kept.count())
+        after = _read_store(spark, _write_gen(st, stores, store, kept))
+        report[store] = (n_exp, 0 if after is None else after.count())
 
-    manifest["expired_through"] = through
-    _commit_manifest(mpath, manifest)
+    _commit(st, {**st.manifest, "expired_through": through, "stores": stores})
     return report
 
 
@@ -888,12 +870,14 @@ class _IncrementMerges:
     check, drift sketch and profile finalize. ``loc`` is the delta's
     (doc_id, partition_id, cnt) key-location aggregate, which the
     caller appends to the key index and then frees with ``release``;
-    ``checksum`` is its (rows, hash) share of the manifest checksum."""
+    ``checksum`` is its (rows, hash) share of the manifest checksum, and
+    ``stores`` the generations of the stores the merges wrote."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, inc: int,
+    def __init__(self, spark: SparkSession, st: _State, inc: int,
                  drift_group_by: "str | None"):
-        self.spark, self.state_dir, self.inc = spark, state_dir, inc
+        self.spark, self.st, self.inc = spark, st, inc
         self.group_by = drift_group_by
+        self.stores: "dict[str, str]" = {}
         self.loc: "DataFrame | None" = None
         self._spill = False
         self.checksum = (0, 0)
@@ -969,14 +953,10 @@ class _IncrementMerges:
         ``inc=N``), promoted ones with ``inc=K;promoted_by=inc-N``."""
         loc = self._key_locations(checks, key, distributed)
         delta_tot = loc.groupBy("doc_id").agg(F.sum("cnt").alias("new_cnt"))
-        # crash-recovery: a crashed attempt at THIS increment may have
-        # written its key_index partition before dying (manifest is
-        # committed last) — reading it back would count every delta
-        # key against itself and report the whole delta as duplicates
-        idx = _read_store(
-            self.spark, os.path.join(self.state_dir, "key_index"),
+        idx = self.st.read(
+            self.spark, "key_index",
             "doc_id string, partition_id int, cnt long, increment int",
-        ).filter(F.col("increment") < self.inc)
+        )
         # narrow the index scan to the delta's key range BEFORE the
         # join: the index is stored range-sorted on doc_id (_write_inc
         # sort_key), so this pushed-down between-predicate lets parquet
@@ -1081,7 +1061,7 @@ class _IncrementMerges:
             ("sketches_grouped", "sketches") if grouped
             else ("sketches", "sketches_grouped")
         )
-        if os.path.exists(os.path.join(self.state_dir, other)):
+        if other in self.st.manifest["stores"]:
             raise ValueError(
                 f"incremental drift: this state_dir holds the other drift "
                 f"mode's per-increment sketches ('{other}'); with "
@@ -1089,7 +1069,7 @@ class _IncrementMerges:
                 "this mode's corpus sketch — re-bootstrap with a fresh "
                 "state_dir to switch drift modes"
             )
-        store = os.path.join(self.state_dir, name)
+        store = self.st.path(self.st.gen(name))
         rows = DR.sketch_rows(sketches)
         if rows:
             # a 0-row delta sketches no cohort — writing the empty frame
@@ -1100,7 +1080,8 @@ class _IncrementMerges:
             )
             _write_inc(inc_df if grouped else inc_df.drop("group"), store,
                        self.inc)
-        hist = _read_store(self.spark, store)
+            self.stores[name] = self.st.gen(name)
+        hist = _read_store(self.spark, store, through=self.inc)
         return DR.merge_sketch_rows(
             (r["group"] if grouped else None, r["column"], r["sketch"])
             for r in ([] if hist is None else hist.collect())
@@ -1112,12 +1093,13 @@ class _IncrementMerges:
         with every stored increment's — Pébay moment merge, HLL
         register union and grid merge are order-insensitive, and the
         input table is never re-read."""
-        store = os.path.join(self.state_dir, "partials")
+        store = self.st.path(self.st.gen("partials"))
         _write_inc(
             part.select(*[c for c in part.columns if not c.startswith("viol_")]),
             store, self.inc,
         )
-        hist = self.spark.read.parquet(store)
+        self.stores["partials"] = self.st.gen("partials")
+        hist = _read_store(self.spark, store, through=self.inc)
         missing = [a for a, _, _, _ in plan.specs if a not in hist.columns]
         if missing:
             raise ValueError(

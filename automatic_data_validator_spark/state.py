@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import fsio
 from .session import local_frame
 from .sources import parquet_writer
 
@@ -81,13 +82,16 @@ def snapshot_of(df: DataFrame) -> str:
         files = []
     if not files:
         return "snap-inline"
+    # one listing per input directory, not one status call per file
+    sizes: dict[str, dict[str, int]] = {}
     h = hashlib.md5()
     for f in files:
+        parent, name = f.rsplit("/", 1)
+        if parent not in sizes:
+            sizes[parent] = {e.name: e.size for e in fsio.ls(parent)}
         h.update(f.encode())
-        try:
-            h.update(str(os.path.getsize(f.replace("file:", ""))).encode())
-        except OSError:
-            pass
+        if name in sizes[parent]:
+            h.update(str(sizes[parent][name]).encode())
     return "snap-" + h.hexdigest()[:16]
 
 
@@ -105,15 +109,12 @@ class Checkpointer:
         return os.path.join(self.root, "_state.json")
 
     def _load(self) -> dict:
-        try:
-            with open(self._state_path()) as f:
-                state = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"completed": [], "snapshot_id": self.snapshot_id,
-                    "rule_version": self.rule_version}
-        # a checkpoint from a different snapshot or rule version is stale
+        state = fsio.read_json(self._state_path())
+        # a missing or torn _state.json, or one from a different
+        # snapshot or rule version, is no (valid) checkpoint
         if (
-            state.get("snapshot_id") != self.snapshot_id
+            not isinstance(state, dict)
+            or state.get("snapshot_id") != self.snapshot_id
             or state.get("rule_version") != self.rule_version
         ):
             return {"completed": [], "snapshot_id": self.snapshot_id,
@@ -134,16 +135,13 @@ class Checkpointer:
 
     def mark_done(self, phase: str, duration_s: float | None = None) -> None:
         with self._lock:
-            os.makedirs(self.root, exist_ok=True)
             state = self._load()
             if phase not in state["completed"]:
                 state["completed"].append(phase)
             if duration_s is not None:
                 state.setdefault("durations", {})[phase] = duration_s
-            tmp = self._state_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(state, f, indent=2)
-            os.replace(tmp, self._state_path())
+            fsio.write_once(self._state_path(), json.dumps(state, indent=2),
+                            overwrite=True)
 
     def duration_of(self, phase: str) -> float | None:
         """Recorded wall-clock of a completed phase (for lineage rows
@@ -155,25 +153,20 @@ class Checkpointer:
         session_manager.py:261-300 backup/rotation semantics): newest
         ``keep`` backups survive. Returns the new backup path, or None
         when there is no state yet."""
-        import glob
         import re
-        import shutil
 
         with self._lock:
-            src = self._state_path()
-            if not os.path.exists(src):
+            state = fsio.read_json(self._state_path())
+            if state is None:
                 return None
-            pat = os.path.join(self.root, "_state.bak*.json")
-            existing = sorted(glob.glob(pat))
-            nums = [
-                int(m.group(1))
-                for p in existing
-                if (m := re.search(r"_state\.bak(\d+)\.json$", p))
-            ]
+            nums = sorted(
+                int(m.group(1)) for e in fsio.ls(self.root)
+                if (m := re.fullmatch(r"_state\.bak(\d+)\.json", e.name))
+            )
             dst = os.path.join(self.root, f"_state.bak{max(nums, default=0) + 1:04d}.json")
-            shutil.copy2(src, dst)
-            for old in sorted(glob.glob(pat))[:-keep]:
-                os.remove(old)
+            fsio.write_once(dst, json.dumps(state, indent=2))
+            for old in nums[: max(len(nums) + 1 - keep, 0)]:
+                fsio.delete(os.path.join(self.root, f"_state.bak{old:04d}.json"))
             return dst
 
 
@@ -215,22 +208,18 @@ class CheckpointRegistry:
     def list(self) -> list[dict]:
         """Checkpoint inventory, newest first: name, path, mtime,
         snapshot_id, rule_version, completed phases."""
-        import glob
-
         out = []
-        for state_path in glob.glob(os.path.join(self.root, "*", "_state.json")):
-            try:
-                with open(state_path) as f:
-                    state = json.load(f)
-                mtime = os.path.getmtime(state_path)
-            except (OSError, json.JSONDecodeError):
+        for child in fsio.ls(self.root):
+            d = os.path.join(self.root, child.name)
+            stat = fsio.ls(os.path.join(d, "_state.json")) if child.is_dir else []
+            state = stat and fsio.read_json(os.path.join(d, "_state.json"))
+            if not isinstance(state, dict):
                 continue
-            d = os.path.dirname(state_path)
             out.append(
                 {
-                    "name": os.path.basename(d),
+                    "name": child.name,
                     "path": d,
-                    "mtime": mtime,
+                    "mtime": stat[0].mtime,
                     "snapshot_id": state.get("snapshot_id"),
                     "rule_version": state.get("rule_version"),
                     "completed": state.get("completed", []),
@@ -250,8 +239,6 @@ class CheckpointRegistry:
         """Remove expired and over-cap checkpoint dirs; returns the
         removed paths. Defaults mirror the reference's session limits
         (config.CHECKPOINT_MAX_AGE_HOURS / _MAX_SESSIONS)."""
-        import shutil
-
         from . import config
 
         if max_age_hours is None:
@@ -264,12 +251,12 @@ class CheckpointRegistry:
         keep: list[dict] = []
         for e in entries:
             if (now - e["mtime"]) > max_age_hours * 3600.0:
-                shutil.rmtree(e["path"], ignore_errors=True)
+                fsio.delete(e["path"])
                 removed.append(e["path"])
             else:
                 keep.append(e)
         for e in keep[max_sessions:]:  # newest-first: evict the tail
-            shutil.rmtree(e["path"], ignore_errors=True)
+            fsio.delete(e["path"])
             removed.append(e["path"])
         return removed
 
@@ -356,30 +343,12 @@ def run_summary(
 
     rows: list[tuple] = []
     phase_durations: dict[str, float] = {}
-    tot_rows = 0
-    tot_viol = 0
-    run_start: float | None = None
-    run_end: float | None = None
     for r in sorted(per, key=lambda r: (r["phase"], r["op"])):
         rc = int(r["row_count"] or 0)
         vc = int(r["violation_count"] or 0)
-        tot_rows += rc
-        tot_viol += vc
         if r["duration_s"] is not None:
             phase_durations[r["phase"]] = max(
                 phase_durations.get(r["phase"], 0.0), float(r["duration_s"])
-            )
-        if r["start_ts"] is not None:
-            run_start = (
-                float(r["start_ts"])
-                if run_start is None
-                else min(run_start, float(r["start_ts"]))
-            )
-        if r["end_ts"] is not None:
-            run_end = (
-                float(r["end_ts"])
-                if run_end is None
-                else max(run_end, float(r["end_ts"]))
             )
         n_parts, failed = vstats.get(r["op"], (None, None))
         rows.append(
@@ -395,14 +364,16 @@ def run_summary(
                 (failed == 0) if failed is not None else (vc == 0),
             )
         )
+    tot_rows = sum(row[5] for row in rows)
+    tot_viol = sum(row[6] for row in rows)
+    starts = [float(r["start_ts"]) for r in per if r["start_ts"] is not None]
+    ends = [float(r["end_ts"]) for r in per if r["end_ts"] is not None]
     rows.append(
         (
             "__run__",
             "__total__",
             round(sum(phase_durations.values()), 3) if phase_durations else None,
-            round(run_end - run_start, 3)
-            if run_start is not None and run_end is not None
-            else None,
+            round(max(ends) - min(starts), 3) if starts and ends else None,
             None,
             tot_rows,
             tot_viol,
@@ -419,15 +390,17 @@ def export_summary(summary: DataFrame, path: str, fmt: str = "json") -> str:
     is a tiny aggregate, never cluster data). Returns the path."""
     rows = [r.asDict() for r in summary.collect()]
     if fmt == "json":
-        with open(path, "w") as f:
-            json.dump(rows, f, indent=2)
+        text = json.dumps(rows, indent=2)
     elif fmt == "csv":
         import csv
+        import io
 
-        with open(path, "w", newline="") as f:
-            w = csv.DictWriter(f, fieldnames=list(RUN_SUMMARY_SCHEMA.names))
-            w.writeheader()
-            w.writerows(rows)
+        buf = io.StringIO()
+        w = csv.DictWriter(buf, fieldnames=list(RUN_SUMMARY_SCHEMA.names))
+        w.writeheader()
+        w.writerows(rows)
+        text = buf.getvalue()
     else:
         raise ValueError(f"unsupported export format: {fmt}")
+    fsio.write_once(path, text, overwrite=True)
     return path

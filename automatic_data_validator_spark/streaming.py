@@ -272,7 +272,8 @@ def neardup_stream(
     first non-empty batch (read with an explicit schema if consuming
     earlier). The per-batch cost excludes the connected-components
     pass (``skip_drop_list``): derive the drop list on demand with
-    ``dedup.dedup_keep_representatives`` over ``{state_dir}/pairs``.
+    ``dedup.dedup_keep_representatives`` over the pair store
+    (``incremental_neardup(...).pairs``).
 
     Replay semantics: the corpus write is SKIPPED when the batch's
     partition already exists — rewriting it would mint fresh
@@ -288,53 +289,42 @@ def neardup_stream(
     pinned in the state manifest, so changing them mid-stream raises
     rather than silently mixing signature spaces.
     """
+    from . import fsio
     from .dedup import incremental_neardup
+    from .incremental import _load_state
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        jvm = spark._jvm
-        part = jvm.org.apache.hadoop.fs.Path(
-            f"{corpus_dir}/batch_id={batch_id}"
-        )
-        fs = part.getFileSystem(spark._jsc.hadoopConfiguration())
+        part = f"{corpus_dir}/batch_id={batch_id}"
         # _committed is written only AFTER the partition write finishes
         # (underscore prefix = invisible to Spark readers). Bare
         # directory existence is NOT a commit signal: a crash mid-job
         # leaves a partial batch_id=N dir, and skipping the write on
         # its existence would silently drop the batch's missing rows
         # from the corpus and the banded store forever.
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{corpus_dir}/batch_id={batch_id}/_committed"
-        )
-        committed = fs.exists(marker)
-        if not committed and fs.exists(part):
+        marker = f"{part}/_committed"
+        committed = fsio.exists(marker)
+        if not committed and fsio.exists(part):
             # no marker: either a crashed partial write (manifest has
             # never seen the files — incremental_neardup only runs
             # after the marker) or a pre-marker layout whose files the
             # manifest DOES know; rewriting the latter would mint new
             # part-file names and trip the append-only contract.
-            import json as _json
-            import os as _os
-            import re as _re
-
-            mpath = _os.path.join(state_dir, "neardup_manifest.json")
-            known: list[str] = []
-            if _os.path.exists(mpath):
-                with open(mpath) as f:
-                    known = _json.load(f).get("files", [])
-            strip = lambda p: _re.sub(r"^[a-z0-9+.-]+://", "", p)  # noqa: E731
-            prefix = strip(part.toString()).rstrip("/") + "/"
-            if any(strip(f).startswith(prefix) for f in known):
+            # Part-file names are unique, so "batch_id=N/<file>" names
+            # a manifest entry whatever the path's scheme.
+            names = {f"batch_id={batch_id}/{e.name}" for e in fsio.ls(part)}
+            known = _load_state(state_dir, "neardup_manifest").manifest["files"]
+            if any("/".join(f.rsplit("/", 2)[-2:]) in names for f in known):
                 committed = True  # adopted pre-marker committed layout
             else:
-                fs.delete(part, True)  # partial write; manifest unaware
+                fsio.delete(part)  # partial write; manifest unaware
         if not committed:
             _write_batch_partition(
                 batch_df.select(id_col, text_col), corpus_dir, batch_id
             )
-        fs.create(marker, True).close()
+        fsio.write_once(marker, "", overwrite=True)
         res = incremental_neardup(
             spark, corpus_dir, state_dir,
             id_col=id_col, text_col=text_col,

@@ -654,11 +654,7 @@ def test_incremental_neardup_equals_oneshot(spark, tmp_path):
             jaccard_threshold=0.5, num_hashes=32, bands=32,
         )
 
-    # the neardup stores compact with the shared state compactor and
-    # a crashed swap is refused here too (an unreadable banded store
-    # would silently stop pairing new docs with stored signatures)
-    import os
-
+    # the neardup stores compact with the shared state compactor
     from automatic_data_validator_spark.incremental import compact_state
 
     rep = compact_state(spark, state)
@@ -667,30 +663,18 @@ def test_incremental_neardup_equals_oneshot(spark, tmp_path):
         spark, corpus, state, "doc_id", "text", jaccard_threshold=0.5
     )
     assert pairset(r5.pairs) == pairset(full_pairs)
-    os.rename(
-        os.path.join(state, "banded"),
-        os.path.join(state, "banded.compact_bak"),
-    )
-    with pytest.raises(ValueError, match="crashed compaction"):
-        D.incremental_neardup(
-            spark, corpus, state, "doc_id", "text", jaccard_threshold=0.5
-        )
-    compact_state(spark, state)  # recovery restores the backup
-    assert pairset(
-        D.incremental_neardup(
-            spark, corpus, state, "doc_id", "text", jaccard_threshold=0.5
-        ).pairs
-    ) == pairset(full_pairs)
 
 
 def test_incremental_neardup_accepts_state_pinning_signature_impl(spark, tmp_path):
     """State dirs written while the signature kernel was selectable
-    carry ``"signature_impl"`` in their manifest params. Every kernel
-    signed bit-identically, so the next increment must accept such a
-    state (not raise "parameters changed") and still pair a new doc
-    with a stored one; the rewritten manifest drops the key."""
+    carry ``"signature_impl"`` in their (unversioned) manifest params.
+    Every kernel signed bit-identically, so the next increment must
+    accept such a state (not raise "parameters changed") and still pair
+    a new doc with a stored one; the next manifest drops the key."""
     import json
     import os
+
+    from automatic_data_validator_spark.incremental import _load_state
 
     corpus = str(tmp_path / "docs")
     state = str(tmp_path / "nd_state")
@@ -703,20 +687,24 @@ def test_incremental_neardup_accepts_state_pinning_signature_impl(spark, tmp_pat
 
     append([(0, body + " x0"), (1, "unrelated words about parquet files")])
     D.incremental_neardup(spark, corpus, state, "doc_id", "text")
-    mpath = os.path.join(state, "neardup_manifest.json")
+    # rewrite the state in the unversioned format: neardup_manifest.json, no
+    # generation map, the signature choice pinned
+    mpath = os.path.join(state, "neardup_manifest.1.json")
     with open(mpath) as fh:
         manifest = json.load(fh)
     assert "signature_impl" not in manifest["params"]
     manifest["params"]["signature_impl"] = "arrow"
-    with open(mpath, "w") as fh:
+    del manifest["stores"]
+    with open(os.path.join(state, "neardup_manifest.json"), "w") as fh:
         json.dump(manifest, fh)
+    os.remove(mpath)
 
     append([(2, body + " x1")])
     r = D.incremental_neardup(spark, corpus, state, "doc_id", "text")
     assert r.increment == 1 and r.n_delta_files == 1
     assert [(x["id_a"], x["id_b"]) for x in r.new_pairs.collect()] == [(0, 2)]
-    with open(mpath) as fh:
-        assert "signature_impl" not in json.load(fh)["params"]
+    st = _load_state(state, "neardup_manifest")
+    assert st.version == 1 and "signature_impl" not in st.manifest["params"]
 
 
 def test_incremental_neardup_random_batches(spark, tmp_path):

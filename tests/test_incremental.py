@@ -557,39 +557,6 @@ def test_history_report(spark, tmp_path):
         history_report(spark, str(tmp_path / "nope"))
 
 
-def test_crashed_increment_rerun_is_idempotent(spark, tmp_path):
-    """A crashed attempt writes its stores but not the manifest; the
-    re-run must NOT read the orphaned key_index partition back as
-    'old' data (it would report every delta key as a duplicate of
-    itself — round-5 review finding)."""
-    from automatic_data_validator_spark.incremental import _write_inc
-
-    corpus = str(tmp_path / "docs")
-    state = str(tmp_path / "state")
-    spark.createDataFrame(
-        [("a", 1), ("b", 2)], "doc_id string, value int"
-    ).coalesce(1).write.mode("append").parquet(corpus)
-    validate_incremental(spark, corpus, state, rule_set=[], with_profile=False)
-
-    # simulate the crashed attempt at increment 1: its delta keys are
-    # already in the key_index store, manifest still says increment 0
-    delta = spark.createDataFrame(
-        [("c", 3), ("d", 4)], "doc_id string, value int"
-    )
-    delta.coalesce(1).write.mode("append").parquet(corpus)
-    orphan = delta.selectExpr(
-        "doc_id", "0 AS partition_id", "CAST(1 AS long) AS cnt"
-    )
-    _write_inc(orphan, os.path.join(state, "key_index"), 1)
-
-    r = validate_incremental(spark, corpus, state, rule_set=[], with_profile=False)
-    assert r.increment == 1
-    # c and d are unique in the corpus: the orphaned rows must not
-    # have counted against them
-    assert _viol_multiset(r.violations) == []
-    assert r.passed()
-
-
 def test_profile_mode_must_stay_consistent(spark, tmp_path):
     """An increment that skips the profile would silently vanish from
     every future merged metric — participation is pinned like
@@ -612,8 +579,8 @@ def test_profile_mode_must_stay_consistent(spark, tmp_path):
 def test_uniqueness_rule_ids_must_stay_consistent(spark, tmp_path):
     """The uniqueness rule ids are pinned like the profile/drift flags:
     a renamed unique_key rule would split its per-rule totals between
-    two ids. A manifest without the key (written when every increment
-    stored unique_doc_id) reads as unique_doc_id."""
+    two ids. An unversioned manifest without the key (written when
+    every increment stored unique_doc_id) reads as unique_doc_id."""
     import json
 
     from automatic_data_validator_spark import rules as R
@@ -626,11 +593,14 @@ def test_uniqueness_rule_ids_must_stay_consistent(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(corpus)
         if i == 0:
             validate_incremental(spark, corpus, state, rule_set=[])
-    mpath = os.path.join(state, "manifest.json")
+    # rewrite the state in the unversioned format: manifest.json, no
+    # generation map, no unique_rules key
+    mpath = os.path.join(state, "manifest.1.json")
     manifest = json.load(open(mpath))
     assert manifest["modes"]["unique_rules"] == ["unique_doc_id"]
-    del manifest["modes"]["unique_rules"]
-    json.dump(manifest, open(mpath, "w"))
+    del manifest["modes"]["unique_rules"], manifest["stores"]
+    json.dump(manifest, open(os.path.join(state, "manifest.json"), "w"))
+    os.remove(mpath)
     with pytest.raises(ValueError, match="participation changed"):
         validate_incremental(
             spark, corpus, state,
@@ -842,12 +812,10 @@ def test_compact_state_shrinks_files_preserves_rows(spark, tmp_path):
     """compact_state rewrites each per-increment store down to 1 file
     per increment: rows, the increment partition layout, and the next
     increment's merge semantics are untouched — only file counts
-    shrink. Also pins crash recovery: a compaction that died between
-    its two swap renames leaves <store>.compact_bak, which makes
-    validate_incremental refuse (an absent key index would silently
-    pass every cross-increment duplicate) until compact_state restores
-    it."""
+    shrink. Crashes mid-compaction are covered in
+    test_state_protocol.py."""
     from automatic_data_validator_spark.incremental import (
+        _load_state,
         _parquet_file_count,
         compact_state,
         history_report,
@@ -864,9 +832,11 @@ def test_compact_state_shrinks_files_preserves_rows(spark, tmp_path):
         ).write.mode("append").parquet(corpus)
         validate_incremental(spark, corpus, state, catalog=cat)
 
-    before_viol = _viol_multiset(
-        spark.read.parquet(os.path.join(state, "violations"))
-    )
+    def stored_violations():
+        st = _load_state(state, "manifest")
+        return _viol_multiset(st.read(spark, "violations"))
+
+    before_viol = stored_violations()
     before_hist = [
         tuple(r) for r in history_report(spark, state).collect()
     ]
@@ -876,10 +846,7 @@ def test_compact_state_shrinks_files_preserves_rows(spark, tmp_path):
     report = compact_state(spark, state)
     assert report["key_index"][1] <= 3 < report["key_index"][0]
     assert report["verdicts"][1] <= 3
-    assert (
-        _viol_multiset(spark.read.parquet(os.path.join(state, "violations")))
-        == before_viol
-    )
+    assert stored_violations() == before_viol
     assert [
         tuple(r) for r in history_report(spark, state).collect()
     ] == before_hist
@@ -897,19 +864,6 @@ def test_compact_state_shrinks_files_preserves_rows(spark, tmp_path):
     r4 = validate_incremental(spark, corpus, state, catalog=cat)
     full = run_validation(spark, spark.read.parquet(corpus), catalog=cat)
     assert _viol_multiset(r4.violations) == _viol_multiset(full.violations)
-
-    # crashed-compaction simulation: live key_index gone, backup left
-    live = os.path.join(state, "key_index")
-    os.rename(live, live + ".compact_bak")
-    with pytest.raises(ValueError, match="crashed compaction"):
-        validate_incremental(spark, corpus, state, catalog=cat)
-    with pytest.raises(ValueError, match="crashed compaction"):
-        history_report(spark, state)  # readers refuse too, with remedy
-    compact_state(spark, state)  # recovery restores the backup
-    assert os.path.isdir(live) and not os.path.isdir(live + ".compact_bak")
-    assert _viol_multiset(
-        validate_incremental(spark, corpus, state, catalog=cat).violations
-    ) == _viol_multiset(full.violations)
 
 
 def test_expire_increments_bounds_history(spark, tmp_path):
@@ -1015,56 +969,74 @@ def test_expire_increments_bounds_history(spark, tmp_path):
         [("f", 10)], "doc_id string, value int"
     ).coalesce(1).write.mode("append").parquet(corpus)
     validate_incremental(spark, corpus, state, rule_set=[], with_profile=False)
-    import json as _json
+    from automatic_data_validator_spark.incremental import _load_state
 
-    m = _json.load(open(os.path.join(state, "manifest.json")))
-    assert m["expired_through"] == 2
+    assert _load_state(state, "manifest").manifest["expired_through"] == 2
 
     # guards
     with pytest.raises(ValueError, match="keep_last"):
         expire_increments(spark, state, keep_last=0)
     with pytest.raises(ValueError, match="no incremental state"):
         expire_increments(spark, str(tmp_path / "nope"))
-    bak = os.path.join(state, "verdicts.compact_bak")
-    os.makedirs(bak)
-    with pytest.raises(ValueError, match="crashed compaction"):
-        expire_increments(spark, state, keep_last=1)
-    os.rmdir(bak)
 
 
-def test_expire_increments_resumes_after_partial_crash(spark, tmp_path):
-    """A crash between two stores' swaps must not wedge the later
-    stores: re-running expire_increments expires a store with
-    in-window rows even when the earlier stores are already clean."""
+def test_expire_increments_resumes_after_partial_crash(
+    spark, tmp_path, monkeypatch
+):
+    """Expiry rewrites verdicts, lineage and violations as new
+    generations and commits them in one manifest. A failure before the
+    commit leaves every store unexpired, so the retry expires all
+    three; a failure after it (before the old generations are deleted)
+    leaves the expired state. Either way the history and the next
+    increment equal an uncrashed expiry's."""
     import shutil
 
+    from automatic_data_validator_spark import incremental as I
     from automatic_data_validator_spark.incremental import (
         expire_increments,
+        history_report,
     )
 
     corpus = str(tmp_path / "docs")
-    state = str(tmp_path / "state")
+    base = str(tmp_path / "base")
     for rows in [[("a", 1), ("a", 2)], [("b", 3)], [("c", 4)]]:
         spark.createDataFrame(
             rows, "doc_id string, value int"
         ).coalesce(1).write.mode("append").parquet(corpus)
         validate_incremental(
-            spark, corpus, state, rule_set=[], with_profile=False
+            spark, corpus, base, rule_set=[], with_profile=False
         )
-    viol_store = os.path.join(state, "violations")
-    snapshot = str(tmp_path / "viol_snapshot")
-    shutil.copytree(viol_store, snapshot)
 
-    rep1 = expire_increments(spark, state, keep_last=1)
-    assert rep1["violations"][0] == 2  # both 'a' occurrences dropped
+    def expire(name):
+        shutil.copytree(base, tmp_path / name)
+        return expire_increments(spark, str(tmp_path / name), keep_last=1)
 
-    # simulate the crash: verdicts/lineage swapped, violations did not
-    shutil.rmtree(viol_store)
-    shutil.copytree(snapshot, viol_store)
-    rep2 = expire_increments(spark, state, keep_last=1)
-    # verdicts had nothing newly expirable, violations still expired
-    assert "verdicts" not in rep2
-    assert rep2["violations"] == (2, 0)
+    want = expire("ref")
+    assert want["violations"] == (2, 0)  # both 'a' occurrences dropped
+    want_hist = [tuple(r) for r in history_report(
+        spark, str(tmp_path / "ref")).collect()]
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash")
+
+    # before the manifest is written, or after it, before the old
+    # generations are deleted (expiry deletes nothing else)
+    for owner, point in ((I, "_commit"), (I.fsio, "delete")):
+        with monkeypatch.context() as m:
+            m.setattr(owner, point, crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                expire(point)
+        state = str(tmp_path / point)
+        rep = expire_increments(spark, state, keep_last=1)
+        if point == "_commit":
+            assert rep == want
+        else:  # already expired: the retry finds nothing left to expire
+            assert "violations" not in rep and rep["expired_through"] == 1
+        assert [tuple(r) for r in history_report(spark, state).collect()] == (
+            want_hist)
+        r = validate_incremental(spark, corpus, state, rule_set=[],
+                                 with_profile=False)
+        assert _viol_multiset(r.violations) == []
 
 
 def test_incremental_sees_hive_partition_columns(spark, tmp_path):
